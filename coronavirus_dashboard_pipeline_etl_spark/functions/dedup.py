@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from .. import store
+from ..store import _release_rdds, checkpoint, rolling_checkpoint
 from .text import fingerprint, tokens
 
 MERSENNE_P = 2_147_483_647  # 2^31 - 1
@@ -612,8 +614,6 @@ def dedup_components(
     # that OOM'd the r6 sf1 sweep driver. Only the checkpoints the
     # RETURNED lazy frame still references (initial labels + final
     # fixpoint labels) stay pinned.
-    from .graph import _persistent_rdd_ids, _release_rdds
-
     sc = pairs.sparkSession.sparkContext
     id_set = ids.select(F.col(id_col).alias("__id"))
     # Materialise the UNDIRECTED pair list once, evenly spread (the
@@ -624,16 +624,11 @@ def dedup_components(
     # two passes (initial label aggregate, contraction map) and the
     # iteration then runs on the CONTRACTED graph only. At 10x scale
     # the old 2x-pairs edge checkpoint was a third of the resolve.
-    __b = _persistent_rdd_ids(sc)
-    kept = (
+    kept, kept_ids = checkpoint(
         pairs.select("id_a", "id_b")
         .join(id_set, F.col("id_a") == F.col("__id"), "left_semi")
         .join(id_set, F.col("id_b") == F.col("__id"), "left_semi")
-        .repartition(pairs.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=True)
-    )
-    kept_ids = (
-        ((_persistent_rdd_ids(sc) or set()) - __b) if __b is not None else set()
+        .repartition(sc.defaultParallelism)
     )
     # The SETUP section (bidirectional edges, contraction, initial
     # labels, the bcast-sizing count) runs eager checkpoints and jobs
@@ -657,19 +652,15 @@ def dedup_components(
         # Initial label = min(node, min direct neighbour): this IS the
         # first propagation round, fused into initialisation for free (one
         # aggregation replaces a full round's join + checkpoint + count).
-        __b = _persistent_rdd_ids(sc)
-        labels = (
+        # kept pinned on success: the returned frame composes through
+        # these labels; tracked so the ERROR path can release them
+        labels, init_label_ids = checkpoint(
             edges.groupBy("src")
             .agg(F.min("dst").alias("__mn"))
             .select(
                 F.col("src").alias("node"),
                 F.least(F.col("src"), F.col("__mn")).alias("label"),
             )
-            .localCheckpoint(eager=True)
-        )  # kept pinned on success: the returned frame composes through
-        # these labels; tracked so the ERROR path can release them
-        init_label_ids = (
-            ((_persistent_rdd_ids(sc) or set()) - __b) if __b is not None else set()
         )
 
         # When the edge-node set is modest, broadcast the label table into
@@ -719,31 +710,20 @@ def dedup_components(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
-        __b = _persistent_rdd_ids(sc)
-        edges = (
+        edges, edge_ids = checkpoint(
             cpair.unionByName(
                 cpair.select(
                     F.col("dst").alias("src"), F.col("src").alias("dst")
                 )
-            )
-            .repartition(kept.sparkSession.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=True)
+            ).repartition(sc.defaultParallelism)
         )
-        edge_ids = (
-            ((_persistent_rdd_ids(sc) or set()) - __b) if __b is not None else set()
-        )
-        __b = _persistent_rdd_ids(sc)
-        iter_labels = (
+        iter_labels, prev_label_ids = checkpoint(
             edges.groupBy("src")
             .agg(F.min("dst").alias("__mn"))
             .select(
                 F.col("src").alias("node"),
                 F.least(F.col("src"), F.col("__mn")).alias("label"),
             )
-            .localCheckpoint(eager=True)
-        )
-        prev_label_ids = (
-            ((_persistent_rdd_ids(sc) or set()) - __b) if __b is not None else set()
         )
         # the undirected pair list has now fed its last consumers (the
         # contracted edges and the initial labels): release it before the
@@ -752,10 +732,7 @@ def dedup_components(
         full_labels, labels = labels, iter_labels
         bcast = labels.count() <= 2_000_000
     except BaseException:
-        _release_rdds(sc, kept_ids)
-        _release_rdds(sc, edge_ids)
-        _release_rdds(sc, prev_label_ids)
-        _release_rdds(sc, init_label_ids)
+        _release_rdds(sc, kept_ids | edge_ids | prev_label_ids | init_label_ids)
         raise
 
     changed = -1
@@ -809,26 +786,21 @@ def dedup_components(
                 )
             )
             final = F.least(F.col("__p"), F.coalesce("__jl", "__p"))
-            __b = _persistent_rdd_ids(sc)
-            new = (
-                prop.join(jmp, prop["__p"] == F.col("__jn"), "left")
-                .select(
+            new, new_ids = checkpoint(
+                prop.join(jmp, prop["__p"] == F.col("__jn"), "left").select(
                     "node",
                     final.alias("label"),
                     # convergence flag computed inside the same projection —
                     # no extra join per round just to count moved labels
                     (final < F.col("__orig")).alias("moved"),
                 )
-                .localCheckpoint(eager=True)
             )
             changed = new.filter("moved").count()
             # the previous round's label blocks fed this round's propagate
             # and are now dead — rolling release keeps ONE label table
             # pinned, not max_iter of them
-            if __b is not None:
-                __a = _persistent_rdd_ids(sc) or set()
-                _release_rdds(sc, prev_label_ids)
-                prev_label_ids = __a - __b
+            _release_rdds(sc, prev_label_ids)
+            prev_label_ids = new_ids
             labels = new.drop("moved")
             if changed == 0:
                 break
@@ -846,9 +818,7 @@ def dedup_components(
         # pinned: release the contracted edges, the current label
         # checkpoint, and the initial full-graph labels before
         # propagating
-        _release_rdds(sc, edge_ids)
-        _release_rdds(sc, prev_label_ids)
-        _release_rdds(sc, init_label_ids)
+        _release_rdds(sc, edge_ids | prev_label_ids | init_label_ids)
         raise
     # the contracted edge list has no consumer past the loop — the
     # returned frame composes full_labels with the fixpoint labels only
@@ -1099,63 +1069,54 @@ def store_meta_write(path: str, meta: dict) -> None:
     parameters a dedup store's directory layout cannot express —
     ``buckets`` (the hash→partition mapping), the signature family
     (``k``/``bands``/``base_hash``) for band indexes, the id/fp column
-    name, and the current upsert ``epoch``. Readers validate against it
-    (a silent ``buckets`` mismatch made pruning LOSSY before this —
-    round-13 advice). Local-filesystem sidecar by design for this
-    repo's runtime; on HDFS/S3 the same one-file-per-store JSON goes
-    through the Hadoop FileSystem API, or the table format's own
-    metadata (Delta/Iceberg table properties) replaces it outright."""
+    name, the current upsert ``epoch`` and the observed ``data_bytes``.
+    Readers validate against it (a silent ``buckets`` mismatch made
+    pruning LOSSY before this — round-13 advice). The file lives next
+    to the data files and goes through the same Hadoop FileSystem, so
+    a store at an ``hdfs://``/``s3a://``/``file://`` URI keeps its
+    sidecar with it; it is written to a temporary name and renamed
+    over the old one, so a crash never leaves a truncated sidecar. On
+    Delta/Iceberg the table's own properties replace it outright."""
     import json
-    import os
 
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, _META_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, sort_keys=True)
-    os.replace(tmp, os.path.join(path, _META_FILE))
+    store._fs_write_text(
+        None, store.join(path, _META_FILE), json.dumps(meta, sort_keys=True)
+    )
 
 
 def store_meta_read(path: str) -> dict | None:
     """Read a store's ``_store_meta.json`` sidecar; None for legacy
     stores written before the sidecar existed."""
     import json
-    import os
 
-    try:
-        with open(os.path.join(path, _META_FILE)) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
+    meta_path = store.join(path, _META_FILE)
+    if not store.exists(meta_path):
         return None
+    return json.loads(store._fs_read_text(None, meta_path))
 
 
-def _store_data_bytes(path: str) -> int:
-    """Observed parquet bytes of a store's bucket dirs — a driver
-    listdir walk (<= buckets dirs, no Spark job)."""
-    import os
-
-    total = 0
-    try:
-        for d in os.listdir(path):
-            if not d.startswith(f"{STORE_BUCKET}="):
-                continue
-            sub = os.path.join(path, d)
-            for f in os.listdir(sub):
-                if not f.startswith(("_", ".")):
-                    total += os.path.getsize(os.path.join(sub, f))
-    except OSError:
-        return 0
-    return total
+def _bucket_files(path: str) -> dict[int, list[int]]:
+    """Data-file sizes per bucket of a store — one listing walk on the
+    driver (<= buckets dirs, no Spark job)."""
+    out: dict[int, list[int]] = {}
+    for rel, size in store.list_files(path):
+        d = rel.rpartition("/")[0]
+        if d.startswith(f"{STORE_BUCKET}="):
+            out.setdefault(int(d.split("=", 1)[1]), []).append(size)
+    return out
 
 
-def _refresh_meta_bytes(path: str) -> None:
+def _refresh_meta_bytes(path: str, meta: dict | None = None) -> None:
     """Record the store's observed on-disk bytes in the sidecar after a
     write — the figure ``_auto_buckets`` trusts over the optimizer's
     estimate on the next reseed (round-14 verdict: a 10x estimate
     overshoot at 100 TB means 10x too many buckets and small files
-    again). No-op for legacy sidecar-less stores."""
-    meta = store_meta_read(path)
+    again). ``meta`` is the sidecar to refresh (default: the stored
+    one). No-op for legacy sidecar-less stores."""
+    meta = meta if meta is not None else store_meta_read(path)
     if meta is not None:
-        store_meta_write(path, {**meta, "data_bytes": _store_data_bytes(path)})
+        data_bytes = sum(sum(v) for v in _bucket_files(path).values())
+        store_meta_write(path, {**meta, "data_bytes": data_bytes})
 
 
 def _store_params(path: str, caller: dict) -> dict:
@@ -1318,67 +1279,23 @@ def band_index_write(
             f"band_index_write: index already carries a reserved "
             f"column ({STORE_BUCKET!r} / {EPOCH_COL!r})"
         )
-    import os
-
-    bootstrap_append = False
-    if mode == "append":
-        # bootstrapping a NEW path via append must RECORD its layout:
-        # without the sidecar the next append fell back to the legacy
-        # fixed count and rows hashed with different moduli coexisted in
-        # one store, silently making pruned probes lossy (r14 advice —
-        # fp_store_write already handled this case)
-        bootstrap_append = (
-            store_meta_read(path) is None and not os.path.isdir(path)
-        )
-        buckets = _store_params(path, {"buckets": buckets})["buckets"]
-        if buckets is None:
-            # no sidecar to govern the append: an existing store keeps
-            # the legacy fixed layout its files were hashed with; a new
-            # path bootstrapped by append derives from data size
-            buckets = (
-                _LEGACY_BUCKETS
-                if os.path.isdir(path)
-                else _auto_buckets(index, None)
-            )
-    elif buckets is None:
-        # fresh/overwrite write with no caller-fixed count: derive the
-        # layout from the data size (scale-adaptive — a constant tuned
-        # for either local mode or the cluster is wrong at the other)
-        buckets = _auto_buckets(index, store_meta_read(path))
-    # repartition ON the bucket key before the partitioned write: a
-    # partitionBy write fans out one file per (task, bucket) pair, so
-    # without this every writer task sprays all `buckets` directories
-    # (measured: 1,850 files in st8's store at sf0.1, 6x its steady
-    # time in file/task overhead). One slim-index shuffle buys ~1 file
-    # per bucket; at corpus scale bound file size with
-    # spark.sql.files.maxRecordsPerFile instead of fewer buckets.
-    if mode != "append":
-        # a layout-(re)writing overwrite relies on the whole path being
-        # truncated; under dynamic partitionOverwriteMode only the
-        # partitions present in this frame would be replaced, so
-        # higher-numbered bucket dirs from a previous larger layout
-        # would survive with stale rows hashed under a different
-        # modulus (r14 advice) — refuse loudly instead
-        povm = (
-            index.sparkSession.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "STATIC"
-            )
-            or "STATIC"
-        )
-        if mode == "overwrite" and povm.upper() == "DYNAMIC":
-            raise ValueError(
-                "band_index_write: overwrite of a bucket-partitioned "
-                "store under spark.sql.sources.partitionOverwriteMode="
-                "dynamic would leave stale bucket dirs from a previous "
-                "layout — set the session back to static (the default) "
-                "for store seeds/rewrites"
-            )
-    index.withColumn(EPOCH_COL, F.lit(epoch).cast("int")).withColumn(
-        STORE_BUCKET, _store_bucket([F.col("band"), F.col("sig")], buckets)
-    ).repartition(buckets, F.col(STORE_BUCKET)).write.partitionBy(
-        STORE_BUCKET
-    ).mode(mode).parquet(path)
-    if mode != "append" or bootstrap_append:
+    buckets, _, existed = _write_layout(
+        index, path, buckets, mode, "band_index_write"
+    )
+    _write_buckets(
+        index.withColumn(EPOCH_COL, F.lit(epoch).cast("int")).withColumn(
+            STORE_BUCKET, _store_bucket([F.col("band"), F.col("sig")], buckets)
+        ),
+        path,
+        buckets,
+        mode,
+    )
+    meta = None
+    # bootstrapping a NEW path via append must record its layout too:
+    # without the sidecar the next append fell back to the legacy fixed
+    # count and rows hashed with different moduli coexisted in one
+    # store, silently making pruned probes lossy (r14 advice)
+    if mode != "append" or not existed:
         extra = [c for c in index.columns if c not in ("band", "sig")]
         meta = {"kind": "band_index", "buckets": buckets, "epoch": epoch}
         if len(extra) == 1:
@@ -1386,8 +1303,45 @@ def band_index_write(
         for key, val in (("k", k), ("bands", bands), ("base_hash", base_hash)):
             if val is not None:
                 meta[key] = val
-        store_meta_write(path, meta)
-    _refresh_meta_bytes(path)
+    _refresh_meta_bytes(path, meta)
+
+
+def _write_layout(
+    df: DataFrame, path: str, buckets: int | None, mode: str, caller: str
+) -> tuple[int, dict | None, bool]:
+    """``(buckets, sidecar, existed)`` for a bucket-partitioned store
+    write. The recorded ``buckets`` governs an append to a sidecar'd
+    store; with no caller-fixed count, an append to an existing legacy
+    no-sidecar store keeps the fixed layout its files were hashed with,
+    and any fresh write (overwrite, or a first append to a new path)
+    derives the count from the data size (scale-adaptive — a constant
+    tuned for either local mode or the cluster is wrong at the other).
+    An overwrite must truncate the whole path (see
+    ``store.require_static_overwrite``)."""
+    meta = store_meta_read(path)
+    existed = meta is not None or store.is_dir(path)
+    if mode == "append" and meta is not None:
+        buckets = meta["buckets"]
+    elif buckets is None:
+        buckets = (
+            _LEGACY_BUCKETS if mode == "append" and existed else _auto_buckets(df, meta)
+        )
+    if mode == "overwrite":
+        store.require_static_overwrite(df.sparkSession, caller)
+    return buckets, meta, existed
+
+
+def _write_buckets(df: DataFrame, path: str, nparts: int, mode: str) -> None:
+    """Write ``df`` partitioned by its ``STORE_BUCKET`` column,
+    repartitioned ON the bucket key first: a partitionBy write fans out
+    one file per (task, bucket) pair, so without this every writer task
+    sprays all bucket directories (measured: 1,850 files in st8's store
+    at sf0.1, 6x its steady time in file/task overhead). One slim
+    shuffle buys ~1 file per bucket; at corpus scale bound file size
+    with spark.sql.files.maxRecordsPerFile instead of fewer buckets."""
+    df.repartition(nparts, F.col(STORE_BUCKET)).write.partitionBy(
+        STORE_BUCKET
+    ).mode(mode).parquet(path)
 
 
 #: driver-side size guard for the tombstone broadcast: the latest-
@@ -1408,15 +1362,10 @@ def _latest_tombstones(
     tombstone epoch`` for its document (some later wave re-crawled or
     deleted it). Warns when the tombstone dir has grown past the
     broadcast-comfort threshold — compaction cadence is the knob."""
-    import os
     import warnings
 
-    tpath = os.path.join(path, _TOMBSTONE_DIR)
-    on_disk = sum(
-        os.path.getsize(os.path.join(tpath, f))
-        for f in os.listdir(tpath)
-        if not f.startswith(("_", "."))
-    )
+    tpath = store.join(path, _TOMBSTONE_DIR)
+    on_disk = sum(size for _, size in store.list_files(tpath))
     if on_disk > _TOMB_WARN_BYTES:
         warnings.warn(
             f"dedup store at {path}: tombstone table is "
@@ -1455,10 +1404,7 @@ def _apply_tombstones(spark: SparkSession, path: str, df: DataFrame) -> DataFram
     document per wave, folded away by ``compact_dedup_store``), so the
     anti-join broadcasts it; the store side never shuffles. No-op for
     stores that were never upserted (no ``_tombstones`` dir)."""
-    import os
-
-    tpath = os.path.join(path, _TOMBSTONE_DIR)
-    if not os.path.isdir(tpath):
+    if not store.is_dir(store.join(path, _TOMBSTONE_DIR)):
         return df
     id_col = _store_id_col(path, df)
     tomb = _latest_tombstones(spark, path, id_col)
@@ -1572,8 +1518,6 @@ def band_index_upsert_write(
     tombstones) and re-run the wave. First write bootstraps the store;
     a legacy store without the epoch/meta sidecar raises — rewrite it
     with ``band_index_write`` once."""
-    import os
-
     eff = _store_params(
         path,
         {
@@ -1586,7 +1530,7 @@ def band_index_upsert_write(
     )
     meta = store_meta_read(path)
     if meta is None:
-        if os.path.isdir(path):
+        if store.is_dir(path):
             raise ValueError(
                 f"band_index_upsert_write: store at {path} predates the "
                 "_store_meta.json sidecar — rewrite it once with "
@@ -1613,11 +1557,9 @@ def band_index_upsert_write(
         # one id-sized file per wave — no reason to fan out
         .repartition(1)
         .write.mode("append")
-        .parquet(os.path.join(path, _TOMBSTONE_DIR))
+        .parquet(store.join(path, _TOMBSTONE_DIR))
     )
-    store_meta_write(
-        path, {**meta, "epoch": epoch, "data_bytes": _store_data_bytes(path)}
-    )
+    _refresh_meta_bytes(path, {**meta, "epoch": epoch})
 
 
 def compact_dedup_store(
@@ -1685,88 +1627,69 @@ def compact_dedup_store(
     counts and ``tombstones_cleared``) for runtime auditing. The
     rewrite reads the path it replaces, so the surviving rows are
     eagerly materialised first (the ``cdc_apply_batch`` pattern)."""
-    import os
-    import shutil
+    from urllib.parse import unquote
 
-    def bucket_files() -> dict[str, int]:
-        out = {}
-        for d in os.listdir(path):
-            if d.startswith(f"{STORE_BUCKET}="):
-                out[d] = sum(
-                    1
-                    for f in os.listdir(os.path.join(path, d))
-                    if not f.startswith(("_", "."))
-                )
-        return out
-
-    before = bucket_files()
+    before = {b: len(sizes) for b, sizes in _bucket_files(path).items()}
     report = {
         "files_before": sum(before.values()),
         "buckets_before": len(before),
         "buckets_rewritten": 0,
         "tombstones_folded": 0,
     }
-    tpath = os.path.join(path, _TOMBSTONE_DIR)
+    tpath = store.join(path, _TOMBSTONE_DIR)
+    has_tombstones = store.is_dir(tpath)
     meta = store_meta_read(path)
     buckets = (meta or {}).get("buckets", len(before) or 1)
+    fat = [b for b, n in sorted(before.items()) if n > max_files_per_bucket]
 
-    def dynamic_overwrite(df: DataFrame, nparts: int) -> None:
-        # replace ONLY the partitions present in df, leaving every
+    def rewrite_buckets(chunk: DataFrame, bucket_ids: list) -> None:
+        # replace ONLY the buckets present in chunk, leaving every
         # other bucket's files untouched (byte-identical, pytest-pinned)
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(conf_key, "STATIC")
-        spark.conf.set(conf_key, "dynamic")
-        try:
-            (
-                df.repartition(nparts, F.col(STORE_BUCKET))
-                .write.partitionBy(STORE_BUCKET)
-                .mode("overwrite")
-                .parquet(path)
+        with store.materialised(chunk) as rows:
+            store.overwrite_partitions(
+                rows.repartition(len(bucket_ids), F.col(STORE_BUCKET)),
+                path,
+                STORE_BUCKET,
             )
-        finally:
-            spark.conf.set(conf_key, prev)
 
-    if os.path.isdir(tpath) and incremental:
-        from urllib.parse import unquote, urlparse
-
+    if has_tombstones and incremental:
         raw = spark.read.parquet(path)
         id_col = _store_id_col(path, raw)
         tomb = _latest_tombstones(spark, path, id_col)
-        # slim stats pass: count dead rows per DATA FILE reading only
-        # the (bucket, id, epoch) columns — a count-only columnar scan,
-        # cheap next to the rewrite it scopes; one row back per file
-        # that holds a dead row (<= the store's file count, bounded)
-        slim = raw.select(STORE_BUCKET, id_col, EPOCH_COL).withColumn(
-            "__file", F.input_file_name()
-        )
-        cond = (slim[id_col] == tomb["__tomb_id"]) & (
-            slim[EPOCH_COL] < tomb[TOMB_EPOCH_COL]
-        )
-        total_files = report["files_before"]
-        dead_rows = (
-            slim.join(F.broadcast(tomb), cond, "inner")
-            .groupBy(STORE_BUCKET, "__file")
+        # slim stats pass over the (bucket, id, epoch) columns only — a
+        # count-only columnar scan, cheap next to the rewrite it scopes.
+        # Dead rows are counted per BUCKET first (<= the store's bucket
+        # count back to the driver); file lists are collected only for
+        # the buckets the budget picks, so the driver never holds one
+        # row per dirty file of the whole store.
+        def dead_rows(frame: DataFrame) -> DataFrame:
+            slim = frame.select(
+                STORE_BUCKET,
+                id_col,
+                EPOCH_COL,
+                F.input_file_name().alias("__file"),
+            )
+            cond = (slim[id_col] == tomb["__tomb_id"]) & (
+                slim[EPOCH_COL] < tomb[TOMB_EPOCH_COL]
+            )
+            return slim.join(F.broadcast(tomb), cond, "inner")
+
+        dead = {
+            r[STORE_BUCKET]: r["__dead"]
+            for r in dead_rows(raw)
+            .groupBy(STORE_BUCKET)
             .agg(F.count(F.lit(1)).alias("__dead"))
-            .limit(total_files + 1)
+            .limit(len(before) + 1)
             .collect()
-        )
-        dead_files: dict[int, list] = {}
-        dead: dict[int, int] = {}
-        for r in dead_rows:
-            dead_files.setdefault(r[STORE_BUCKET], []).append(r["__file"])
-            dead[r[STORE_BUCKET]] = dead.get(r[STORE_BUCKET], 0) + r["__dead"]
+        }
         # one maintenance call serves BOTH kinds of debt: buckets with
         # dead rows AND buckets that merely accumulated too many append
         # files (a rewrite folds either); dead-heaviest first, then
         # file count, bucket id tiebreak for determinism
-        fat = {
-            int(d.split("=", 1)[1]): n
-            for d, n in before.items()
-            if n > max_files_per_bucket
-        }
+        fat_n = {b: before[b] for b in fat}
         dirty = sorted(
-            set(dead) | set(fat),
-            key=lambda b: (-dead.get(b, 0), -fat.get(b, 0), b),
+            set(dead) | set(fat_n),
+            key=lambda b: (-dead.get(b, 0), -fat_n.get(b, 0), b),
         )
         fold = dirty if bucket_budget is None else dirty[:bucket_budget]
         report["dead_rows_before"] = sum(dead.values())
@@ -1778,9 +1701,18 @@ def compact_dedup_store(
         # file count; the merge also folds replayed-wave duplicates);
         # dead-only buckets fold at FILE granularity — only files that
         # hold a dead row rewrite, clean files keep their bytes
-        bucket_fold = [b for b in fold if b in fat]
-        file_fold = [b for b in fold if b not in fat and b in dead_files]
-        files = sorted(f for b in file_fold for f in dead_files[b])
+        bucket_fold = [b for b in fold if b in fat_n]
+        file_fold = [b for b in fold if b not in fat_n and b in dead]
+        files = []
+        if file_fold:
+            files = sorted(
+                r[0]
+                for r in dead_rows(raw.filter(F.col(STORE_BUCKET).isin(file_fold)))
+                .select("__file")
+                .distinct()
+                .limit(sum(before[b] for b in file_fold) + 1)
+                .collect()
+            )
         report["files_rewritten"] = len(files)
         if files:
             # folded survivors of exactly those files, appended back as
@@ -1790,26 +1722,20 @@ def compact_dedup_store(
                 spark,
                 path,
                 spark.read.option("basePath", path).parquet(*files),
-            ).localCheckpoint(eager=True)
-            (
-                chunk.repartition(len(file_fold), F.col(STORE_BUCKET))
-                .write.partitionBy(STORE_BUCKET)
-                .mode("append")
-                .parquet(path)
             )
+            with store.materialised(chunk) as rows:
+                _write_buckets(rows, path, len(file_fold), "append")
             for f in files:
-                os.remove(unquote(urlparse(f).path))
+                store.delete(unquote(f))
         if bucket_fold:
-            chunk = (
+            rewrite_buckets(
                 _apply_tombstones(
                     spark,
                     path,
                     raw.filter(F.col(STORE_BUCKET).isin(bucket_fold)),
-                )
-                .dropDuplicates()
-                .localCheckpoint(eager=True)
+                ).dropDuplicates(),
+                bucket_fold,
             )
-            dynamic_overwrite(chunk, len(bucket_fold))
         report["buckets_rewritten"] = len(bucket_fold) + len(file_fold)
         report["tombstones_cleared"] = report["dead_rows_remaining"] == 0
         if report["tombstones_cleared"]:
@@ -1819,47 +1745,31 @@ def compact_dedup_store(
             report["tombstones_folded"] = (
                 spark.read.parquet(tpath).select(TOMB_EPOCH_COL).count()
             )
-            shutil.rmtree(tpath, ignore_errors=True)
-    elif os.path.isdir(tpath):
-        raw = spark.read.parquet(path)
-        survivors = (
-            _apply_tombstones(spark, path, raw)
-            .dropDuplicates()
-            .localCheckpoint(eager=True)
-        )
+            store.delete(tpath)
+    elif has_tombstones:
         report["tombstones_folded"] = (
             spark.read.parquet(tpath).select(TOMB_EPOCH_COL).count()
         )
+        survivors = _apply_tombstones(
+            spark, path, spark.read.parquet(path)
+        ).dropDuplicates()
         # a STATIC partitioned overwrite clears the whole path first
         # (tombstone dir included — exactly the fold we want) — but it
-        # also takes the meta sidecar with it, so restore that after
-        (
-            survivors.repartition(buckets, F.col(STORE_BUCKET))
-            .write.partitionBy(STORE_BUCKET)
-            .mode("overwrite")
-            .parquet(path)
-        )
-        shutil.rmtree(tpath, ignore_errors=True)
-        if meta is not None:
-            store_meta_write(path, meta)
+        # also takes the meta sidecar with it, which the refresh below
+        # writes back
+        with store.materialised(survivors) as rows:
+            _write_buckets(rows, path, buckets, "overwrite")
+        store.delete(tpath)
         report["buckets_rewritten"] = len(before)
-    else:
-        fat = [
-            d for d, n in before.items() if n > max_files_per_bucket
-        ]
-        if fat:
-            fat_vals = [int(d.split("=", 1)[1]) for d in fat]
-            chunk = (
-                spark.read.parquet(path)
-                .filter(F.col(STORE_BUCKET).isin(fat_vals))
-                .localCheckpoint(eager=True)
-            )
-            dynamic_overwrite(chunk, len(fat_vals))
-            report["buckets_rewritten"] = len(fat_vals)
-    after = bucket_files()
-    report["files_after"] = sum(after.values())
+    elif fat:
+        rewrite_buckets(
+            spark.read.parquet(path).filter(F.col(STORE_BUCKET).isin(fat)), fat
+        )
+        report["buckets_rewritten"] = len(fat)
+    after = _bucket_files(path)
+    report["files_after"] = sum(map(len, after.values()))
     report["buckets_after"] = len(after)
-    _refresh_meta_bytes(path)
+    _refresh_meta_bytes(path, meta)
     return report
 
 
@@ -1890,50 +1800,16 @@ def fp_store_write(
             f"fp_store_write: frame already carries the reserved "
             f"partition column {STORE_BUCKET!r}"
         )
-    meta = store_meta_read(path)
-    if mode == "append" and meta is not None:
-        buckets = meta["buckets"]
-    if buckets is None:
-        import os
-
-        # append to an existing legacy no-sidecar store keeps its old
-        # fixed layout; any fresh write (overwrite, or first append to
-        # a new path) derives the bucket count from the data size
-        # (scale-adaptive)
-        buckets = (
-            _LEGACY_BUCKETS
-            if (mode == "append" and meta is None and os.path.isdir(path))
-            else _auto_buckets(fps, meta)
-        )
-    if mode == "overwrite":
-        # same stale-bucket-dir hazard as band_index_write: a layout-
-        # changing overwrite must truncate the whole path (r14 advice)
-        povm = (
-            fps.sparkSession.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "STATIC"
-            )
-            or "STATIC"
-        )
-        if povm.upper() == "DYNAMIC":
-            raise ValueError(
-                "fp_store_write: overwrite of a bucket-partitioned "
-                "store under spark.sql.sources.partitionOverwriteMode="
-                "dynamic would leave stale bucket dirs from a previous "
-                "layout — set the session back to static (the default) "
-                "for store seeds/rewrites"
-            )
-    # repartition on the bucket key first — one file per bucket per
-    # write instead of one per (task, bucket); see band_index_write.
-    fps.withColumn(
-        STORE_BUCKET, _store_bucket([F.col(fp_col)], buckets)
-    ).repartition(buckets, F.col(STORE_BUCKET)).write.partitionBy(
-        STORE_BUCKET
-    ).mode(mode).parquet(path)
+    buckets, meta, _ = _write_layout(fps, path, buckets, mode, "fp_store_write")
+    _write_buckets(
+        fps.withColumn(STORE_BUCKET, _store_bucket([F.col(fp_col)], buckets)),
+        path,
+        buckets,
+        mode,
+    )
     if meta is None or mode not in ("append", "ignore"):
-        store_meta_write(
-            path, {"kind": "fp_store", "buckets": buckets, "fp_col": fp_col}
-        )
-    _refresh_meta_bytes(path)
+        meta = {"kind": "fp_store", "buckets": buckets, "fp_col": fp_col}
+    _refresh_meta_bytes(path, meta)
 
 
 def fp_store_pruned(
@@ -1971,13 +1847,6 @@ def fp_store_pruned(
         bfp, _store_bucket([F.col(fp_col)], eff["buckets"]), eff["buckets"]
     )
     return df.filter(F.col(STORE_BUCKET).isin(touched)).drop(STORE_BUCKET)
-
-
-#: rolling-release registry for minhash_probe_pairs' default mode:
-#: id(SparkContext) -> (weakref to the context, RDD ids the LAST
-#: default-mode probe pinned). The next probe on the same context
-#: releases them (see the lifecycle note in the docstring).
-_PROBE_PINNED: dict[int, tuple] = {}
 
 
 def minhash_probe_pairs(
@@ -2047,7 +1916,7 @@ def minhash_probe_pairs(
     own — the ``dedup_components`` rolling-release protocol applies).
     The call-time before/after id snapshot shares the
     single-threaded-session contract documented on
-    ``graph._persistent_rdd_ids``.
+    ``store._persistent_rdd_ids``.
     """
     if bands < 1 or k % bands:
         raise ValueError(
@@ -2109,29 +1978,18 @@ def minhash_probe_pairs(
     # it each consumer re-executes the band join INCLUDING the corpus
     # signature build, the probe's dominant cost (measured 27.2 s ->
     # 11.5 s at sf1). The materialised rows are candidate-pair-sized.
-    # localCheckpoint registers its RDD as persistent AT CALL TIME
-    # (materialisation comes later), so a before/after id diff here
-    # captures exactly the blocks this probe pinned.
-    from .graph import _persistent_rdd_ids, _release_rdds
-
-    sc = batch.sparkSession.sparkContext
-    if cache_out is None:
-        prev = _PROBE_PINNED.pop(id(sc), None)
-        if prev is not None and prev[0]() is sc:
-            _release_rdds(sc, prev[1])
-    before = _persistent_rdd_ids(sc)
-    cand = (
+    # Safe-by-default lifecycle: the NEXT default-mode probe on this
+    # context releases this probe's blocks, so one probe per batch in a
+    # long-lived driver never accumulates pinned candidate-pair blocks
+    # (r8 advice).
+    cand = rolling_checkpoint(
         band_rows(sig_b, "new_id")
         .join(corpus_band_rows, ["band", "sig"])
         .select("new_id", "old_id")
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "minhash_probe_pairs",
+        rolling=cache_out is None,
     )
-    pinned = None
-    if before is not None:
-        after = _persistent_rdd_ids(sc)
-        if after is not None:
-            pinned = after - before
     if cache_out is not None:
         cache_out.append(cand)
 
@@ -2159,16 +2017,6 @@ def minhash_probe_pairs(
         .select("new_id", "old_id", (inter / union).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    # Safe-by-default lifecycle: register this probe's blocks so the
-    # NEXT default-mode probe on this context releases them — one
-    # probe per batch in a long-lived driver then never accumulates
-    # pinned candidate-pair blocks (r8 advice), and nothing depends on
-    # garbage-collection timing. The weakref guards against an id()
-    # collision after the original context is collected.
-    if cache_out is None and pinned:
-        import weakref
-
-        _PROBE_PINNED[id(sc)] = (weakref.ref(sc), pinned)
     return result
 
 
@@ -2934,13 +2782,6 @@ def shared_spans(
     )
 
 
-#: rolling-release registry for cut_hot_spans' gram-index checkpoint:
-#: id(SparkContext) -> (weakref, pinned RDD ids) — same protocol as
-#: _PROBE_PINNED/_BLOOM_PINNED (the next default-mode call releases
-#: the previous call's blocks; stats_out=[] takes ownership instead).
-_CUT_PINNED: dict[int, tuple] = {}
-
-
 def cut_hot_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -3012,22 +2853,14 @@ def cut_hot_spans(
             ),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
-    from .graph import _persistent_rdd_ids, _release_rdds
-
-    sc = df.sparkSession.sparkContext
-    if stats_out is None:
-        prev = _CUT_PINNED.pop(id(sc), None)
-        if prev is not None and prev[0]() is sc:
-            _release_rdds(sc, prev[1])
-    before = _persistent_rdd_ids(sc)
-    g = base.select(F.col(id_col), F.posexplode(fps).alias("pos", "fp"))
-    # one materialisation feeds the stats pass AND the occurrence join
-    g = g.localCheckpoint(eager=False)
-    pinned = None
-    if before is not None:
-        after = _persistent_rdd_ids(sc)
-        if after is not None:
-            pinned = after - before
+    # one materialisation feeds the stats pass AND the occurrence join;
+    # rolling release (the minhash_probe_pairs protocol) unless
+    # stats_out=[] transfers ownership to the caller
+    g = rolling_checkpoint(
+        base.select(F.col(id_col), F.posexplode(fps).alias("pos", "fp")),
+        "cut_hot_spans",
+        rolling=stats_out is None,
+    )
     freq = g.groupBy("fp").agg(F.count_distinct(id_col).alias("__d"))
     if stats_out is not None:
         stats_out.append(freq)
@@ -3046,23 +2879,9 @@ def cut_hot_spans(
             F.col("__hot"), lambda s: (s <= i) & (i < s + k)
         ),
     )
-    # rolling-release registration (mirrors minhash_probe_pairs): the
-    # NEXT default-mode call on this context frees this call's gram-
-    # index blocks; stats_out=[] transfers ownership to the caller
-    if stats_out is None and pinned:
-        import weakref
-
-        _CUT_PINNED[id(sc)] = (weakref.ref(sc), pinned)
     return joined.select(
         F.col(id_col), F.array_join(kept, " ").alias(text_col)
     )
-
-
-#: rolling-release registry for dedup_incremental_bloom's maybe-set
-#: checkpoint: id(SparkContext) -> (weakref, pinned RDD ids) — same
-#: protocol as _PROBE_PINNED (the next call releases the previous
-#: call's blocks; see minhash_probe_pairs' lifecycle docstring).
-_BLOOM_PINNED: dict[int, tuple] = {}
 
 
 def dedup_incremental_bloom(
@@ -3176,23 +2995,7 @@ def dedup_incremental_bloom(
     # at most one call's (<= max_maybe_fps rows of) blocks. Contract:
     # finish consuming one call's result before the next call on the
     # same SparkContext.
-    from .graph import _persistent_rdd_ids, _release_rdds
-
-    sc = new_batch.sparkSession.sparkContext
-    prev = _BLOOM_PINNED.pop(id(sc), None)
-    if prev is not None and prev[0]() is sc:
-        _release_rdds(sc, prev[1])
-    before = _persistent_rdd_ids(sc)
-    maybe = maybe.localCheckpoint(eager=False)
-    pinned = None
-    if before is not None:
-        after = _persistent_rdd_ids(sc)
-        if after is not None:
-            pinned = after - before
-    if pinned:
-        import weakref
-
-        _BLOOM_PINNED[id(sc)] = (weakref.ref(sc), pinned)
+    maybe = rolling_checkpoint(maybe, "dedup_incremental_bloom")
     n_probe = maybe.limit(max_maybe_fps + 1).count()
     if n_probe > max_maybe_fps:
         raise RuntimeError(

@@ -31,41 +31,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..store import _release_rdds, checkpoint
+
 UNIT = 10**12  # one unit of rank mass, as a BIGINT fixed-point scale
-
-
-def _persistent_rdd_ids(sc) -> set[int] | None:
-    """RDD ids currently pinned in the JVM block manager, or None when
-    the backend doesn't expose them (e.g. Spark Connect — callers then
-    skip rolling release and keep the pre-r7 pin-until-session-end
-    behavior rather than failing).
-
-    CONCURRENCY CONTRACT: the before/after set-diff protocol both
-    iterative operators use (snapshot ids, checkpoint, diff) assumes no
-    OTHER thread creates persistent RDDs on this SparkContext inside
-    the window — a concurrent job's localCheckpoint landing in the diff
-    would later be unpersisted by us, and localCheckpoint blocks are
-    unrecoverable (lineage truncated), so that job would fail with
-    missing-block errors. Run iterative ops (pagerank_fixed_point,
-    dedup_components) from one driver thread at a time, or on separate
-    SparkContexts. Single-threaded drivers (this engine's batch plans,
-    the gate harness, spark-submit jobs) are unaffected."""
-    try:
-        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    except Exception:  # noqa: BLE001
-        return None
-
-
-def _release_rdds(sc, ids) -> None:
-    """Best-effort unpersist of checkpoint RDDs by id (non-blocking)."""
-    try:
-        jm = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            rdd = jm.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
 
 
 def pagerank_fixed_point(
@@ -244,8 +212,7 @@ def pagerank_fixed_point(
             # deg is partitioned by src, incoming by dst (its agg key):
             # both sides arrive partitioned on their join key — no
             # exchange beyond the 1-row broadcast
-            before = _persistent_rdd_ids(sc)
-            ranks = (
+            ranks, round_ids = checkpoint(
                 joined.withColumn(
                     "__inc", F.expr("coalesce(incoming, 0L)") + share
                 )
@@ -259,12 +226,9 @@ def pagerank_fixed_point(
                         )
                     ).alias("rank_int"),
                 )
-                .localCheckpoint(eager=True)
             )
-            if before is not None:
-                after = _persistent_rdd_ids(sc) or set()
-                _release_rdds(sc, prev_round_ids)
-                prev_round_ids = after - before
+            _release_rdds(sc, prev_round_ids)
+            prev_round_ids = round_ids
         # materialise the final ranks — the operator returns a
         # self-contained frame and leaves no cache residue in a
         # long-lived session beyond the returned checkpoint itself

@@ -60,6 +60,7 @@ from ..sources.nested_json import (
     pivot_panel,
     read_nested_release,
 )
+from ..store import materialised, overwrite_partitions, read_existing
 
 PANEL_META = ["areaType", "areaCode", "areaName", "date"]
 
@@ -215,12 +216,7 @@ def write_store(long: DataFrame, path: str) -> None:
     exactly its own partitions, so the write is idempotent like the
     reference's ON CONFLICT path.
     """
-    (
-        long.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_id")
-        .parquet(path)
-    )
+    overwrite_partitions(long, path, "partition_id")
 
 
 def write_store_bucketed(
@@ -246,17 +242,9 @@ def write_store_bucketed(
     spark = long.sparkSession
     if spark.catalog.tableExists(table_name):
         # insertInto is positional: match the table's column order
-        # (partition column last). The dynamic-overwrite writer OPTION is
-        # ignored on the insertInto path — only the session conf governs
-        # it — so set and restore it around the write.
+        # (partition column last)
         cols = spark.table(table_name).columns
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(conf_key, "static")
-        spark.conf.set(conf_key, "dynamic")
-        try:
-            long.select(*cols).write.mode("overwrite").insertInto(table_name)
-        finally:
-            spark.conf.set(conf_key, prev)
+        overwrite_partitions(long.select(*cols), table=table_name)
     else:
         (
             long.write.mode("overwrite")
@@ -297,15 +285,17 @@ def merge_upsert_store(
     4. The merged affected partitions are localCheckpoint-materialised
        (the plan reads the same files the dynamic overwrite is about
        to replace), then written with dynamic partition overwrite —
-       untouched partitions' files are never rewritten. At real 100 TB
-       scale the same logic rides a transactional table format's MERGE
-       (Delta/Iceberg) instead of checkpoint+overwrite; the semantics
-       here are the contract.
-    """
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import Window
+       untouched partitions' files are never rewritten, and the
+       checkpoint blocks are released once the write has run. At real
+       100 TB scale the same logic rides a transactional table
+       format's MERGE (Delta/Iceberg) instead of checkpoint+overwrite;
+       the semantics here are the contract.
 
-    from ..functions.graph import _persistent_rdd_ids, _release_rdds
+    With no store at ``path`` yet (a missing path, or a directory with
+    no data files) the deduped batch is the first write. Any other
+    read failure propagates and leaves the store untouched.
+    """
+    from pyspark.sql import Window
 
     spark = incoming.sparkSession
     w = Window.partitionBy("hash", "partition_id").orderBy(
@@ -316,15 +306,12 @@ def merge_upsert_store(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    # FS-agnostic existence probe: an os.path check only sees the local
-    # filesystem — on HDFS/S3 an existing store would read as absent and
-    # the first-write fallback's dynamic overwrite would wholesale-
-    # replace the batch's partitions, losing every non-conflicting row.
-    # Probe through Spark's reader instead (missing path OR an empty
-    # schema-less directory both raise AnalysisException).
-    try:
-        existing_all = spark.read.parquet(path)
-    except AnalysisException:
+    # only a missing path or a directory with no data files is a first
+    # write: the first-write path's dynamic overwrite replaces the
+    # batch's partitions wholesale, so mistaking an unreadable store
+    # for an absent one would lose every non-conflicting row there
+    existing_all = read_existing(spark, path)
+    if existing_all is None:
         write_store(inc, path)
         return
     parts = (
@@ -346,22 +333,10 @@ def merge_upsert_store(
         ["hash", "partition_id"],
         "left_anti",
     )
-    # the checkpoint blocks are not cache-manager entries (unpersist is
-    # a no-op for them); release by RDD id once the write has consumed
-    # them, else every merge pins its partitions' rows for the session
-    # — the accumulation class that OOM'd the r6 sweep driver
-    sc = spark.sparkContext
-    __b = _persistent_rdd_ids(sc)
-    merged = inc.unionByName(survivors.select(*inc.columns)).localCheckpoint(
-        eager=True
-    )
-    merged_ids = (
-        ((_persistent_rdd_ids(sc) or set()) - __b) if __b is not None else set()
-    )
-    try:
+    with materialised(
+        inc.unionByName(survivors.select(*inc.columns))
+    ) as merged:
         write_store(merged, path)
-    finally:
-        _release_rdds(sc, merged_ids)
 
 
 def run_main(
@@ -418,9 +393,6 @@ def compact_store(
     (localCheckpoint) before its files are overwritten, so a task retry
     mid-overwrite re-reads executor blocks, never half-replaced files.
     """
-    from ..functions.graph import _persistent_rdd_ids, _release_rdds
-
-    sc = spark.sparkContext
     store = spark.read.parquet(path)
     # ONE grouped count for every selected partition (not a count-scan
     # per partition); the rewrites that follow each scan only their own
@@ -441,31 +413,10 @@ def compact_store(
         # cost bounded by one partition's rows, so a task retry
         # mid-overwrite re-reads executor blocks, not half-replaced
         # files)
-        # rolling release by RDD id (graph._release_rdds): a plain
-        # DataFrame.unpersist() is a NO-OP for localCheckpoint blocks
-        # (they are not cache-manager entries), which would pin every
-        # compacted partition's rows for the session — the same
-        # accumulation class that OOM'd the r6 sweep driver
-        __b = _persistent_rdd_ids(sc)
-        part_df = (
-            store.filter(F.col("partition_id") == pid)
-            .coalesce(n_files)
-            .localCheckpoint(eager=True)
-        )
-        part_ids = (
-            ((_persistent_rdd_ids(sc) or set()) - __b)
-            if __b is not None
-            else set()
-        )
-        try:
-            (
-                part_df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("partition_id")
-                .parquet(path)
-            )
-        finally:
-            _release_rdds(sc, part_ids)
+        with materialised(
+            store.filter(F.col("partition_id") == pid).coalesce(n_files)
+        ) as part_df:
+            write_store(part_df, path)
         written[pid] = n_files
     return written
 

@@ -35,6 +35,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..store import _fs_read_text, _fs_write_text, join as _join
+
 __all__ = ["dump_table", "load_dump", "merge_upsert"]
 
 _MANIFEST = "manifest.json"
@@ -45,42 +47,6 @@ _DATA_DIR = "data"
 # separate reader/writer options) so the round-trip is exact.
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 _TS_NTZ_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-
-
-def _hadoop_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, p
-
-
-def _fs_write_text(spark: SparkSession, path: str, content: str) -> None:
-    """Write a small text file through the Hadoop FS (works for local,
-    s3a, hdfs, abfss — wherever the data files went)."""
-    fs, p = _hadoop_path(spark, path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(content.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _fs_read_text(spark: SparkSession, path: str) -> str:
-    # py4j passes bytearrays by value, so Java-side stream.read(buf)
-    # cannot fill a Python buffer — drain the stream JVM-side instead
-    # (commons-io ships with Hadoop)
-    fs, p = _hadoop_path(spark, path)
-    stream = fs.open(p)
-    try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-
-
-def _join(path: str, name: str) -> str:
-    return path.rstrip("/") + "/" + name
 
 
 def dump_table(

@@ -9,8 +9,10 @@ These mirror the reference's loaders:
 * Redis SET pipeline with TTL (``cache_prepopulate/process.py:41-75``,
   ``caching/redis.py:32-101``, TTL 12 days).
 
-For the parquet store the upsert lives in streaming.ingest.upsert_batch
-(dynamic partition overwrite — no external service needed).
+For the parquet serving store the upsert is
+plans.main_pipeline.merge_upsert_store (batch dedup, then a dynamic
+overwrite of the touched partitions — no external service needed);
+streaming.ingest.upsert_batch is its foreachBatch-sink name.
 """
 
 from __future__ import annotations

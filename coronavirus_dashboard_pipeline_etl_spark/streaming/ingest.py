@@ -20,51 +20,25 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..store import materialised, read_existing
 
-def upsert_batch(
-    batch: DataFrame,
-    store_path: str,
-    key_cols: tuple[str, ...] = ("hash", "partition_id"),
-    order_col: str = "release_id",
-) -> None:
-    """Idempotent hash-upsert into a partitioned parquet store.
 
-    Parquet has no MERGE; the equivalent with identical semantics to the
-    reference's ``ON CONFLICT (hash, partition_id) DO UPDATE``:
-    read back only the partitions the batch touches, anti-join out rows
-    the batch replaces, union, and dynamically overwrite just those
-    partitions. On Delta/Iceberg this function becomes a single
-    ``MERGE INTO`` — the call-site contract is unchanged.
-    """
-    spark = batch.sparkSession
-    touched = [r["partition_id"] for r in batch.select("partition_id").distinct().collect()]
-    try:
-        existing = spark.read.parquet(store_path).filter(
-            F.col("partition_id").isin(touched)
-        )
-        keep = existing.join(
-            batch.select(*key_cols).distinct(), on=list(key_cols), how="left_anti"
-        )
-        merged = keep.unionByName(batch, allowMissingColumns=True)
-    except AnalysisException as exc:
-        # ONLY a genuinely absent store means "first write" — any other
-        # read failure (transient FS error, corrupt footer, permission
-        # blip) must propagate: falling through to merged = batch would
-        # dynamically OVERWRITE the touched partitions with just the
-        # batch's rows, silently deleting every pre-existing row there
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        merged = batch
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_id")
-        .parquet(store_path)
-    )
+def upsert_batch(batch: DataFrame, store_path: str) -> None:
+    """Idempotent hash-upsert of one micro-batch into the partitioned
+    parquet serving store — the reference's ``ON CONFLICT (hash,
+    partition_id) DO UPDATE``. This is ``merge_upsert_store``, the
+    store's one upsert: the batch is deduped on (hash, partition_id),
+    only the partitions it touches are read back and dynamically
+    overwritten, and a read failure on an existing store propagates
+    instead of being mistaken for a first write. On Delta/Iceberg it
+    becomes a single ``MERGE INTO`` — the call-site contract is
+    unchanged."""
+    from ..plans.main_pipeline import merge_upsert_store
+
+    merge_upsert_store(batch, store_path)
 
 
 def stream_release_files(
@@ -170,18 +144,11 @@ def cdc_apply_batch(
             f"state column {CDC_SEQ_STATE!r}"
         )
     seq_type = batch.schema[seq_col].dataType
-    spark = batch.sparkSession
-    try:
-        snapshot = spark.read.parquet(store_path)
-    except AnalysisException as exc:
-        # same rule as upsert_batch: ONLY a genuinely absent store
-        # means "first write" — any other read failure must propagate
-        # (treating it as first-write would overwrite the whole store
-        # with one batch's rows)
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(
-            exc
-        ):
-            raise
+    # only an absent or empty store means "first write" — any other
+    # read failure propagates (treating it as first-write would
+    # overwrite the whole store with one batch's rows)
+    snapshot = read_existing(batch.sparkSession, store_path)
+    if snapshot is None:
         snapshot = batch.drop(seq_col, op_col, *tiebreak_cols).limit(0)
     if CDC_SEQ_STATE not in snapshot.columns:
         # pre-guard store (or first-batch bootstrap): unknown
@@ -270,8 +237,8 @@ def cdc_apply_batch(
         delete_op=delete_op,
         tiebreak_cols=list(tiebreak_cols),
     )
-    merged = merged.localCheckpoint(eager=True)
-    merged.write.mode("overwrite").parquet(store_path)
+    with materialised(merged) as rows:
+        rows.write.mode("overwrite").parquet(store_path)
 
 
 def index_upsert_batch(

@@ -404,9 +404,7 @@ def test_dedup_components_nonconvergence_releases_checkpoints(spark):
     from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
         dedup_components,
     )
-    from coronavirus_dashboard_pipeline_etl_spark.functions.graph import (
-        _persistent_rdd_ids,
-    )
+    from coronavirus_dashboard_pipeline_etl_spark.store import _persistent_rdd_ids
 
     sc = spark.sparkContext
     # long chain (diameter 40) cannot converge in 1 iteration even with
@@ -611,9 +609,7 @@ def test_review_fix_guards(spark):
     # releases the previous probe's checkpoint blocks, so a long-lived
     # one-probe-per-batch driver holds at most one probe's blocks and
     # no release ever depends on garbage-collection timing
-    from coronavirus_dashboard_pipeline_etl_spark.functions.graph import (
-        _persistent_rdd_ids,
-    )
+    from coronavirus_dashboard_pipeline_etl_spark.store import _persistent_rdd_ids
 
     sc = spark.sparkContext
     before = _persistent_rdd_ids(sc)
@@ -863,9 +859,7 @@ def test_cut_hot_spans_semantics(spark):
     # call's gram-index blocks; stats_out=[] takes ownership and must
     # neither release the registered default-mode blocks nor register
     # its own
-    from coronavirus_dashboard_pipeline_etl_spark.functions.graph import (
-        _persistent_rdd_ids,
-    )
+    from coronavirus_dashboard_pipeline_etl_spark.store import _persistent_rdd_ids
 
     sc = spark.sparkContext
     before = _persistent_rdd_ids(sc)

@@ -1,0 +1,272 @@
+"""The store layer (``store.py``): filesystem access through the Hadoop
+FileSystem API, checkpoint release, the first-write rule, the bounded
+fold stats, and a guard that keeps the store mechanics in one module."""
+
+import os
+import re
+from urllib.parse import unquote, urlparse
+
+import pytest
+from pyspark.sql import functions as F
+
+from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
+    band_index_read,
+    band_index_upsert_write,
+    band_index_write,
+    compact_dedup_store,
+    fp_store_write,
+    minhash_band_index,
+    store_meta_read,
+)
+from coronavirus_dashboard_pipeline_etl_spark.store import _persistent_rdd_ids
+
+PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "coronavirus_dashboard_pipeline_etl_spark",
+)
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _files(root):
+    """{relative path: bytes} of every parquet file under root."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            if n.endswith(".parquet") and not n.startswith("."):
+                p = os.path.join(d, n)
+                out[os.path.relpath(p, root)] = os.path.getsize(p)
+    return out
+
+
+def test_dedup_store_on_uri_path_matches_plain_path(spark, tmp_path, monkeypatch):
+    """A ``file://`` URI is a path Spark accepts, so the dedup stores
+    must behave on it exactly as on the plain path: tombstones apply on
+    read, the sidecar lives inside the store (not under ``./file:`` in
+    the working directory), and a budgeted fold sees the store's files."""
+    monkeypatch.chdir(tmp_path)
+    corpus = _docs(
+        spark,
+        [(i, f"w{i}a w{i}b w{i}c shared suffix tokens {i % 3}") for i in range(12)],
+    )
+    wave = _docs(spark, [(i, f"fresh crawl of document {i} now") for i in range(3)])
+    latest = corpus.filter("doc_id >= 3").unionByName(wave)
+    want = {tuple(r) for r in minhash_band_index(latest, k=8, bands=2).collect()}
+
+    results = {}
+    for label, path in (
+        ("plain", str(tmp_path / "plain")),
+        ("uri", "file://" + str(tmp_path / "uri")),
+    ):
+        band_index_write(
+            minhash_band_index(corpus, k=8, bands=2), path, buckets=8, k=8, bands=2
+        )
+        band_index_upsert_write(wave, path, k=8, bands=2)
+        read = {tuple(r) for r in band_index_read(spark, path).collect()}
+        rep = compact_dedup_store(spark, path, incremental=True, bucket_budget=1)
+        after = {tuple(r) for r in band_index_read(spark, path).collect()}
+        results[label] = (read, rep, after, store_meta_read(path))
+
+    plain, uri = results["plain"], results["uri"]
+    assert plain[0] == want and uri[0] == want
+    assert uri[1] == plain[1]
+    assert uri[1]["files_before"] > 0 and uri[1]["files_rewritten"] > 0
+    assert uri[2] == plain[2] == want
+    assert uri[3] == plain[3]
+    assert os.path.isfile(tmp_path / "uri" / "_store_meta.json")
+    assert sorted(os.listdir(tmp_path)) == ["plain", "uri"]
+
+
+def test_compact_dedup_store_releases_its_checkpoints(spark, tmp_path):
+    """Every fold shape materialises the rows it rewrites and must
+    release those blocks once the write has run: an incremental
+    (file-scoped and whole-bucket), a full and a tombstone-free
+    compaction each leave the pinned RDD set unchanged."""
+    sc = spark.sparkContext
+    corpus = _docs(
+        spark, [(i, f"w{i}a w{i}b w{i}c shared suffix {i % 4}") for i in range(24)]
+    )
+    bidx, fps = str(tmp_path / "bidx"), str(tmp_path / "fp")
+    band_index_write(
+        minhash_band_index(corpus, k=8, bands=2), bidx, buckets=8, k=8, bands=2
+    )
+    for w in range(3):
+        band_index_upsert_write(
+            _docs(spark, [(i, f"recrawl {w} of doc {i} here") for i in range(6)]),
+            bidx,
+            k=8,
+            bands=2,
+        )
+    fp_frame = corpus.select(F.md5("text").alias("fp"))
+    fp_store_write(fp_frame, fps, buckets=4, mode="overwrite")
+    for _ in range(3):
+        fp_store_write(fp_frame, fps)
+
+    def pinned_after(**kw):
+        before = _persistent_rdd_ids(sc)
+        rep = compact_dedup_store(spark, **kw)
+        assert _persistent_rdd_ids(sc) == before, rep
+        return rep
+
+    rep = pinned_after(path=bidx, incremental=True, bucket_budget=2)
+    assert rep["buckets_rewritten"] > 0
+    rep = pinned_after(path=bidx, incremental=True, max_files_per_bucket=1)
+    assert rep["tombstones_cleared"] is True
+    band_index_upsert_write(
+        _docs(spark, [(1, "one more recrawl of doc one")]), bidx, k=8, bands=2
+    )
+    rep = pinned_after(path=bidx)
+    assert rep["tombstones_folded"] > 0
+    rep = pinned_after(path=fps, max_files_per_bucket=2)
+    assert rep["buckets_rewritten"] > 0
+
+
+def test_incremental_fold_collects_file_lists_only_for_budgeted_buckets(
+    spark, tmp_path, monkeypatch
+):
+    """The fold's stats pass ranks buckets from a per-bucket aggregate
+    and lists dead files only inside the buckets the budget picks, so
+    no collect returns one row per dirty file of the whole store. The
+    files it folds are still exactly the dead-row files of the picked
+    bucket."""
+    path = str(tmp_path / "bidx")
+    corpus = _docs(
+        spark, [(i, f"w{i}a w{i}b w{i}c tail tokens {i % 7}") for i in range(40)]
+    )
+    band_index_write(
+        minhash_band_index(corpus, k=8, bands=2), path, buckets=8, k=8, bands=2
+    )
+    for w in range(4):
+        band_index_upsert_write(
+            _docs(spark, [(i, f"wave {w} recrawl {i} text") for i in range(12)]),
+            path,
+            k=8,
+            bands=2,
+        )
+    # ground truth: which data files hold a dead row, per bucket
+    raw = spark.read.parquet(path).withColumn("__f", F.input_file_name())
+    tomb = (
+        spark.read.parquet(path + "/_tombstones")
+        .groupBy("doc_id")
+        .agg(F.max("__tomb_epoch").alias("__t"))
+    )
+    dead_files = {}
+    for r in (
+        raw.join(tomb, "doc_id")
+        .filter(F.col("__epoch") < F.col("__t"))
+        .select("bucket", "__f")
+        .distinct()
+        .collect()
+    ):
+        dead_files.setdefault(r["bucket"], set()).add(
+            os.path.relpath(unquote(urlparse(r["__f"]).path), path)
+        )
+    n_dead_files = sum(len(v) for v in dead_files.values())
+    assert n_dead_files > 8  # more dirty files than the store has buckets
+    logical = {tuple(r) for r in band_index_read(spark, path).collect()}
+    before = _files(path)
+
+    collected = []
+    df_cls = type(raw)
+    orig = df_cls.collect
+
+    def counting_collect(self):
+        rows = orig(self)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(df_cls, "collect", counting_collect)
+    rep = compact_dedup_store(
+        spark, path, incremental=True, bucket_budget=1, max_files_per_bucket=99
+    )
+    monkeypatch.undo()
+
+    assert rep["buckets_rewritten"] == 1
+    gone = set(before) - set(_files(path))
+    (folded_bucket,) = {p.split("/")[0] for p in gone}
+    folded = int(folded_bucket.split("=")[1])
+    assert gone == dead_files[folded]
+    assert rep["files_rewritten"] == len(dead_files[folded])
+    assert max(collected) <= max(8, len(dead_files[folded]))
+    assert max(collected) < n_dead_files
+    # untouched files keep their bytes; the merge-on-read view holds
+    assert all(_files(path).get(p) == n for p, n in before.items() if p not in gone)
+    assert {tuple(r) for r in band_index_read(spark, path).collect()} == logical
+
+
+def test_merge_upsert_store_propagates_unreadable_store(spark, tmp_path):
+    """Only a missing path or an empty directory is a first write: a
+    store that exists but cannot be read (here, a data file whose
+    columns clash case-insensitively) raises, and its files stay as
+    they were instead of being overwritten with the batch's rows."""
+    from pyspark.errors import AnalysisException
+
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        merge_upsert_store,
+    )
+
+    batch = spark.createDataFrame(
+        [("h", "x", "{}", 1)],
+        "hash string, partition_id string, payload string, release_id long",
+    )
+    store = tmp_path / "store"
+    prev = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        spark.createDataFrame([("h", "H")], "hash string, HASH string").write.parquet(
+            str(store / "partition_id=x")
+        )
+    finally:
+        spark.conf.set("spark.sql.caseSensitive", prev)
+    before = _files(store)
+    with pytest.raises(AnalysisException):
+        merge_upsert_store(batch, str(store))
+    assert _files(store) == before
+
+    # an empty directory is still a first write
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    merge_upsert_store(batch, str(empty))
+    assert spark.read.parquet(str(empty)).count() == 1
+
+
+#: store mechanics that belong to ``store.py`` alone
+_FORBIDDEN = re.compile(
+    r"os\.listdir|os\.remove|os\.path\.getsize|os\.path\.isdir|os\.makedirs"
+    r"|os\.replace|shutil\.|(?<![\w.])open\(|partitionOverwriteMode"
+    r"|_persistent_rdd_ids\("
+)
+_STORE_FAMILIES = (
+    "functions/dedup.py",
+    "plans/main_pipeline.py",
+    "streaming/ingest.py",
+)
+
+
+def _store_mechanics(source: str) -> list[str]:
+    return [
+        f"{n}: {line.strip()}"
+        for n, line in enumerate(source.splitlines(), 1)
+        if _FORBIDDEN.search(line)
+    ]
+
+
+def test_store_mechanics_live_only_in_store_module():
+    """Listing, deleting and writing store files, overwrite-mode
+    handling and checkpoint-id bookkeeping go through ``store.py``; the
+    store families may not grow private copies again."""
+    # the scanner itself catches a planted call of each kind
+    for planted in (
+        "    for d in os.listdir(path):",
+        "    shutil.rmtree(tpath)",
+        "    with open(meta) as fh:",
+        '    .option("partitionOverwriteMode", "dynamic")',
+        "    before = _persistent_rdd_ids(sc)",
+    ):
+        assert _store_mechanics(planted), planted
+    assert not _store_mechanics("    stream = fs.open(p)")
+    for rel in _STORE_FAMILIES:
+        with open(os.path.join(PKG, rel)) as fh:
+            assert _store_mechanics(fh.read()) == [], rel
