@@ -1517,7 +1517,14 @@ def band_index_upsert_write(
     ``compact_dedup_store`` (drops replayed duplicate rows, folds
     tombstones) and re-run the wave. First write bootstraps the store;
     a legacy store without the epoch/meta sidecar raises — rewrite it
-    with ``band_index_write`` once."""
+    with ``band_index_write`` once.
+
+    ``streaming.ingest.index_upsert_batch`` is this function under its
+    foreachBatch-sink name: pass a closure over it to
+    ``stream_release_files`` for a live crawl-wave stream. After the
+    last wave the store equals ``minhash_band_index`` rebuilt over each
+    document's latest crawl, however the waves were sliced (gated by
+    st8)."""
     eff = _store_params(
         path,
         {

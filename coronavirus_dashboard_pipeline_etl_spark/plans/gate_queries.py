@@ -26,6 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.functions import broadcast
 
+from .. import store
 from ..functions.dedup import (
     MERSENNE_P,
     exact_dedup,
@@ -54,6 +55,7 @@ from ..operators import (
 from ..operators.nesting import wrap_payload
 from ..operators.util import ts_micros, with_scalar
 from ..sources import load_table
+from .crawl import _audit_stage, crawl_day
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1084,30 +1086,54 @@ FROM documents
 
 
 # --------------------------------------------------------------------------
-# plan-audit hook for composed gates
+# shared store-gate fixtures
 # --------------------------------------------------------------------------
 
-#: When tools/plan_audit.py sets this to a dict, gates that EAGERLY
-#: CHECKPOINT intermediate stages (pipe22/pipe23/d14c — their returned
-#: frame is a union of checkpoint reads, so its plan shows none of the
-#: real execution shape) record each stage's PRE-checkpoint DataFrame
-#: here: gate name -> [(stage label, physical plan string), ...]. The
-#: auditor then audits the stage plans alongside the final one
-#: (round-13 verdict item 4: composed gates get real flag rows again).
-#: None (the default, and the state outside the auditor) makes
-#: _audit_stage a no-op — zero cost on the bench/driver path.
-PLAN_STAGES: dict[str, list] | None = None
+
+def _scratch_store(spark: SparkSession, name: str) -> str:
+    """A cleared store path ``name`` under the session's warehouse dir:
+    a store gate proves THIS run's write -> read chain, so nothing an
+    earlier run left there may survive."""
+    path = store.join(spark.conf.get("spark.sql.warehouse.dir"), name)
+    store.delete(path)
+    return path
 
 
-def _audit_stage(gate: str, stage: str, df: DataFrame) -> None:
-    """Record a composed gate's pre-checkpoint stage PLAN for the plan
-    auditor. The physical-plan string is captured immediately (planning
-    only — no job runs): the gate's later store writes overwrite/append
-    the very files this stage's plan references, so a lazily-kept frame
-    would be unplannable by the time the auditor looked."""
-    if PLAN_STAGES is not None:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        PLAN_STAGES.setdefault(gate, []).append((stage, plan))
+def _recrawl_waves(docs: DataFrame) -> dict[int, DataFrame]:
+    """Two crawl waves over ``doc_id, lang, text`` (seed corpus = %3==0)
+    carrying PLANTED exact duplicates, which the corpus has none of
+    naturally: wave 1 = %3==1 plus a re-crawl of every %5==0 seed doc
+    under a fresh id (+1,000,000 — drops against the SEED state), wave 2
+    = %3==2 plus a re-crawl of every %5==1 wave-1 doc (+2,000,000 —
+    drops only if wave 1's survivors advanced the state)."""
+    corpus0 = docs.filter(F.col("doc_id") % 3 == 0)
+    raw1 = docs.filter(F.col("doc_id") % 3 == 1)
+    return {
+        1: raw1.unionByName(
+            corpus0.filter(F.col("doc_id") % 5 == 0).select(
+                (F.col("doc_id") + 1_000_000).alias("doc_id"), "lang", "text"
+            )
+        ),
+        2: docs.filter(F.col("doc_id") % 3 == 2).unionByName(
+            raw1.filter(F.col("doc_id") % 5 == 1).select(
+                (F.col("doc_id") + 2_000_000).alias("doc_id"), "lang", "text"
+            )
+        ),
+    }
+
+
+def _index_slices(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The band-index maintenance sequence's ``doc_id, text`` slices:
+    the base corpus (%5 in 1, 2, 3), a STALE first crawl of the %5==4
+    docs ('stale0 ' prepended) and their re-crawl with current text."""
+    base = docs.filter((F.col("doc_id") % 5).isin(1, 2, 3)).select(
+        "doc_id", "text"
+    )
+    stale = docs.filter(F.col("doc_id") % 5 == 4).select(
+        "doc_id", F.concat(F.lit("stale0 "), F.col("text")).alias("text")
+    )
+    recrawl = docs.filter(F.col("doc_id") % 5 == 4).select("doc_id", "text")
+    return base, stale, recrawl
 
 
 # --------------------------------------------------------------------------
@@ -4913,7 +4939,7 @@ def d8_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-first within the batch."""
     docs = load_table(spark, sf_dir, "documents")
     seen = docs.filter(F.col("doc_id") % 3 == 0).select(
-        F.md5(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")).alias("fp")
+        fingerprint("text").alias("fp")
     )
     batch = docs.filter(F.col("doc_id") % 3 != 0)
     out = dedup_incremental(batch, seen)
@@ -5478,8 +5504,6 @@ def s18_serve_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> bucket -> read -> aggregate chain is value-checked end to end.
     (plans/main_pipeline.write_store_bucketed; reference store DDL
     db_etl_update_db/update.py:71-89.)"""
-    import shutil
-
     from ..operators.pivoting import melt
     from .main_pipeline import write_store_bucketed
 
@@ -5507,12 +5531,11 @@ def s18_serve_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fresh store per run: the gate proves THIS run's write->read chain,
     # and a stale location from a dead session would fail saveAsTable
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/{table}", ignore_errors=True)
+    _scratch_store(spark, table)
     write_store_bucketed(long, table, buckets=16)
-    store = spark.table(table)
     return (
-        store.groupBy("area_code", "metric")
+        spark.table(table)
+        .groupBy("area_code", "metric")
         .agg(F.max(F.struct(F.col("date"), F.col("payload"))).alias("__top"))
         .select(
             "area_code",
@@ -5571,8 +5594,6 @@ def s19_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings), the conflict rule (batch wins on hash), and the
     untouched-partition rule in SQL — any drift in any of the three
     fails the value hash."""
-    import shutil
-
     from .main_pipeline import merge_upsert_store, write_store
 
     orders = load_table(spark, sf_dir, "orders")
@@ -5599,13 +5620,11 @@ def s19_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         inc = leg if inc is None else inc.unionByName(leg)
 
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = f"{warehouse}/gate_s19_store"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_store(spark, "gate_s19_store")
     write_store(base, path)
     merge_upsert_store(inc, path)
-    store = spark.read.parquet(path)
-    return store.groupBy("partition_id", "release_id").agg(
+    merged = spark.read.parquet(path)
+    return merged.groupBy("partition_id", "release_id").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count_distinct(F.col("hash")).alias("n_hashes"),
         F.sum(F.col("payload").cast("double")).alias("sum_payload"),
@@ -12063,16 +12082,10 @@ def s20_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language aggregate must match the parquet-derived oracle
     value-for-value, proving the format conversion is lossless for
     longs and UTF-8 strings."""
-    import shutil
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    path = f"{warehouse}/gate_s20_orc"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_store(spark, "gate_s20_orc")
     docs.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("lang", "source").agg(
@@ -12238,19 +12251,13 @@ def st7_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     composability property the streaming sink's correctness rests on
     (live readStream/foreachBatch parity is pytest territory, the
     st-family split)."""
-    import shutil
-
     from ..streaming.ingest import cdc_apply_batch
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
     changes = _cdc_changes(orders)
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    path = f"{warehouse}/gate_st7_store"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_store(spark, "gate_st7_store")
     # seed the store with the snapshot (batch 0 = initial load: all
     # inserts at seq 0), then the waves in stream order
     seed = orders.withColumns(
@@ -12271,8 +12278,8 @@ def st7_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=("o_orderkey",),
             tiebreak_cols=("src",),
         )
-    store = spark.read.parquet(path)
-    return store.groupBy(
+    snapshot = spark.read.parquet(path)
+    return snapshot.groupBy(
         "o_orderstatus", (F.col("o_orderkey") % 97).alias("key_bucket")
     ).agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -12307,8 +12314,6 @@ def d14b_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band_index_pruned — the corpus scan carries PartitionFilters for
     exactly the buckets the probe batch touches; round-12 verdict
     item 4)."""
-    import shutil
-
     from ..functions.dedup import (
         band_index_pruned,
         band_index_read,
@@ -12318,26 +12323,18 @@ def d14b_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    stale = docs.filter(F.col("doc_id") % 5 == 4).select(
-        "doc_id", F.concat(F.lit("stale0 "), F.col("text")).alias("text")
-    )
-    base = docs.filter((F.col("doc_id") % 5).isin(1, 2, 3)).select(
-        "doc_id", "text"
-    )
+    base, stale, recrawl = _index_slices(docs)
     idx0 = minhash_band_index(base.unionByName(stale), k=16, bands=2)
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    path = f"{warehouse}/gate_d14b_index"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_store(spark, "gate_d14b_index")
     band_index_write(idx0, path, k=16, bands=2)
     # wave 2: re-crawl of the %5==4 docs with their CURRENT text —
-    # replace-by-document through the store
-    batch1 = docs.filter(F.col("doc_id") % 5 == 4).select("doc_id", "text")
+    # replace-by-document through the store; the rewrite streams from
+    # checkpoint blocks, not from the files it replaces
     updated = minhash_index_upsert(
-        band_index_read(spark, path), batch1, k=16, bands=2
+        band_index_read(spark, path), recrawl, k=16, bands=2
     )
-    band_index_write(updated.localCheckpoint(eager=True), path, k=16, bands=2)
+    with store.materialised(updated) as rows:
+        band_index_write(rows, path, k=16, bands=2)
     probe_batch = docs.filter(F.col("doc_id") % 5 == 0)
     pairs = minhash_probe_pairs(
         probe_batch,
@@ -12476,27 +12473,12 @@ def st8_stream_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest territory, the st-family split). The sink writes the
     production PARTITIONED layout and the probe reads it PRUNED
     (band_index_pruned; round-12 verdict item 4)."""
-    import shutil
-
     from ..functions.dedup import band_index_pruned, band_index_read
     from ..streaming.ingest import index_upsert_batch
 
     docs = load_table(spark, sf_dir, "documents")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    path = f"{warehouse}/gate_st8_index"
-    shutil.rmtree(path, ignore_errors=True)
-    waves = (
-        docs.filter((F.col("doc_id") % 5).isin(1, 2, 3)).select(
-            "doc_id", "text"
-        ),
-        docs.filter(F.col("doc_id") % 5 == 4).select(
-            "doc_id", F.concat(F.lit("stale0 "), F.col("text")).alias("text")
-        ),
-        docs.filter(F.col("doc_id") % 5 == 4).select("doc_id", "text"),
-    )
-    for wave in waves:
+    path = _scratch_store(spark, "gate_st8_index")
+    for wave in _index_slices(docs):
         index_upsert_batch(wave, path, k=16, bands=2)
     probe_batch = docs.filter(F.col("doc_id") % 5 == 0)
     pairs = minhash_probe_pairs(
@@ -12531,7 +12513,7 @@ def d8b_incremental_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     seen = docs.filter(F.col("doc_id") % 3 == 0).select(
-        F.md5(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")).alias("fp")
+        fingerprint("text").alias("fp")
     )
     batch = docs.filter(F.col("doc_id") % 3 != 0)
     out = dedup_incremental_bloom(batch, seen, m_bits=1 << 18)
@@ -12558,19 +12540,11 @@ def pipe21_incremental_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite existing files) and each wave reads it PRUNED
     (fp_store_pruned — the seen-side scan carries PartitionFilters for
     the wave's own fp buckets; round-12 verdict item 4)."""
-    import shutil
-
     from ..functions.dedup import fp_store_pruned, fp_store_write
 
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(
-        F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
-    ).alias("fp")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    path = f"{warehouse}/gate_pipe21_fps"
-    shutil.rmtree(path, ignore_errors=True)
+    fp = fingerprint("text").alias("fp")
+    path = _scratch_store(spark, "gate_pipe21_fps")
     fp_store_write(
         docs.filter(F.col("doc_id") % 3 == 0).select(fp).distinct(),
         path,
@@ -12587,9 +12561,8 @@ def pipe21_incremental_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # column; eager materialise BEFORE touching the store path,
         # the cdc_apply_batch pattern — append mode never rewrites
         # existing files, so production appends stay file-sized)
-        fp_store_write(
-            kept.select("fp").localCheckpoint(eager=True), path
-        )
+        with store.materialised(kept.select("fp")) as fps:
+            fp_store_write(fps, path)
         out = kept if out is None else out.unionByName(kept)
     return out
 
@@ -12630,98 +12603,32 @@ ORACLE["pipe21_incremental_loop"] = PIPE21_SQL
 
 
 def pipe22_crawl_day(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPOSED crawl-day pipeline (round-12 verdict item 6): one
-    synthetic crawl day run TWICE (two waves) through the full
-    incremental stack, with every piece of state advancing between
-    waves — the composition pipe21 pins for exact-only, extended to
-    the whole corpus-maintenance loop:
+    """The COMPOSED crawl-day pipeline (``plans.crawl.crawl_day``): one
+    synthetic crawl day run as two waves through the full incremental
+    stack — exact dedup against the fp store, near-dup probe against
+    the band index, quality filter, packing — with every piece of state
+    advancing between waves; the composition pipe21 pins for exact
+    dedup only, extended to the whole corpus-maintenance loop.
 
-      exact dedup against the persisted fingerprint table
-        (``dedup_incremental`` over ``fp_store_pruned``)
-      -> near-dup probe against the persisted band index
-        (``minhash_probe_pairs(corpus_bands=band_index_pruned(...))``,
-        threshold 0.9; within-batch near-dups are out of scope per the
-        operator contract)
-      -> quality filter (``quality_stats``: len >= 20 tokens AND
-        distinct-token ratio >= 0.5)
-      -> sequence packing of the survivors (``assign_packs``,
-        context 512, doc_id order, per wave)
-      -> state advance: survivors' fps APPEND to the fp store,
-        survivor docs APPEND to the corpus store, band index UPSERT
-        through the streaming sink (``index_upsert_batch``).
-
-    Seed corpus = docs %3==0; wave 1 = %3==1, wave 2 = %3==2. Each
-    wave also carries PLANTED exact duplicates (the corpus has none
-    naturally): wave 1 re-crawls every %5==0 seed doc under a fresh id
-    (+1,000,000 — must drop against the SEED state), wave 2 re-crawls
-    every %5==1 wave-1 doc (+2,000,000 — drops at the exact stage ONLY
-    if wave 1's survivors actually advanced the fp store; a planted
-    copy of a wave-1 near-dup/quality reject must instead be dropped
-    by the SAME stage that dropped its source). The oracle replays
-    both waves sequentially in SQL, so any stage that fails to advance
-    (or advances with the wrong set) diverges on wave 2.
-
-    100 TB shape: every stage is the individually-audited operator —
-    both stores are hash-bucket partitioned and probe-pruned, probe
-    shuffles are candidate-sized, packing is a per-wave window over
-    the kept set. Per-wave outputs are eagerly materialised before the
-    state writes (the d14b pattern: the state appends invalidate the
-    prior wave's file listings, and the wave-2 probe's rolling release
-    frees the wave-1 probe's checkpoint blocks). Since round 14 the
-    band-index advance is BATCH-SIZED (``index_upsert_batch`` appends
-    + tombstones via ``band_index_upsert_write``) — no store rewrite
-    anywhere in the loop.
-
-    Since round 15 each store is READ once, not once per wave
-    (guide §2.4 — remove jobs outright): both waves' batches are known
-    up front, so ONE touched-bucket derivation over their union prunes
-    ONE read of each seed store, and wave 2's state view is that read
-    UNION the wave-1 survivors already materialised in memory (exactly
-    the oracle's own replay: ``seen1 = seen0 ∪ kept1`` fps, wave-2
-    probe corpus = ``w0 ∪ kept1``). Equivalence is by two superset
-    arguments, both lossless by construction: (a) pruning with the
-    UNION of both batches' touched buckets returns a superset of
-    either wave's pruned rows, and a store row in a bucket the wave's
-    batch does not touch cannot equal any of that batch's keys (equal
-    keys share a bucket), so the exact anti-join and the (band, sig)
-    equi-join are unchanged; (b) wave 2's in-memory state
-    (``packed1`` fps / docs / band rows) is exactly what the state
-    advance appended to the stores, unpruned — a superset of the
-    store-pruned view, with the same no-extra-matches argument. The
-    state-advance WRITES are unchanged (both stores still advance
-    identically — pipe21/st8/d14b keep proving the store round-trips);
-    only the second read round-trip per store is gone."""
-    import shutil
-
-    from ..functions.curation import assign_packs
-    from ..functions.dedup import (
-        band_index_pruned,
-        band_index_write,
-        fp_store_pruned,
-        fp_store_write,
-        minhash_band_index,
-    )
-    from ..functions.text import quality_stats
-    from ..streaming.ingest import index_upsert_batch
+    Seed corpus = docs %3==0; the waves are ``_recrawl_waves``, whose
+    planted re-crawls make every stage and both state advances
+    observable: a wave-2 copy of a wave-1 survivor drops at the exact
+    stage ONLY if wave 1 advanced the fp store, and a planted copy of a
+    wave-1 near-dup or quality reject must be dropped by the SAME stage
+    that dropped its source. The oracle replays both waves sequentially
+    in SQL, so any stage that fails to advance (or advances with the
+    wrong set) diverges on wave 2."""
+    from ..functions.dedup import band_index_write, fp_store_write, minhash_band_index
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
     corpus0 = docs.filter(F.col("doc_id") % 3 == 0)
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    fp_path = f"{warehouse}/gate_pipe22_fps"
-    idx_path = f"{warehouse}/gate_pipe22_index"
-    corpus_path = f"{warehouse}/gate_pipe22_corpus"
-    for p in (fp_path, idx_path, corpus_path):
-        shutil.rmtree(p, ignore_errors=True)
+    fp_path = _scratch_store(spark, "gate_pipe22_fps")
+    idx_path = _scratch_store(spark, "gate_pipe22_index")
+    corpus_path = _scratch_store(spark, "gate_pipe22_corpus")
     fp_store_write(
-        corpus0.select(
-            F.md5(
-                F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
-            ).alias("fp")
-        ).distinct(),
+        corpus0.select(fingerprint("text").alias("fp")).distinct(),
         fp_path,
         mode="overwrite",  # explicit SEED mode: never absorb residue
     )
@@ -12729,128 +12636,11 @@ def pipe22_crawl_day(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_band_index(corpus0, k=16, bands=2), idx_path, k=16, bands=2
     )
     corpus0.select("doc_id", "text").write.parquet(corpus_path)
-
-    raw1 = docs.filter(F.col("doc_id") % 3 == 1)
-    waves = {
-        1: raw1.unionByName(
-            corpus0.filter(F.col("doc_id") % 5 == 0).select(
-                (F.col("doc_id") + 1_000_000).alias("doc_id"), "lang", "text"
-            )
-        ),
-        2: docs.filter(F.col("doc_id") % 3 == 2).unionByName(
-            raw1.filter(F.col("doc_id") % 5 == 1).select(
-                (F.col("doc_id") + 2_000_000).alias("doc_id"), "lang", "text"
-            )
-        ),
-    }
-    # ONE pruned read of each seed store serves BOTH waves (r14 verdict
-    # item 1, guide §2.4): the union of the two statically-defined
-    # batches derives the touched buckets in one pass per store; wave 2
-    # extends the view with the wave-1 survivors held in memory instead
-    # of re-reading the just-advanced store (equivalence argument in
-    # the docstring — it mirrors the oracle's own in-memory replay).
-    both = waves[1].unionByName(waves[2])
-    seen_seed = fp_store_pruned(spark, fp_path, both)
-    bands_seed = band_index_pruned(spark, idx_path, both, k=16, bands=2)
-    corpus0_docs = spark.read.parquet(corpus_path)
-    state_fps = state_docs = state_bands = None
-    out = None
-    for wave_no, batch in waves.items():
-        seen = (
-            seen_seed
-            if state_fps is None
-            else seen_seed.unionByName(state_fps)
-        )
-        # kept_e feeds FOUR subtrees of the wave plan (the probe's
-        # batch-band build, both verify token fetches, and the
-        # survivors anti-join); materialise the wave-sized frame once
-        # instead of re-running the store anti-join + keep-first window
-        # under each consumer (the pipe14 drop-list pattern)
-        kept_e_lazy = dedup_incremental(batch, seen)
-        _audit_stage(
-            "pipe22_crawl_day", f"wave{wave_no}_kept_e", kept_e_lazy
-        )
-        kept_e = kept_e_lazy.localCheckpoint(eager=True)
-        corpus_docs = (
-            corpus0_docs
-            if state_docs is None
-            else corpus0_docs.unionByName(state_docs)
-        )
-        corpus_bands = (
-            bands_seed
-            if state_bands is None
-            else bands_seed.unionByName(state_bands)
-        )
-        near_ids = (
-            minhash_probe_pairs(
-                kept_e,
-                corpus_docs,
-                k=16,
-                bands=2,
-                threshold=0.9,
-                corpus_bands=corpus_bands,
-            )
-            .select(F.col("new_id").alias("doc_id"))
-            .distinct()
-        )
-        survivors = kept_e.join(near_ids, "doc_id", "left_anti")
-        q = quality_stats(survivors)
-        # n_tokens <= 512 joins the quality cut: assign_packs rejects
-        # over-context docs loudly by contract, so cap BOTH sides the
-        # same way (r13 advice — without this a longer doc in future
-        # test data fails the Spark side where the oracle packs on)
-        kept = q.filter(
-            F.col("len_ok")
-            & (F.col("distinct_ratio") >= 0.5)
-            & (F.col("n_tokens") <= 512)
-        )
-        packed_lazy = assign_packs(
-            kept, tokens_col="n_tokens", context_len=512,
-            order_cols=("doc_id",),
-        )
-        # the whole wave (exact dedup -> probe -> quality -> pack) is
-        # ONE lazy plan here — hand it to the plan auditor before the
-        # eager checkpoint hides it
-        _audit_stage("pipe22_crawl_day", f"wave{wave_no}", packed_lazy)
-        packed = packed_lazy.localCheckpoint(eager=True)
-        # state advance: fps append, corpus append, band-index upsert.
-        # The three writes are mutually independent (distinct paths,
-        # all reading only the checkpointed wave), so submit them from
-        # a small thread pool and let the short appends back-fill the
-        # cores the upsert's tail leaves idle (guide §2.6); none of
-        # them localCheckpoints, so the iterative-operator
-        # single-thread contract is not in play
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _corpus_append() -> None:
-            packed.select("doc_id", "text").write.mode("append").parquet(
-                corpus_path
-            )
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for fut in [
-                pool.submit(fp_store_write, packed.select("fp"), fp_path),
-                pool.submit(_corpus_append),
-                pool.submit(
-                    index_upsert_batch,
-                    packed.select("doc_id", "text"),
-                    idx_path,
-                    k=16,
-                    bands=2,
-                ),
-            ]:
-                fut.result()
-        # the NEXT wave's state view: exactly the rows the three writes
-        # above appended, already materialised (packed is checkpointed)
-        state_fps = packed.select("fp")
-        state_docs = packed.select("doc_id", "text")
-        state_bands = minhash_band_index(packed, k=16, bands=2)
-        rows = packed.select(
-            "doc_id", "lang", "fp", "n_tokens", "pack_id", "pack_offset",
-            F.lit(wave_no).alias("wave"),
-        )
-        out = rows if out is None else out.unionByName(rows)
-    return out
+    return crawl_day(
+        spark, fp_path, idx_path, corpus_path, _recrawl_waves(docs)
+    ).select(
+        "doc_id", "lang", "fp", "n_tokens", "pack_id", "pack_offset", "wave"
+    )
 
 
 def _pipe22_sql() -> str:
@@ -13068,8 +12858,6 @@ def pipe23_bloom_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sequential-waves oracle. Output semantics are identical to the
     plain loop (no false negatives; confirm removes false positives),
     so the oracle is pipe21's with the planted rows added."""
-    import shutil
-
     from ..functions.dedup import (
         dedup_incremental_bloom,
         fp_store_pruned,
@@ -13082,36 +12870,15 @@ def pipe23_bloom_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "text"
     )
     corpus0 = docs.filter(F.col("doc_id") % 3 == 0)
-    fp = F.md5(
-        F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
-    ).alias("fp")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    fp_path = f"{warehouse}/gate_pipe23_fps"
-    sk_path = f"{warehouse}/gate_pipe23_sketch"
-    for p in (fp_path, sk_path):
-        shutil.rmtree(p, ignore_errors=True)
-    seed_fps = corpus0.select(fp).distinct()
+    fp_path = _scratch_store(spark, "gate_pipe23_fps")
+    sk_path = _scratch_store(spark, "gate_pipe23_sketch")
+    seed_fps = corpus0.select(fingerprint("text").alias("fp")).distinct()
     # explicit SEED mode: never absorb residue from a prior run
     fp_store_write(seed_fps, fp_path, mode="overwrite")
     bloom_bits(seed_fps, F.col("fp"), m_bits).write.parquet(sk_path)
 
-    raw1 = docs.filter(F.col("doc_id") % 3 == 1)
-    waves = {
-        1: raw1.unionByName(
-            corpus0.filter(F.col("doc_id") % 5 == 0).select(
-                (F.col("doc_id") + 1_000_000).alias("doc_id"), "lang", "text"
-            )
-        ),
-        2: docs.filter(F.col("doc_id") % 3 == 2).unionByName(
-            raw1.filter(F.col("doc_id") % 5 == 1).select(
-                (F.col("doc_id") + 2_000_000).alias("doc_id"), "lang", "text"
-            )
-        ),
-    }
     out = None
-    for wave_no, wave in waves.items():
+    for wave_no, wave in _recrawl_waves(docs).items():
         kept_lazy = dedup_incremental_bloom(
             wave,
             fp_store_pruned(spark, fp_path, wave),
@@ -13120,7 +12887,7 @@ def pipe23_bloom_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # hand the wave's real plan (sketch prefilter + pruned confirm
         # scan) to the plan auditor before the checkpoint hides it
-        _audit_stage("pipe23_bloom_loop", f"wave{wave_no}", kept_lazy)
+        _audit_stage(f"wave{wave_no}", kept_lazy)
         kept = kept_lazy.localCheckpoint(eager=True)
         # advance BOTH pieces of state: fps append into their buckets,
         # survivor bits OR-merged into the sketch (eager materialise
@@ -13130,9 +12897,9 @@ def pipe23_bloom_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(sk_path)
             .unionByName(bloom_bits(kept, F.col("fp"), m_bits))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        merged.write.mode("overwrite").parquet(sk_path)
+        with store.materialised(merged) as bits:
+            bits.write.mode("overwrite").parquet(sk_path)
         rows = kept.select(
             "doc_id", "lang", "fp", F.lit(wave_no).alias("wave")
         )
@@ -13214,8 +12981,6 @@ def d14c_tombstone_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the amortised compaction, exactly like Delta/Iceberg merge-on-read
     with OPTIMIZE. Reference frame: SURVEY §1.1 release-snapshot upsert
     model (db_etl_upload/uploader.py:320-325 idempotent re-release)."""
-    import shutil
-
     from ..functions.dedup import (
         band_index_pruned,
         band_index_read,
@@ -13224,27 +12989,13 @@ def d14c_tombstone_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    stale = docs.filter(F.col("doc_id") % 5 == 4).select(
-        "doc_id", F.concat(F.lit("stale0 "), F.col("text")).alias("text")
-    )
-    base = docs.filter((F.col("doc_id") % 5).isin(1, 2, 3)).select(
-        "doc_id", "text"
-    )
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    path = f"{warehouse}/gate_d14c_index"
-    shutil.rmtree(path, ignore_errors=True)
+    base, stale, recrawl = _index_slices(docs)
+    path = _scratch_store(spark, "gate_d14c_index")
     # wave 1 bootstraps the store (full build, epoch 0, no tombstones)
     band_index_upsert_write(base.unionByName(stale), path, k=16, bands=2)
     # wave 2: re-crawl of the %5==4 docs with their CURRENT text —
     # wave-sized appends + tombstones, the store is never rewritten
-    band_index_upsert_write(
-        docs.filter(F.col("doc_id") % 5 == 4).select("doc_id", "text"),
-        path,
-        k=16,
-        bands=2,
-    )
+    band_index_upsert_write(recrawl, path, k=16, bands=2)
     probe_batch = docs.filter(F.col("doc_id") % 5 == 0)
     pairs_lazy = minhash_probe_pairs(
         probe_batch,
@@ -13254,7 +13005,7 @@ def d14c_tombstone_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.5,
         corpus_bands=band_index_pruned(spark, path, probe_batch, k=16, bands=2),
     )
-    _audit_stage("d14c_tombstone_upsert", "probe_merge_on_read", pairs_lazy)
+    _audit_stage("probe_merge_on_read", pairs_lazy)
     # materialise the probe and the merge-on-read stats BEFORE the fold
     # rewrites the files their plans reference
     pairs = pairs_lazy.localCheckpoint(eager=True)
@@ -13318,27 +13069,20 @@ def pipe24_fp_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     op bounds the store's file count the way ``compact_store`` bounds
     the long store's (plans/main_pipeline.py:386), rewriting only the
     buckets that need it."""
-    import os
-    import shutil
-
     from ..functions.dedup import (
+        _bucket_files,
         compact_dedup_store,
         fp_store_pruned,
         fp_store_write,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(
-        F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
-    ).alias("fp")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    path = f"{warehouse}/gate_pipe24_fps"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_store(spark, "gate_pipe24_fps")
     # explicit SEED mode: never absorb residue from a prior run
     fp_store_write(
-        docs.filter(F.col("doc_id") % 4 == 0).select(fp).distinct(),
+        docs.filter(F.col("doc_id") % 4 == 0)
+        .select(fingerprint("text").alias("fp"))
+        .distinct(),
         path,
         buckets=16,
         mode="overwrite",
@@ -13349,20 +13093,12 @@ def pipe24_fp_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept_lazy = dedup_incremental(
             wave, fp_store_pruned(spark, path, wave)
         ).select("doc_id", "lang", "fp", F.lit(wave_no).alias("wave"))
-        _audit_stage("pipe24_fp_compact", f"wave{wave_no}", kept_lazy)
+        _audit_stage(f"wave{wave_no}", kept_lazy)
         kept = kept_lazy.localCheckpoint(eager=True)
         fp_store_write(kept.select("fp"), path)
         out = kept if out is None else out.unionByName(kept)
     rep = compact_dedup_store(spark, path, max_files_per_bucket=1)
-    per_bucket = [
-        sum(
-            1
-            for f in os.listdir(os.path.join(path, d))
-            if not f.startswith(("_", "."))
-        )
-        for d in os.listdir(path)
-        if d.startswith("bucket=")
-    ]
+    per_bucket = [len(sizes) for sizes in _bucket_files(path).values()]
     replay = docs.filter(F.col("doc_id") % 4 == 3)
     cert = (
         dedup_incremental(replay, fp_store_pruned(spark, path, replay))
@@ -13548,9 +13284,6 @@ def d14d_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     * ``idx_rows_final`` / ``store_physically_clean`` — after run 2
       the RAW store row count equals the logical view's (no dead row
       physically remains), and matches the rebuilt index."""
-    import os
-    import shutil
-
     from ..functions.dedup import (
         band_index_read,
         band_index_upsert_write,
@@ -13558,30 +13291,16 @@ def d14d_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    stale = docs.filter(F.col("doc_id") % 5 == 4).select(
-        "doc_id", F.concat(F.lit("stale0 "), F.col("text")).alias("text")
-    )
-    base = docs.filter((F.col("doc_id") % 5).isin(1, 2, 3)).select(
-        "doc_id", "text"
-    )
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    path = f"{warehouse}/gate_d14d_index"
-    shutil.rmtree(path, ignore_errors=True)
+    base, stale, recrawl = _index_slices(docs)
+    path = _scratch_store(spark, "gate_d14d_index")
+    tombstones = store.join(path, "_tombstones")
     band_index_upsert_write(
         base.unionByName(stale), path, k=16, bands=2, buckets=16
     )
     # the re-crawl wave: wave-sized appends + tombstones (epoch 1)
-    band_index_upsert_write(
-        docs.filter(F.col("doc_id") % 5 == 4).select("doc_id", "text"),
-        path,
-        k=16,
-        bands=2,
-        buckets=16,
-    )
+    band_index_upsert_write(recrawl, path, k=16, bands=2, buckets=16)
     rep1 = compact_dedup_store(spark, path, incremental=True, bucket_budget=4)
-    tombs_kept_mid = os.path.isdir(os.path.join(path, "_tombstones"))
+    tombs_kept_mid = store.is_dir(tombstones)
     view_mid_lazy = (
         band_index_read(spark, path)
         .groupBy("doc_id")
@@ -13590,7 +13309,7 @@ def d14d_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("sig").alias("min_sig"),
         )
     )
-    _audit_stage("d14d_incremental_fold", "view_after_partial_fold", view_mid_lazy)
+    _audit_stage("view_after_partial_fold", view_mid_lazy)
     # materialise the mid-fold view BEFORE run 2 rewrites its files
     view_mid = view_mid_lazy.localCheckpoint(eager=True)
     rep2 = compact_dedup_store(spark, path, incremental=True)
@@ -13604,8 +13323,7 @@ def d14d_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("partial_fold"),
         F.lit(tombs_kept_mid).alias("tombstones_kept_mid"),
         F.lit(
-            bool(rep2["tombstones_cleared"])
-            and not os.path.isdir(os.path.join(path, "_tombstones"))
+            bool(rep2["tombstones_cleared"]) and not store.is_dir(tombstones)
         ).alias("fold_complete"),
         F.lit(raw_rows == final_rows).alias("store_physically_clean"),
     )

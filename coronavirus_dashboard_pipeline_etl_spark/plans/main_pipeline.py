@@ -294,6 +294,9 @@ def merge_upsert_store(
     With no store at ``path`` yet (a missing path, or a directory with
     no data files) the deduped batch is the first write. Any other
     read failure propagates and leaves the store untouched.
+
+    ``streaming.ingest.upsert_batch`` is this function under its
+    foreachBatch-sink name: one micro-batch per call.
     """
     from pyspark.sql import Window
 

@@ -23,22 +23,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..functions.dedup import band_index_upsert_write
+from ..plans.main_pipeline import merge_upsert_store
 from ..store import materialised, read_existing
 
 
-def upsert_batch(batch: DataFrame, store_path: str) -> None:
-    """Idempotent hash-upsert of one micro-batch into the partitioned
-    parquet serving store — the reference's ``ON CONFLICT (hash,
-    partition_id) DO UPDATE``. This is ``merge_upsert_store``, the
-    store's one upsert: the batch is deduped on (hash, partition_id),
-    only the partitions it touches are read back and dynamically
-    overwritten, and a read failure on an existing store propagates
-    instead of being mistaken for a first write. On Delta/Iceberg it
-    becomes a single ``MERGE INTO`` — the call-site contract is
-    unchanged."""
-    from ..plans.main_pipeline import merge_upsert_store
-
-    merge_upsert_store(batch, store_path)
+#: the serving store's foreachBatch sink: the store's one upsert
+upsert_batch = merge_upsert_store
 
 
 def stream_release_files(
@@ -241,62 +232,6 @@ def cdc_apply_batch(
         rows.write.mode("overwrite").parquet(store_path)
 
 
-def index_upsert_batch(
-    batch: DataFrame,
-    store_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    bands: int = 4,
-    base_hash: str = "md5",
-    buckets: int | None = None,
-) -> None:
-    """Maintain a persisted MinHash LSH band index as crawl waves
-    stream in — the ``foreachBatch`` sink form of
-    ``functions.dedup.minhash_index_upsert`` (pass a closure over this
-    to ``stream_release_files`` for a live crawl-wave stream; the
-    probe side reads the same store via
-    ``minhash_probe_pairs(corpus_bands=...)``).
+#: the band index's foreachBatch sink: the batch-sized upsert
+index_upsert_batch = band_index_upsert_write
 
-    Replace-by-document semantics per micro-batch: every batch doc's
-    existing band rows drop (an empty re-crawl deletes the doc), its
-    fresh rows append — so after the last wave the store equals
-    ``minhash_band_index`` rebuilt over each document's LATEST crawl,
-    regardless of how the waves were sliced (gated: st8 replays the
-    d14b maintenance sequence through this sink and compares against
-    the rebuilt-from-scratch oracle). Re-delivery of the same wave
-    re-appends its rows — repair with ``compact_dedup_store`` (which
-    drops the exact duplicates and folds tombstones) before retrying a
-    crashed wave; on Delta/Iceberg MERGE INTO makes it idempotent. The
-    ``k``/``bands``/``base_hash`` identity contract is the same as the
-    batch operator's: the store's rows cannot express them, so every
-    writer and prober must agree.
-
-    First batch bootstraps the store. The write is BATCH-SIZED
-    (``band_index_upsert_write``, round-13 verdict item 1): fresh band
-    rows append into their hash buckets and a delta-sized tombstone
-    records the batch documents' earlier rows as dead — no plan ever
-    reads the path it is about to replace, so no eager materialisation
-    is needed either. Readers fold tombstones at read time
-    (merge-on-read); ``compact_dedup_store`` folds them into the data
-    files periodically. On Delta/Iceberg this sink is MERGE INTO.
-
-    The store is written PARTITIONED by the (band, sig)-hash bucket
-    (``band_index_write``) so probes against it prune to the buckets
-    their batch touches (``band_index_pruned``); ``buckets`` joins the
-    ``k``/``bands``/``base_hash`` identity contract, all recorded in
-    the store's ``_store_meta.json`` sidecar and validated on every
-    read and append.
-    """
-    from ..functions.dedup import band_index_upsert_write
-
-    band_index_upsert_write(
-        batch,
-        store_path,
-        id_col=id_col,
-        text_col=text_col,
-        k=k,
-        bands=bands,
-        base_hash=base_hash,
-        buckets=buckets,
-    )

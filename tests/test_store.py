@@ -19,6 +19,7 @@ from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
     store_meta_read,
 )
 from coronavirus_dashboard_pipeline_etl_spark.store import _persistent_rdd_ids
+from tests.test_plans import SF
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -232,6 +233,63 @@ def test_merge_upsert_store_propagates_unreadable_store(spark, tmp_path):
     assert spark.read.parquet(str(empty)).count() == 1
 
 
+def _checkpoints_read(df) -> set[int]:
+    """RDD ids of the checkpoints ``df``'s plan reads: a checkpointed
+    frame is a ``LogicalRDD`` leaf over the persisted RDD."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.length())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
+@pytest.mark.skipif(not os.path.isdir(SF), reason="sf0.001 test tables absent")
+@pytest.mark.parametrize(
+    "gate",
+    [
+        "d14b_index_maintenance",
+        "pipe21_incremental_loop",
+        "pipe22_crawl_day",
+        "pipe23_bloom_loop",
+    ],
+)
+def test_store_gates_release_write_then_drop_checkpoints(spark, monkeypatch, gate):
+    """A store gate may leave pinned only the checkpoints its result
+    still reads, plus the one rolling pin ``minhash_probe_pairs`` /
+    ``dedup_incremental_bloom`` keep by design; a checkpoint taken only
+    to feed a store write must be released once the write has run.
+    Every checkpointed frame is held for the call, so a block the JVM
+    garbage collector happens to clean up does not pass for a
+    release."""
+    from coronavirus_dashboard_pipeline_etl_spark import store
+    from coronavirus_dashboard_pipeline_etl_spark.plans.gate_queries import QUERIES
+
+    held = []
+    df_cls = type(spark.range(1))
+    orig = df_cls.localCheckpoint
+
+    def holding_checkpoint(self, *args, **kwargs):
+        held.append(orig(self, *args, **kwargs))
+        return held[-1]
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", holding_checkpoint)
+    sc = spark.sparkContext
+    before = _persistent_rdd_ids(sc)
+    out = QUERIES[gate](spark, SF)
+    pinned = _persistent_rdd_ids(sc) - before
+    monkeypatch.undo()
+    rolling = {
+        rid
+        for (owner, _), (ref, ids) in store._ROLLING.items()
+        if owner in ("minhash_probe_pairs", "dedup_incremental_bloom")
+        and ref() is sc
+        for rid in ids
+    }
+    assert pinned <= _checkpoints_read(out) | rolling, pinned
+    assert out.count() > 0
+
+
 #: store mechanics that belong to ``store.py`` alone
 _FORBIDDEN = re.compile(
     r"os\.listdir|os\.remove|os\.path\.getsize|os\.path\.isdir|os\.makedirs"
@@ -245,11 +303,11 @@ _STORE_FAMILIES = (
 )
 
 
-def _store_mechanics(source: str) -> list[str]:
+def _matches(pattern: re.Pattern, source: str) -> list[str]:
     return [
         f"{n}: {line.strip()}"
         for n, line in enumerate(source.splitlines(), 1)
-        if _FORBIDDEN.search(line)
+        if pattern.search(line)
     ]
 
 
@@ -265,8 +323,34 @@ def test_store_mechanics_live_only_in_store_module():
         '    .option("partitionOverwriteMode", "dynamic")',
         "    before = _persistent_rdd_ids(sc)",
     ):
-        assert _store_mechanics(planted), planted
-    assert not _store_mechanics("    stream = fs.open(p)")
+        assert _matches(_FORBIDDEN, planted), planted
+    assert not _matches(_FORBIDDEN, "    stream = fs.open(p)")
     for rel in _STORE_FAMILIES:
         with open(os.path.join(PKG, rel)) as fh:
-            assert _store_mechanics(fh.read()) == [], rel
+            assert _matches(_FORBIDDEN, fh.read()) == [], rel
+
+
+#: private store plumbing the store gates may not grow back: scratch
+#: paths come from ``_scratch_store``, listings from the store layer
+_GATE_PLUMBING = re.compile(r'removeprefix\("file:"\)|os\.listdir|os\.path\.isdir')
+#: a checkpoint whose blocks nobody releases
+_BARE_CHECKPOINT = re.compile(r"localCheckpoint\(")
+
+
+def test_store_gates_and_crawl_day_use_the_store_layer():
+    """The gate registry reaches store files only through the store
+    layer, and the crawl day takes checkpoints only through it, so each
+    one is released or documented as pinned."""
+    for planted in (
+        '    warehouse = spark.conf.get(w).removeprefix("file:")',
+        "    for d in os.listdir(path):",
+        '    kept_mid = os.path.isdir(os.path.join(path, "_tombstones"))',
+    ):
+        assert _matches(_GATE_PLUMBING, planted), planted
+    assert not _matches(_GATE_PLUMBING, '    path = _scratch_store(spark, "x")')
+    assert _matches(_BARE_CHECKPOINT, "    kept = kept.localCheckpoint(eager=True)")
+    assert not _matches(_BARE_CHECKPOINT, "    packed, _ = checkpoint(packed_lazy)")
+    with open(os.path.join(PKG, "plans/gate_queries.py")) as fh:
+        assert _matches(_GATE_PLUMBING, fh.read()) == []
+    with open(os.path.join(PKG, "plans/crawl.py")) as fh:
+        assert _matches(_BARE_CHECKPOINT, fh.read()) == []

@@ -25,7 +25,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
-import coronavirus_dashboard_pipeline_etl_spark.plans.gate_queries as gq  # noqa: E402
+from coronavirus_dashboard_pipeline_etl_spark.plans import crawl  # noqa: E402
 from coronavirus_dashboard_pipeline_etl_spark.plans.gate_queries import (  # noqa: E402
     QUERIES,
 )
@@ -60,19 +60,19 @@ def main() -> None:
 
     rows = []
     for name in names:
-        # arm the composed-gate stage hook: gates that eagerly
+        # arm the stage hook afresh for each query: gates that eagerly
         # checkpoint intermediate stages (pipe22/pipe23/d14c/pipe24)
         # record each stage's pre-checkpoint physical plan, which the
-        # final returned frame's plan no longer shows (r13 verdict
-        # item 4). Counters below are summed across final + stages.
-        gq.PLAN_STAGES = {}
+        # final returned frame's plan no longer shows, so every stage
+        # recorded during this run is this query's. Counters below are
+        # summed across final + stages.
+        crawl.PLAN_STAGES = stages = []
         try:
             df = QUERIES[name](spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
             a = audit_plan(plan)
-            stages = gq.PLAN_STAGES.get(name, [])
         finally:
-            gq.PLAN_STAGES = None
+            crawl.PLAN_STAGES = None
         for _, splan in stages:
             sa = audit_plan(splan)
             for k in a:
