@@ -1036,216 +1036,24 @@ def minhash_index_upsert(
     return kept.unionByName(fresh)
 
 
-#: partition column of the persisted dedup stores (band index and
-#: fingerprint table): a stable hash bucket of the probe key, so a
-#: delta-sized batch prunes its corpus scan to the partitions it can
-#: possibly match instead of reading the whole store every wave
-#: (round-12 verdict item 4). A hash bucket instead of a raw value
-#: prefix because parquet partition-type inference would flip an
-#: all-numeric hex prefix directory set to int and break the probe's
-#: isin filter.
-STORE_BUCKET = "bucket"
-
-#: write-epoch column of the band-index store rows: each upsert wave
-#: stamps its fresh rows with the wave's epoch, and a tombstone
-#: ``(doc, epoch)`` kills that doc's rows with a SMALLER epoch — the
-#: merge-on-read half of the batch-sized upsert (round-13 verdict
-#: item 1: appends + tombstones instead of rewriting the whole store).
-EPOCH_COL = "__epoch"
-
-#: epoch column of the tombstone table (named apart from EPOCH_COL so
-#: the anti-join never self-shadows).
-TOMB_EPOCH_COL = "__tomb_epoch"
-
-#: sidecar file/dir names inside a store path. Both start with ``_`` so
-#: Spark's parquet file listing ignores them (the same convention that
-#: hides _SUCCESS): ``spark.read.parquet(store)`` sees data files only.
-_META_FILE = "_store_meta.json"
-_TOMBSTONE_DIR = "_tombstones"
+#: the persisted dedup stores are ``store.py`` bucketed stores: the
+#: band index hashes on (band, sig), the fingerprint table on its fp column
+STORE_BUCKET = store.STORE_BUCKET
+_BAND_KEYS = ["band", "sig"]
+store_meta_read = store.meta_read
 
 
-def store_meta_write(path: str, meta: dict) -> None:
-    """Persist a store's identity sidecar (``_store_meta.json``): the
-    parameters a dedup store's directory layout cannot express —
-    ``buckets`` (the hash→partition mapping), the signature family
-    (``k``/``bands``/``base_hash``) for band indexes, the id/fp column
-    name, the current upsert ``epoch`` and the observed ``data_bytes``.
-    Readers validate against it (a silent ``buckets`` mismatch made
-    pruning LOSSY before this — round-13 advice). The file lives next
-    to the data files and goes through the same Hadoop FileSystem, so
-    a store at an ``hdfs://``/``s3a://``/``file://`` URI keeps its
-    sidecar with it; it is written to a temporary name and renamed
-    over the old one, so a crash never leaves a truncated sidecar. On
-    Delta/Iceberg the table's own properties replace it outright."""
-    import json
-
-    store._fs_write_text(
-        None, store.join(path, _META_FILE), json.dumps(meta, sort_keys=True)
-    )
-
-
-def store_meta_read(path: str) -> dict | None:
-    """Read a store's ``_store_meta.json`` sidecar; None for legacy
-    stores written before the sidecar existed."""
-    import json
-
-    meta_path = store.join(path, _META_FILE)
-    if not store.exists(meta_path):
-        return None
-    return json.loads(store._fs_read_text(None, meta_path))
-
-
-def _bucket_files(path: str) -> dict[int, list[int]]:
-    """Data-file sizes per bucket of a store — one listing walk on the
-    driver (<= buckets dirs, no Spark job)."""
-    out: dict[int, list[int]] = {}
-    for rel, size in store.list_files(path):
-        d = rel.rpartition("/")[0]
-        if d.startswith(f"{STORE_BUCKET}="):
-            out.setdefault(int(d.split("=", 1)[1]), []).append(size)
-    return out
-
-
-def _refresh_meta_bytes(path: str, meta: dict | None = None) -> None:
-    """Record the store's observed on-disk bytes in the sidecar after a
-    write — the figure ``_auto_buckets`` trusts over the optimizer's
-    estimate on the next reseed (round-14 verdict: a 10x estimate
-    overshoot at 100 TB means 10x too many buckets and small files
-    again). ``meta`` is the sidecar to refresh (default: the stored
-    one). No-op for legacy sidecar-less stores."""
-    meta = meta if meta is not None else store_meta_read(path)
-    if meta is not None:
-        data_bytes = sum(sum(v) for v in _bucket_files(path).values())
-        store_meta_write(path, {**meta, "data_bytes": data_bytes})
-
-
-def _store_params(path: str, caller: dict) -> dict:
-    """Resolve the EFFECTIVE store-identity params: the sidecar wins.
-
-    * ``buckets`` is pure layout — when the sidecar records it, the
-      recorded value silently governs (a caller value that differed
-      used to make pruned reads LOSSY with no detection; now the reader
-      simply prunes with the writer's true mapping).
-    * semantic params (``k``/``bands``/``base_hash``/``id_col``/
-      ``fp_col``) must MATCH: a probe built with a different signature
-      family than the store's is wrong in a way no fallback repairs, so
-      a mismatch raises.
-    * a legacy store with no sidecar keeps the caller's values (the
-      pre-sidecar documented contract)."""
-    meta = store_meta_read(path)
-    if meta is None:
-        return dict(caller)
-    eff = dict(caller)
-    bad = {}
-    for key, val in caller.items():
-        if key not in meta:
-            continue
-        if key == "buckets":
-            eff[key] = meta[key]
-        elif meta[key] != val:
-            bad[key] = {"caller": val, "store": meta[key]}
-    if bad:
-        raise ValueError(
-            f"dedup store at {path}: caller params disagree with the "
-            f"store's recorded identity (_store_meta.json): {bad} — "
-            "rebuild the store or call with the recorded values"
-        )
-    return eff
-
-
-def _store_bucket(cols: list, buckets: int) -> Column:
-    """``pmod(xxhash64(cols), buckets)`` — the store partition key.
-    xxhash64 (not hash) so the bucket spread is independent of Spark's
-    shuffle hashing; pmod keeps it non-negative."""
-    return F.pmod(F.xxhash64(*cols), F.lit(buckets)).cast("int")
-
-
-#: auto-bucket sizing for fresh store writes (``buckets=None``): target
-#: estimated bytes per bucket. Plan-stats bytes are uncompressed
-#: row-size estimates, typically 2-4x the parquet on disk, so this
-#: lands bucket data files in the 128 MB-1 GB range the I/O guide
-#: prescribes at corpus scale, while a KB-scale test store stays at the
-#: 8-bucket floor instead of 64 near-empty files (store reads/writes at
-#: that scale were dominated by per-file open + distributed-listing
-#: overhead: 64 dirs also sat above the 32-dir
-#: parallelPartitionDiscovery threshold, adding a listing JOB to every
-#: read). The count is pure layout — pruning stays lossless at ANY
-#: count (equal keys share a bucket) — so deriving it from data size is
-#: safe by construction.
-_AUTO_BUCKET_TARGET_BYTES = 512 * 1024 * 1024
-#: per-bucket target for OBSERVED parquet bytes (the sidecar's
-#: ``data_bytes``, recorded after every store write): parquet on disk
-#: runs ~2-4x smaller than the optimizer's uncompressed row-size
-#: estimate, so 256 MB on disk lands in the same 128 MB-1 GB file band
-#: as the 512 MB estimate target. Observed bytes GOVERN a reseed when
-#: present — the plan estimate compounds selectivity guesses and can
-#: overshoot 10x on a complex writer frame (round-14 verdict), while
-#: the disk does not lie about the store being replaced. A reseed that
-#: materially changes the store's content size should pass ``buckets``
-#: explicitly (or remove the sidecar) — the observed figure describes
-#: the PREVIOUS contents.
-_AUTO_BUCKET_TARGET_DISK_BYTES = 256 * 1024 * 1024
-_AUTO_BUCKET_MIN = 8
-_AUTO_BUCKET_MAX = 65536
-#: pre-auto default, kept for stores/paths whose size cannot be
-#: estimated and legacy no-sidecar stores (their files were laid out
-#: with the old fixed default).
-_LEGACY_BUCKETS = 64
-#: optimizer sizeInBytes at/above this means "statistics unknown"
-#: (Spark falls back to spark.sql.defaultSizeInBytes = Long.MaxValue
-#: for e.g. LogicalRDD/localCheckpoint inputs).
-_STATS_UNKNOWN_BYTES = 1 << 60
-
-
-def _auto_buckets(df: DataFrame, meta: dict | None = None) -> int:
-    """Scale-adaptive bucket count for a fresh store write: ceil of the
-    store's size over the per-bucket target, clamped to
-    [``_AUTO_BUCKET_MIN``, ``_AUTO_BUCKET_MAX``] and rounded up to a
-    power of two (stores reseeded at slightly different sizes tend to
-    keep their layout). No job runs. The size figure, best first:
-
-    * the sidecar's OBSERVED ``data_bytes`` (recorded after every
-      store write) when the path already holds a sidecar'd store —
-      ground truth for a reseed, immune to the optimizer's
-      selectivity-compounding overshoot (see
-      ``_AUTO_BUCKET_TARGET_DISK_BYTES``); it overrides the ESTIMATE
-      only, never the no-size-signal fallback below;
-    * else the logical plan's ``sizeInBytes`` estimate (column-width
-      scaling over the scan size) — an order-of-magnitude figure,
-      which is all a layout choice needs;
-    * with no size signal at all (checkpointed/RDD-backed input, no
-      stats) the store's previously recorded ``buckets`` (an overwrite
-      keeps its layout) or the legacy fixed default."""
-
-    def clamp(n: int) -> int:
-        n = 1 << (int(n) - 1).bit_length()
-        return max(_AUTO_BUCKET_MIN, min(_AUTO_BUCKET_MAX, n))
-
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect
-        est = _STATS_UNKNOWN_BYTES
-    if est >= _STATS_UNKNOWN_BYTES:
-        if meta and isinstance(meta.get("buckets"), int):
-            return meta["buckets"]
-        return _LEGACY_BUCKETS
-    observed = (meta or {}).get("data_bytes")
-    if isinstance(observed, int) and observed > 0:
-        return clamp(max(1, -(-observed // _AUTO_BUCKET_TARGET_DISK_BYTES)))
-    return clamp(max(1, -(-est // _AUTO_BUCKET_TARGET_BYTES)))
-
-
-def _touched_buckets(df: DataFrame, bucket: Column, buckets: int) -> list:
-    """The distinct store buckets a batch frame hashes into — a bounded
-    driver collect (<= ``buckets`` ints by construction, never
-    data-sized): the literal partition-filter list for the pruned
-    store scan."""
-    return sorted(
-        r[0]
-        for r in df.select(bucket.alias("__b")).distinct().limit(buckets + 1).collect()
-    )
+def _band_identity(index: DataFrame, epoch: int, **family) -> dict:
+    """Sidecar identity of a band-index store: the signature family
+    (``k``/``bands``/``base_hash``) the caller names and the id column
+    its rows carry."""
+    extra = [c for c in index.columns if c not in _BAND_KEYS]
+    return {
+        "kind": "band_index",
+        "epoch": epoch,
+        **({"id_col": extra[0]} if len(extra) == 1 else {}),
+        **{key: val for key, val in family.items() if val is not None},
+    }
 
 
 def band_index_write(
@@ -1262,156 +1070,22 @@ def band_index_write(
     the production layout for ``minhash_band_index``'s output. At
     corpus scale the band table is data-sized and a daily probe batch
     is delta-sized: with this layout ``band_index_pruned`` turns the
-    probe's corpus scan into a partition-pruned one (only the buckets
-    the batch's own band rows hash into are read — parquet
-    ``PartitionFilters``, zero rows read from the rest).
-
-    Store identity (``buckets``, and ``k``/``bands``/``base_hash`` when
-    the caller passes them) is recorded in the ``_store_meta.json``
-    sidecar on a fresh/overwrite write, and the recorded ``buckets``
-    governs every later append/read (a silent mismatch used to make
-    pruning lossy — round-13 advice). Rows carry a write-``epoch``
+    probe's corpus scan into a partition-pruned one. ``k``/``bands``/
+    ``base_hash``, when passed, join the sidecar's store identity
+    (``store.write_bucketed``). Rows carry a write-``epoch``
     column (0 for a full build) so ``band_index_upsert_write`` can
     advance the store with appends + tombstones instead of rewriting
     it."""
-    if STORE_BUCKET in index.columns or EPOCH_COL in index.columns:
-        raise ValueError(
-            f"band_index_write: index already carries a reserved "
-            f"column ({STORE_BUCKET!r} / {EPOCH_COL!r})"
-        )
-    buckets, _, existed = _write_layout(
-        index, path, buckets, mode, "band_index_write"
-    )
-    _write_buckets(
-        index.withColumn(EPOCH_COL, F.lit(epoch).cast("int")).withColumn(
-            STORE_BUCKET, _store_bucket([F.col("band"), F.col("sig")], buckets)
-        ),
+    store.write_bucketed(
+        index,
         path,
+        _BAND_KEYS,
+        _band_identity(index, epoch, k=k, bands=bands, base_hash=base_hash),
         buckets,
         mode,
+        "band_index_write",
+        epoch=epoch,
     )
-    meta = None
-    # bootstrapping a NEW path via append must record its layout too:
-    # without the sidecar the next append fell back to the legacy fixed
-    # count and rows hashed with different moduli coexisted in one
-    # store, silently making pruned probes lossy (r14 advice)
-    if mode != "append" or not existed:
-        extra = [c for c in index.columns if c not in ("band", "sig")]
-        meta = {"kind": "band_index", "buckets": buckets, "epoch": epoch}
-        if len(extra) == 1:
-            meta["id_col"] = extra[0]
-        for key, val in (("k", k), ("bands", bands), ("base_hash", base_hash)):
-            if val is not None:
-                meta[key] = val
-    _refresh_meta_bytes(path, meta)
-
-
-def _write_layout(
-    df: DataFrame, path: str, buckets: int | None, mode: str, caller: str
-) -> tuple[int, dict | None, bool]:
-    """``(buckets, sidecar, existed)`` for a bucket-partitioned store
-    write. The recorded ``buckets`` governs an append to a sidecar'd
-    store; with no caller-fixed count, an append to an existing legacy
-    no-sidecar store keeps the fixed layout its files were hashed with,
-    and any fresh write (overwrite, or a first append to a new path)
-    derives the count from the data size (scale-adaptive — a constant
-    tuned for either local mode or the cluster is wrong at the other).
-    An overwrite must truncate the whole path (see
-    ``store.require_static_overwrite``)."""
-    meta = store_meta_read(path)
-    existed = meta is not None or store.is_dir(path)
-    if mode == "append" and meta is not None:
-        buckets = meta["buckets"]
-    elif buckets is None:
-        buckets = (
-            _LEGACY_BUCKETS if mode == "append" and existed else _auto_buckets(df, meta)
-        )
-    if mode == "overwrite":
-        store.require_static_overwrite(df.sparkSession, caller)
-    return buckets, meta, existed
-
-
-def _write_buckets(df: DataFrame, path: str, nparts: int, mode: str) -> None:
-    """Write ``df`` partitioned by its ``STORE_BUCKET`` column,
-    repartitioned ON the bucket key first: a partitionBy write fans out
-    one file per (task, bucket) pair, so without this every writer task
-    sprays all bucket directories (measured: 1,850 files in st8's store
-    at sf0.1, 6x its steady time in file/task overhead). One slim
-    shuffle buys ~1 file per bucket; at corpus scale bound file size
-    with spark.sql.files.maxRecordsPerFile instead of fewer buckets."""
-    df.repartition(nparts, F.col(STORE_BUCKET)).write.partitionBy(
-        STORE_BUCKET
-    ).mode(mode).parquet(path)
-
-
-#: driver-side size guard for the tombstone broadcast: the latest-
-#: tombstone-per-doc table is bounded by (docs re-crawled since the
-#: last compaction) BY CONTRACT, not by construction — a deployment
-#: that upserts daily but never compacts grows it without bound and
-#: the merge-on-read anti-join broadcast becomes the cliff. The read
-#: path checks the tombstone dir's on-disk bytes (a driver listdir,
-#: no Spark job) and warns past this threshold, naming the fix.
-_TOMB_WARN_BYTES = 256 * 1024 * 1024
-
-
-def _latest_tombstones(
-    spark: SparkSession, path: str, id_col: str
-) -> DataFrame:
-    """The delta-sized latest-tombstone-epoch-per-document table of an
-    upserted store: a store row is dead iff ``row.epoch < latest
-    tombstone epoch`` for its document (some later wave re-crawled or
-    deleted it). Warns when the tombstone dir has grown past the
-    broadcast-comfort threshold — compaction cadence is the knob."""
-    import warnings
-
-    tpath = store.join(path, _TOMBSTONE_DIR)
-    on_disk = sum(size for _, size in store.list_files(tpath))
-    if on_disk > _TOMB_WARN_BYTES:
-        warnings.warn(
-            f"dedup store at {path}: tombstone table is "
-            f"{on_disk >> 20} MiB on disk — the merge-on-read "
-            "anti-join broadcasts it on every read; run "
-            "compact_dedup_store to fold it back into the data files",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    return (
-        spark.read.parquet(tpath)
-        .groupBy(F.col(id_col).alias("__tomb_id"))
-        .agg(F.max(TOMB_EPOCH_COL).alias(TOMB_EPOCH_COL))
-    )
-
-
-def _store_id_col(path: str, df: DataFrame) -> str:
-    """The recorded id column of an upserted store; raises on a store
-    that has tombstones but predates the epoch/meta sidecar."""
-    meta = store_meta_read(path) or {}
-    id_col = meta.get("id_col")
-    if id_col is None or EPOCH_COL not in df.columns:
-        raise ValueError(
-            f"dedup store at {path} has tombstones but no usable "
-            f"epoch/id metadata — it was mixed with a legacy writer; "
-            "rebuild it with band_index_write"
-        )
-    return id_col
-
-
-def _apply_tombstones(spark: SparkSession, path: str, df: DataFrame) -> DataFrame:
-    """Merge-on-read half of the batch-sized upsert: anti-join the raw
-    store rows against the latest tombstone epoch per document — a row
-    is dead iff some later wave re-crawled (or deleted) its document.
-    The tombstone table is delta-sized by contract (one row per batch
-    document per wave, folded away by ``compact_dedup_store``), so the
-    anti-join broadcasts it; the store side never shuffles. No-op for
-    stores that were never upserted (no ``_tombstones`` dir)."""
-    if not store.is_dir(store.join(path, _TOMBSTONE_DIR)):
-        return df
-    id_col = _store_id_col(path, df)
-    tomb = _latest_tombstones(spark, path, id_col)
-    cond = (df[id_col] == tomb["__tomb_id"]) & (
-        df[EPOCH_COL] < tomb[TOMB_EPOCH_COL]
-    )
-    return df.join(F.broadcast(tomb), cond, "left_anti")
 
 
 def band_index_read(spark: SparkSession, path: str) -> DataFrame:
@@ -1420,11 +1094,7 @@ def band_index_read(spark: SparkSession, path: str) -> DataFrame:
     partition bucket and write epoch are layout, not data; tombstones
     from ``band_index_upsert_write`` waves are applied — merge-on-read).
     Tolerates legacy unpartitioned stores."""
-    df = _apply_tombstones(spark, path, spark.read.parquet(path))
-    for col in (STORE_BUCKET, EPOCH_COL):
-        if col in df.columns:
-            df = df.drop(col)
-    return df
+    return store.read_bucketed(spark, path)
 
 
 def band_index_pruned(
@@ -1441,41 +1111,17 @@ def band_index_pruned(
     """PRUNED probe-side read of a ``band_index_write`` store: returns
     only the index partitions the batch's band rows can possibly match
     — pass the result as ``minhash_probe_pairs(corpus_bands=...)``.
-    Pruning is lossless for the probe's (band, sig) equi-join: a
-    corpus row in an untouched bucket cannot equal any batch band row
-    (same hash, same bucket), so probe-over-pruned == probe-over-full
-    by construction. Cost: one batch-sized signature pass to derive
-    the touched buckets (a <= ``buckets``-int driver collect, bounded
-    by construction) — at corpus scale that trades a full store scan
-    for a batch-bucket one. ``k``/``bands``/``base_hash`` must match
-    the writer's; when the store carries a ``_store_meta.json`` sidecar
-    that contract is ENFORCED (mismatch raises) and the recorded
-    ``buckets`` governs the pruning mapping, so a wrong caller value
-    can no longer make the prune silently lossy (round-13 advice).
-    Tombstones from upsert waves are applied after pruning
-    (merge-on-read). A legacy unpartitioned store falls back to the
-    full scan."""
-    eff = _store_params(
+    Lossless for the probe's (band, sig) equi-join
+    (``store.read_bucketed``); ``k``/``bands``/``base_hash`` must match
+    the writer's, and a sidecar ENFORCES that (mismatch raises) and
+    supplies the ``buckets`` the prune uses (round-13 advice)."""
+    sigs = minhash_signatures(batch, id_col, text_col, k, base_hash)
+    return store.read_bucketed(
+        spark,
         path,
         {"k": k, "bands": bands, "base_hash": base_hash, "buckets": buckets},
+        _band_rows(sigs, id_col, id_col, k, bands).select(*_BAND_KEYS),
     )
-    df = spark.read.parquet(path)
-    if STORE_BUCKET not in df.columns:
-        return df
-    sig_b = minhash_signatures(batch, id_col, text_col, k, base_hash)
-    bb = _band_rows(sig_b, id_col, id_col, k, bands)
-    touched = _touched_buckets(
-        bb,
-        _store_bucket([F.col("band"), F.col("sig")], eff["buckets"]),
-        eff["buckets"],
-    )
-    df = _apply_tombstones(
-        spark, path, df.filter(F.col(STORE_BUCKET).isin(touched))
-    )
-    for col in (STORE_BUCKET, EPOCH_COL):
-        if col in df.columns:
-            df = df.drop(col)
-    return df
 
 
 def band_index_upsert_write(
@@ -1525,48 +1171,32 @@ def band_index_upsert_write(
     last wave the store equals ``minhash_band_index`` rebuilt over each
     document's latest crawl, however the waves were sliced (gated by
     st8)."""
-    eff = _store_params(
+    meta = store.meta_read(path)
+    store.resolve_params(
         path,
-        {
-            "k": k,
-            "bands": bands,
-            "base_hash": base_hash,
-            "buckets": buckets,
-            "id_col": id_col,
-        },
+        meta,
+        {"k": k, "bands": bands, "base_hash": base_hash, "id_col": id_col},
     )
-    meta = store_meta_read(path)
-    if meta is None:
-        if store.is_dir(path):
-            raise ValueError(
-                f"band_index_upsert_write: store at {path} predates the "
-                "_store_meta.json sidecar — rewrite it once with "
-                "band_index_write before upserting"
-            )
-        band_index_write(
-            minhash_band_index(batch, id_col, text_col, k, bands, base_hash),
-            path,
-            buckets=buckets,
-            k=k,
-            bands=bands,
-            base_hash=base_hash,
+    if meta is None and store.is_dir(path):
+        raise ValueError(
+            f"band_index_upsert_write: store at {path} predates the "
+            "sidecar — rewrite it once with band_index_write before "
+            "upserting"
         )
-        return
-    epoch = int(meta.get("epoch", 0)) + 1
+    epoch = 0 if meta is None else int(meta.get("epoch", 0)) + 1
     fresh = minhash_band_index(batch, id_col, text_col, k, bands, base_hash)
-    band_index_write(
-        fresh, path, buckets=eff["buckets"], mode="append", epoch=epoch
+    store.write_bucketed(
+        fresh,
+        path,
+        _BAND_KEYS,
+        _band_identity(fresh, epoch, k=k, bands=bands, base_hash=base_hash),
+        buckets,
+        "append",
+        "band_index_upsert_write",
+        epoch=epoch,
+        meta=None if meta is None else {**meta, "epoch": epoch},
+        tombstones=None if meta is None else batch.select(id_col).distinct(),
     )
-    (
-        batch.select(F.col(id_col))
-        .distinct()
-        .withColumn(TOMB_EPOCH_COL, F.lit(epoch).cast("int"))
-        # one id-sized file per wave — no reason to fan out
-        .repartition(1)
-        .write.mode("append")
-        .parquet(store.join(path, _TOMBSTONE_DIR))
-    )
-    _refresh_meta_bytes(path, {**meta, "epoch": epoch})
 
 
 def compact_dedup_store(
@@ -1577,207 +1207,13 @@ def compact_dedup_store(
     bucket_budget: int | None = None,
 ) -> dict:
     """Maintenance pass for the persisted dedup stores (round-13
-    verdict items 1-2): fold merge-on-read debt back into clean data
-    files. Three shapes, picked by what the store has accumulated:
-
-    * TOMBSTONES present, ``incremental=False`` (a
-      ``band_index_upsert_write`` store): full fold — read the store,
-      apply the tombstone anti-join once, drop exact-duplicate rows
-      (only a replayed crashed wave can create them; live rows are
-      unique per (id, band, epoch) by construction), rewrite every
-      bucket, clear the tombstone dir. This is the amortised
-      corpus-sized op that keeps the DAILY upsert batch-sized — the
-      classic merge-on-read + periodic-compaction split (Delta
-      OPTIMIZE / Iceberg rewrite_data_files).
-    * TOMBSTONES present, ``incremental=True``: FILE-SCOPED fold
-      with a per-run bucket budget — one slim stats pass (bucket, id,
-      epoch columns plus ``input_file_name``) counts each DATA FILE's
-      dead rows, then within the ``bucket_budget`` dirtiest buckets
-      (all dirty buckets when None) only the files that actually hold
-      dead rows are read, folded, appended back as clean files, and
-      the originals deleted; clean files keep their bytes even inside
-      a folded bucket (round-14 verdict item: the whole-bucket rewrite
-      amplified writes by bucket-size/dead-file-size). Buckets whose
-      file count exceeds ``max_files_per_bucket`` still take the
-      WHOLE-BUCKET merge (their debt IS the file count, and the merge
-      also drops replayed-wave duplicate rows, which a file-scoped
-      fold cannot see across files — after repairing a crashed wave,
-      fold with ``incremental=False`` or let the file-count trigger
-      pick the bucket up). Crash contract of the fold itself: folded
-      copies APPEND before the originals delete, so a crash between
-      the two leaves both visible — duplicate LIVE rows
-      (over-generation, exact-verified downstream) until a
-      whole-bucket fold repairs the bucket; dead rows stay masked
-      because the tombstone table only clears after the deletes. The
-      tombstone table STAYS until no dead row remains anywhere —
-      kept tombstones are harmless over already-folded buckets (a
-      folded doc's surviving rows carry the tombstone's own epoch, so
-      ``epoch < tomb_epoch`` matches nothing) — and is cleared the
-      moment the store is fully clean. This spreads the corpus-sized
-      rewrite across maintenance windows: each run's write volume is
-      (dead-file bytes / store bytes), the production cadence knob for
-      stores too large to fold in one window (Iceberg's
-      rewrite_data_files ``where``-scoped form, at its file-level
-      granularity).
-    * no tombstones (an append-mode ``fp_store_write`` store): BUCKET-
-      SCOPED small-file merge — only buckets whose file count exceeds
-      ``max_files_per_bucket`` are read and rewritten (dynamic
-      partition overwrite), one file each; untouched buckets keep their
-      files byte-identical. After N append waves a bucket holds ~N
-      files (``pipe21``/``pipe22``/``pipe23``); this folds them without
-      a corpus-sized rewrite. (``incremental=True`` falls through to
-      this branch on a tombstone-free store, so one maintenance call
-      serves both store kinds.)
-
-    Returns a report dict (files/buckets before and after, tombstones
-    folded; the incremental path adds dead-row before/folded/remaining
-    counts and ``tombstones_cleared``) for runtime auditing. The
-    rewrite reads the path it replaces, so the surviving rows are
-    eagerly materialised first (the ``cdc_apply_batch`` pattern)."""
-    from urllib.parse import unquote
-
-    before = {b: len(sizes) for b, sizes in _bucket_files(path).items()}
-    report = {
-        "files_before": sum(before.values()),
-        "buckets_before": len(before),
-        "buckets_rewritten": 0,
-        "tombstones_folded": 0,
-    }
-    tpath = store.join(path, _TOMBSTONE_DIR)
-    has_tombstones = store.is_dir(tpath)
-    meta = store_meta_read(path)
-    buckets = (meta or {}).get("buckets", len(before) or 1)
-    fat = [b for b, n in sorted(before.items()) if n > max_files_per_bucket]
-
-    def rewrite_buckets(chunk: DataFrame, bucket_ids: list) -> None:
-        # replace ONLY the buckets present in chunk, leaving every
-        # other bucket's files untouched (byte-identical, pytest-pinned)
-        with store.materialised(chunk) as rows:
-            store.overwrite_partitions(
-                rows.repartition(len(bucket_ids), F.col(STORE_BUCKET)),
-                path,
-                STORE_BUCKET,
-            )
-
-    if has_tombstones and incremental:
-        raw = spark.read.parquet(path)
-        id_col = _store_id_col(path, raw)
-        tomb = _latest_tombstones(spark, path, id_col)
-        # slim stats pass over the (bucket, id, epoch) columns only — a
-        # count-only columnar scan, cheap next to the rewrite it scopes.
-        # Dead rows are counted per BUCKET first (<= the store's bucket
-        # count back to the driver); file lists are collected only for
-        # the buckets the budget picks, so the driver never holds one
-        # row per dirty file of the whole store.
-        def dead_rows(frame: DataFrame) -> DataFrame:
-            slim = frame.select(
-                STORE_BUCKET,
-                id_col,
-                EPOCH_COL,
-                F.input_file_name().alias("__file"),
-            )
-            cond = (slim[id_col] == tomb["__tomb_id"]) & (
-                slim[EPOCH_COL] < tomb[TOMB_EPOCH_COL]
-            )
-            return slim.join(F.broadcast(tomb), cond, "inner")
-
-        dead = {
-            r[STORE_BUCKET]: r["__dead"]
-            for r in dead_rows(raw)
-            .groupBy(STORE_BUCKET)
-            .agg(F.count(F.lit(1)).alias("__dead"))
-            .limit(len(before) + 1)
-            .collect()
-        }
-        # one maintenance call serves BOTH kinds of debt: buckets with
-        # dead rows AND buckets that merely accumulated too many append
-        # files (a rewrite folds either); dead-heaviest first, then
-        # file count, bucket id tiebreak for determinism
-        fat_n = {b: before[b] for b in fat}
-        dirty = sorted(
-            set(dead) | set(fat_n),
-            key=lambda b: (-dead.get(b, 0), -fat_n.get(b, 0), b),
-        )
-        fold = dirty if bucket_budget is None else dirty[:bucket_budget]
-        report["dead_rows_before"] = sum(dead.values())
-        report["dead_rows_folded"] = sum(dead.get(b, 0) for b in fold)
-        report["dead_rows_remaining"] = (
-            report["dead_rows_before"] - report["dead_rows_folded"]
-        )
-        # fat buckets take the whole-bucket merge (their debt is the
-        # file count; the merge also folds replayed-wave duplicates);
-        # dead-only buckets fold at FILE granularity — only files that
-        # hold a dead row rewrite, clean files keep their bytes
-        bucket_fold = [b for b in fold if b in fat_n]
-        file_fold = [b for b in fold if b not in fat_n and b in dead]
-        files = []
-        if file_fold:
-            files = sorted(
-                r[0]
-                for r in dead_rows(raw.filter(F.col(STORE_BUCKET).isin(file_fold)))
-                .select("__file")
-                .distinct()
-                .limit(sum(before[b] for b in file_fold) + 1)
-                .collect()
-            )
-        report["files_rewritten"] = len(files)
-        if files:
-            # folded survivors of exactly those files, appended back as
-            # clean files, then the originals deleted (append-before-
-            # delete: see the crash contract in the docstring)
-            chunk = _apply_tombstones(
-                spark,
-                path,
-                spark.read.option("basePath", path).parquet(*files),
-            )
-            with store.materialised(chunk) as rows:
-                _write_buckets(rows, path, len(file_fold), "append")
-            for f in files:
-                store.delete(unquote(f))
-        if bucket_fold:
-            rewrite_buckets(
-                _apply_tombstones(
-                    spark,
-                    path,
-                    raw.filter(F.col(STORE_BUCKET).isin(bucket_fold)),
-                ).dropDuplicates(),
-                bucket_fold,
-            )
-        report["buckets_rewritten"] = len(bucket_fold) + len(file_fold)
-        report["tombstones_cleared"] = report["dead_rows_remaining"] == 0
-        if report["tombstones_cleared"]:
-            # no row anywhere is older than its doc's latest tombstone,
-            # so the anti-join is a no-op — the tombstone table is debt
-            # fully repaid and the store reverts to plain reads
-            report["tombstones_folded"] = (
-                spark.read.parquet(tpath).select(TOMB_EPOCH_COL).count()
-            )
-            store.delete(tpath)
-    elif has_tombstones:
-        report["tombstones_folded"] = (
-            spark.read.parquet(tpath).select(TOMB_EPOCH_COL).count()
-        )
-        survivors = _apply_tombstones(
-            spark, path, spark.read.parquet(path)
-        ).dropDuplicates()
-        # a STATIC partitioned overwrite clears the whole path first
-        # (tombstone dir included — exactly the fold we want) — but it
-        # also takes the meta sidecar with it, which the refresh below
-        # writes back
-        with store.materialised(survivors) as rows:
-            _write_buckets(rows, path, buckets, "overwrite")
-        store.delete(tpath)
-        report["buckets_rewritten"] = len(before)
-    elif fat:
-        rewrite_buckets(
-            spark.read.parquet(path).filter(F.col(STORE_BUCKET).isin(fat)), fat
-        )
-        report["buckets_rewritten"] = len(fat)
-    after = _bucket_files(path)
-    report["files_after"] = sum(map(len, after.values()))
-    report["buckets_after"] = len(after)
-    _refresh_meta_bytes(path, meta)
-    return report
+    verdict items 1-2), ``store.compact``: folds an upserted band
+    index's tombstones (whole store, or file-scoped under
+    ``incremental``/``bucket_budget``) and merges an append-mode fp
+    table's small files; returns the fold's report."""
+    return store.compact(
+        spark, path, max_files_per_bucket, incremental, bucket_budget
+    )
 
 
 def fp_store_write(
@@ -1793,30 +1229,21 @@ def fp_store_write(
     files inside the touched partition directories and never rewrites
     existing ones, so the daily state-advance stays batch-sized; after
     many waves fold the per-bucket small files with
-    ``compact_dedup_store``. ``buckets`` is part of the store identity,
-    recorded in the ``_store_meta.json`` sidecar on a fresh write and
-    GOVERNING on appends (an append hashed with a different bucket
-    count would scatter equal fps across buckets and silently break
-    pruning). SEED writes to a path that may hold residue from a prior
-    or crashed run should pass ``mode='overwrite'`` (or ``'error'``) —
-    the append default is for the in-loop state advance, where silently
-    absorbing leftover fingerprints over-drops downstream (round-13
-    advice)."""
-    if STORE_BUCKET in fps.columns:
-        raise ValueError(
-            f"fp_store_write: frame already carries the reserved "
-            f"partition column {STORE_BUCKET!r}"
-        )
-    buckets, meta, _ = _write_layout(fps, path, buckets, mode, "fp_store_write")
-    _write_buckets(
-        fps.withColumn(STORE_BUCKET, _store_bucket([F.col(fp_col)], buckets)),
+    ``compact_dedup_store``; the recorded ``buckets`` governs appends
+    (``store.write_bucketed``). SEED writes to a path that may hold
+    residue from a prior or crashed run should pass ``mode='overwrite'``
+    (or ``'error'``) — the append default is for the in-loop state
+    advance, where silently absorbing leftover fingerprints over-drops
+    downstream (round-13 advice)."""
+    store.write_bucketed(
+        fps,
         path,
+        [fp_col],
+        {"kind": "fp_store", "fp_col": fp_col},
         buckets,
         mode,
+        "fp_store_write",
     )
-    if meta is None or mode not in ("append", "ignore"):
-        meta = {"kind": "fp_store", "buckets": buckets, "fp_col": fp_col}
-    _refresh_meta_bytes(path, meta)
 
 
 def fp_store_pruned(
@@ -1830,30 +1257,20 @@ def fp_store_pruned(
     """PRUNED read of a ``fp_store_write`` fingerprint table: returns
     only the partitions the batch's own fingerprints hash into — pass
     the result as ``dedup_incremental(seen_fingerprints=...)``.
-    Lossless for the anti-join (a seen fp equal to some batch fp shares
-    its bucket); the touched-bucket derivation is one batch-sized
-    fingerprint pass plus a <= ``buckets``-int driver collect. When the
-    store carries a ``_store_meta.json`` sidecar, its recorded
-    ``buckets`` governs the pruning mapping and a mismatched ``fp_col``
-    raises (a silently mismatched bucket count used to make the prune
-    lossy — round-13 advice). A legacy
-    unpartitioned store falls back to the full scan. NOTE: the Bloom
+    Lossless for the anti-join (``store.read_bucketed``); a sidecar
+    supplies the ``buckets`` the prune uses and a mismatched ``fp_col``
+    raises (round-13 advice). NOTE: the Bloom
     path's SKETCH build (``dedup_incremental_bloom`` step 1) needs the
     FULL table — prune only the confirm scan, or persist the sketch
     next to the store as its docstring describes."""
-    eff = _store_params(path, {"buckets": buckets, "fp_col": fp_col})
-    df = spark.read.parquet(path)
-    if STORE_BUCKET not in df.columns:
-        return df
-    bfp = (
+    probe = (
         batch.select(fingerprint(text_col).alias(fp_col))
         if fp_col not in batch.columns
         else batch.select(fp_col)
     )
-    touched = _touched_buckets(
-        bfp, _store_bucket([F.col(fp_col)], eff["buckets"]), eff["buckets"]
+    return store.read_bucketed(
+        spark, path, {"buckets": buckets, "fp_col": fp_col}, probe
     )
-    return df.filter(F.col(STORE_BUCKET).isin(touched)).drop(STORE_BUCKET)
 
 
 def minhash_probe_pairs(

@@ -13070,7 +13070,6 @@ def pipe24_fp_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the long store's (plans/main_pipeline.py:386), rewriting only the
     buckets that need it."""
     from ..functions.dedup import (
-        _bucket_files,
         compact_dedup_store,
         fp_store_pruned,
         fp_store_write,
@@ -13098,7 +13097,7 @@ def pipe24_fp_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp_store_write(kept.select("fp"), path)
         out = kept if out is None else out.unionByName(kept)
     rep = compact_dedup_store(spark, path, max_files_per_bucket=1)
-    per_bucket = [len(sizes) for sizes in _bucket_files(path).values()]
+    per_bucket = [len(sizes) for sizes in store.bucket_files(path).values()]
     replay = docs.filter(F.col("doc_id") % 4 == 3)
     cert = (
         dedup_incremental(replay, fp_store_pruned(spark, path, replay))
@@ -13293,7 +13292,7 @@ def d14d_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base, stale, recrawl = _index_slices(docs)
     path = _scratch_store(spark, "gate_d14d_index")
-    tombstones = store.join(path, "_tombstones")
+    tombstones = store.tombstone_path(path)
     band_index_upsert_write(
         base.unionByName(stale), path, k=16, bands=2, buckets=16
     )

@@ -1368,7 +1368,7 @@ def test_compact_dedup_store_incremental_fold(spark, tmp_path, monkeypatch):
     import glob
     import os
 
-    from coronavirus_dashboard_pipeline_etl_spark.functions import dedup
+    from coronavirus_dashboard_pipeline_etl_spark import store
     from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
         band_index_read,
         band_index_upsert_write,
@@ -1444,7 +1444,7 @@ def test_compact_dedup_store_incremental_fold(spark, tmp_path, monkeypatch):
     band_index_upsert_write(
         docs([(10, "refresh ten")]), path, k=8, bands=2, buckets=16
     )
-    monkeypatch.setattr(dedup, "_TOMB_WARN_BYTES", 1)
+    monkeypatch.setattr(store, "_TOMB_WARN_BYTES", 1)
     with _pytest.warns(RuntimeWarning, match="compact_dedup_store"):
         band_index_read(spark, path).collect()
 
@@ -1577,15 +1577,17 @@ def test_store_buckets_auto_derive_from_size(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
-        _AUTO_BUCKET_MAX,
-        _AUTO_BUCKET_MIN,
-        _auto_buckets,
         band_index_read,
         band_index_upsert_write,
         band_index_write,
         fp_store_write,
         minhash_band_index,
         store_meta_read,
+    )
+    from coronavirus_dashboard_pipeline_etl_spark.store import (
+        _AUTO_BUCKET_MAX,
+        _AUTO_BUCKET_MIN,
+        _auto_buckets,
     )
 
     def docs(rows):
@@ -1630,7 +1632,7 @@ def test_store_buckets_auto_derive_from_size(spark, tmp_path):
     class _NoStats:
         pass
 
-    from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
+    from coronavirus_dashboard_pipeline_etl_spark.store import (
         _LEGACY_BUCKETS,
     )
 

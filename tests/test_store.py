@@ -1,6 +1,8 @@
 """The store layer (``store.py``): filesystem access through the Hadoop
-FileSystem API, checkpoint release, the first-write rule, the bounded
-fold stats, and a guard that keeps the store mechanics in one module."""
+FileSystem API, checkpoint release, the first-write rule, the bucketed
+store format (sidecar rule, fold stats and replay debt, one sidecar
+read per call), and guards that keep the store mechanics and format in
+one module."""
 
 import os
 import re
@@ -9,7 +11,9 @@ from urllib.parse import unquote, urlparse
 import pytest
 from pyspark.sql import functions as F
 
+from coronavirus_dashboard_pipeline_etl_spark import store
 from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
+    band_index_pruned,
     band_index_read,
     band_index_upsert_write,
     band_index_write,
@@ -197,6 +201,144 @@ def test_incremental_fold_collects_file_lists_only_for_budgeted_buckets(
     assert {tuple(r) for r in band_index_read(spark, path).collect()} == logical
 
 
+def test_ignore_mode_write_keeps_an_existing_stores_layout(spark, tmp_path):
+    """Spark skips an ``ignore``-mode write to an existing store, so the
+    sidecar must keep the bucket count the files were hashed with: a
+    pruned probe then still returns every index row the batch matches."""
+    src = str(tmp_path / "src")
+    _docs(
+        spark, [(i, f"w{i}a w{i}b w{i}c shared tail {i % 5}") for i in range(40)]
+    ).write.parquet(src)
+    # parquet-backed, so the writer frame has a size estimate and the
+    # ignore-mode write would size a fresh layout from it
+    corpus = spark.read.parquet(src)
+    path = str(tmp_path / "bidx")
+    index = minhash_band_index(corpus, k=8, bands=2)
+    band_index_write(index, path, buckets=16, k=8, bands=2)
+    before = _files(path)
+    band_index_write(index, path, mode="ignore", k=8, bands=2)
+    assert _files(path) == before
+    assert store_meta_read(path)["buckets"] == 16
+
+    batch = corpus.filter("doc_id < 10")
+    keys = {
+        (r.band, r.sig) for r in minhash_band_index(batch, k=8, bands=2).collect()
+    }
+    want = {
+        tuple(r)
+        for r in band_index_read(spark, path).collect()
+        if (r.band, r.sig) in keys
+    }
+    got = {
+        tuple(r)
+        for r in band_index_pruned(spark, path, batch, k=8, bands=2).collect()
+        if (r.band, r.sig) in keys
+    }
+    assert got == want and len(want) > len(keys) // 2
+
+
+def test_fold_reports_buckets_with_possible_replay_duplicates(spark, tmp_path):
+    """A file-scoped fold cannot see duplicate rows a replayed wave left
+    in two files, so the sidecar records each bucket it folds and the
+    fold reports them as ``replay_duplicates_possible``; upserts keep the
+    record, and a whole-bucket merge or a full fold clears it."""
+    path = str(tmp_path / "bidx")
+    corpus = _docs(
+        spark, [(i, f"w{i}a w{i}b w{i}c tail tokens {i % 7}") for i in range(40)]
+    )
+    band_index_write(
+        minhash_band_index(corpus, k=8, bands=2), path, buckets=8, k=8, bands=2
+    )
+
+    def recrawl(wave):
+        band_index_upsert_write(
+            _docs(spark, [(i, f"wave {wave} recrawl {i} text") for i in range(20)]),
+            path,
+            k=8,
+            bands=2,
+        )
+
+    def debt():
+        return store_meta_read(path).get(store.REPLAY_DEBT, [])
+
+    recrawl(0)
+    assert debt() == []
+    rep = compact_dedup_store(
+        spark, path, incremental=True, bucket_budget=2, max_files_per_bucket=99
+    )
+    assert rep["files_rewritten"] > 0 and rep["dead_rows_remaining"] > 0
+    assert len(rep[store.REPLAY_DEBT]) == 2
+    assert debt() == rep[store.REPLAY_DEBT]
+    recrawl(1)
+    assert debt() == rep[store.REPLAY_DEBT]
+    # every bucket over the file limit: each takes the whole-bucket merge
+    rep = compact_dedup_store(spark, path, incremental=True, max_files_per_bucket=0)
+    assert rep["buckets_rewritten"] == rep["buckets_before"]
+    assert rep[store.REPLAY_DEBT] == [] and debt() == []
+
+    recrawl(2)
+    rep = compact_dedup_store(
+        spark, path, incremental=True, bucket_budget=1, max_files_per_bucket=99
+    )
+    assert len(rep[store.REPLAY_DEBT]) == 1 and debt() == rep[store.REPLAY_DEBT]
+    rep = compact_dedup_store(spark, path)
+    assert rep[store.REPLAY_DEBT] == [] and debt() == []
+
+
+def test_each_store_call_reads_and_writes_its_sidecar_once(
+    spark, tmp_path, monkeypatch
+):
+    """A dedup-store call reads its sidecar at most once and writes it at
+    most once; the upsert also walks the store listing once, serving
+    both the tombstone check and the sidecar's ``data_bytes``."""
+    corpus = _docs(
+        spark, [(i, f"w{i}a w{i}b w{i}c shared suffix {i % 4}") for i in range(24)]
+    )
+    bidx, fps = str(tmp_path / "bidx"), str(tmp_path / "fp")
+    band_index_write(
+        minhash_band_index(corpus, k=8, bands=2), bidx, buckets=8, k=8, bands=2
+    )
+    fp_frame = corpus.select(F.md5("text").alias("fp"))
+    fp_store_write(fp_frame, fps, buckets=4, mode="overwrite")
+    wave = _docs(spark, [(i, f"recrawl of doc {i} here") for i in range(6)])
+
+    calls = []
+    for name in ("_fs_read_text", "_fs_write_text", "list_files"):
+
+        def counting(*args, _name=name, _orig=getattr(store, name)):
+            calls.append((_name, args))
+            return _orig(*args)
+
+        monkeypatch.setattr(store, name, counting)
+
+    def counts(call):
+        calls.clear()
+        call()
+
+        def sidecar(op):
+            return sum(
+                1 for n, a in calls if n == op and a[1].endswith("_store_meta.json")
+            )
+
+        listings = sum(1 for n, _ in calls if n == "list_files")
+        return sidecar("_fs_read_text"), sidecar("_fs_write_text"), listings
+
+    reads, writes, listings = counts(
+        lambda: band_index_upsert_write(wave, bidx, k=8, bands=2)
+    )
+    assert (reads, writes, listings) == (1, 1, 1)
+    reads, writes, _ = counts(
+        lambda: band_index_pruned(spark, bidx, wave, k=8, bands=2)
+    )
+    assert reads <= 1 and writes == 0
+    reads, writes, _ = counts(lambda: fp_store_write(fp_frame, fps))
+    assert reads <= 1 and writes <= 1
+    reads, writes, _ = counts(
+        lambda: compact_dedup_store(spark, bidx, incremental=True)
+    )
+    assert reads <= 1 and writes <= 1
+
+
 def test_merge_upsert_store_propagates_unreadable_store(spark, tmp_path):
     """Only a missing path or an empty directory is a first write: a
     store that exists but cannot be read (here, a data file whose
@@ -262,7 +404,6 @@ def test_store_gates_release_write_then_drop_checkpoints(spark, monkeypatch, gat
     Every checkpointed frame is held for the call, so a block the JVM
     garbage collector happens to clean up does not pass for a
     release."""
-    from coronavirus_dashboard_pipeline_etl_spark import store
     from coronavirus_dashboard_pipeline_etl_spark.plans.gate_queries import QUERIES
 
     held = []
@@ -354,3 +495,42 @@ def test_store_gates_and_crawl_day_use_the_store_layer():
         assert _matches(_GATE_PLUMBING, fh.read()) == []
     with open(os.path.join(PKG, "plans/crawl.py")) as fh:
         assert _matches(_BARE_CHECKPOINT, fh.read()) == []
+
+
+#: string literals that spell the bucketed-store format: the sidecar
+#: and tombstone names and a bucket-partition path glob
+_FORMAT_LITERAL = re.compile(r"""["'/]_tombstones|_store_meta\.json|["'/]bucket=""")
+
+
+def test_store_format_is_spelled_only_in_store_module():
+    """Outside ``store.py`` no module of the package or of ``tools/``
+    spells the bucketed-store format; callers use the store layer's
+    names (``tombstone_path``, ``bucket_files``, ``read_bucketed``)."""
+    for planted in (
+        '    tombstones = store.join(path, "_tombstones")',
+        '    for pat in ("/bucket=*/*.parquet", "/_tombstones/*.parquet")',
+        '    rows = spark.read.parquet(idx + "/_tombstones").count()',
+        '    meta_path = store.join(path, "_store_meta.json")',
+        "    dirs = glob.glob(path + '/bucket=*')",
+    ):
+        assert _matches(_FORMAT_LITERAL, planted), planted
+    for fine in (
+        "    tombstones = store.tombstone_path(path)",
+        "    tomb, id_col = _latest_tombstones(spark, path, meta, raw, listing)",
+        "    rep = compact_dedup_store(spark, path, max_files_per_bucket=1)",
+    ):
+        assert not _matches(_FORMAT_LITERAL, fine), fine
+    root = os.path.dirname(PKG)
+    sources = [
+        os.path.join(d, n)
+        for top in (PKG, os.path.join(root, "tools"))
+        for d, _, names in os.walk(top)
+        for n in names
+        if n.endswith(".py")
+    ]
+    assert len(sources) > 20
+    for path in sources:
+        if path == os.path.join(PKG, "store.py"):
+            continue
+        with open(path) as fh:
+            assert _matches(_FORMAT_LITERAL, fh.read()) == [], path

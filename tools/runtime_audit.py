@@ -134,6 +134,7 @@ def prune_report(spark, sf_dir: str) -> list[str]:
     import shutil
     import tempfile
 
+    from coronavirus_dashboard_pipeline_etl_spark import store
     from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
         band_index_pruned,
         band_index_read,
@@ -176,9 +177,7 @@ def prune_report(spark, sf_dir: str) -> list[str]:
         .distinct(),
         fpp,
     )
-    full_fp = measure_scan(
-        spark, spark.read.parquet(fpp).drop("bucket")
-    )
+    full_fp = measure_scan(spark, store.read_bucketed(spark, fpp))
     pruned_fp_df = fp_store_pruned(spark, fpp, batch)
     pruned_fp = measure_scan(spark, pruned_fp_df)
     lines.append(
@@ -200,10 +199,10 @@ def upsert_write_report(spark, sf_dir: str) -> list[str]:
     full store size the old rewrite-on-upsert path re-wrote every
     wave. Then run ``compact_dedup_store`` and report the fold.
     Returns markdown table lines."""
-    import glob
     import shutil
     import tempfile
 
+    from coronavirus_dashboard_pipeline_etl_spark import store
     from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
         band_index_upsert_write,
         compact_dedup_store,
@@ -212,13 +211,14 @@ def upsert_write_report(spark, sf_dir: str) -> list[str]:
 
     tmp = tempfile.mkdtemp(prefix="upsert_audit_")
     idx = f"{tmp}/band_idx"
+    tombs = store.tombstone_path(idx)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def files() -> dict[str, int]:
         return {
-            p: os.path.getsize(p)
-            for pat in ("/bucket=*/*.parquet", "/_tombstones/*.parquet")
-            for p in glob.glob(idx + pat)
+            store.join(root, rel): size
+            for root in (idx, tombs)
+            for rel, size in store.list_files(root)
         }
 
     band_index_upsert_write(docs.filter("doc_id % 97 != 0"), idx, k=16, bands=2)
@@ -234,13 +234,13 @@ def upsert_write_report(spark, sf_dir: str) -> list[str]:
     after = files()
     assert set(seeded) <= set(after), "upsert rewrote pre-existing files"
     new_data = [
-        p for p in after if p not in seeded and "/_tombstones/" not in p
+        p for p in after if p not in seeded and not p.startswith(tombs + "/")
     ]
     wave_bytes = sum(sz for p, sz in after.items() if p not in seeded)
     wave_files = len(after) - len(seeded)
     wave_rows = (
         spark.read.parquet(*new_data).count() if new_data else 0
-    ) + spark.read.parquet(idx + "/_tombstones").count()
+    ) + spark.read.parquet(tombs).count()
     # incremental fold under a bucket budget: the write volume of ONE
     # maintenance window (round-14 — folds only the dirtiest buckets,
     # keeps the tombstones for the rest), then a budget-less run drains
