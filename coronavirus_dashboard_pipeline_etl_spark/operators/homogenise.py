@@ -18,6 +18,10 @@ the fact subtree once per branch (3 full scans at 100 TB). Instead ONE
 per-group aggregation (tiny: ≤ ~7k rows for MSOA) is locally
 checkpointed and all three are derived from it — the fact table is
 scanned exactly once for the stats and once as the join's right side.
+The checkpoint is a rolling one (``store.rolling_checkpoint``, owner
+``homogenise_dates``): the next call releases its blocks, so a daily
+loop pins at most one call's stats. Contract: consume one call's result
+before the next ``homogenise_dates`` call on the same session.
 """
 
 from __future__ import annotations
@@ -26,6 +30,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
+
+from ..store import rolling_checkpoint
 
 
 def _date_seq(lo: F.Column, hi: F.Column, frequency: str) -> F.Column:
@@ -97,7 +103,7 @@ def homogenise_dates(
         aggs.append(F.max(F.col(k).isNull()).alias(f"__has_null_{k}"))
     # One pass over the fact table; tiny result; checkpoint truncates the
     # lineage so the three derivations below share a single execution.
-    stats = df.groupBy(*keys).agg(*aggs).localCheckpoint(eager=False)
+    stats = rolling_checkpoint(df.groupBy(*keys).agg(*aggs), "homogenise_dates")
 
     if span == "global":
         bounds = stats.agg(F.min("__lo").alias("lo"), F.max("__hi").alias("hi"))

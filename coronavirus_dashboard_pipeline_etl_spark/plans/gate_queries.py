@@ -5149,10 +5149,11 @@ def pipe10_long_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The EP1 UPLOAD side (deploy(), uploader.py:546-655) composed end
     to end: a mixed-type panel (two bigint metrics — one weekly-cadence
     with planted nulls — plus a string Direction metric) through
-    to_long_store's dual-type melt -> trim_sides -> weekly dropna ->
-    payload wrap -> partition/release stamping. The hash column is
-    h1's subject and is excluded (Catalyst prunes the UDF). JSON values
-    are integers/strings — the cross-engine-stable renderings."""
+    to_long_store's one melt over both type families -> trim_sides ->
+    weekly dropna -> payload wrap -> partition/release stamping. The
+    hash column is h1's subject and is excluded (Catalyst prunes the
+    UDF). JSON values are integers/strings — the cross-engine-stable
+    renderings."""
     from .main_pipeline import to_long_store
 
     daily = _daily(spark, sf_dir)

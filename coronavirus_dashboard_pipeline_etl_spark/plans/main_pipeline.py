@@ -13,13 +13,18 @@ be done in a specific order") re-expressed as one composed Spark plan:
     -> change_by_sum             (A1-A4 rolling family)
     -> ratio_to_percentage
     -> trim_end                  (W5 freshness mask)
-    -> releaseTimestamp + canonical sort
+    -> releaseTimestamp          (the panel stays unordered)
 
 and the load side (``db_etl_upload/uploader.py:546-655``):
 
-    melt (P7) -> trim_sides (W4) -> payload wrap (P10) -> keyed hash
+    one melt over numeric and string metrics (P7) -> trim_sides (W4)
+    -> weekly dropna -> payload wrap (P10) -> keyed hash
     -> partition_id -> partitioned parquet write (S8/S10 as
     partitionBy + dynamic overwrite instead of Postgres DDL + upsert).
+
+A publish does each piece of work once: the release is parsed once
+(``build_panel``'s rolling checkpoint) and the processing chain is
+planned and run once (one melt, no global sort).
 
 Where the reference runs one Azure Function per area and rides blob
 storage between stages, this is a single lazy plan: area fan-out is
@@ -60,14 +65,27 @@ from ..sources.nested_json import (
     pivot_panel,
     read_nested_release,
 )
-from ..store import materialised, overwrite_partitions, read_existing
+from ..store import (
+    materialised,
+    overwrite_partitions,
+    read_existing,
+    rolling_checkpoint,
+)
 
 PANEL_META = ["areaType", "areaCode", "areaName", "date"]
 
 
 def build_panel(spark: SparkSession, json_path: str) -> DataFrame:
-    """Raw release JSON -> canonical wide panel."""
-    long = read_nested_release(spark, json_path)
+    """Raw release JSON -> canonical wide panel.
+
+    The release is parsed once: the parsed rows are a rolling
+    checkpoint (``store.rolling_checkpoint``, owner ``build_panel``)
+    that the pivot's distinct-metric query materialises, and the
+    panel's plan reads those blocks instead of scanning and parsing the
+    release text again. Contract: consume one ``build_panel`` result
+    before the next call on the same session, which releases the
+    previous call's blocks."""
+    long = rolling_checkpoint(read_nested_release(spark, json_path), "build_panel")
     obs = explode_timeseries(long)
     return pivot_panel(obs, names=area_names(long))
 
@@ -93,7 +111,13 @@ def process_panel(
     event cutoff and last-valid dates, the trim_end cutoff — is that
     AREA's own, not the release's. The per-area composed reference-exec
     parity test (round 10) caught the global scoping this plan
-    originally used."""
+    originally used.
+
+    The panel comes back unordered: the store write partitions its
+    rows itself, so a global sort here would be a range-partition
+    exchange whose order nobody reads. A caller that needs an order
+    sorts the result. The result reads ``homogenise_dates``' rolling
+    checkpoint: consume it before the next ``homogenise_dates`` call."""
     chunk_keys = ("areaType", "areaCode")
     out = homogenise_dates(panel, span="group")
     out = normalise_records(
@@ -123,9 +147,7 @@ def process_panel(
     out = trim_end(out, config.trim_end, TAIL_TRIM_DAYS, group_keys=chunk_keys)
     if release_timestamp is not None:
         out = out.withColumn("releaseTimestamp", F.lit(release_timestamp))
-    return out.orderBy(
-        F.col("areaType"), F.col("areaCode"), F.col("date").desc()
-    )
+    return out
 
 
 def to_long_store(
@@ -151,9 +173,15 @@ def to_long_store(
         ["releaseTimestamp"] if "releaseTimestamp" in panel.columns else []
     )
     # the panel mixes numeric metrics and string metrics (Direction
-    # columns); pandas melts them into one object column — Spark melts
-    # each type family separately, trims + wraps, then unions the JSON
-    # payload rows. areaNameLower is derived metadata, not a metric.
+    # columns); pandas melts them into one object column. Here every
+    # cell becomes struct(v, j) and ONE melt covers both families, so
+    # the processed panel is planned and run once, not once per family:
+    # ``j`` is the payload JSON rendered from the value at its family's
+    # melt type (a numeric family widens to one type, so a bigint metric
+    # next to a double one renders 416.0), and ``v`` is that value as a
+    # string, which keeps the null-ness and ``try_cast(double)`` that
+    # trim_sides and the weekly dropna read, for numeric and string
+    # cells alike. areaNameLower is derived metadata, not a metric.
     dtypes = dict(panel.dtypes)
     skip = set(id_vars) | {"areaNameLower"}
     num_vars = [
@@ -164,22 +192,30 @@ def to_long_store(
     ]
     str_vars = [c for c in dtypes if c not in skip and c not in num_vars]
 
-    def prep(value_vars):
-        part = melt(panel, id_vars=id_vars, value_vars=value_vars)
-        part = part.withColumnRenamed("areaType", "area_type").withColumnRenamed(
-            "areaCode", "area_code"
-        )
-        part = trim_sides(part)
-        # weekly-cadence metrics drop null payloads before wrapping
-        # (deploy order: melt -> trim_sides -> format_weekly_metrics,
-        # uploader.py:617-621)
-        part = drop_weekly_metric_nulls(part)
-        return part.withColumn("payload", wrap_payload(F.col("payload")))
+    def cells(value_vars):
+        if not value_vars:
+            return []
+        typ = melt(panel, id_vars=id_vars, value_vars=value_vars).schema[
+            "payload"
+        ].dataType
+        typed = [F.col(c).cast(typ) for c in value_vars]
+        return [
+            F.struct(t.cast("string").alias("v"), wrap_payload(t).alias("j")).alias(c)
+            for c, t in zip(value_vars, typed)
+        ]
 
-    parts = [prep(v) for v in (num_vars, str_vars) if v]
-    long = parts[0]
-    for p in parts[1:]:
-        long = long.unionByName(p)
+    long = melt(
+        panel.select(*id_vars, *cells(num_vars), *cells(str_vars)), id_vars=id_vars
+    )
+    long = long.withColumnRenamed("areaType", "area_type").withColumnRenamed(
+        "areaCode", "area_code"
+    )
+    long = trim_sides(long, payload_col="payload.v")
+    # weekly-cadence metrics drop null payloads before wrapping
+    # (deploy order: melt -> trim_sides -> format_weekly_metrics,
+    # uploader.py:617-621)
+    long = drop_weekly_metric_nulls(long, payload_col="payload.v")
+    long = long.withColumn("payload", F.col("payload.j"))
 
     if partition_group_expr is None:
         partition_group_expr = F.when(
@@ -352,7 +388,12 @@ def run_main(
     release_timestamp: str | None = None,
 ) -> DataFrame:
     """Full EP1: returns the long store rows (and writes them if a store
-    path is given)."""
+    path is given).
+
+    The result reads the rolling checkpoints of ``build_panel`` and
+    ``homogenise_dates``: consume it before the next call to either (or
+    to ``run_main``) on the same session, which releases those
+    blocks."""
     panel = build_panel(spark, json_path)
     processed = process_panel(panel, population, config, release_timestamp)
     long = to_long_store(processed, release_id=release_id)

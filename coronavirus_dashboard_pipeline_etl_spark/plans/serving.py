@@ -41,6 +41,13 @@ def _value() -> F.Column:
     return F.get_json_object("payload", "$.value")
 
 
+def _cast_value(value_cast: str) -> F.Column:
+    """payload ->> 'value' cast to ``value_cast`` through double: the
+    store's numeric payloads render as ``416.0``, which a direct cast to
+    an integral type rejects under ANSI mode (CAST_INVALID_INPUT)."""
+    return _value().cast("double").cast(value_cast)
+
+
 def _joined(
     time_series: DataFrame,
     areas: DataFrame | None = None,
@@ -253,7 +260,7 @@ def landing_cache_rows(
     df = df.withColumn("__mx", F.max("date").over(w_max)).filter(
         F.datediff(F.to_date("__mx"), F.to_date("date")) < last_n_days
     )
-    rec = F.struct(F.col("date"), _value().cast(value_cast).alias("value"))
+    rec = F.struct(F.col("date"), _cast_value(value_cast).alias("value"))
     return (
         df.groupBy("area_type", "area_code", "metric")
         .agg(F.to_json(F.sort_array(F.collect_list(rec), asc=False)).alias("cache_value"))
@@ -356,7 +363,7 @@ def map_layer_features(
         F.struct(
             F.col("date"),
             F.col("area_code").alias("code"),
-            _value().cast(value_cast).alias("value"),
+            _cast_value(value_cast).alias("value"),
         )
     )
     geom = F.to_json(

@@ -481,3 +481,158 @@ def test_merge_upsert_store_semantics(spark, tmp_path):
 
     with pytest.raises(ValueError, match="partitions"):
         merge_upsert_store(batch, path, max_affected_partitions=0)
+
+
+def _per_family_long(panel, id_vars):
+    """Test-side reference for ``to_long_store``'s melt: each type family
+    melted on its own -> trim_sides -> weekly dropna -> JSON wrap, then
+    the two families unioned."""
+    from coronavirus_dashboard_pipeline_etl_spark.operators import (
+        drop_weekly_metric_nulls,
+        trim_sides,
+    )
+    from coronavirus_dashboard_pipeline_etl_spark.operators.nesting import (
+        wrap_payload,
+    )
+
+    skip = set(id_vars) | {"areaNameLower"}
+    num = [
+        c
+        for c, t in panel.dtypes
+        if c not in skip and (t in ("double", "bigint") or t.startswith("decimal"))
+    ]
+    strs = [c for c in panel.columns if c not in skip and c not in num]
+    parts = []
+    for family in (num, strs):
+        part = panel.melt(
+            ids=id_vars, values=family,
+            variableColumnName="metric", valueColumnName="payload",
+        )
+        part = part.withColumnRenamed("areaType", "area_type").withColumnRenamed(
+            "areaCode", "area_code"
+        )
+        part = drop_weekly_metric_nulls(trim_sides(part))
+        parts.append(part.withColumn("payload", wrap_payload(F.col("payload"))))
+    return parts[0].unionByName(parts[1])
+
+
+@pytest.mark.parametrize(
+    "drop, weekly_type, cum_payload",
+    [
+        ((), "double", '{"value":405.0}'),
+        (("newCases",), "bigint", '{"value":405.00}'),
+    ],
+    ids=["double_widens_numeric", "decimal_widens_numeric"],
+)
+def test_one_melt_matches_per_family_melt(spark, drop, weekly_type, cum_payload):
+    """``to_long_store`` melts both type families in one pass; its rows
+    must equal the per-family reference, including each family's widened
+    payload rendering (bigint next to double renders 405.0, next to a
+    decimal 405.00)."""
+    n = 10
+    nan = float("nan")
+
+    def series(area, i):
+        leading = area == "E2" and i < 3  # E2's cumulative starts late
+        return (
+            "nation" if area == "E1" else "utla",
+            area,
+            f"name {area}",
+            f"2021-02-{i + 1:02d}",
+            "2021-02-11T00:00:00Z",
+            f"name {area}".lower(),
+            # double with zero lead-in and a NaN
+            0.0 if i < 2 else (nan if i == 5 else float(i)),
+            # bigint cumulative
+            None if leading else 400 + i,
+            # decimal rate
+            None if i == 9 else f"{i}.25",
+            # Direction string, with a numeric-looking cell
+            None if i == 0 else ("1.5" if i == 4 else ("UP" if i % 2 else "DOWN")),
+            None,  # all-null string series
+            # weekly metric: interior and trailing nulls
+            float(i) if i % 3 == 0 and i < 7 else None,
+            # exempt variants: leading zero/null and a trailing null
+            None if i in (1, 9) else ("0" if i == 0 else f"v{i}"),
+        )
+
+    schema = (
+        "areaType string, areaCode string, areaName string, date string, "
+        "releaseTimestamp string, areaNameLower string, newCases double, "
+        "cumCases bigint, rate string, newCasesDirection string, "
+        "emptyDirection string, newCasesWeekly double, variants string"
+    )
+    panel = (
+        spark.createDataFrame(
+            [series(a, i) for a in ("E1", "E2") for i in range(n)], schema
+        )
+        .withColumn("rate", F.col("rate").cast("decimal(10,2)"))
+        .withColumn("newCasesWeekly", F.col("newCasesWeekly").cast(weekly_type))
+        .drop(*drop)
+    )
+    id_vars = ["areaType", "areaCode", "areaName", "date", "releaseTimestamp"]
+    want = _per_family_long(panel, id_vars)
+    got = to_long_store(panel, release_id=3)
+    assert got.columns[: len(want.columns)] == want.columns
+    got_rows = sorted(map(tuple, got.select(*want.columns).collect()))
+    want_rows = sorted(map(tuple, want.collect()))
+    assert got_rows == want_rows
+    cum = {r[-1] for r in want_rows if r[1] == "E1" and r[5] == "cumCases"}
+    assert cum_payload in cum, cum
+    # "1.5" is numeric to trim_sides: the Direction series' leading
+    # strip runs through the row after it
+    direction = {r[3] for r in want_rows if r[5] == "newCasesDirection"}
+    assert min(direction) == "2021-02-07", direction
+
+
+def _publish_chain(spark, path):
+    population = spark.createDataFrame(
+        [("E92000001", 56_000_000.0), ("E06000001", 93_000.0)],
+        "areaCode string, population double",
+    )
+    return to_long_store(
+        process_panel(build_panel(spark, path), population, CONFIG), release_id=7
+    )
+
+
+def test_publish_plan_runs_the_chain_once(spark, tmp_path):
+    """One publish melts once over both type families, sorts nothing
+    globally and reads the parsed release instead of re-scanning its
+    text."""
+    import re
+
+    p = tmp_path / "release.json"
+    p.write_text(json.dumps(fixture_json()))
+    plan = (
+        _publish_chain(spark, str(p))._jdf.queryExecution().executedPlan().toString()
+    )
+    assert len(re.findall(r"\bExpand \[", plan)) == 1, plan
+    assert "rangepartitioning" not in plan
+    assert "FileScan text" not in plan
+
+
+def test_consecutive_publishes_hold_one_rolling_pin(spark, tmp_path):
+    """Two publishes in a row leave pinned at most the last publish's
+    rolling checkpoints (the parsed release and the homogenise stats):
+    nothing on the publish path pins blocks for the rest of the
+    session."""
+    from coronavirus_dashboard_pipeline_etl_spark import store
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        write_store,
+    )
+
+    p = tmp_path / "release.json"
+    p.write_text(json.dumps(fixture_json()))
+    sc = spark.sparkContext
+    before = store._persistent_rdd_ids(sc)
+    for _ in range(2):
+        write_store(_publish_chain(spark, str(p)), str(tmp_path / "store"))
+    pinned = store._persistent_rdd_ids(sc) - before
+    rolling = set().union(
+        *(
+            ids
+            for (owner, sc_id), (_, ids) in store._ROLLING.items()
+            if owner in ("build_panel", "homogenise_dates") and sc_id == id(sc)
+        )
+    )
+    assert pinned <= rolling, pinned

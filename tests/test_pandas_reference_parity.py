@@ -34,6 +34,7 @@ import math
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 
 def _nan_eq(a, b) -> bool:
@@ -514,6 +515,52 @@ def test_homogenise_dates_matches_pandas_reference(spark):
         {k: (v,) for k, v in exp.items()},
         "homogenise_dates",
     )
+
+
+
+@pytest.mark.parametrize("frequency", ["D", "W"])
+@pytest.mark.parametrize("span", ["global", "group_min"])
+def test_homogenise_release_wide_nesting_values_match_pandas(spark, span, frequency):
+    """The release-wide spans: every area carries the release's whole
+    nesting-value set, a null member included when any area reported
+    one; ``global`` spans the release's dates and ``group_min`` runs
+    from the area's own first date to the release's last."""
+    from coronavirus_dashboard_pipeline_etl_spark.operators.homogenise import (
+        homogenise_dates,
+    )
+
+    rows = [
+        ("ltla", "E1", "2021-01-06", "a", 5.0),
+        ("ltla", "E1", "2021-01-20", "b", 7.0),
+        ("utla", "U9", "2021-01-12", None, 1.0),
+    ]
+    pdf = pd.DataFrame(rows, columns=["areaType", "areaCode", "date", "band", "cases"])
+    hi = pdf["date"].max()
+    parts = []
+    for (t, c), g in pdf.groupby(["areaType", "areaCode"]):
+        lo = pdf["date"].min() if span == "global" else g["date"].min()
+        dates = pd.date_range(lo, hi, freq=frequency).strftime("%Y-%m-%d")
+        parts.append(
+            pd.DataFrame({"areaType": t, "areaCode": c, "date": dates}).merge(
+                pd.DataFrame({"band": ["a", "b", None]}), how="cross"
+            )
+        )
+    keys = ["areaType", "areaCode", "band", "date"]
+    exp = {
+        tuple(k): None
+        for k in pd.concat(parts)[keys].itertuples(index=False)
+    }
+    for r in pdf.itertuples():  # the outer merge keeps off-scaffold rows
+        exp[(r.areaType, r.areaCode, r.band, r.date)] = r.cases
+
+    sdf = spark.createDataFrame(
+        rows, "areaType string, areaCode string, date string, band string, cases double"
+    )
+    out = homogenise_dates(
+        sdf, frequency=frequency, extra_keys=("band",), span=span
+    )
+    got = {(r.areaType, r.areaCode, r.band, r.date): r.cases for r in out.collect()}
+    assert got == exp
 
 
 # ---------------------------------------------------------------------- W5

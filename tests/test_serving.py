@@ -227,3 +227,42 @@ def test_landing_cache_multi_release_latest_wins(spark, star):
     # and the surviving value is the LATEST release's (88.5, not 88.0)
     a1 = next(r for r in out if r.area_code == "E92000001")
     assert _json.loads(a1.cache_value)[0]["value"] == 88.5
+
+
+def test_integral_value_casts_read_long_store_payloads(spark, tmp_path):
+    """A store written by ``to_long_store`` renders a double metric as
+    ``{"value":416.0}``. ``map_layer_features``' default bigint cast and
+    ``landing_cache_rows(value_cast="bigint")`` must read it (a direct
+    string-to-bigint cast raises CAST_INVALID_INPUT under ANSI mode)."""
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        to_long_store,
+        write_store,
+    )
+
+    dates = [f"2021-05-{d:02d}" for d in range(1, 9)]
+    panel = spark.createDataFrame(
+        [("nation", "E92000001", d, float(410 + i)) for i, d in enumerate(dates)],
+        "areaType string, areaCode string, date string, newCases double",
+    )
+    path = str(tmp_path / "store")
+    write_store(to_long_store(panel, release_id=1), path)
+    ts = spark.read.parquet(path).select(
+        F.lit(1).alias("area_id"), F.lit(10).alias("metric_id"), "date", "payload"
+    )
+    assert ts.first().payload.endswith('.0}')
+    areas = spark.createDataFrame(
+        [(1, "nation", "E92000001")], "area_id int, area_type string, area_code string"
+    )
+    metrics = spark.createDataFrame([(10, "newCases")], "metric_id int, metric string")
+    geo = spark.createDataFrame(
+        [(1, "Point", [1, 2])], "area_id int, geometry_type string, coordinates array<bigint>"
+    )
+    feats = serving.map_layer_features(
+        ts, areas, metrics, geo, metric="newCases", area_type="nation"
+    ).collect()
+    # trim_sides keeps the interior rows 2021-05-03 .. 2021-05-06
+    assert sorted(json.loads(r.properties)["value"] for r in feats) == [412, 413, 414, 415]
+    (cache,) = serving.landing_cache_rows(
+        ts, areas, metrics, ["newCases"], value_cast="bigint"
+    ).collect()
+    assert [r["value"] for r in json.loads(cache.cache_value)] == [415, 414, 413, 412]

@@ -478,10 +478,20 @@ _GATE_PLUMBING = re.compile(r'removeprefix\("file:"\)|os\.listdir|os\.path\.isdi
 _BARE_CHECKPOINT = re.compile(r"localCheckpoint\(")
 
 
+#: modules whose checkpoints go through the store layer: the crawl day
+#: and the release publish path
+_RELEASED_CHECKPOINT_MODULES = (
+    "plans/crawl.py",
+    "operators/homogenise.py",
+    "plans/main_pipeline.py",
+    "sources/nested_json.py",
+)
+
+
 def test_store_gates_and_crawl_day_use_the_store_layer():
     """The gate registry reaches store files only through the store
-    layer, and the crawl day takes checkpoints only through it, so each
-    one is released or documented as pinned."""
+    layer, and the crawl day and the publish path take checkpoints only
+    through it, so each one is released or documented as pinned."""
     for planted in (
         '    warehouse = spark.conf.get(w).removeprefix("file:")',
         "    for d in os.listdir(path):",
@@ -490,11 +500,20 @@ def test_store_gates_and_crawl_day_use_the_store_layer():
         assert _matches(_GATE_PLUMBING, planted), planted
     assert not _matches(_GATE_PLUMBING, '    path = _scratch_store(spark, "x")')
     assert _matches(_BARE_CHECKPOINT, "    kept = kept.localCheckpoint(eager=True)")
+    assert _matches(
+        _BARE_CHECKPOINT,
+        "    stats = df.groupBy(*keys).agg(*aggs).localCheckpoint(eager=False)",
+    )
     assert not _matches(_BARE_CHECKPOINT, "    packed, _ = checkpoint(packed_lazy)")
+    assert not _matches(
+        _BARE_CHECKPOINT,
+        "    4. The merged affected partitions are localCheckpoint-materialised",
+    )
     with open(os.path.join(PKG, "plans/gate_queries.py")) as fh:
         assert _matches(_GATE_PLUMBING, fh.read()) == []
-    with open(os.path.join(PKG, "plans/crawl.py")) as fh:
-        assert _matches(_BARE_CHECKPOINT, fh.read()) == []
+    for rel in _RELEASED_CHECKPOINT_MODULES:
+        with open(os.path.join(PKG, rel)) as fh:
+            assert _matches(_BARE_CHECKPOINT, fh.read()) == [], rel
 
 
 #: string literals that spell the bucketed-store format: the sidecar
