@@ -835,8 +835,8 @@ def mixture_rebalance(
 
     The count aggregate is an ACTION: ``df``'s plan executes once for
     the counts and again for the filtered output. Fine over a scan;
-    when ``df`` is an expensive upstream chain, ``.cache()`` or
-    ``.localCheckpoint()`` it first so the chain runs once.
+    when ``df`` is an expensive upstream chain, cache or checkpoint it
+    first so the chain runs once.
     """
     from pyspark.sql import functions as F
 
@@ -1252,6 +1252,7 @@ def dsir_importance(
     # to it — but its count MUST enter the target total T, or every
     # ratio's (T + m) normaliser undercounts and the scores diverge
     # from the documented formula (a left join silently dropped these)
+    # small by construction: at most n_buckets rows
     model_rows = raw_cnt.join(tgt_cnt, "__b", "full_outer").collect()
     model = {
         int(row["__b"]): (int(row["__r"]), int(row["__t"] or 0))

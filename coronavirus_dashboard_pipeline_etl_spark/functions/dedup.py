@@ -313,11 +313,11 @@ def simhash_candidate_pairs(
     # consumers (the band explode and both sides of the hamming join),
     # and without a checkpoint each would recompute the full signature
     # scan — the token hashing + bit votes dominate this operator's
-    # cost. The materialised rows are linear and tiny (id + 64-bit sig).
-    sigs = (
-        sigs.filter(F.col(sim_col).isNotNull())
-        .select(F.col(id_col), F.col(sim_col))
-        .localCheckpoint(eager=False)
+    # cost. The materialised rows are linear and tiny (id + 64-bit sig);
+    # the next call releases them (rolling).
+    sigs = rolling_checkpoint(
+        sigs.filter(F.col(sim_col).isNotNull()).select(F.col(id_col), F.col(sim_col)),
+        "simhash_candidate_pairs",
     )
     width = bits // bands
     mask = (1 << width) - 1
@@ -2153,8 +2153,8 @@ def shared_spans(
     # the checkpoint each consumer re-executes the explode + md5 over
     # the whole corpus (measured ~4x wall at sf1); lazy, so the stats
     # aggregation below doubles as the eager step (the
-    # _probe_exploded_guarded pattern)
-    g = g.localCheckpoint(eager=False)
+    # _probe_exploded_guarded pattern); the next call releases it
+    g = rolling_checkpoint(g, "shared_spans")
     stats = g.groupBy("__h").agg(
         F.count_distinct("id").alias("__docs")
     )

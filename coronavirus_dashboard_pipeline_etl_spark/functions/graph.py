@@ -31,7 +31,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..store import _release_rdds, checkpoint
+from ..store import _release_rdds, checkpoint, rolling_checkpoint
 
 UNIT = 10**12  # one unit of rank mass, as a BIGINT fixed-point scale
 
@@ -128,6 +128,7 @@ def pagerank_fixed_point(
         # read the same cached frame, so fold them into a single
         # aggregate (each driver-blocking job between iterations is
         # dead time for the whole cluster — guide §1.2/§2.6)
+        # small by construction: one aggregate row
         _counts = deg.agg(
             F.count(F.lit(1)).alias("__n"),
             F.count_if(F.col("outdeg") == 0).alias("__d"),
@@ -231,12 +232,17 @@ def pagerank_fixed_point(
             prev_round_ids = round_ids
         # materialise the final ranks — the operator returns a
         # self-contained frame and leaves no cache residue in a
-        # long-lived session beyond the returned checkpoint itself
-        out = ranks.select(
-            F.col("src").alias("node"),
-            "rank_int",
-            (F.col("rank_int").cast("double") / F.lit(float(UNIT))).alias("rank"),
-        ).localCheckpoint(eager=True)
+        # long-lived session beyond the returned checkpoint itself,
+        # which the next call releases (rolling)
+        out = rolling_checkpoint(
+            ranks.select(
+                F.col("src").alias("node"),
+                "rank_int",
+                (F.col("rank_int").cast("double") / F.lit(float(UNIT))).alias("rank"),
+            ),
+            "pagerank_fixed_point",
+            eager=True,
+        )
         _release_rdds(sc, prev_round_ids)
     finally:
         # release the cached edge/degree frames even when the guard or

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
 
+from ..store import materialised, rolling_checkpoint
+
 
 def _to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -357,8 +359,9 @@ def kmeans_lloyd(
     assignment (zero shuffle), then the centroid update as
     posexplode -> groupBy (cluster, dim) mean -> re-collect — one
     shuffle per round keyed on (cluster, dimension), k*dim rows out.
-    ``localCheckpoint`` truncates the lineage per round (the
-    dedup_components pattern) so the plan stays bounded.
+    Each round's k centroids come back to the driver as a local table,
+    which truncates the lineage per round (the plan stays bounded) and
+    pins no blocks.
 
     Returns ``(assigned, centroids)`` — the corpus with final
     ``centroid_id``/``centroid_score``, and the centroid table.
@@ -421,7 +424,7 @@ def kmeans_lloyd(
             ).alias("m")
         else:
             mean_expr = F.avg("x").alias("m")
-        centroids = (
+        rows = (
             dims.groupBy("centroid_id", "dim")
             .agg(mean_expr)
             .groupBy("centroid_id")
@@ -431,7 +434,11 @@ def kmeans_lloyd(
                     lambda s: s.m,
                 ).alias("centroid")
             )
-            .localCheckpoint(eager=True)
+            .limit(k)
+            .collect()
+        )
+        centroids = df.sparkSession.createDataFrame(
+            rows, "centroid_id long, centroid array<double>"
         )
     return assign_centroids(df, centroids, id_col=id_col, vec_col=vec_col), centroids
 
@@ -613,7 +620,8 @@ def _probe_exploded_guarded(
         F.col("probe_buckets").alias("__bs"),
         F.explode("probe_buckets").alias("__b"),
     )
-    x = x.localCheckpoint(eager=False)
+    # the caller's next call releases it (rolling)
+    x = rolling_checkpoint(x, caller)
     oversized = (
         x.groupBy("__b")
         .count()
@@ -891,8 +899,13 @@ def kmeans_seeds_farthest(
     # re-evaluates `df`, so an uncached upstream (join/agg/source scan)
     # would be recomputed k times — localCheckpoint makes every round
     # a scan of the materialised blocks and truncates lineage so the
-    # loop's plan stays bounded
-    df = df.select(id_col, vec_col).localCheckpoint(eager=True)
+    # loop's plan stays bounded; the seeds come back as a local table,
+    # so the blocks are released on return
+    with materialised(df.select(id_col, vec_col)) as df:
+        return _farthest_seeds(df, k, id_col, vec_col)
+
+
+def _farthest_seeds(df: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
     first = (
         df.orderBy(id_col)
         .limit(1)
@@ -1090,6 +1103,7 @@ def pq_train(
         else:
             mean_expr = F.avg("__val").alias("__m")
         model_rows = (
+            # small by construction: m_sub * k * dim model cells
             dims.groupBy("__s", "__code", "__dim").agg(mean_expr).collect()
         )
         nxt = [[list(cw) for cw in sub] for sub in cb]

@@ -14,6 +14,8 @@ from collections.abc import Mapping, Sequence
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..store import rolling_checkpoint
+
 
 def tokens(col: Column | str) -> Column:
     """Whitespace tokenisation (the reference treats text as opaque; this
@@ -400,8 +402,8 @@ def rrf_fuse(
         # leg so the guard collect below doubles as its materialisation
         # and the fused plan reads the tiny checkpoint instead of
         # re-executing the retrieval (the _probe_exploded_guarded
-        # pattern)
-        part = part.localCheckpoint(eager=False)
+        # pattern); the next call's leg i releases it
+        part = rolling_checkpoint(part, f"rrf_fuse_leg{i}")
         # a duplicate id inside one leg would FAN OUT through the
         # full-outer join chain (two rows for the doc, every doc below
         # it displaced) — fail loudly instead; legs are top-k-sized,
@@ -749,6 +751,7 @@ def bpe_encode(
     import pandas as pd
 
     if isinstance(merges, DataFrame):
+        # small by construction: one row per learned merge
         merge_rows = merges.orderBy("merge_rank").collect()
         table = [(r["left"], r["right"]) for r in merge_rows]
     else:

@@ -5430,9 +5430,9 @@ def s10b_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes through ``write_store`` (dynamic partition overwrite,
     release-scoped ``partition_id`` = "<release>_<grp>" exactly like the
     reference's "Y_m_d|grp" scheme, uploader.py:246-295), then
-    ``compact_store`` rewrites every partition's files, then
-    ``read_store`` reads back a partition SELECTION with a column
-    projection. Any loss in the write/compact/read path — dropped rows,
+    ``compact_store`` folds the store (each partition ends as one file
+    set), then ``read_store`` reads back a partition SELECTION with a
+    column projection. Any loss in the write/compact/read path — dropped rows,
     partition leakage (1_b must NOT appear), type drift through the
     parquet round-trip — surfaces as a value mismatch."""
     import shutil
@@ -5455,9 +5455,9 @@ def s10b_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         write_store(release(1, F.col("n_name")), d)
         write_store(release(2, F.upper(F.col("n_name"))), d)
-        written = compact_store(spark, d, target_rows_per_file=1_000)
-        if not written:
-            raise RuntimeError("s10b: compaction rewrote no partitions")
+        rep = compact_store(spark, d, target_rows_per_file=1_000)
+        if rep["files_after"] != rep["buckets_after"]:
+            raise RuntimeError(f"s10b: compaction left split partitions: {rep}")
         out = read_store(
             spark,
             d,
@@ -5594,8 +5594,9 @@ def s19_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays the batch dedup (greatest of the two payload
     strings), the conflict rule (batch wins on hash), and the
     untouched-partition rule in SQL — any drift in any of the three
-    fails the value hash."""
-    from .main_pipeline import merge_upsert_store, write_store
+    fails the value hash. The store is read through ``read_store``, the
+    merged view of the upsert's append and tombstones."""
+    from .main_pipeline import merge_upsert_store, read_store, write_store
 
     orders = load_table(spark, sf_dir, "orders")
     h = F.md5(F.col("o_orderkey").cast("string").cast("binary")).alias("hash")
@@ -5624,7 +5625,7 @@ def s19_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scratch_store(spark, "gate_s19_store")
     write_store(base, path)
     merge_upsert_store(inc, path)
-    merged = spark.read.parquet(path)
+    merged = read_store(spark, path)
     return merged.groupBy("partition_id", "release_id").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count_distinct(F.col("hash")).alias("n_hashes"),
@@ -11133,7 +11134,8 @@ def s17_warc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.warc import build_warc, read_warc
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    rows = docs.collect()  # gate scale: the builder half is driver-side
+    # small by construction: gate scale; the builder half is driver-side
+    rows = docs.collect()
     d = tempfile.mkdtemp(prefix="s17_warc_")
     try:
         shards: dict[int, list] = {}

@@ -20,7 +20,8 @@ and the load side (``db_etl_upload/uploader.py:546-655``):
     one melt over numeric and string metrics (P7) -> trim_sides (W4)
     -> weekly dropna -> payload wrap (P10) -> keyed hash
     -> partition_id -> partitioned parquet write (S8/S10 as
-    partitionBy + dynamic overwrite instead of Postgres DDL + upsert).
+    partitionBy + dynamic overwrite instead of Postgres DDL; the upsert
+    is an append plus tombstones, folded by ``compact_store``).
 
 A publish does each piece of work once: the release is parsed once
 (``build_panel``'s rolling checkpoint) and the processing chain is
@@ -35,7 +36,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..config import (
     DEFAULT_METRICS,
@@ -66,13 +67,20 @@ from ..sources.nested_json import (
     read_nested_release,
 )
 from ..store import (
+    compact,
     materialised,
     overwrite_partitions,
-    read_existing,
+    read_bucketed,
     rolling_checkpoint,
+    write_partitioned,
 )
 
 PANEL_META = ["areaType", "areaCode", "areaName", "date"]
+
+#: the serving store's layout column and its upsert identity
+#: (uploader.py:300-325: ON CONFLICT (hash, partition_id))
+PARTITION_COL = "partition_id"
+UPSERT_KEYS = ["hash", PARTITION_COL]
 
 
 def build_panel(spark: SparkSession, json_path: str) -> DataFrame:
@@ -250,9 +258,11 @@ def write_store(long: DataFrame, path: str) -> None:
     the reference's per-release Postgres partition DDL
     (uploader.py:255-295) and hash-upsert: re-running a release replaces
     exactly its own partitions, so the write is idempotent like the
-    reference's ON CONFLICT path.
+    reference's ON CONFLICT path. The store is ``store.py``'s
+    partitioned layout: the rows carry the store's next epoch, so a
+    re-published partition outlives the tombstones of earlier upserts.
     """
-    overwrite_partitions(long, path, "partition_id")
+    write_partitioned(long, path, PARTITION_COL, "write_store")
 
 
 def write_store_bucketed(
@@ -298,11 +308,10 @@ def merge_upsert_store(
     """MERGE twin of ``write_store`` — the reference's row-level upsert
     semantic (``db_etl_upload/uploader.py:300-325``: dedup the batch on
     the identity tuple, then INSERT .. ON CONFLICT (hash, partition_id)
-    DO UPDATE SET payload) expressed over a parquet store at partition
-    granularity. ``write_store``'s dynamic overwrite REPLACES a
-    partition wholesale; this keeps existing rows whose hash the batch
-    doesn't carry — the semantic a partial re-run or late-metric
-    backfill needs.
+    DO UPDATE SET payload) over the parquet store.
+    ``write_store``'s dynamic overwrite REPLACES a partition wholesale;
+    this keeps existing rows whose hash the batch doesn't carry — the
+    semantic a partial re-run or late-metric backfill needs.
 
     1. Batch dedup: the reference keeps the FIRST duplicate in frame
        order; a distributed frame has no frame order, so the twin keeps
@@ -313,69 +322,58 @@ def merge_upsert_store(
     2. Affected partitions: distinct partition_id in the batch
        (bounded, loud collect — a batch fanning into more than
        ``max_affected_partitions`` partitions is a malformed release).
-    3. Conflict rule: existing rows in affected partitions survive iff
-       their (hash, partition_id) is absent from the batch; batch rows
-       always land. The reference updates ONLY payload on conflict,
-       but a hash match implies every identity column matches, so
-       batch-row-wins IS payload-update.
-    4. The merged affected partitions are localCheckpoint-materialised
-       (the plan reads the same files the dynamic overwrite is about
-       to replace), then written with dynamic partition overwrite —
-       untouched partitions' files are never rewritten, and the
-       checkpoint blocks are released once the write has run. At real
-       100 TB scale the same logic rides a transactional table
-       format's MERGE (Delta/Iceberg) instead of checkpoint+overwrite;
-       the semantics here are the contract.
+    3. Conflict rule: batch rows always land; an existing row survives
+       iff its (hash, partition_id) is absent from the batch. The
+       reference updates ONLY payload on conflict, but a hash match
+       implies every identity column matches, so batch-row-wins IS
+       payload-update.
+    4. The write is batch-sized (``store.write_partitioned``): the
+       deduped batch appends under its partitions at the store's next
+       epoch, then one tombstone per (hash, partition_id) at that epoch
+       marks every older row of the key dead. No existing partition is
+       read or rewritten. Until ``compact_store`` folds the store, only
+       ``read_store`` (or ``store.read_bucketed``) gives the merged
+       view: a raw parquet read sees superseded rows too, as Iceberg
+       v2 equality deletes also need a table-aware reader. Data rows
+       land before tombstones, so a crash between the two leaves a
+       key's old and new rows visible until the batch is re-run or the
+       store is folded.
 
     With no store at ``path`` yet (a missing path, or a directory with
     no data files) the deduped batch is the first write. Any other
-    read failure propagates and leaves the store untouched.
+    read failure of a store without a sidecar propagates and leaves the
+    store untouched.
 
     ``streaming.ingest.upsert_batch`` is this function under its
     foreachBatch-sink name: one micro-batch per call.
     """
-    from pyspark.sql import Window
-
-    spark = incoming.sparkSession
-    w = Window.partitionBy("hash", "partition_id").orderBy(
-        F.col("payload").desc()
-    )
+    w = Window.partitionBy(*UPSERT_KEYS).orderBy(F.col("payload").desc())
+    # clustered on partition_id, which also clusters the window's keys:
+    # one exchange, and each partition's rows land in one file
     inc = (
-        incoming.withColumn("__rn", F.row_number().over(w))
+        incoming.repartition(PARTITION_COL)
+        .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    # only a missing path or a directory with no data files is a first
-    # write: the first-write path's dynamic overwrite replaces the
-    # batch's partitions wholesale, so mistaking an unreadable store
-    # for an absent one would lose every non-conflicting row there
-    existing_all = read_existing(spark, path)
-    if existing_all is None:
-        write_store(inc, path)
-        return
-    parts = (
-        inc.select("partition_id")
-        .distinct()
-        .limit(max_affected_partitions + 1)
-        .collect()
-    )
-    if len(parts) > max_affected_partitions:
-        raise ValueError(
-            f"merge_upsert_store: batch touches more than "
-            f"{max_affected_partitions} partitions; that is a malformed "
-            "release (or raise max_affected_partitions explicitly)"
+    # lazy: the guard's collect fills the blocks the two appends read.
+    # The guard runs as one task (coalesce(1) needs no exchange before
+    # its distinct), which is cheap for a delta-sized batch.
+    with materialised(inc, eager=False) as rows:
+        parts = (
+            rows.coalesce(1)
+            .select(PARTITION_COL)
+            .distinct()
+            .limit(max_affected_partitions + 1)
+            .collect()
         )
-    affected = [r["partition_id"] for r in parts]
-    existing = existing_all.filter(F.col("partition_id").isin(affected))
-    survivors = existing.join(
-        inc.select("hash", "partition_id"),
-        ["hash", "partition_id"],
-        "left_anti",
-    )
-    with materialised(
-        inc.unionByName(survivors.select(*inc.columns))
-    ) as merged:
-        write_store(merged, path)
+        if len(parts) > max_affected_partitions:
+            raise ValueError(
+                f"merge_upsert_store: batch touches more than "
+                f"{max_affected_partitions} partitions; that is a malformed "
+                "release (or raise max_affected_partitions explicitly)"
+            )
+        write_partitioned(rows, path, PARTITION_COL, "merge_upsert_store", UPSERT_KEYS)
 
 
 def run_main(
@@ -407,62 +405,34 @@ def compact_store(
     path: str,
     partitions: Sequence[str] | None = None,
     target_rows_per_file: int = 2_000_000,
-) -> dict[str, int]:
-    """Small-file compaction for the partitioned serving store — the
-    housekeeping a daily-release store needs at 100 TB: each release
-    rewrite leaves one file set per partition per run, and serving scan
+) -> dict:
+    """Fold of the serving store (``store.compact`` over the
+    ``partition_id`` layout) — the housekeeping a daily-release store
+    needs: upserts leave delta files and tombstones, and serving scan
     cost degrades with file count, not bytes.
 
-    Per selected ``partition_id`` (default: all), rewrites the
-    partition's rows into ``ceil(rows / target_rows_per_file)`` files
-    via the same dynamic-overwrite path as ``write_store`` — so a
-    killed compaction run is re-runnable (idempotent per partition) and
-    concurrent readers of OTHER partitions never see a partial state.
-    Returns ``{partition_id: file_count_written}``.
-
-    Scale shape: one count + one coalesced rewrite per partition, each
-    bounded by that partition's size — never a full-store shuffle. The
-    coalesce is a NARROW repartition (no exchange) since output files
-    only need merging, not redistribution.
-
-    Concurrency contract: plain-parquet dynamic overwrite offers NO
-    snapshot isolation WITHIN a partition — an EXTERNAL reader or
-    writer touching a partition while it is being compacted can observe
-    a partial file set. Schedule compaction in the release window when
-    the selected partitions are quiescent (the store's release
-    scheduling already serialises writers per partition); for
-    concurrent-safe compaction use a table format with commit protocols
-    (Delta/Iceberg) instead. The compactor's OWN read-then-replace
-    cycle is enforced safe below: each partition is materialised
-    (localCheckpoint) before its files are overwritten, so a task retry
-    mid-overwrite re-reads executor blocks, never half-replaced files.
+    Each selected ``partition_id`` (default: all) that holds more than
+    one write epoch or more than ``ceil(rows / target_rows_per_file)``
+    files is rewritten from its live rows (tombstones applied) into
+    files of at most ``target_rows_per_file`` rows; clean partitions
+    keep their files. Afterwards a folded partition holds one file set,
+    no superseded rows, and — once no dirty partition is left — the
+    tombstone table is gone, so a raw parquet read sees the merged
+    store again. The rewrite is materialised first (it reads the files
+    it replaces) and is a dynamic overwrite, so a killed run is
+    re-runnable and readers of OTHER partitions never see a partial
+    state; an external reader of a partition being compacted can (use
+    a table format with commit protocols for that). Returns the fold
+    report (``compact_dedup_store``'s fields: files and partitions
+    before and after, partitions rewritten, tombstones folded).
     """
-    store = spark.read.parquet(path)
-    # ONE grouped count for every selected partition (not a count-scan
-    # per partition); the rewrites that follow each scan only their own
-    # partition's files via partition pruning
-    counts_df = store.groupBy("partition_id").count()
-    if partitions is not None:
-        counts_df = counts_df.filter(F.col("partition_id").isin(list(partitions)))
-    counts = {r["partition_id"]: r["count"] for r in counts_df.collect()}
-    written: dict[str, int] = {}
-    for pid, n in sorted(counts.items()):
-        if n == 0:
-            continue
-        n_files = max(1, -(-n // target_rows_per_file))
-        # materialise the partition BEFORE the overwrite: the writer
-        # must never stream from the very files it is replacing (the
-        # same-partition reader/writer hazard the contract above
-        # documents — localCheckpoint severs the scan dependency, at a
-        # cost bounded by one partition's rows, so a task retry
-        # mid-overwrite re-reads executor blocks, not half-replaced
-        # files)
-        with materialised(
-            store.filter(F.col("partition_id") == pid).coalesce(n_files)
-        ) as part_df:
-            write_store(part_df, path)
-        written[pid] = n_files
-    return written
+    return compact(
+        spark,
+        path,
+        partition_col=PARTITION_COL,
+        partitions=partitions,
+        target_rows_per_file=target_rows_per_file,
+    )
 
 
 def read_store(
@@ -471,18 +441,21 @@ def read_store(
     partitions: Sequence[str] | None = None,
     columns: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Serving-store reader that keeps the scan minimal by
-    construction: the ``partitions`` filter is an equality/IN predicate
-    on the partition column (so Spark prunes directories — a release's
-    query never lists, let alone reads, other releases' files) and
-    ``columns`` projects before anything else (so ReadSchema carries
-    only what the caller asked for). Both properties are asserted by
-    the plan regression tests; callers composing further filters on the
-    result keep full pushdown since nothing here materialises.
+    """Serving-store reader — the merged view (``store.read_bucketed``:
+    upsert tombstones applied, epoch column dropped) that a raw parquet
+    read of a store with unfolded upserts does not give. The scan stays
+    minimal by construction: the ``partitions`` filter is an
+    equality/IN predicate on the partition column (so Spark prunes
+    directories — a release's query never lists, let alone reads, other
+    releases' files) and ``columns`` projects the result (so ReadSchema
+    carries only what the caller and the merge need). Both properties
+    are asserted by the plan regression tests; callers composing
+    further filters on the result keep full pushdown since nothing here
+    materialises.
     """
-    df = spark.read.parquet(path)
+    df = read_bucketed(spark, path)
     if partitions is not None:
-        df = df.filter(F.col("partition_id").isin(list(partitions)))
+        df = df.filter(F.col(PARTITION_COL).isin(list(partitions)))
     if columns is not None:
         df = df.select(*columns)
     return df

@@ -315,6 +315,7 @@ def colour_scale_binning(
     (``despatch_ops_workers/landing_page_map/generate.py:106-137``).
     The max is a distributed aggregation; the slice is a driver constant
     feeding the renderer."""
+    # small by construction: one aggregate row
     row = df.agg(F.max(F.col(value_col)).alias("mx")).collect()[0]
     mx = row["mx"]
     if mx is None:

@@ -10,9 +10,10 @@ These mirror the reference's loaders:
   ``caching/redis.py:32-101``, TTL 12 days).
 
 For the parquet serving store the upsert is
-plans.main_pipeline.merge_upsert_store (batch dedup, then a dynamic
-overwrite of the touched partitions — no external service needed);
-streaming.ingest.upsert_batch is its foreachBatch-sink name.
+plans.main_pipeline.merge_upsert_store (batch dedup, then an append
+of the batch plus tombstones, read merged by read_store — no external
+service needed); streaming.ingest.upsert_batch is its foreachBatch-sink
+name.
 """
 
 from __future__ import annotations

@@ -2,22 +2,28 @@
 laid out and materialised.
 
 Three store families sit on top of this module — the serving store
-(``plans.main_pipeline``), the band-index and fingerprint dedup stores
-(``functions.dedup``) and the streaming upserts (``streaming.ingest``).
-They differ in layout and semantics; the storage mechanics they share
-live here, once:
+(``plans.main_pipeline``, whose foreachBatch sink is
+``streaming.ingest.upsert_batch``), the band-index and fingerprint
+dedup stores (``functions.dedup``) and the CDC store
+(``streaming.ingest``). The storage mechanics they share live here,
+once:
 
 * filesystem access goes through Spark's Hadoop FileSystem API, never
   ``os``/``shutil`` on a local path, so a store behaves the same at
   ``/data/x``, ``file:///data/x``, ``hdfs://…`` or ``s3a://…``;
 * the dynamic partition-overwrite write and the static-overwrite
   layout guard;
-* the bucketed-store format the dedup stores are written in: the
-  ``_store_meta.json`` sidecar, the hash-bucket expression and its
-  size-derived bucket count, the bucket-partitioned write, tombstones
-  with merge-on-read, and the fold that repays their debt
-  (``write_bucketed``, ``read_bucketed``, ``compact``); a dedup store
-  names only its key columns and its identity fields;
+* one store format in two layouts: the ``_store_meta.json`` sidecar
+  (epoch, schema, layout and identity), epoch-stamped rows, tombstones
+  with merge-on-read, and the fold that repays their debt. The
+  BUCKETED layout (the dedup stores: ``write_bucketed``) partitions on
+  a hash bucket of the key columns with a size-derived bucket count,
+  so a probe prunes its scan to the buckets it can match; the
+  PARTITIONED layout (the serving store: ``write_partitioned``)
+  partitions on a column the rows carry (``partition_id``), and an
+  upsert is a batch-sized append plus tombstones. Both read through
+  ``read_bucketed`` and fold through ``compact``; a store names only
+  its key columns and its identity fields;
 * the checkpoint lifecycle: ``localCheckpoint`` blocks are not cache
   entries (``unpersist`` is a no-op for them), so whoever checkpoints
   releases the blocks by RDD id once the last consumer has run —
@@ -30,14 +36,15 @@ from __future__ import annotations
 import json
 import warnings
 import weakref
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
 from urllib.parse import unquote
 
 from py4j.java_gateway import JavaClass
 from pyspark import SparkContext
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 _OVERWRITE_MODE_CONF = "spark.sql.sources.partitionOverwriteMode"
 
@@ -155,20 +162,21 @@ def overwrite_partitions(
     path: str | None = None,
     partition_col: str | None = None,
     table: str | None = None,
+    max_records_per_file: int = 0,
 ) -> None:
     """Dynamic partition overwrite: replace exactly the partitions
     present in ``df`` at ``path`` (partitioned by ``partition_col``),
-    leaving every other partition's files untouched. With ``table``,
-    insert into that catalog table instead; ``insertInto`` ignores the
-    writer option and reads only the session conf, so the conf is set
-    for the write and restored after it."""
+    leaving every other partition's files untouched; a positive
+    ``max_records_per_file`` splits a task's output into files of at
+    most that many rows. With ``table``, insert into that catalog table
+    instead; ``insertInto`` ignores the writer option and reads only the
+    session conf, so the conf is set for the write and restored after
+    it."""
     if table is None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
+        writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        if max_records_per_file > 0:
+            writer = writer.option("maxRecordsPerFile", max_records_per_file)
+        writer.partitionBy(partition_col).parquet(path)
         return
     spark = df.sparkSession
     prev = spark.conf.get(_OVERWRITE_MODE_CONF, "static")
@@ -248,13 +256,14 @@ def checkpoint(df: DataFrame, eager: bool = True) -> tuple[DataFrame, set[int]]:
 
 
 @contextmanager
-def materialised(df: DataFrame) -> Iterator[DataFrame]:
-    """Eagerly checkpoint ``df`` for the body of the ``with`` block and
-    release its blocks on exit. The store pattern: a write that
-    replaces the very files its plan reads must stream from executor
-    blocks, not from the files being replaced, and the blocks must not
-    outlive the write."""
-    out, ids = checkpoint(df)
+def materialised(df: DataFrame, eager: bool = True) -> Iterator[DataFrame]:
+    """Checkpoint ``df`` for the body of the ``with`` block and release
+    its blocks on exit. The store pattern: a write that replaces the
+    very files its plan reads must stream from executor blocks, not
+    from the files being replaced, and the blocks must not outlive the
+    write. ``eager=False`` lets the body's first action fill the blocks
+    (one job fewer where that action is needed anyway)."""
+    out, ids = checkpoint(df, eager)
     try:
         yield out
     finally:
@@ -268,41 +277,46 @@ def materialised(df: DataFrame) -> Iterator[DataFrame]:
 _ROLLING: dict[tuple[str, int], tuple] = {}
 
 
-def rolling_checkpoint(df: DataFrame, owner: str, rolling: bool = True) -> DataFrame:
-    """Lazy checkpoint for an operator that RETURNS a frame reading the
-    checkpoint, so it cannot release the blocks itself. The blocks stay
-    pinned until the same ``owner``'s next rolling call on the same
-    SparkContext, which releases them first: a daily loop holds at most
-    one call's blocks, and nothing depends on garbage-collection
-    timing. Contract: finish consuming one call's result before the
-    next call. ``rolling=False`` hands the blocks to the caller (for an
-    operator whose caller takes ownership of the checkpoint), leaving
-    the owner's registered blocks alone."""
+def rolling_checkpoint(
+    df: DataFrame, owner: str, rolling: bool = True, eager: bool = False
+) -> DataFrame:
+    """Checkpoint (lazy unless ``eager``) for an operator that RETURNS a
+    frame reading the checkpoint, so it cannot release the blocks
+    itself. The blocks stay pinned until the same ``owner``'s next
+    rolling call on the same SparkContext, which releases them once its
+    own checkpoint is taken: a daily loop holds at most one call's
+    blocks, and nothing depends on garbage-collection timing. Contract:
+    finish consuming one call's result before the next call.
+    ``rolling=False`` hands the blocks to the caller (for an operator
+    whose caller takes ownership of the checkpoint), leaving the
+    owner's registered blocks alone."""
     if not rolling:
-        return df.localCheckpoint(eager=False)
+        return df.localCheckpoint(eager=eager)
     sc = df.sparkSession.sparkContext
     key = (owner, id(sc))
+    out, ids = checkpoint(df, eager)
     prev = _ROLLING.pop(key, None)
     if prev is not None and prev[0]() is sc:
         _release_rdds(sc, prev[1])
-    out, ids = checkpoint(df, eager=False)
     if ids:
         _ROLLING[key] = (weakref.ref(sc), ids)
     return out
 
 
-# -- bucketed stores --------------------------------------------------
+# -- the store format -------------------------------------------------
 
-#: partition column of a bucketed store: a stable hash bucket of the
+#: partition column of the bucketed layout: a stable hash bucket of the
 #: key columns, so a delta-sized batch prunes its scan to the buckets it
 #: can possibly match (round-12 verdict item 4). A hash bucket, not a
 #: raw value prefix: partition-type inference would flip an all-numeric
 #: hex prefix directory set to int and break the probe's isin filter.
+#: The partitioned layout records its own column in the sidecar.
 STORE_BUCKET = "bucket"
 
-#: write-epoch column of an upserted store's rows: a tombstone
-#: ``(id, epoch)`` kills that id's rows with a SMALLER epoch — the
-#: merge-on-read half of the batch-sized upsert (round-13 verdict item 1).
+#: write-epoch column of a store's rows: a tombstone ``(ids, epoch)``
+#: kills the rows of those ids with a SMALLER epoch — the merge-on-read
+#: half of the batch-sized upsert (round-13 verdict item 1). A row
+#: without one (written before the store had a sidecar) is epoch 0.
 EPOCH_COL = "__epoch"
 
 #: epoch column of the tombstone table (named apart from EPOCH_COL so
@@ -323,49 +337,87 @@ REPLAY_DEBT = "replay_duplicates_possible"
 
 
 def tombstone_path(path: str) -> str:
-    """The tombstone table of the bucketed store at ``path``."""
+    """The tombstone table of the store at ``path``."""
     return join(path, _TOMBSTONE_DIR)
 
 
 def meta_read(path: str) -> dict | None:
-    """A bucketed store's sidecar; None for a legacy store written
-    before the sidecar existed (or no store at all)."""
+    """A store's sidecar; None for a legacy store written before the
+    sidecar existed (or no store at all)."""
     meta_path = join(path, _META_FILE)
     if not exists(meta_path):
         return None
     return json.loads(_fs_read_text(None, meta_path))
 
 
-def _meta_write(path: str, meta: dict, listing: list[tuple[str, int]]) -> None:
+def _meta_write(
+    path: str, meta: dict, listing: list[tuple[str, int]] | None = None
+) -> None:
     """Persist a store's sidecar — what the directory layout cannot
-    express: ``buckets`` (the hash→partition mapping), the identity
+    express: the layout (``buckets``, the hash→partition mapping, or
+    the ``partition_col`` of the partitioned layout), the identity
     fields (a band index's ``k``/``bands``/``base_hash``, the id/fp
-    column), the upsert ``epoch``, the ``REPLAY_DEBT`` buckets and the
-    observed ``data_bytes`` summed from ``listing`` (a ``list_files``
-    taken after the write), which ``_auto_buckets`` trusts over the
-    optimizer's estimate on a reseed (round-14 verdict). It lives next
-    to the data files on the same Hadoop FileSystem and is renamed over
-    the old one, so a crash never leaves a truncated sidecar. On
-    Delta/Iceberg the table's own properties replace it."""
-    data_bytes = sum(sum(v) for v in bucket_files(path, listing).values())
-    _fs_write_text(
-        None,
-        join(path, _META_FILE),
-        json.dumps({**meta, "data_bytes": data_bytes}, sort_keys=True),
-    )
+    column, a partitioned store's tombstone ``id_cols``), the write
+    ``epoch``, the store ``schema``, the ``REPLAY_DEBT`` buckets and,
+    for the bucketed layout, the observed ``data_bytes`` summed from
+    ``listing`` (a ``list_files`` taken after the write), which
+    ``_auto_buckets`` trusts over the optimizer's estimate on a reseed
+    (round-14 verdict). It lives next to the data files on the same
+    Hadoop FileSystem and is renamed over the old one, so a crash never
+    leaves a truncated sidecar. On Delta/Iceberg the table's own
+    properties replace it."""
+    if listing is not None:
+        meta = {**meta, "data_bytes": sum(map(sum, bucket_files(path, listing).values()))}
+    _fs_write_text(None, join(path, _META_FILE), json.dumps(meta, sort_keys=True))
+
+
+def _store_schema(df: DataFrame, partition_col: str) -> dict:
+    """The schema a store read sees for rows written from ``df``: the
+    partition column moves last, as partition discovery puts it."""
+    cols = [c for c in df.columns if c != partition_col] + [partition_col]
+    return df.select(*cols).schema.jsonValue()
+
+
+def _check_schema(path: str, meta: dict | None, schema: dict, caller: str) -> None:
+    """Raise when a write into an existing store would change the
+    columns or types its sidecar records (nullability aside): files of
+    two schemas under one path read wrong or not at all."""
+    recorded = (meta or {}).get("schema")
+
+    def columns(s: dict) -> dict[str, str]:
+        return {f.name: f.dataType.simpleString() for f in StructType.fromJson(s).fields}
+
+    if recorded is not None and columns(recorded) != columns(schema):
+        raise ValueError(
+            f"{caller}: columns {columns(schema)} differ from the schema the "
+            f"store at {path} records {columns(recorded)}"
+        )
+
+
+def _reader(spark: SparkSession, meta: dict | None) -> DataFrameReader:
+    """``spark.read`` with the schema the sidecar records, so a store
+    scan runs no schema-inference job; a sidecar without one (written
+    before the field existed) falls back to inference."""
+    schema = (meta or {}).get("schema")
+    return spark.read if schema is None else spark.read.schema(StructType.fromJson(schema))
 
 
 def bucket_files(
-    path: str, listing: list[tuple[str, int]] | None = None
-) -> dict[int, list[int]]:
-    """Data-file sizes per bucket of a store — one listing walk on the
-    driver (<= buckets dirs, no Spark job), or none when the caller
-    passes the ``list_files(path)`` it already took."""
-    out: dict[int, list[int]] = {}
+    path: str,
+    listing: list[tuple[str, int]] | None = None,
+    partition_col: str = STORE_BUCKET,
+) -> dict:
+    """Data-file sizes per partition of a store (per bucket, by
+    default) — one listing walk on the driver (<= partition dirs, no
+    Spark job), or none when the caller passes the ``list_files(path)``
+    it already took."""
+    out: dict = {}
     for rel, size in list_files(path) if listing is None else listing:
         d = rel.rpartition("/")[0]
-        if d.startswith(f"{STORE_BUCKET}="):
-            out.setdefault(int(d.split("=", 1)[1]), []).append(size)
+        if d.startswith(f"{partition_col}="):
+            value = unquote(d.split("=", 1)[1])
+            key = int(value) if partition_col == STORE_BUCKET else value
+            out.setdefault(key, []).append(size)
     return out
 
 
@@ -519,9 +571,11 @@ def write_bucketed(
     sidecar: an append hashed with another count would scatter equal
     keys across buckets and make pruning silently lossy; a legacy
     no-sidecar store keeps the fixed count its files were hashed with
-    unless the caller fixes one. Any other write takes the caller's
-    ``buckets`` or ``_auto_buckets`` and records ``identity`` with it;
-    an overwrite must truncate the whole path
+    unless the caller fixes one; an append whose columns or types
+    differ from the recorded schema raises before writing. Any other
+    write takes the caller's ``buckets`` or ``_auto_buckets`` and
+    records ``identity`` and the store schema with it; an overwrite
+    must truncate the whole path
     (``require_static_overwrite``). ``epoch`` stamps every row;
     ``tombstones`` (a frame of ids) is appended to the tombstone table
     with that epoch AFTER the data rows, so a crash between the two
@@ -543,18 +597,85 @@ def write_bucketed(
     if epoch is not None:
         df = df.withColumn(EPOCH_COL, F.lit(epoch).cast("int"))
     df = df.withColumn(STORE_BUCKET, _bucket_col(key_cols, buckets))
+    schema = _store_schema(df, STORE_BUCKET)
+    if mode == "append":
+        _check_schema(path, meta, schema, caller)
     _write_buckets(df, path, buckets, mode)
     if tombstones is not None:
-        (
-            tombstones.withColumn(TOMB_EPOCH_COL, F.lit(epoch).cast("int"))
-            # one id-sized file per wave — no reason to fan out
-            .repartition(1)
-            .write.mode("append")
-            .parquet(tombstone_path(path))
-        )
-    record = meta if keep else {**identity, "buckets": buckets}
+        _append_tombstones(tombstones, path, epoch)
+    record = meta if keep else {**identity, "buckets": buckets, "schema": schema}
     if record is not None:
         _meta_write(path, record, list_files(path))
+
+
+def _append_tombstones(ids: DataFrame, path: str, epoch: int) -> None:
+    """Append one tombstone per row of ``ids`` at ``epoch``: one
+    id-sized file per write, narrowed without a shuffle."""
+    (
+        ids.withColumn(TOMB_EPOCH_COL, F.lit(epoch).cast("int"))
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(tombstone_path(path))
+    )
+
+
+def _next_epoch(
+    df: DataFrame,
+    path: str,
+    meta: dict | None,
+    partition_col: str,
+    caller: str,
+    id_cols: list[str] | None = None,
+) -> tuple[DataFrame, int]:
+    """``(df stamped with the partitioned store's next epoch, epoch)``,
+    after checking ``df`` against the recorded schema and recording the
+    epoch in the sidecar: BEFORE the data, so a write that crashes keeps
+    an epoch no later write reuses."""
+    epoch = int((meta or {}).get("epoch", 0)) + 1
+    df = df.withColumn(EPOCH_COL, F.lit(epoch).cast("int"))
+    schema = _store_schema(df, partition_col)
+    _check_schema(path, meta, schema, caller)
+    record = {"partition_col": partition_col, "epoch": epoch, "schema": schema}
+    _meta_write(path, {**(meta or {}), **({"id_cols": id_cols} if id_cols else {}), **record})
+    return df, epoch
+
+
+def write_partitioned(
+    df: DataFrame,
+    path: str,
+    partition_col: str,
+    caller: str,
+    id_cols: list[str] | None = None,
+) -> None:
+    """Write ``df`` into the PARTITIONED-layout store at ``path``,
+    partitioned on its own ``partition_col`` and stamped with the
+    store's next epoch. Without ``id_cols`` the write replaces the
+    partitions present in ``df`` (dynamic overwrite, a publish); with
+    them it is an UPSERT: ``df`` appends under its partitions and one
+    tombstone per row at the same epoch kills every older row with the
+    same ``id_cols`` (merge-on-read, so only ``read_bucketed`` sees the
+    merged view until ``compact`` folds it). ``df`` must carry each
+    ``id_cols`` value once. A store without a sidecar reads as epoch 0;
+    a missing path or a directory with no data files takes the upsert
+    without tombstones, and any other read failure of such a store
+    propagates before anything is written.
+
+    The sidecar (epoch, schema, layout) is written BEFORE the data, with
+    no listing: a write that crashes keeps an epoch no later write
+    reuses, so the re-run's tombstones kill the crashed rows. Data rows
+    land before tombstones, so a crash between the two leaves a key's
+    old and new rows visible until the write is re-run or the store is
+    folded; a dynamic overwrite that crashes between staging and rename
+    can instead lose a partition."""
+    meta = meta_read(path)
+    first = meta is None and read_existing(df.sparkSession, path) is None
+    df, epoch = _next_epoch(df, path, meta, partition_col, caller, id_cols)
+    if id_cols is None:
+        overwrite_partitions(df, path, partition_col)
+        return
+    df.write.mode("append").partitionBy(partition_col).parquet(path)
+    if not first:
+        _append_tombstones(df.select(*id_cols), path, epoch)
 
 
 #: driver-side size guard for the tombstone broadcast: the latest-
@@ -567,57 +688,69 @@ def write_bucketed(
 _TOMB_WARN_BYTES = 256 * 1024 * 1024
 
 
+def _tombstones(spark: SparkSession, path: str, df: DataFrame, ids: list[str]) -> DataFrame:
+    """The raw tombstone table, read with the types of the store's id
+    columns (``df`` is the store scan), so it runs no inference job."""
+    schema = StructType(
+        [df.schema[c] for c in ids] + [StructField(TOMB_EPOCH_COL, IntegerType())]
+    )
+    return spark.read.schema(schema).parquet(tombstone_path(path))
+
+
 def _latest_tombstones(
     spark: SparkSession,
     path: str,
     meta: dict | None,
     df: DataFrame,
     listing: list[tuple[str, int]],
-) -> tuple[DataFrame, str]:
-    """``(latest tombstone epoch per id, id column)`` of an upserted
+) -> tuple[DataFrame, list[str]]:
+    """``(latest tombstone epoch per id, id columns)`` of an upserted
     store whose tombstone table lists as ``listing``: a store row is
-    dead iff ``row.epoch < latest tombstone epoch`` for its id (some
-    later wave re-crawled or deleted it). Raises on a store that has
+    dead iff ``row.epoch < latest tombstone epoch`` for its ids (some
+    later write re-wrote or deleted it). Raises on a store that has
     tombstones but predates the epoch/meta sidecar; warns when the
     tombstone table has grown past the broadcast-comfort threshold —
     compaction cadence is the knob."""
-    id_col = (meta or {}).get("id_col")
-    if id_col is None or EPOCH_COL not in df.columns:
+    meta = meta or {}
+    ids = meta.get("id_cols") or ([meta["id_col"]] if "id_col" in meta else None)
+    if ids is None or EPOCH_COL not in df.columns:
         raise ValueError(
-            f"dedup store at {path} has tombstones but no usable "
-            f"epoch/id metadata — it was mixed with a legacy writer; "
-            "rebuild it with band_index_write"
+            f"store at {path} has tombstones but no usable epoch/id "
+            "metadata — it was mixed with a legacy writer; rebuild it "
+            "with its writer"
         )
     on_disk = sum(size for _, size in listing)
     if on_disk > _TOMB_WARN_BYTES:
         warnings.warn(
-            f"dedup store at {path}: tombstone table is "
-            f"{on_disk >> 20} MiB on disk — the merge-on-read "
-            "anti-join broadcasts it on every read; run "
-            "compact_dedup_store to fold it back into the data files",
+            f"store at {path}: tombstone table is {on_disk >> 20} MiB on "
+            "disk — the merge-on-read anti-join broadcasts it on every "
+            "read; run its compaction to fold it back into the data files",
             RuntimeWarning,
             stacklevel=4,
         )
     tomb = (
-        spark.read.parquet(tombstone_path(path))
-        .groupBy(F.col(id_col).alias("__tomb_id"))
+        _tombstones(spark, path, df, ids)
+        .groupBy(*[F.col(c).alias(f"__tomb_{c}") for c in ids])
         .agg(F.max(TOMB_EPOCH_COL).alias(TOMB_EPOCH_COL))
     )
-    return tomb, id_col
+    return tomb, ids
 
 
-def _dead(df: DataFrame, tomb: DataFrame, id_col: str) -> Column:
+def _dead(df: DataFrame, tomb: DataFrame, ids: list[str]) -> Column:
     """Join condition matching the rows of ``df`` a tombstone kills."""
-    return (df[id_col] == tomb["__tomb_id"]) & (df[EPOCH_COL] < tomb[TOMB_EPOCH_COL])
+    dead = F.coalesce(df[EPOCH_COL], F.lit(0)) < tomb[TOMB_EPOCH_COL]
+    for c in ids:
+        dead = (df[c] == tomb[f"__tomb_{c}"]) & dead
+    return dead
 
 
-def _live(df: DataFrame, tomb: DataFrame, id_col: str) -> DataFrame:
+def _live(df: DataFrame, tomb: DataFrame, ids: list[str]) -> DataFrame:
     """Merge-on-read: anti-join the raw store rows against the latest
     tombstone epoch per id. The tombstone table is delta-sized by
-    contract (one row per batch id per wave, folded away by
+    contract (one row per batch id per write, folded away by
     ``compact``), so the anti-join broadcasts it; the store side never
     shuffles."""
-    return df.join(F.broadcast(tomb), _dead(df, tomb, id_col), "left_anti")
+    return df.join(F.broadcast(tomb), _dead(df, tomb, ids), "left_anti")
 
 
 def read_bucketed(
@@ -626,18 +759,21 @@ def read_bucketed(
     params: dict | None = None,
     probe: DataFrame | None = None,
 ) -> DataFrame:
-    """The live rows of the bucketed store at ``path`` (tombstones
-    applied, no layout columns); ``params`` are the caller's identity
-    fields, checked by ``resolve_params``. With ``probe`` — a frame of
-    the key columns in the writer's hash order — only the buckets its
-    keys hash into are read (parquet ``PartitionFilters``): lossless for
-    an equi-join on the keys, since equal keys share a bucket, at the
-    cost of one probe-sized pass and a <= ``buckets``-int driver
-    collect. A legacy unpartitioned store falls back to the full scan."""
+    """The live rows of the store at ``path``, in either layout
+    (tombstones applied, no bucket or epoch column); ``params`` are the
+    caller's identity fields, checked by ``resolve_params``. The scan
+    takes the schema the sidecar records, so building the read runs no
+    job. With ``probe`` — a frame of the key columns in the writer's
+    hash order — a bucketed store reads only the buckets its keys hash
+    into (parquet ``PartitionFilters``): lossless for an equi-join on
+    the keys, since equal keys share a bucket, at the cost of one
+    probe-sized pass and a <= ``buckets``-int driver collect. A legacy
+    unpartitioned store falls back to the full scan."""
     meta = meta_read(path)
     eff = resolve_params(path, meta, params or {})
-    df = spark.read.parquet(path)
-    if probe is not None and STORE_BUCKET in df.columns:
+    df = _reader(spark, meta).parquet(path)
+    bucketed = "partition_col" not in (meta or {}) and STORE_BUCKET in df.columns
+    if probe is not None and bucketed:
         buckets = eff["buckets"]
         touched = sorted(
             r[0]
@@ -650,7 +786,7 @@ def read_bucketed(
     listing = list_files(tombstone_path(path))
     if listing:
         df = _live(df, *_latest_tombstones(spark, path, meta, df, listing))
-    return df.drop(STORE_BUCKET, EPOCH_COL)
+    return df.drop(EPOCH_COL, *([STORE_BUCKET] if bucketed else []))
 
 
 def compact(
@@ -659,10 +795,27 @@ def compact(
     max_files_per_bucket: int = 4,
     incremental: bool = False,
     bucket_budget: int | None = None,
+    partition_col: str = STORE_BUCKET,
+    partitions: Sequence | None = None,
+    target_rows_per_file: int = 2_000_000,
 ) -> dict:
-    """Maintenance pass for a bucketed store (round-13 verdict items
-    1-2): fold merge-on-read debt back into clean data files. Three
-    shapes, picked by what the store has accumulated:
+    """Maintenance pass for a store (round-13 verdict items 1-2): fold
+    merge-on-read debt back into clean data files.
+
+    A PARTITIONED-layout store (``partition_col`` names its column when
+    it has no sidecar yet) folds per partition. One grouped stats pass
+    counts each partition's rows and epochs; a partition is dirty when
+    it holds more than one epoch (an upsert landed since its last
+    rewrite — every dead row sits in such a partition, next to the rows
+    that superseded it) or more files than
+    ``ceil(rows / target_rows_per_file)``. The dirty partitions among
+    ``partitions`` (default: all) are rewritten from their live rows,
+    stamped with a new epoch, in files of at most
+    ``target_rows_per_file`` rows (dynamic overwrite); clean partitions
+    keep their files. The tombstone table clears once no dirty
+    partition is left. The other options apply to the bucketed layout,
+    which folds in one of three shapes, picked by what the store has
+    accumulated:
 
     * TOMBSTONES present, ``incremental=False`` (an upserted store):
       full fold — read the store, apply the tombstone anti-join once,
@@ -719,7 +872,9 @@ def compact(
     path it replaces, so the surviving rows are eagerly materialised
     first (the ``cdc_apply_batch`` pattern). The call reads and writes
     the sidecar once each."""
-    before = {b: len(sizes) for b, sizes in bucket_files(path).items()}
+    meta = meta_read(path)
+    part = (meta or {}).get("partition_col", partition_col)
+    before = {b: len(sizes) for b, sizes in bucket_files(path, None, part).items()}
     report = {
         "files_before": sum(before.values()),
         "buckets_before": len(before),
@@ -728,28 +883,53 @@ def compact(
     }
     tpath = tombstone_path(path)
     tomb_listing = list_files(tpath)
-    meta = meta_read(path)
     debt = set((meta or {}).get(REPLAY_DEBT, []))
     fat = [b for b, n in sorted(before.items()) if n > max_files_per_bucket]
+    scan = tomb_listing or fat or part != STORE_BUCKET
+    raw = _reader(spark, meta).parquet(path) if before and scan else None
 
-    def rewrite_buckets(chunk: DataFrame, bucket_ids: list) -> None:
-        # replace ONLY the buckets present in chunk, leaving every
-        # other bucket's files untouched (byte-identical, pytest-pinned)
+    def rewrite_buckets(chunk: DataFrame, bucket_ids: list, max_rows: int = 0) -> None:
+        # replace ONLY the partitions present in chunk, leaving every
+        # other partition's files untouched (byte-identical, pytest-pinned)
         with materialised(chunk) as rows:
             overwrite_partitions(
-                rows.repartition(len(bucket_ids), F.col(STORE_BUCKET)),
+                rows.repartition(len(bucket_ids), F.col(part)),
                 path,
-                STORE_BUCKET,
+                part,
+                max_records_per_file=max_rows,
             )
 
     if tomb_listing:
-        raw = spark.read.parquet(path)
-        tomb, id_col = _latest_tombstones(spark, path, meta, raw, tomb_listing)
+        tomb, ids = _latest_tombstones(spark, path, meta, raw, tomb_listing)
 
         def tombstones_folded() -> int:
-            return spark.read.parquet(tpath).select(TOMB_EPOCH_COL).count()
+            return _tombstones(spark, path, raw, ids).count()
 
-    if tomb_listing and incremental:
+    if part != STORE_BUCKET and raw is not None:
+        epochs = F.coalesce(F.col(EPOCH_COL), F.lit(0)) if EPOCH_COL in raw.columns else F.lit(0)
+        stats = (
+            raw.groupBy(part)
+            .agg(F.count(F.lit(1)).alias("n"), F.min(epochs).alias("lo"), F.max(epochs).alias("hi"))
+            .limit(len(before) + 1)
+            .collect()
+        )
+        dirty = {
+            r[part]
+            for r in stats
+            if r.lo != r.hi or before.get(str(r[part]), 0) > -(-r.n // target_rows_per_file)
+        }
+        fold = sorted(p for p in dirty if partitions is None or p in partitions)
+        if fold:
+            chunk = raw.filter(F.col(part).isin(fold))
+            if tomb_listing:
+                chunk = _live(chunk, tomb, ids)
+            chunk, _ = _next_epoch(chunk.drop(EPOCH_COL), path, meta, part, "compact")
+            rewrite_buckets(chunk, fold, target_rows_per_file)
+        report["buckets_rewritten"] = len(fold)
+        if tomb_listing and len(fold) == len(dirty):
+            report["tombstones_folded"] = tombstones_folded()
+            delete(tpath)
+    elif tomb_listing and incremental:
         # slim stats pass over the (bucket, id, epoch) columns only — a
         # count-only columnar scan, cheap next to the rewrite it scopes.
         # Dead rows are counted per BUCKET first (<= the store's bucket
@@ -758,12 +938,9 @@ def compact(
         # row per dirty file of the whole store.
         def dead_rows(frame: DataFrame) -> DataFrame:
             slim = frame.select(
-                STORE_BUCKET,
-                id_col,
-                EPOCH_COL,
-                F.input_file_name().alias("__file"),
+                STORE_BUCKET, *ids, EPOCH_COL, F.input_file_name().alias("__file")
             )
-            return slim.join(F.broadcast(tomb), _dead(slim, tomb, id_col), "inner")
+            return slim.join(F.broadcast(tomb), _dead(slim, tomb, ids), "inner")
 
         dead = {
             r[STORE_BUCKET]: r["__dead"]
@@ -810,7 +987,7 @@ def compact(
             # clean files, then the originals deleted (append-before-
             # delete: see the crash contract in the docstring)
             chunk = _live(
-                spark.read.option("basePath", path).parquet(*files), tomb, id_col
+                _reader(spark, meta).option("basePath", path).parquet(*files), tomb, ids
             )
             with materialised(chunk) as rows:
                 _write_buckets(rows, path, len(file_fold), "append")
@@ -819,7 +996,7 @@ def compact(
         if bucket_fold:
             rewrite_buckets(
                 _live(
-                    raw.filter(F.col(STORE_BUCKET).isin(bucket_fold)), tomb, id_col
+                    raw.filter(F.col(STORE_BUCKET).isin(bucket_fold)), tomb, ids
                 ).dropDuplicates(),
                 bucket_fold,
             )
@@ -838,22 +1015,20 @@ def compact(
         # a STATIC partitioned overwrite clears the whole path first
         # (tombstone dir included — exactly the fold we want) — but it
         # also takes the sidecar with it, which is written back below
-        with materialised(_live(raw, tomb, id_col).dropDuplicates()) as rows:
+        with materialised(_live(raw, tomb, ids).dropDuplicates()) as rows:
             _write_buckets(rows, path, buckets, "overwrite")
         delete(tpath)
         debt = set()
         report["buckets_rewritten"] = len(before)
     elif fat:
-        rewrite_buckets(
-            spark.read.parquet(path).filter(F.col(STORE_BUCKET).isin(fat)), fat
-        )
+        rewrite_buckets(raw.filter(F.col(STORE_BUCKET).isin(fat)), fat)
         report["buckets_rewritten"] = len(fat)
     listing = list_files(path)
-    after = bucket_files(path, listing)
+    after = bucket_files(path, listing, part)
     report["files_after"] = sum(map(len, after.values()))
     report["buckets_after"] = len(after)
     report[REPLAY_DEBT] = sorted(debt)
-    if meta is not None:
+    if meta is not None and part == STORE_BUCKET:
         meta = {k: v for k, v in meta.items() if k != REPLAY_DEBT}
         if debt:
             meta[REPLAY_DEBT] = sorted(debt)

@@ -1198,8 +1198,12 @@ def test_band_index_upsert_write_is_batch_sized(spark, tmp_path):
     # bootstrap (absent store) writes meta with the full identity
     band_index_upsert_write(corpus, path, k=8, bands=2, buckets=16)
     meta = store_meta_read(path)
-    # observed on-disk bytes are recorded alongside the identity (r15)
+    # observed on-disk bytes and the store schema are recorded
+    # alongside the identity (r15)
     assert meta.pop("data_bytes") > 0
+    assert [f["name"] for f in meta.pop("schema")["fields"]] == [
+        "doc_id", "band", "sig", "__epoch", "bucket"
+    ]
     assert meta == {
         "bands": 2, "base_hash": "md5", "buckets": 16, "epoch": 0,
         "id_col": "doc_id", "k": 8, "kind": "band_index",

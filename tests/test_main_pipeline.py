@@ -298,15 +298,18 @@ def test_compact_store_merges_files_idempotently(spark, tmp_path):
     n_before = len(list((tmp_path / "store" / "partition_id=a").glob("*.parquet")))
     assert n_before > 1
 
-    written = compact_store(spark, path, partitions=["a"])
-    assert written == {"a": 1}
+    b_files = sorted((tmp_path / "store" / "partition_id=b").glob("*.parquet"))
+    rep = compact_store(spark, path, partitions=["a"])
+    assert rep["buckets_rewritten"] == 1 and rep["files_before"] == 48
     n_after = len(list((tmp_path / "store" / "partition_id=a").glob("*.parquet")))
     assert n_after == 1
     after = {r["hash"]: r["payload"] for r in spark.read.parquet(path).collect()}
     assert after == before  # rows identical, partition b untouched
+    assert sorted((tmp_path / "store" / "partition_id=b").glob("*.parquet")) == b_files
 
-    # idempotent re-run
-    assert compact_store(spark, path, partitions=["a"]) == {"a": 1}
+    # idempotent re-run: the compacted partition is clean and skipped
+    rep = compact_store(spark, path, partitions=["a"])
+    assert rep["buckets_rewritten"] == 0 and rep["files_after"] == 25
     again = {r["hash"]: r["payload"] for r in spark.read.parquet(path).collect()}
     assert again == before
 
@@ -432,17 +435,18 @@ def test_trim_sides_trailing_nulls_drop(spark):
 
 
 def test_merge_upsert_store_semantics(spark, tmp_path):
-    """merge_upsert_store (main_pipeline.py): first write falls through
-    to write_store; a later batch updates conflicting hashes, inserts
-    new ones, leaves untouched partitions' files alone, and dedups
-    in-batch identities by max payload string; the affected-partition
-    guard raises loudly."""
+    """merge_upsert_store (main_pipeline.py): the first batch starts the
+    store; a later batch updates conflicting hashes, inserts new ones,
+    leaves untouched partitions' files alone, and dedups in-batch
+    identities by max payload string (one merged row per key through
+    read_store); the affected-partition guard raises loudly."""
     import os
 
     import pytest
 
     from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
         merge_upsert_store,
+        read_store,
     )
 
     path = str(tmp_path / "store")
@@ -466,10 +470,9 @@ def test_merge_upsert_store_semantics(spark, tmp_path):
         "hash string, partition_id string, payload string, release_id long",
     )
     merge_upsert_store(batch, path)
-    got = {
-        (r.hash, r.partition_id): (r.payload, r.release_id)
-        for r in spark.read.parquet(path).collect()
-    }
+    merged = read_store(spark, path).collect()
+    got = {(r.hash, r.partition_id): (r.payload, r.release_id) for r in merged}
+    assert len(merged) == len(got)
     assert got == {
         ("h1", "p0"): ("newB", 2),
         ("h2", "p0"): ("old2", 1),

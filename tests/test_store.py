@@ -1,11 +1,15 @@
 """The store layer (``store.py``): filesystem access through the Hadoop
-FileSystem API, checkpoint release, the first-write rule, the bucketed
-store format (sidecar rule, fold stats and replay debt, one sidecar
-read per call), and guards that keep the store mechanics and format in
-one module."""
+FileSystem API, checkpoint release, the first-write rule, the store
+format in its two layouts (bucketed: sidecar rule, fold stats and
+replay debt, one sidecar read per call; partitioned: the serving
+store's epochs, batch-sized upserts, crash window and fold), the
+sidecar-recorded schema, and guards that keep the store mechanics and
+format in one module and every library collect bounded."""
 
+import ast
 import os
 import re
+import uuid
 from urllib.parse import unquote, urlparse
 
 import pytest
@@ -290,7 +294,14 @@ def test_each_store_call_reads_and_writes_its_sidecar_once(
 ):
     """A dedup-store call reads its sidecar at most once and writes it at
     most once; the upsert also walks the store listing once, serving
-    both the tombstone check and the sidecar's ``data_bytes``."""
+    both the tombstone check and the sidecar's ``data_bytes``. A serving
+    store's publish and upsert read and write the sidecar once each and
+    list nothing: the partitioned layout records no ``data_bytes``."""
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        merge_upsert_store,
+        write_store,
+    )
+
     corpus = _docs(
         spark, [(i, f"w{i}a w{i}b w{i}c shared suffix {i % 4}") for i in range(24)]
     )
@@ -337,6 +348,14 @@ def test_each_store_call_reads_and_writes_its_sidecar_once(
         lambda: compact_dedup_store(spark, bidx, incremental=True)
     )
     assert reads <= 1 and writes <= 1
+    serving = str(tmp_path / "store")
+    rows = [("h1", "p0", "a", 1), ("h2", "p1", "b", 1)]
+    write_store(spark.createDataFrame(rows, _SERVING), serving)
+    for call in (
+        lambda: write_store(spark.createDataFrame(rows[:1], _SERVING), serving),
+        lambda: merge_upsert_store(spark.createDataFrame(rows[1:], _SERVING), serving),
+    ):
+        assert counts(call) == (1, 1, 0)
 
 
 def test_merge_upsert_store_propagates_unreadable_store(spark, tmp_path):
@@ -478,20 +497,26 @@ _GATE_PLUMBING = re.compile(r'removeprefix\("file:"\)|os\.listdir|os\.path\.isdi
 _BARE_CHECKPOINT = re.compile(r"localCheckpoint\(")
 
 
-#: modules whose checkpoints go through the store layer: the crawl day
-#: and the release publish path
-_RELEASED_CHECKPOINT_MODULES = (
-    "plans/crawl.py",
-    "operators/homogenise.py",
-    "plans/main_pipeline.py",
-    "sources/nested_json.py",
-)
+#: modules that may call ``localCheckpoint`` directly: the store layer
+#: itself, and the gate registry, whose checkpoints its gates' results
+#: read
+_CHECKPOINT_OWNERS = ("store.py", os.path.join("plans", "gate_queries.py"))
+
+
+def _package_sources(skip=()) -> list[str]:
+    """Paths of the package's modules, relative to the package."""
+    return sorted(
+        os.path.relpath(os.path.join(d, n), PKG)
+        for d, _, names in os.walk(PKG)
+        for n in names
+        if n.endswith(".py") and os.path.relpath(os.path.join(d, n), PKG) not in skip
+    )
 
 
 def test_store_gates_and_crawl_day_use_the_store_layer():
     """The gate registry reaches store files only through the store
-    layer, and the crawl day and the publish path take checkpoints only
-    through it, so each one is released or documented as pinned."""
+    layer, and every library module takes checkpoints only through it,
+    so each one is released or documented as pinned."""
     for planted in (
         '    warehouse = spark.conf.get(w).removeprefix("file:")',
         "    for d in os.listdir(path):",
@@ -511,32 +536,44 @@ def test_store_gates_and_crawl_day_use_the_store_layer():
     )
     with open(os.path.join(PKG, "plans/gate_queries.py")) as fh:
         assert _matches(_GATE_PLUMBING, fh.read()) == []
-    for rel in _RELEASED_CHECKPOINT_MODULES:
+    sources = _package_sources(skip=_CHECKPOINT_OWNERS)
+    assert len(sources) > 40 and os.path.join("functions", "similarity.py") in sources
+    for rel in sources:
         with open(os.path.join(PKG, rel)) as fh:
             assert _matches(_BARE_CHECKPOINT, fh.read()) == [], rel
 
 
-#: string literals that spell the bucketed-store format: the sidecar
-#: and tombstone names and a bucket-partition path glob
-_FORMAT_LITERAL = re.compile(r"""["'/]_tombstones|_store_meta\.json|["'/]bucket=""")
+#: string literals that spell the store format in either layout: the
+#: sidecar and tombstone names, a bucket or serving-partition path glob
+#: and the overwrite-mode option
+_FORMAT_LITERAL = re.compile(
+    r"""["'/]_tombstones|_store_meta\.json|["'/](?:bucket|partition_id)="""
+    r"|partitionOverwriteMode"
+)
 
 
 def test_store_format_is_spelled_only_in_store_module():
     """Outside ``store.py`` no module of the package or of ``tools/``
-    spells the bucketed-store format; callers use the store layer's
-    names (``tombstone_path``, ``bucket_files``, ``read_bucketed``)."""
+    spells the store format of either layout; callers use the store
+    layer's names (``tombstone_path``, ``bucket_files``,
+    ``read_bucketed``, ``write_partitioned``)."""
     for planted in (
         '    tombstones = store.join(path, "_tombstones")',
         '    for pat in ("/bucket=*/*.parquet", "/_tombstones/*.parquet")',
         '    rows = spark.read.parquet(idx + "/_tombstones").count()',
         '    meta_path = store.join(path, "_store_meta.json")',
         "    dirs = glob.glob(path + '/bucket=*')",
+        '    files = glob.glob(store + "/partition_id=*/*.parquet")',
+        '    .option("partitionOverwriteMode", "dynamic")',
+        '    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")',
     ):
         assert _matches(_FORMAT_LITERAL, planted), planted
     for fine in (
         "    tombstones = store.tombstone_path(path)",
         "    tomb, id_col = _latest_tombstones(spark, path, meta, raw, listing)",
         "    rep = compact_dedup_store(spark, path, max_files_per_bucket=1)",
+        '    df = read_store(spark, path, partitions=["p1"])',
+        "    overwrite_partitions(long, path, PARTITION_COL)",
     ):
         assert not _matches(_FORMAT_LITERAL, fine), fine
     root = os.path.dirname(PKG)
@@ -553,3 +590,267 @@ def test_store_format_is_spelled_only_in_store_module():
             continue
         with open(path) as fh:
             assert _matches(_FORMAT_LITERAL, fh.read()) == [], path
+
+
+#: the comment a driver collect without a ``limit`` in its chain carries,
+#: with its reason, on the statement or the line above it
+_SMALL_MARKER = "# small by construction:"
+
+
+def _unbounded_collects(source: str) -> list[str]:
+    """``.collect()``/``.toPandas()`` calls whose receiver chain has no
+    ``.limit(...)`` and whose statement carries no ``_SMALL_MARKER``."""
+    lines = source.splitlines()
+    out = []
+    for node in ast.walk(ast.parse(source)):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("collect", "toPandas")
+            and not node.args
+        ):
+            continue
+        chain, limited = node.func.value, False
+        while isinstance(chain, (ast.Call, ast.Attribute, ast.Subscript)):
+            limited |= isinstance(chain, ast.Attribute) and chain.attr == "limit"
+            chain = chain.func if isinstance(chain, ast.Call) else chain.value
+        marked = any(
+            _SMALL_MARKER in line
+            for line in lines[max(0, node.lineno - 2) : node.end_lineno]
+        )
+        if not (limited or marked):
+            out.append(f"{node.lineno}: {lines[node.lineno - 1].strip()}")
+    return out
+
+
+def test_library_collects_are_bounded():
+    """Driver memory stays bounded on every collect data-sized input can
+    reach: each library ``.collect()``/``.toPandas()`` either limits its
+    rows or documents why its result is small by construction."""
+    for planted in (
+        "rows = df.collect()",
+        "pdf = big.select('a').toPandas()",
+        "counts = (\n    df.groupBy('k')\n    .count()\n    .collect()\n)",
+        "ids = [r[0] for r in df.orderBy('id').collect()]",
+    ):
+        assert _unbounded_collects(planted), planted
+    for fine in (
+        "rows = df.limit(5).collect()",
+        "dup = (\n    df.groupBy('k').count()\n    .filter('count > 1')\n    .limit(1)\n    .collect()\n)",
+        "# small by construction: one aggregate row\nrow = df.agg(F.max('v')).collect()[0]",
+        "rows = tiny.collect()  # small by construction: k centroids",
+        "xs = sorted(r[0] for r in df.select('b').distinct().limit(n + 1).collect())",
+        "parts = sc.parallelize([1]).collectAsMap()",
+    ):
+        assert not _unbounded_collects(fine), fine
+    for rel in _package_sources():
+        with open(os.path.join(PKG, rel)) as fh:
+            assert _unbounded_collects(fh.read()) == [], rel
+
+
+# -- the partitioned layout: the serving store ----------------------------
+
+_SERVING = "hash string, partition_id string, payload string, release_id long"
+
+
+def _serving(spark, rows):
+    return spark.createDataFrame(rows, _SERVING)
+
+
+def _jobs(spark, fn):
+    """``(fn(), names of the Spark jobs it ran)``: each job's first
+    stage name, which is its call site."""
+    sc = spark.sparkContext
+    group = f"test-store-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    names = [
+        tracker.getStageInfo(tracker.getJobInfo(j).stageIds[0]).name
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]
+    return out, names
+
+
+def _store_rows(df) -> set:
+    return {(r.hash, r.partition_id, r.payload, r.release_id) for r in df.collect()}
+
+
+def test_serving_upsert_writes_the_batch_not_the_partition(spark, tmp_path):
+    """A serving-store upsert appends the deduped batch and one
+    tombstone file, runs at most 4 jobs and leaves every existing data
+    file in place, also in the partitions it touches; ``read_store``
+    gives the merged view. Every write advances the sidecar epoch."""
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        merge_upsert_store,
+        read_store,
+        write_store,
+    )
+
+    path = str(tmp_path / "store")
+    base = [(f"h{i}", f"p{i % 3}", f"old{i}", 1) for i in range(30)]
+    write_store(_serving(spark, base), path)
+    assert store.meta_read(path)["epoch"] == 1
+    before = _files(path)
+    batch = [("h1", "p1", "newA", 2), ("h1", "p1", "newB", 2), ("h99", "p0", "ins", 2)]
+    _, jobs = _jobs(spark, lambda: merge_upsert_store(_serving(spark, batch), path))
+    assert len(jobs) <= 4, jobs
+    after = _files(path)
+    assert all(after.get(p) == n for p, n in before.items())
+    new = sorted(p for p in after if p not in before)
+    assert len(new) == 3 and sum(p.startswith("_tombstones/") for p in new) == 1
+    assert store.meta_read(path)["epoch"] == 2
+    want = {r for r in base if r[0] != "h1"} | {("h1", "p1", "newB", 2), ("h99", "p0", "ins", 2)}
+    assert _store_rows(read_store(spark, path)) == want
+
+
+def test_publish_after_upsert_survives_older_tombstones(spark, tmp_path):
+    """A partition re-published by ``write_store`` after an upsert is
+    stamped with a later epoch than the upsert's tombstones, so its rows
+    stay live, while the other partition keeps its merged rows; a store
+    without a sidecar reads as epoch 0, so an upsert supersedes its
+    rows."""
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        merge_upsert_store,
+        read_store,
+        write_store,
+    )
+
+    path = str(tmp_path / "store")
+    # a store written before the sidecar existed: no epoch column
+    _serving(spark, [("h1", "p0", "a", 1), ("h2", "p1", "b", 1)]).write.partitionBy(
+        "partition_id"
+    ).parquet(path)
+    merge_upsert_store(
+        _serving(spark, [("h1", "p0", "a2", 2), ("h2", "p1", "b2", 2)]), path
+    )
+    assert _store_rows(read_store(spark, path)) == {
+        ("h1", "p0", "a2", 2),
+        ("h2", "p1", "b2", 2),
+    }
+    write_store(_serving(spark, [("h1", "p0", "a3", 3), ("h3", "p0", "c3", 3)]), path)
+    assert store.meta_read(path)["epoch"] == 2
+    assert _store_rows(read_store(spark, path)) == {
+        ("h1", "p0", "a3", 3),
+        ("h3", "p0", "c3", 3),
+        ("h2", "p1", "b2", 2),
+    }
+
+
+def test_serving_crash_between_appends_then_rerun_and_fold(spark, tmp_path, monkeypatch):
+    """A crash after the data append and before the tombstones leaves the
+    key's old and new rows visible; re-running the batch gives the merged
+    view, and the fold leaves what a raw parquet reader needs: one file
+    set per partition, no tombstones, no superseded rows, and the same
+    rows ``read_store`` returned before the fold."""
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        compact_store,
+        merge_upsert_store,
+        read_store,
+        write_store,
+    )
+
+    path = str(tmp_path / "store")
+    base = [(f"h{i}", f"p{i % 3}", f"old{i}", 1) for i in range(12)]
+    write_store(_serving(spark, base).coalesce(1), path)  # one file per partition
+    batch = [("h1", "p1", "new1", 2), ("h2", "p2", "new2", 2), ("h50", "p1", "ins", 2)]
+
+    def crash(*args):
+        raise RuntimeError("simulated crash before the tombstone append")
+
+    monkeypatch.setattr(store, "_append_tombstones", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        merge_upsert_store(_serving(spark, batch), path)
+    monkeypatch.undo()
+    both = _store_rows(read_store(spark, path))
+    assert ("h1", "p1", "old1", 1) in both and ("h1", "p1", "new1", 2) in both
+
+    merge_upsert_store(_serving(spark, batch), path)
+    want = {r for r in base if r[0] not in ("h1", "h2")} | set(batch)
+    merged = read_store(spark, path).collect()
+    assert len(merged) == len(want) and _store_rows(read_store(spark, path)) == want
+
+    rep = compact_store(spark, path)
+    assert rep["buckets_rewritten"] == 2 and rep["tombstones_folded"] == 3
+    assert rep["files_after"] == rep["buckets_after"] == 3
+    assert not os.path.isdir(os.path.join(path, "_tombstones"))
+    raw = spark.read.parquet(path)
+    assert raw.count() == len(want) and _store_rows(raw) == want
+    # clean partitions are skipped
+    assert compact_store(spark, path)["buckets_rewritten"] == 0
+
+
+def test_upserts_append_one_tombstone_file_without_a_shuffle(spark, tmp_path, monkeypatch):
+    """Each upsert of either layout appends exactly one tombstone file,
+    and the append runs no more jobs than writing its id frame as it
+    is: the frame is narrowed to one file, not shuffled."""
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        merge_upsert_store,
+        write_store,
+    )
+
+    bidx, serving = str(tmp_path / "bidx"), str(tmp_path / "store")
+    corpus = _docs(spark, [(i, f"w{i}a w{i}b w{i}c tail {i % 3}") for i in range(12)])
+    band_index_write(minhash_band_index(corpus, k=8, bands=2), bidx, buckets=8, k=8, bands=2)
+    write_store(_serving(spark, [(f"h{i}", f"p{i % 2}", "x", 1) for i in range(8)]), serving)
+    upserts = {
+        bidx: lambda w: band_index_upsert_write(
+            _docs(spark, [(i, f"wave {w} doc {i}") for i in range(6)]), bidx, k=8, bands=2
+        ),
+        serving: lambda w: merge_upsert_store(
+            _serving(spark, [(f"h{i}", f"p{i % 2}", f"y{w}", 2) for i in range(4)]), serving
+        ),
+    }
+    orig = store._append_tombstones
+    tomb_jobs = []
+
+    def counted(ids, *args):
+        plain = _jobs(spark, lambda: ids.write.parquet(str(tmp_path / uuid.uuid4().hex)))
+        tomb_jobs.append((len(plain[1]), len(_jobs(spark, lambda: orig(ids, *args))[1])))
+
+    monkeypatch.setattr(store, "_append_tombstones", counted)
+    for path, upsert in upserts.items():
+        for w in range(2):
+            upsert(w)
+            assert len(store.list_files(store.tombstone_path(path))) == w + 1, path
+    assert len(tomb_jobs) == 4 and all(a == b for a, b in tomb_jobs), tomb_jobs
+
+
+def test_store_reads_use_the_recorded_schema(spark, tmp_path):
+    """The sidecar records the store schema, so building a pruned read
+    (tombstones included) runs no schema-inference job, and an append
+    whose columns or types differ from the record raises before any
+    file is written."""
+    from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import fp_store_pruned
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        merge_upsert_store,
+        write_store,
+    )
+
+    corpus = _docs(spark, [(i, f"w{i}a w{i}b w{i}c shared {i % 4}") for i in range(16)])
+    bidx, fps = str(tmp_path / "bidx"), str(tmp_path / "fp")
+    band_index_write(minhash_band_index(corpus, k=8, bands=2), bidx, buckets=8, k=8, bands=2)
+    band_index_upsert_write(_docs(spark, [(1, "a new crawl of doc one")]), bidx, k=8, bands=2)
+    fp_store_write(corpus.select(F.md5("text").alias("fp")), fps, buckets=4, mode="overwrite")
+    wave = _docs(spark, [(i, f"w{i}a w{i}b w{i}c shared {i % 4}") for i in range(4)])
+    for read in (
+        lambda: band_index_pruned(spark, bidx, wave, k=8, bands=2),
+        lambda: fp_store_pruned(spark, fps, wave),
+        lambda: store.read_bucketed(spark, bidx),
+    ):
+        _, jobs = _jobs(spark, read)
+        assert not [j for j in jobs if j.startswith("parquet at")], jobs
+
+    serving = str(tmp_path / "store")
+    write_store(_serving(spark, [("h", "p", "x", 1)]), serving)
+    before = _files(fps), _files(serving), store.meta_read(serving)
+    with pytest.raises(ValueError, match="differ from the schema"):
+        fp_store_write(spark.range(3).select(F.col("id").alias("fp")), fps)
+    with pytest.raises(ValueError, match="differ from the schema"):
+        merge_upsert_store(
+            _serving(spark, [("h", "p", "y", 2)]).withColumn("extra", F.lit(1)), serving
+        )
+    assert (_files(fps), _files(serving), store.meta_read(serving)) == before

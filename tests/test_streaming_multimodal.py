@@ -11,6 +11,7 @@ from coronavirus_dashboard_pipeline_etl_spark.functions.multimodal import (
     decode_images,
     sample_frames,
 )
+from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import read_store
 from coronavirus_dashboard_pipeline_etl_spark.streaming.ingest import (
     stream_release_files,
     upsert_batch,
@@ -61,8 +62,9 @@ def test_streaming_upsert_roundtrip(spark, tmp_path):
         sink=sink, schema=SCHEMA,
     )
     q2.awaitTermination(60)
-    rows = {r["hash"]: r for r in spark.read.parquet(str(store)).collect()}
-    assert set(rows) == {"a", "b", "c"}
+    merged = read_store(spark, str(store)).collect()
+    rows = {r["hash"]: r for r in merged}
+    assert set(rows) == {"a", "b", "c"} and len(merged) == 3
     assert rows["a"]["payload"] == '{"value":9}'       # revised in place
     assert rows["a"]["release_id"] == 2
     assert rows["b"]["payload"] == '{"value":2}'       # untouched partition survives

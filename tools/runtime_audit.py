@@ -197,8 +197,12 @@ def upsert_write_report(spark, sf_dir: str) -> list[str]:
     ``band_index_upsert_write`` and total the bytes/files the wave
     actually wrote (fresh bucket appends + the tombstone file), vs the
     full store size the old rewrite-on-upsert path re-wrote every
-    wave. Then run ``compact_dedup_store`` and report the fold.
-    Returns markdown table lines."""
+    wave. Then run ``compact_dedup_store`` and report the fold. Last,
+    the serving store's row: the bytes one ``merge_upsert_store`` batch
+    writes (its delta files plus the tombstone file) against the
+    batch's own data bytes and the bytes of the partitions it touches,
+    which a partition-rewriting upsert wrote. Returns markdown table
+    lines."""
     import shutil
     import tempfile
 
@@ -207,7 +211,13 @@ def upsert_write_report(spark, sf_dir: str) -> list[str]:
         band_index_upsert_write,
         compact_dedup_store,
     )
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        PARTITION_COL,
+        merge_upsert_store,
+        write_store,
+    )
     from coronavirus_dashboard_pipeline_etl_spark.sources import load_table
+    import pyspark.sql.functions as F
 
     tmp = tempfile.mkdtemp(prefix="upsert_audit_")
     idx = f"{tmp}/band_idx"
@@ -271,6 +281,38 @@ def upsert_write_report(spark, sf_dir: str) -> list[str]:
         f"{rep['dead_rows_folded']} dead rows folded, "
         f"{rep['tombstones_folded']} tombstones cleared |",
     ]
+
+    # serving store: long-store rows keyed like the reference's
+    # (hash, partition_id), a ~2% backfill of re-released and new rows
+    serving = f"{tmp}/serving"
+
+    def long_rows(release: int):
+        return docs.select(
+            F.md5(F.col("doc_id").cast("string")).alias("hash"),
+            F.concat(F.lit("p"), (F.col("doc_id") % 8).cast("string")).alias(PARTITION_COL),
+            F.col("text").alias("payload"),
+            F.lit(release).cast("long").alias("release_id"),
+            F.col("doc_id"),
+        )
+
+    write_store(long_rows(1).filter("doc_id % 97 != 0").drop("doc_id"), serving)
+    seeded = dict(store.list_files(serving))
+    batch = long_rows(2).filter("doc_id % 97 IN (0, 1) AND doc_id % 8 < 2").drop("doc_id")
+    merge_upsert_store(batch, serving)
+    new = [(p, sz) for p, sz in store.list_files(serving) if p not in seeded]
+    delta = sum(sz for _, sz in new)
+    tomb_bytes = sum(sz for _, sz in store.list_files(store.tombstone_path(serving)))
+    touched = store.bucket_files(serving, new, PARTITION_COL)
+    parts = store.bucket_files(serving, list(seeded.items()), PARTITION_COL)
+    affected = sum(sum(parts.get(pid, [])) for pid in touched)
+    lines.append(
+        f"| serving upsert (`merge_upsert_store`) wrote | "
+        f"{len(new) + 1} files / {(delta + tomb_bytes) / 2**10:.1f} KiB | "
+        f"batch data {delta / 2**10:.1f} KiB + tombstones "
+        f"{tomb_bytes / 2**10:.1f} KiB, against the affected partitions' "
+        f"{affected / 2**10:.1f} KiB a partition rewrite wrote "
+        f"({(delta + tomb_bytes) / max(affected, 1):.1%}) |"
+    )
     shutil.rmtree(tmp, ignore_errors=True)
     return lines
 
