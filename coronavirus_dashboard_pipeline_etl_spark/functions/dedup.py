@@ -1206,11 +1206,14 @@ def compact_dedup_store(
     incremental: bool = False,
     bucket_budget: int | None = None,
 ) -> dict:
-    """Maintenance pass for the persisted dedup stores (round-13
-    verdict items 1-2), ``store.compact``: folds an upserted band
-    index's tombstones (whole store, or file-scoped under
-    ``incremental``/``bucket_budget``) and merges an append-mode fp
-    table's small files; returns the fold's report."""
+    """Maintenance pass for the persisted dedup stores: ``store.compact``
+    over the bucketed layout. An upserted band index folds every bucket
+    (the full fold) or, under ``incremental``/``bucket_budget``, the
+    dirtiest buckets: whole when over ``max_files_per_bucket`` files,
+    else only their dead-row files. An append-only fp table merges the
+    buckets over ``max_files_per_bucket`` files. Every shape appends
+    the live rows and then deletes the files it read; returns the
+    fold's report."""
     return store.compact(
         spark, path, max_files_per_bucket, incremental, bucket_budget
     )

@@ -406,25 +406,25 @@ def compact_store(
     partitions: Sequence[str] | None = None,
     target_rows_per_file: int = 2_000_000,
 ) -> dict:
-    """Fold of the serving store (``store.compact`` over the
-    ``partition_id`` layout) — the housekeeping a daily-release store
-    needs: upserts leave delta files and tombstones, and serving scan
-    cost degrades with file count, not bytes.
+    """Fold of the serving store: ``store.compact`` over the
+    ``partition_id`` layout. It is the housekeeping a daily-release
+    store needs: upserts leave delta files and tombstones, and serving
+    scan cost grows with file count, not bytes.
 
-    Each selected ``partition_id`` (default: all) that holds more than
-    one write epoch or more than ``ceil(rows / target_rows_per_file)``
-    files is rewritten from its live rows (tombstones applied) into
-    files of at most ``target_rows_per_file`` rows; clean partitions
-    keep their files. Afterwards a folded partition holds one file set,
-    no superseded rows, and — once no dirty partition is left — the
-    tombstone table is gone, so a raw parquet read sees the merged
-    store again. The rewrite is materialised first (it reads the files
-    it replaces) and is a dynamic overwrite, so a killed run is
-    re-runnable and readers of OTHER partitions never see a partial
-    state; an external reader of a partition being compacted can (use
-    a table format with commit protocols for that). Returns the fold
-    report (``compact_dedup_store``'s fields: files and partitions
-    before and after, partitions rewritten, tombstones folded).
+    Each selected ``partition_id`` (default: all) that holds a dead row
+    or more than ``ceil(rows / target_rows_per_file)`` files folds
+    whole: its files are read, its live rows are appended back in files
+    of at most ``target_rows_per_file`` rows, and the files read are
+    deleted. Clean partitions keep their files, and rows keep their
+    write epochs. Once no dead row is left the tombstone table goes, so
+    a raw parquet read sees the merged store again.
+
+    A fold killed between its append and its deletes leaves duplicates
+    of live rows, never a lost row. Re-running it restores the merged
+    view wherever a folded partition fits in one file, since such a
+    partition is then dirty again. A reader of a partition being folded
+    can see that window; a table format's commit protocol closes it.
+    Returns the fold report of ``store.compact``.
     """
     return compact(
         spark,

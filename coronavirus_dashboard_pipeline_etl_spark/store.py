@@ -22,8 +22,13 @@ once:
   PARTITIONED layout (the serving store: ``write_partitioned``)
   partitions on a column the rows carry (``partition_id``), and an
   upsert is a batch-sized append plus tombstones. Both read through
-  ``read_bucketed`` and fold through ``compact``; a store names only
-  its key columns and its identity fields;
+  ``read_bucketed`` and fold through ``compact``, one file-set rewrite
+  for every layout and fold shape: append the live rows of the chosen
+  files, then delete the files read. New files never replace the ones
+  being read, so the fold takes no checkpoint, and a fold killed
+  between its append and its deletes leaves duplicate rows, never a
+  lost one. A store names only its key columns and its identity
+  fields;
 * the checkpoint lifecycle: ``localCheckpoint`` blocks are not cache
   entries (``unpersist`` is a no-op for them), so whoever checkpoints
   releases the blocks by RDD id once the last consumer has run —
@@ -162,21 +167,17 @@ def overwrite_partitions(
     path: str | None = None,
     partition_col: str | None = None,
     table: str | None = None,
-    max_records_per_file: int = 0,
 ) -> None:
     """Dynamic partition overwrite: replace exactly the partitions
     present in ``df`` at ``path`` (partitioned by ``partition_col``),
-    leaving every other partition's files untouched; a positive
-    ``max_records_per_file`` splits a task's output into files of at
-    most that many rows. With ``table``, insert into that catalog table
-    instead; ``insertInto`` ignores the writer option and reads only the
-    session conf, so the conf is set for the write and restored after
-    it."""
+    leaving every other partition's files untouched. With ``table``,
+    insert into that catalog table instead; ``insertInto`` ignores the
+    writer option and reads only the session conf, so the conf is set
+    for the write and restored after it."""
     if table is None:
-        writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        if max_records_per_file > 0:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.partitionBy(partition_col).parquet(path)
+        df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            partition_col
+        ).parquet(path)
         return
     spark = df.sparkSession
     prev = spark.conf.get(_OVERWRITE_MODE_CONF, "static")
@@ -220,8 +221,8 @@ def _persistent_rdd_ids(sc) -> set[int] | None:
     would later be released by the wrong owner, and localCheckpoint
     blocks are unrecoverable (lineage truncated), so that job would
     fail with missing-block errors. Run the checkpointing operators
-    (``pagerank_fixed_point``, ``dedup_components``, the store folds
-    and merges) from one driver thread at a time per SparkContext.
+    (``pagerank_fixed_point``, ``dedup_components``, the store
+    merges) from one driver thread at a time per SparkContext.
     Independent store WRITES may run concurrently: writing consumes
     blocks, it does not create them."""
     try:
@@ -402,6 +403,25 @@ def _reader(spark: SparkSession, meta: dict | None) -> DataFrameReader:
     return spark.read if schema is None else spark.read.schema(StructType.fromJson(schema))
 
 
+def _partition_key(value, partition_col: str):
+    """A partition value as the fold keys it: an int bucket, else the
+    string the directory name spells."""
+    return int(value) if partition_col == STORE_BUCKET else str(value)
+
+
+def _partition_listing(listing: list[tuple[str, int]], partition_col: str) -> dict:
+    """``{partition value: [(relative path, bytes)]}`` of a store
+    listing; files outside a ``partition_col=`` directory are left
+    out."""
+    out: dict = {}
+    for rel, size in listing:
+        d = rel.rpartition("/")[0]
+        if d.startswith(f"{partition_col}="):
+            key = _partition_key(unquote(d.split("=", 1)[1]), partition_col)
+            out.setdefault(key, []).append((rel, size))
+    return out
+
+
 def bucket_files(
     path: str,
     listing: list[tuple[str, int]] | None = None,
@@ -411,14 +431,8 @@ def bucket_files(
     default) — one listing walk on the driver (<= partition dirs, no
     Spark job), or none when the caller passes the ``list_files(path)``
     it already took."""
-    out: dict = {}
-    for rel, size in list_files(path) if listing is None else listing:
-        d = rel.rpartition("/")[0]
-        if d.startswith(f"{partition_col}="):
-            value = unquote(d.split("=", 1)[1])
-            key = int(value) if partition_col == STORE_BUCKET else value
-            out.setdefault(key, []).append(size)
-    return out
+    parts = _partition_listing(list_files(path) if listing is None else listing, partition_col)
+    return {k: [size for _, size in files] for k, files in parts.items()}
 
 
 def resolve_params(path: str, meta: dict | None, caller: dict) -> dict:
@@ -533,17 +547,25 @@ def _auto_buckets(df: DataFrame, meta: dict | None = None) -> int:
     return clamp(max(1, -(-est // _AUTO_BUCKET_TARGET_BYTES)))
 
 
-def _write_buckets(df: DataFrame, path: str, nparts: int, mode: str) -> None:
-    """Write ``df`` partitioned by its ``STORE_BUCKET`` column,
-    repartitioned ON the bucket key first: a partitionBy write fans out
-    one file per (task, bucket) pair, so without this every writer task
-    sprays all bucket directories (measured: 1,850 files in st8's store
-    at sf0.1, 6x its steady time in file/task overhead). One slim
-    shuffle buys ~1 file per bucket; at corpus scale bound file size
-    with spark.sql.files.maxRecordsPerFile instead of fewer buckets."""
-    df.repartition(nparts, F.col(STORE_BUCKET)).write.partitionBy(
-        STORE_BUCKET
-    ).mode(mode).parquet(path)
+def _write_buckets(
+    df: DataFrame,
+    path: str,
+    nparts: int,
+    mode: str,
+    partition_col: str = STORE_BUCKET,
+    max_rows: int = 0,
+) -> None:
+    """Write ``df`` partitioned by its ``partition_col`` (the bucket, by
+    default), repartitioned ON that key first: a partitionBy write fans
+    out one file per (task, partition) pair, so without this every
+    writer task sprays all partition directories (measured: 1,850 files
+    in st8's store at sf0.1, 6x its steady time in file/task overhead).
+    One slim shuffle buys one file per partition; a positive
+    ``max_rows`` caps a file at that many rows."""
+    writer = df.repartition(nparts, F.col(partition_col)).write.partitionBy(partition_col)
+    if max_rows > 0:
+        writer = writer.option("maxRecordsPerFile", max_rows)
+    writer.mode(mode).parquet(path)
 
 
 #: ``write_bucketed``'s "the caller has not read the sidecar" marker
@@ -619,27 +641,6 @@ def _append_tombstones(ids: DataFrame, path: str, epoch: int) -> None:
     )
 
 
-def _next_epoch(
-    df: DataFrame,
-    path: str,
-    meta: dict | None,
-    partition_col: str,
-    caller: str,
-    id_cols: list[str] | None = None,
-) -> tuple[DataFrame, int]:
-    """``(df stamped with the partitioned store's next epoch, epoch)``,
-    after checking ``df`` against the recorded schema and recording the
-    epoch in the sidecar: BEFORE the data, so a write that crashes keeps
-    an epoch no later write reuses."""
-    epoch = int((meta or {}).get("epoch", 0)) + 1
-    df = df.withColumn(EPOCH_COL, F.lit(epoch).cast("int"))
-    schema = _store_schema(df, partition_col)
-    _check_schema(path, meta, schema, caller)
-    record = {"partition_col": partition_col, "epoch": epoch, "schema": schema}
-    _meta_write(path, {**(meta or {}), **({"id_cols": id_cols} if id_cols else {}), **record})
-    return df, epoch
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -669,7 +670,12 @@ def write_partitioned(
     can instead lose a partition."""
     meta = meta_read(path)
     first = meta is None and read_existing(df.sparkSession, path) is None
-    df, epoch = _next_epoch(df, path, meta, partition_col, caller, id_cols)
+    epoch = int((meta or {}).get("epoch", 0)) + 1
+    df = df.withColumn(EPOCH_COL, F.lit(epoch).cast("int"))
+    schema = _store_schema(df, partition_col)
+    _check_schema(path, meta, schema, caller)
+    record = {"partition_col": partition_col, "epoch": epoch, "schema": schema}
+    _meta_write(path, {**(meta or {}), **({"id_cols": id_cols} if id_cols else {}), **record})
     if id_cols is None:
         overwrite_partitions(df, path, partition_col)
         return
@@ -728,8 +734,11 @@ def _latest_tombstones(
             RuntimeWarning,
             stacklevel=4,
         )
+    # one task, no exchange: the table is delta-sized by contract and
+    # the broadcast collects it to the driver anyway
     tomb = (
         _tombstones(spark, path, df, ids)
+        .coalesce(1)
         .groupBy(*[F.col(c).alias(f"__tomb_{c}") for c in ids])
         .agg(F.max(TOMB_EPOCH_COL).alias(TOMB_EPOCH_COL))
     )
@@ -799,238 +808,159 @@ def compact(
     partitions: Sequence | None = None,
     target_rows_per_file: int = 2_000_000,
 ) -> dict:
-    """Maintenance pass for a store (round-13 verdict items 1-2): fold
-    merge-on-read debt back into clean data files.
+    """Fold a store's merge-on-read debt (dead rows, small files) back
+    into clean data files. One mechanism serves both layouts and every
+    fold shape — Iceberg's ``rewrite_data_files``: rewrite a chosen file
+    set, then remove the originals.
 
-    A PARTITIONED-layout store (``partition_col`` names its column when
-    it has no sidecar yet) folds per partition. One grouped stats pass
-    counts each partition's rows and epochs; a partition is dirty when
-    it holds more than one epoch (an upsert landed since its last
-    rewrite — every dead row sits in such a partition, next to the rows
-    that superseded it) or more files than
-    ``ceil(rows / target_rows_per_file)``. The dirty partitions among
-    ``partitions`` (default: all) are rewritten from their live rows,
-    stamped with a new epoch, in files of at most
-    ``target_rows_per_file`` rows (dynamic overwrite); clean partitions
-    keep their files. The tombstone table clears once no dirty
-    partition is left. The other options apply to the bucketed layout,
-    which folds in one of three shapes, picked by what the store has
-    accumulated:
+    1. Take the store listing once.
+    2. One grouped stats pass counts each partition's rows and dead rows
+       (the rows the broadcast latest-tombstone table kills). It runs
+       when the pick needs it: on a tombstoned store, and for the
+       partitioned layout's file-count test.
+    3. Pick the file set: every file of a chosen partition, from the
+       listing; or, in a FILE-SCOPED fold, only the files that hold a
+       dead row, from one collect scoped to the budgeted buckets.
+    4. Read exactly those files and keep the live rows. An epoch-stamped
+       store also drops exact duplicates, which only a replayed write or
+       a crashed fold can make there; an append-only store without
+       epochs keeps its rows as they are.
+    5. Append them back, one file per partition, each file at most
+       ``target_rows_per_file`` rows.
+    6. Delete exactly the files read.
+    7. Once no dead row is left anywhere, delete the tombstone table.
 
-    * TOMBSTONES present, ``incremental=False`` (an upserted store):
-      full fold — read the store, apply the tombstone anti-join once,
-      drop exact-duplicate rows (only a replayed crashed wave can
-      create them; live rows are unique per (key, id, epoch) by
-      construction), rewrite every bucket, clear the tombstone dir.
-      This is the amortised corpus-sized op that keeps the DAILY upsert
-      batch-sized — the classic merge-on-read + periodic-compaction
-      split (Delta OPTIMIZE / Iceberg rewrite_data_files).
-    * TOMBSTONES present, ``incremental=True``: FILE-SCOPED fold
-      with a per-run bucket budget — one slim stats pass (bucket, id,
-      epoch columns plus ``input_file_name``) counts each bucket's dead
-      rows, then within the ``bucket_budget`` dirtiest buckets (all
-      dirty buckets when None) only the files that actually hold dead
-      rows are read, folded, appended back as clean files, and the
-      originals deleted; clean files keep their bytes even inside a
-      folded bucket (round-14 verdict item: the whole-bucket rewrite
-      amplified writes by bucket-size/dead-file-size). Buckets whose
-      file count exceeds ``max_files_per_bucket`` still take the
-      WHOLE-BUCKET merge (their debt IS the file count, and the merge
-      also drops replayed-wave duplicate rows, which a file-scoped
-      fold cannot see across files — the report's ``REPLAY_DEBT``
-      field lists the buckets file-folded since their last merge; after
-      repairing a crashed wave, fold with ``incremental=False`` or let
-      the file-count trigger pick the bucket up). Crash contract of the
-      fold itself: folded copies APPEND before the originals delete, so
-      a crash between the two leaves both visible — duplicate LIVE rows
-      (over-generation, exact-verified downstream) until a whole-bucket
-      fold repairs the bucket; dead rows stay masked because the
-      tombstone table only clears after the deletes. The tombstone
-      table STAYS until no dead row remains anywhere — kept tombstones
-      are harmless over already-folded buckets (a folded id's surviving
-      rows carry the tombstone's own epoch, so ``epoch < tomb_epoch``
-      matches nothing) — and is cleared the moment the store is fully
-      clean. This spreads the corpus-sized rewrite across maintenance
-      windows: each run's write volume is (dead-file bytes / store
-      bytes), the production cadence knob for stores too large to fold
-      in one window (Iceberg's rewrite_data_files ``where``-scoped
-      form, at its file-level granularity).
-    * no tombstones (an append-only store): BUCKET-SCOPED small-file
-      merge — only buckets whose file count exceeds
-      ``max_files_per_bucket`` are read and rewritten (dynamic
-      partition overwrite), one file each; untouched buckets keep their
-      files byte-identical, and rows are kept as they are (duplicates
-      included). After N append waves a bucket holds ~N files; this
-      folds them without a corpus-sized rewrite. (``incremental=True``
-      falls through to this branch on a tombstone-free store, so one
-      maintenance call serves both store kinds.)
+    The partitions that fold (``partition_col`` names the column of a
+    store without a sidecar):
 
-    Returns a report dict (files/buckets before and after, tombstones
-    folded, ``REPLAY_DEBT``; the incremental path adds dead-row
-    before/folded/remaining counts, ``files_rewritten`` and
-    ``tombstones_cleared``) for runtime auditing. The rewrite reads the
-    path it replaces, so the surviving rows are eagerly materialised
-    first (the ``cdc_apply_batch`` pattern). The call reads and writes
-    the sidecar once each."""
+    * PARTITIONED layout: each of ``partitions`` (default: all) that
+      holds a dead row or more files than ``ceil(rows /
+      target_rows_per_file)``, whole. A clean partition keeps its files.
+    * BUCKETED layout with tombstones and ``incremental=False``: every
+      bucket, whole. This full fold is the amortised corpus-sized op
+      that keeps the daily upsert batch-sized (Delta OPTIMIZE).
+    * BUCKETED layout otherwise: the buckets that hold a dead row or
+      more than ``max_files_per_bucket`` files, dead-heaviest first,
+      then by file count and bucket id; with tombstones and
+      ``incremental``, only the first ``bucket_budget`` of them. A
+      bucket over the file limit folds whole: its debt is the file
+      count, and the whole-bucket fold also drops the duplicate rows a
+      replayed wave left in two files. Any other bucket folds
+      file-scoped, so its clean files keep their bytes and the run
+      writes dead-file bytes only, the cadence knob for a store too
+      large to fold in one window. A file-scoped fold cannot see
+      duplicates across files, so the sidecar and the report's
+      ``REPLAY_DEBT`` list the bucket until it next folds whole.
+
+    Crash contract: new files never replace the files being read, so
+    the fold takes no checkpoint, and every append lands before the
+    first delete. A crash in between leaves both copies of the rows it
+    moved: live rows show as exact duplicates (over-generation, never
+    loss), and dead rows stay masked, because the tombstones go only
+    after the deletes. A re-run folds whole, and so drops the
+    duplicates of, each partition still dirty: one that holds a dead
+    row or more files than its rows need, as a partition that fits in
+    one file always does after such a crash. In the bucketed layout a
+    full fold drops them everywhere. Tombstones kept after a partial
+    fold are harmless over the folded partitions: no surviving row
+    there is older than its id's latest tombstone.
+
+    Returns a report for runtime auditing: files and partitions
+    (``buckets_*``) before and after, partitions and files rewritten,
+    dead rows before, folded and remaining, tombstones folded and
+    whether they cleared, and ``REPLAY_DEBT``. The call reads the
+    sidecar once; it writes it once in the bucketed layout (observed
+    ``data_bytes`` and the debt), and not at all in the partitioned
+    one."""
     meta = meta_read(path)
     part = (meta or {}).get("partition_col", partition_col)
-    before = {b: len(sizes) for b, sizes in bucket_files(path, None, part).items()}
-    report = {
-        "files_before": sum(before.values()),
-        "buckets_before": len(before),
-        "buckets_rewritten": 0,
-        "tombstones_folded": 0,
-    }
-    tpath = tombstone_path(path)
-    tomb_listing = list_files(tpath)
-    debt = set((meta or {}).get(REPLAY_DEBT, []))
-    fat = [b for b, n in sorted(before.items()) if n > max_files_per_bucket]
-    scan = tomb_listing or fat or part != STORE_BUCKET
-    raw = _reader(spark, meta).parquet(path) if before and scan else None
-
-    def rewrite_buckets(chunk: DataFrame, bucket_ids: list, max_rows: int = 0) -> None:
-        # replace ONLY the partitions present in chunk, leaving every
-        # other partition's files untouched (byte-identical, pytest-pinned)
-        with materialised(chunk) as rows:
-            overwrite_partitions(
-                rows.repartition(len(bucket_ids), F.col(part)),
-                path,
-                part,
-                max_records_per_file=max_rows,
-            )
-
-    if tomb_listing:
+    bucketed = part == STORE_BUCKET
+    files = _partition_listing(list_files(path), part)
+    tomb_listing = list_files(tombstone_path(path))
+    raw = _reader(spark, meta).parquet(path) if files else None
+    tomb = ids = None
+    if raw is not None and tomb_listing:
         tomb, ids = _latest_tombstones(spark, path, meta, raw, tomb_listing)
+    rows, dead = {}, {}
+    if tomb is not None or (raw is not None and not bucketed):
+        slim, killed = raw.select(part), F.lit(None)
+        if tomb is not None:
+            slim = raw.select(part, *ids, EPOCH_COL)
+            slim = slim.join(F.broadcast(tomb), _dead(slim, tomb, ids), "left")
+            killed = F.col(TOMB_EPOCH_COL)
+        stats = slim.groupBy(part).agg(F.count(F.lit(1)), F.count(killed))
+        for value, n, d in stats.limit(len(files) + 1).collect():
+            key = _partition_key(value, part)
+            rows[key] = n
+            if d:
+                dead[key] = d
 
-        def tombstones_folded() -> int:
-            return _tombstones(spark, path, raw, ids).count()
-
-    if part != STORE_BUCKET and raw is not None:
-        epochs = F.coalesce(F.col(EPOCH_COL), F.lit(0)) if EPOCH_COL in raw.columns else F.lit(0)
-        stats = (
-            raw.groupBy(part)
-            .agg(F.count(F.lit(1)).alias("n"), F.min(epochs).alias("lo"), F.max(epochs).alias("hi"))
-            .limit(len(before) + 1)
+    fat = {p for p, fs in files.items() if len(fs) > max_files_per_bucket}
+    if not bucketed:
+        fold = [
+            p
+            for p in sorted(files)
+            if (p in dead or len(files[p]) > -(-rows.get(p, 0) // target_rows_per_file))
+            and (partitions is None or p in partitions)
+        ]
+    elif tomb is not None and not incremental:
+        fold = sorted(files)
+    else:
+        fold = sorted(set(dead) | fat, key=lambda b: (-dead.get(b, 0), -len(files[b]) * (b in fat), b))
+        if tomb is not None and bucket_budget is not None:
+            fold = fold[:bucket_budget]
+    scoped = [b for b in fold if b not in fat] if bucketed and tomb is not None and incremental else []
+    read = [join(path, rel) for p in fold if p not in scoped for rel, _ in files[p]]
+    if scoped:
+        slim = raw.filter(F.col(part).isin(scoped)).select(
+            *ids, EPOCH_COL, F.input_file_name().alias("__file")
+        )
+        read += sorted(
+            unquote(r[0])
+            for r in slim.join(F.broadcast(tomb), _dead(slim, tomb, ids), "left_semi")
+            .select("__file")
+            .distinct()
+            .limit(sum(len(files[b]) for b in scoped) + 1)
             .collect()
         )
-        dirty = {
-            r[part]
-            for r in stats
-            if r.lo != r.hi or before.get(str(r[part]), 0) > -(-r.n // target_rows_per_file)
-        }
-        fold = sorted(p for p in dirty if partitions is None or p in partitions)
-        if fold:
-            chunk = raw.filter(F.col(part).isin(fold))
-            if tomb_listing:
-                chunk = _live(chunk, tomb, ids)
-            chunk, _ = _next_epoch(chunk.drop(EPOCH_COL), path, meta, part, "compact")
-            rewrite_buckets(chunk, fold, target_rows_per_file)
-        report["buckets_rewritten"] = len(fold)
-        if tomb_listing and len(fold) == len(dirty):
-            report["tombstones_folded"] = tombstones_folded()
-            delete(tpath)
-    elif tomb_listing and incremental:
-        # slim stats pass over the (bucket, id, epoch) columns only — a
-        # count-only columnar scan, cheap next to the rewrite it scopes.
-        # Dead rows are counted per BUCKET first (<= the store's bucket
-        # count back to the driver); file lists are collected only for
-        # the buckets the budget picks, so the driver never holds one
-        # row per dirty file of the whole store.
-        def dead_rows(frame: DataFrame) -> DataFrame:
-            slim = frame.select(
-                STORE_BUCKET, *ids, EPOCH_COL, F.input_file_name().alias("__file")
-            )
-            return slim.join(F.broadcast(tomb), _dead(slim, tomb, ids), "inner")
+    if read:
+        live = _reader(spark, meta).option("basePath", path).parquet(*read)
+        if tomb is not None:
+            live = _live(live, tomb, ids)
+        live = live.repartition(len(fold), F.col(part))
+        if EPOCH_COL in live.columns:
+            # clustered on the partition column already: the dedup adds
+            # no shuffle, and the write's own repartition is dropped
+            live = live.dropDuplicates()
+        _write_buckets(live, path, len(fold), "append", part, target_rows_per_file)
+        for f in read:
+            delete(f)
 
-        dead = {
-            r[STORE_BUCKET]: r["__dead"]
-            for r in dead_rows(raw)
-            .groupBy(STORE_BUCKET)
-            .agg(F.count(F.lit(1)).alias("__dead"))
-            .limit(len(before) + 1)
-            .collect()
-        }
-        # one maintenance call serves BOTH kinds of debt: buckets with
-        # dead rows AND buckets that merely accumulated too many append
-        # files (a rewrite folds either); dead-heaviest first, then
-        # file count, bucket id tiebreak for determinism
-        fat_n = {b: before[b] for b in fat}
-        dirty = sorted(
-            set(dead) | set(fat_n),
-            key=lambda b: (-dead.get(b, 0), -fat_n.get(b, 0), b),
-        )
-        fold = dirty if bucket_budget is None else dirty[:bucket_budget]
-        report["dead_rows_before"] = sum(dead.values())
-        report["dead_rows_folded"] = sum(dead.get(b, 0) for b in fold)
-        report["dead_rows_remaining"] = (
-            report["dead_rows_before"] - report["dead_rows_folded"]
-        )
-        # fat buckets take the whole-bucket merge (their debt is the
-        # file count; the merge also folds replayed-wave duplicates);
-        # dead-only buckets fold at FILE granularity — only files that
-        # hold a dead row rewrite, clean files keep their bytes
-        bucket_fold = [b for b in fold if b in fat_n]
-        file_fold = [b for b in fold if b not in fat_n and b in dead]
-        files = []
-        if file_fold:
-            files = sorted(
-                r[0]
-                for r in dead_rows(raw.filter(F.col(STORE_BUCKET).isin(file_fold)))
-                .select("__file")
-                .distinct()
-                .limit(sum(before[b] for b in file_fold) + 1)
-                .collect()
-            )
-        report["files_rewritten"] = len(files)
-        if files:
-            # folded survivors of exactly those files, appended back as
-            # clean files, then the originals deleted (append-before-
-            # delete: see the crash contract in the docstring)
-            chunk = _live(
-                _reader(spark, meta).option("basePath", path).parquet(*files), tomb, ids
-            )
-            with materialised(chunk) as rows:
-                _write_buckets(rows, path, len(file_fold), "append")
-            for f in files:
-                delete(unquote(f))
-        if bucket_fold:
-            rewrite_buckets(
-                _live(
-                    raw.filter(F.col(STORE_BUCKET).isin(bucket_fold)), tomb, ids
-                ).dropDuplicates(),
-                bucket_fold,
-            )
-        debt = (debt | set(file_fold)) - set(bucket_fold)
-        report["buckets_rewritten"] = len(bucket_fold) + len(file_fold)
-        report["tombstones_cleared"] = report["dead_rows_remaining"] == 0
-        if report["tombstones_cleared"]:
-            # no row anywhere is older than its id's latest tombstone,
-            # so the anti-join is a no-op — the tombstone table is debt
-            # fully repaid and the store reverts to plain reads
-            report["tombstones_folded"] = tombstones_folded()
-            delete(tpath)
-    elif tomb_listing:
-        report["tombstones_folded"] = tombstones_folded()
-        buckets = (meta or {}).get("buckets", len(before) or 1)
-        # a STATIC partitioned overwrite clears the whole path first
-        # (tombstone dir included — exactly the fold we want) — but it
-        # also takes the sidecar with it, which is written back below
-        with materialised(_live(raw, tomb, ids).dropDuplicates()) as rows:
-            _write_buckets(rows, path, buckets, "overwrite")
-        delete(tpath)
-        debt = set()
-        report["buckets_rewritten"] = len(before)
-    elif fat:
-        rewrite_buckets(raw.filter(F.col(STORE_BUCKET).isin(fat)), fat)
-        report["buckets_rewritten"] = len(fat)
+    folded = sum(dead.get(p, 0) for p in fold)
+    cleared = tomb is not None and folded == sum(dead.values())
+    tombstones_folded = _tombstones(spark, path, raw, ids).coalesce(1).count() if cleared else 0
+    if cleared:
+        delete(tombstone_path(path))
     listing = list_files(path)
-    after = bucket_files(path, listing, part)
-    report["files_after"] = sum(map(len, after.values()))
-    report["buckets_after"] = len(after)
-    report[REPLAY_DEBT] = sorted(debt)
-    if meta is not None and part == STORE_BUCKET:
+    after = _partition_listing(listing, part)
+    for p in set(fold) - set(after):  # every row was dead: drop the empty directory
+        delete(join(path, files[p][0][0].rpartition("/")[0]))
+    whole = set(fold) - set(scoped)
+    debt = ((set((meta or {}).get(REPLAY_DEBT, [])) | set(scoped)) - whole) & set(after)
+    if meta is not None and bucketed:
         meta = {k: v for k, v in meta.items() if k != REPLAY_DEBT}
-        if debt:
-            meta[REPLAY_DEBT] = sorted(debt)
-        _meta_write(path, meta, listing)
-    return report
+        _meta_write(path, {**meta, **({REPLAY_DEBT: sorted(debt)} if debt else {})}, listing)
+    return {
+        "files_before": sum(map(len, files.values())),
+        "buckets_before": len(files),
+        "buckets_rewritten": len(fold),
+        "files_rewritten": len(read),
+        "dead_rows_before": sum(dead.values()),
+        "dead_rows_folded": folded,
+        "dead_rows_remaining": sum(dead.values()) - folded,
+        "tombstones_folded": tombstones_folded,
+        "tombstones_cleared": cleared,
+        "files_after": sum(map(len, after.values())),
+        "buckets_after": len(after),
+        REPLAY_DEBT: sorted(debt),
+    }

@@ -1153,3 +1153,119 @@ def test_gif_roundtrip_property(w, h, npal, interlace, seed):
     gw, gh, rgb = _parse_gif(build_gif(w, h, idx, pal, interlace=interlace))
     assert (gw, gh) == (w, h)
     assert np.array_equal(rgb, pal[idx].reshape(-1))
+
+
+# -- the store fold against a plain replay ---------------------------------
+
+_TEXTS = ["", "alpha beta gamma delta eps", "gamma delta eps zeta eta", "w1 w2 w3 w4 w5 w6"]
+
+
+def _band_rows(spark, bands: dict, doc: int, text: int) -> list:
+    """The band-index rows of document ``doc`` crawled with text
+    ``_TEXTS[text]``; ``bands`` caches them, built once per text for
+    every document."""
+    from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
+        minhash_band_index,
+    )
+
+    if (doc, text) not in bands:
+        frame = spark.createDataFrame(
+            [(d, _TEXTS[text]) for d in range(4)], "doc_id long, text string"
+        )
+        for d in range(4):
+            bands[(d, text)] = []
+        for r in minhash_band_index(frame, k=8, bands=2).collect():
+            bands[(r.doc_id, text)].append((r.doc_id, r.band, r.sig))
+    return bands[(doc, text)]
+
+
+_store_step = st.one_of(
+    st.tuples(
+        st.just("index"),
+        st.dictionaries(st.integers(0, 3), st.integers(0, len(_TEXTS) - 1), min_size=1, max_size=3),
+    ),
+    st.tuples(
+        st.just("serve"),
+        st.lists(
+            st.tuples(st.integers(0, 4), st.integers(0, 2), st.integers(0, 2)),
+            min_size=1,
+            max_size=4,
+        ),
+    ),
+    st.tuples(
+        st.just("fold_index"),
+        st.tuples(st.booleans(), st.sampled_from([None, 1, 2]), st.sampled_from([0, 1, 4])),
+    ),
+    st.tuples(st.just("fold_serve"), st.sampled_from([None, ["p0"], ["p1", "p2"]])),
+)
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(_store_step, min_size=1, max_size=5))
+def test_store_fold_matches_replay(spark, tmp_path, steps):
+    """Random band-index upserts (empty re-crawls included), serving
+    upserts and folds of any shape and budget: after every step the
+    merged read of each store equals a plain Python replay of the
+    upserts, and once a fold has cleared the tombstones a raw parquet
+    read equals it too."""
+    import os
+    import uuid
+
+    from coronavirus_dashboard_pipeline_etl_spark import store
+    from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
+        band_index_upsert_write,
+        compact_dedup_store,
+    )
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        compact_store,
+        merge_upsert_store,
+    )
+
+    root = str(tmp_path / uuid.uuid4().hex)
+    idx, serving = f"{root}/bidx", f"{root}/store"
+    bands: dict = {}
+    latest: dict[int, int] = {}  # doc -> text index
+    served: dict[tuple, tuple] = {}  # (hash, partition_id) -> (payload, release_id)
+    for n, (kind, arg) in enumerate(steps):
+        if kind == "index":
+            batch = [(d, _TEXTS[t]) for d, t in arg.items()]
+            band_index_upsert_write(
+                spark.createDataFrame(batch, "doc_id long, text string"),
+                idx, k=8, bands=2, buckets=4,
+            )
+            latest.update(arg)
+        elif kind == "serve":
+            rows = [(f"h{h}", f"p{p}", f"v{v}", n) for h, p, v in arg]
+            merge_upsert_store(
+                spark.createDataFrame(
+                    rows, "hash string, partition_id string, payload string, release_id long"
+                ),
+                serving,
+            )
+            for h, p, v, rel in rows:  # the batch keeps the max payload per key
+                if served.get((h, p), ("", -1))[1] != n or v > served[(h, p)][0]:
+                    served[(h, p)] = (v, rel)
+        elif kind == "fold_index" and latest:
+            incremental, budget, max_files = arg
+            compact_dedup_store(
+                spark, idx, max_files_per_bucket=max_files,
+                incremental=incremental, bucket_budget=budget,
+            )
+        elif kind == "fold_serve" and served:
+            compact_store(spark, serving, partitions=arg)
+
+        want_idx = sorted(r for d, t in latest.items() for r in _band_rows(spark, bands, d, t))
+        want_served = sorted((h, p, v, rel) for (h, p), (v, rel) in served.items())
+        for path, want, cols in (
+            (idx, want_idx, ("doc_id", "band", "sig")),
+            (serving, want_served, ("hash", "partition_id", "payload", "release_id")),
+        ):
+            if not store.list_files(path):
+                assert not want
+                continue
+            views = [store.read_bucketed(spark, path)]
+            if not os.path.isdir(store.tombstone_path(path)):
+                views.append(spark.read.parquet(path))
+            for view in views:
+                got = sorted(tuple(r) for r in view.select(*cols).collect())
+                assert got == want, (steps[: n + 1], path)

@@ -3,8 +3,10 @@ FileSystem API, checkpoint release, the first-write rule, the store
 format in its two layouts (bucketed: sidecar rule, fold stats and
 replay debt, one sidecar read per call; partitioned: the serving
 store's epochs, batch-sized upserts, crash window and fold), the
-sidecar-recorded schema, and guards that keep the store mechanics and
-format in one module and every library collect bounded."""
+sidecar-recorded schema, guards that keep the store mechanics and
+format in one module and every library collect bounded, and the fold's
+one file-set rewrite (all-dead buckets, job count, a crash between its
+append and its deletes)."""
 
 import ast
 import os
@@ -854,3 +856,143 @@ def test_store_reads_use_the_recorded_schema(spark, tmp_path):
             _serving(spark, [("h", "p", "y", 2)]).withColumn("extra", F.lit(1)), serving
         )
     assert (_files(fps), _files(serving), store.meta_read(serving)) == before
+
+
+# -- the fold: one file-set rewrite for both layouts ----------------------
+
+
+def _three_doc_index(spark, path):
+    """A 3-document band index spread over 64 buckets, then an empty
+    re-crawl of doc 0: its bands die and nothing replaces them, so some
+    buckets hold dead rows only."""
+    corpus = _docs(
+        spark, [(i, f"w{i}a w{i}b w{i}c w{i}d distinct tokens {i}") for i in range(3)]
+    )
+    band_index_write(
+        minhash_band_index(corpus, k=8, bands=2), path, buckets=64, k=8, bands=2
+    )
+    band_index_upsert_write(_docs(spark, [(0, "")]), path, k=8, bands=2)
+
+
+@pytest.mark.parametrize(
+    "fold",
+    [dict(incremental=True, max_files_per_bucket=0), dict()],
+    ids=["whole-bucket", "full"],
+)
+def test_fold_deletes_buckets_whose_rows_all_died(spark, tmp_path, fold):
+    """A bucket whose every row is dead has no live row to write back;
+    the fold must still remove its files, or clearing the tombstones
+    brings the dead rows back."""
+    path = str(tmp_path / "bidx")
+    _three_doc_index(spark, path)
+    live = band_index_read(spark, path).collect()
+    assert live and all(r.doc_id != 0 for r in live)
+    want = sorted(tuple(r) for r in live)
+    rep = compact_dedup_store(spark, path, **fold)
+    assert rep["tombstones_cleared"] is True and rep["dead_rows_remaining"] == 0
+    assert sorted(tuple(r) for r in band_index_read(spark, path).collect()) == want
+    assert spark.read.parquet(path).count() == len(want)
+    buckets = [d for d in os.listdir(path) if d.startswith("bucket=")]
+    assert len(buckets) == rep["buckets_after"] < rep["buckets_before"]
+
+
+def test_compact_store_takes_no_checkpoint_nor_overwrite(spark, tmp_path, monkeypatch):
+    """Folding two upserted serving partitions runs at most 7 jobs, with
+    no checkpoint and no overwrite-mode write: the fold appends new
+    files and deletes the ones it read."""
+    from pyspark.sql import DataFrame, DataFrameWriter
+
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        compact_store,
+        merge_upsert_store,
+        read_store,
+        write_store,
+    )
+
+    path = str(tmp_path / "store")
+    base = _serving(spark, [(f"h{i}", f"p{i % 3}", "x", 1) for i in range(12)])
+    write_store(base.coalesce(1), path)  # one file per partition
+    merge_upsert_store(_serving(spark, [("h1", "p1", "y", 2), ("h2", "p2", "y", 2)]), path)
+    want = _store_rows(read_store(spark, path))
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("the fold checkpointed")
+
+    orig_mode = DataFrameWriter.mode
+
+    def mode(self, save_mode):
+        assert save_mode != "overwrite", "the fold overwrote"
+        return orig_mode(self, save_mode)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", refuse)
+    monkeypatch.setattr(DataFrameWriter, "mode", mode)
+    rep, jobs = _jobs(spark, lambda: compact_store(spark, path))
+    monkeypatch.undo()
+    assert rep["buckets_rewritten"] == 2 and rep["tombstones_cleared"] is True
+    assert len(jobs) <= 7, jobs
+    assert _store_rows(spark.read.parquet(path)) == want
+
+
+def _crash_store(spark, path, layout):
+    """``(merged-view rows, fold)`` of a store of ``layout`` with dead
+    rows and fragmented partitions."""
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        compact_store,
+        merge_upsert_store,
+        read_store,
+        write_store,
+    )
+
+    if layout == "bucket":
+        corpus = _docs(spark, [(i, f"w{i}a w{i}b w{i}c tail {i % 3}") for i in range(16)])
+        band_index_write(minhash_band_index(corpus, k=8, bands=2), path, buckets=4, k=8, bands=2)
+        for w in range(2):
+            band_index_upsert_write(
+                _docs(spark, [(i, f"wave {w} doc {i} text") for i in range(6)]), path, k=8, bands=2
+            )
+        return (
+            lambda: sorted(tuple(r) for r in band_index_read(spark, path).collect()),
+            lambda: compact_dedup_store(spark, path),
+        )
+    write_store(_serving(spark, [(f"h{i}", f"p{i % 3}", "x", 1) for i in range(12)]), path)
+    for w in range(2):
+        merge_upsert_store(
+            _serving(spark, [(f"h{i}", f"p{i % 3}", f"y{w}", 2 + w) for i in range(w, 8)]), path
+        )
+    return (
+        lambda: sorted(tuple(r) for r in read_store(spark, path).collect()),
+        lambda: compact_store(spark, path),
+    )
+
+
+@pytest.mark.parametrize("layout", ["bucket", "partition_id"])
+def test_fold_crash_between_append_and_delete_loses_no_row(
+    spark, tmp_path, monkeypatch, layout
+):
+    """A fold killed after its append, part-way through deleting the
+    files it read, loses no live row: the merged read shows the same
+    rows, some twice. Re-running the fold restores exactly the
+    pre-fold view, one file per partition, with no tombstones."""
+    path = str(tmp_path / "store")
+    view, fold = _crash_store(spark, path, layout)
+    want = view()
+    deleted = []
+    orig = store.delete
+
+    def crash(p):
+        if len(deleted) == 2:
+            raise RuntimeError("simulated crash in the fold's deletes")
+        deleted.append(p)
+        orig(p)
+
+    monkeypatch.setattr(store, "delete", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        fold()
+    monkeypatch.undo()
+    crashed = view()
+    assert set(crashed) == set(want) and len(crashed) > len(want)
+    assert os.path.isdir(os.path.join(path, "_tombstones"))
+    rep = fold()
+    assert view() == want
+    assert rep["files_after"] == rep["buckets_after"]
+    assert not os.path.isdir(os.path.join(path, "_tombstones"))

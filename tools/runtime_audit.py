@@ -201,8 +201,8 @@ def upsert_write_report(spark, sf_dir: str) -> list[str]:
     the serving store's row: the bytes one ``merge_upsert_store`` batch
     writes (its delta files plus the tombstone file) against the
     batch's own data bytes and the bytes of the partitions it touches,
-    which a partition-rewriting upsert wrote. Returns markdown table
-    lines."""
+    which a partition-rewriting upsert wrote, and the ``compact_store``
+    fold that repays it. Returns markdown table lines."""
     import shutil
     import tempfile
 
@@ -213,6 +213,7 @@ def upsert_write_report(spark, sf_dir: str) -> list[str]:
     )
     from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
         PARTITION_COL,
+        compact_store,
         merge_upsert_store,
         write_store,
     )
@@ -275,9 +276,10 @@ def upsert_write_report(spark, sf_dir: str) -> list[str]:
         f"{inc_bytes / 2**10:.1f} KiB | "
         f"{inc_bytes / max(store_bytes, 1):.1%} of store bytes per "
         f"maintenance window; dead rows {rep_inc['dead_rows_folded']}/"
-        f"{rep_inc['dead_rows_before']} folded, tombstones kept |",
+        f"{rep_inc['dead_rows_before']} folded, tombstones cleared: "
+        f"{rep_inc['tombstones_cleared']} |",
         f"| budget-less drain | {rep['files_before']} -> "
-        f"{rep['files_after']} files | remaining "
+        f"{rep['files_after']} files ({rep['files_rewritten']} rewritten) | remaining "
         f"{rep['dead_rows_folded']} dead rows folded, "
         f"{rep['tombstones_folded']} tombstones cleared |",
     ]
@@ -312,6 +314,14 @@ def upsert_write_report(spark, sf_dir: str) -> list[str]:
         f"{tomb_bytes / 2**10:.1f} KiB, against the affected partitions' "
         f"{affected / 2**10:.1f} KiB a partition rewrite wrote "
         f"({(delta + tomb_bytes) / max(affected, 1):.1%}) |"
+    )
+    rep = compact_store(spark, serving)
+    lines.append(
+        f"| serving fold (`compact_store`) | {rep['files_before']} -> "
+        f"{rep['files_after']} files ({rep['files_rewritten']} rewritten in "
+        f"{rep['buckets_rewritten']} partitions) | {rep['dead_rows_folded']} "
+        f"dead rows folded, {rep['tombstones_folded']} tombstones cleared: "
+        f"{rep['tombstones_cleared']} |"
     )
     shutil.rmtree(tmp, ignore_errors=True)
     return lines
