@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from .. import store
-from ..store import _release_rdds, checkpoint, rolling_checkpoint
+from ..store import pins, rolling_checkpoint
 from .text import fingerprint, tokens
 
 MERSENNE_P = 2_147_483_647  # 2^31 - 1
@@ -601,45 +601,36 @@ def dedup_components(
     the CTE is gate-scale only: at ~2M edges its working set explodes
     while this operator resolves the same graph in seconds; measured at
     sf0.1, 1.94M pairs -> 16s here vs >25min for the SQL closure).
+
+    Checkpoint lifecycle: the resolve runs in one ``store.pins`` scope
+    owned by ``dedup_components``. Each checkpoint is released once its
+    last consumer has run, so a round holds one label table; the two
+    the RETURNED lazy frame reads (initial and fixpoint labels) stay
+    pinned until the next ``dedup_components`` call on the same
+    SparkContext releases them (finish consuming one result before the
+    next call), and an error releases every pin the call took.
     """
     # Drop pairs touching ids absent from `ids` (a stale/broader pair
     # list): a foreign endpoint could otherwise win a min-label race and
     # become the canonical_id of real docs — every doc paired with it
     # would then land on the drop list with no surviving representative.
-    #
-    # Checkpoint hygiene (r7): every localCheckpoint below is released
-    # as soon as its last consumer has materialised (rdd-id diff + best-
-    # effort unpersist, same rolling pattern as pagerank_fixed_point) —
-    # pre-r7 they stayed pinned until the session died, the accumulation
-    # that OOM'd the r6 sf1 sweep driver. Only the checkpoints the
-    # RETURNED lazy frame still references (initial labels + final
-    # fixpoint labels) stay pinned.
     sc = pairs.sparkSession.sparkContext
     id_set = ids.select(F.col(id_col).alias("__id"))
-    # Materialise the UNDIRECTED pair list once, evenly spread (the
-    # repartition matters: with broadcast labels the passes inherit
-    # this frame's partitioning, and an AQE-coalesced layout would
-    # serialize them onto one task). The BIDIRECTIONAL edge view is
-    # never checkpointed — it streams out of these blocks for exactly
-    # two passes (initial label aggregate, contraction map) and the
-    # iteration then runs on the CONTRACTED graph only. At 10x scale
-    # the old 2x-pairs edge checkpoint was a third of the resolve.
-    kept, kept_ids = checkpoint(
-        pairs.select("id_a", "id_b")
-        .join(id_set, F.col("id_a") == F.col("__id"), "left_semi")
-        .join(id_set, F.col("id_b") == F.col("__id"), "left_semi")
-        .repartition(sc.defaultParallelism)
-    )
-    # The SETUP section (bidirectional edges, contraction, initial
-    # labels, the bcast-sizing count) runs eager checkpoints and jobs
-    # of its own — a failure here (executor loss during the count is
-    # the canonical case) must release whatever it pinned so far,
-    # else the |pairs|-sized kept blocks outlive the error for the
-    # session. Ids default to empty so the handler is total.
-    edge_ids: set = set()
-    prev_label_ids: set = set()
-    init_label_ids: set = set()
-    try:
+    with pins("dedup_components") as pin:
+        # Materialise the UNDIRECTED pair list once, evenly spread (the
+        # repartition matters: with broadcast labels the passes inherit
+        # this frame's partitioning, and an AQE-coalesced layout would
+        # serialize them onto one task). The BIDIRECTIONAL edge view is
+        # never checkpointed — it streams out of these blocks for exactly
+        # two passes (initial label aggregate, contraction map) and the
+        # iteration then runs on the CONTRACTED graph only. At 10x scale
+        # the old 2x-pairs edge checkpoint was a third of the resolve.
+        kept = pin(
+            pairs.select("id_a", "id_b")
+            .join(id_set, F.col("id_a") == F.col("__id"), "left_semi")
+            .join(id_set, F.col("id_b") == F.col("__id"), "left_semi")
+            .repartition(sc.defaultParallelism)
+        )
         fwd = kept.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         rev = kept.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         edges = fwd.unionByName(rev)
@@ -652,9 +643,9 @@ def dedup_components(
         # Initial label = min(node, min direct neighbour): this IS the
         # first propagation round, fused into initialisation for free (one
         # aggregation replaces a full round's join + checkpoint + count).
-        # kept pinned on success: the returned frame composes through
-        # these labels; tracked so the ERROR path can release them
-        labels, init_label_ids = checkpoint(
+        # Pinned past the call: the returned frame composes through these
+        # labels.
+        labels = pin(
             edges.groupBy("src")
             .agg(F.min("dst").alias("__mn"))
             .select(
@@ -710,14 +701,14 @@ def dedup_components(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
-        edges, edge_ids = checkpoint(
+        edges = pin(
             cpair.unionByName(
                 cpair.select(
                     F.col("dst").alias("src"), F.col("src").alias("dst")
                 )
             ).repartition(sc.defaultParallelism)
         )
-        iter_labels, prev_label_ids = checkpoint(
+        round_labels = pin(
             edges.groupBy("src")
             .agg(F.min("dst").alias("__mn"))
             .select(
@@ -728,20 +719,11 @@ def dedup_components(
         # the undirected pair list has now fed its last consumers (the
         # contracted edges and the initial labels): release it before the
         # loop instead of pinning |pairs| rows for the session lifetime
-        _release_rdds(sc, kept_ids)
-        full_labels, labels = labels, iter_labels
+        pin.release(kept)
+        full_labels, labels = labels, round_labels
         bcast = labels.count() <= 2_000_000
-    except BaseException:
-        _release_rdds(sc, kept_ids | edge_ids | prev_label_ids | init_label_ids)
-        raise
 
-    changed = -1
-    # error path (non-convergence, interrupt, executor loss) must not
-    # leave the contracted-edge / label checkpoint blocks pinned for the
-    # session — same try/release discipline as pagerank_fixed_point.
-    # The success path keeps prev_label_ids pinned: the returned lazy
-    # frame composes through the fixpoint label table.
-    try:
+        changed = -1
         for _ in range(max_iter):
             lbl = F.broadcast(labels) if bcast else labels
             nbr = (
@@ -786,7 +768,7 @@ def dedup_components(
                 )
             )
             final = F.least(F.col("__p"), F.coalesce("__jl", "__p"))
-            new, new_ids = checkpoint(
+            new = pin(
                 prop.join(jmp, prop["__p"] == F.col("__jn"), "left").select(
                     "node",
                     final.alias("label"),
@@ -799,8 +781,8 @@ def dedup_components(
             # the previous round's label blocks fed this round's propagate
             # and are now dead — rolling release keeps ONE label table
             # pinned, not max_iter of them
-            _release_rdds(sc, prev_label_ids)
-            prev_label_ids = new_ids
+            pin.release(round_labels)
+            round_labels = new
             labels = new.drop("moved")
             if changed == 0:
                 break
@@ -813,16 +795,9 @@ def dedup_components(
                 f"iterations ({changed} labels still moving); raise "
                 "max_iter for long-chain components"
             )
-    except BaseException:
-        # nothing is returned on the error path, so nothing may stay
-        # pinned: release the contracted edges, the current label
-        # checkpoint, and the initial full-graph labels before
-        # propagating
-        _release_rdds(sc, edge_ids | prev_label_ids | init_label_ids)
-        raise
-    # the contracted edge list has no consumer past the loop — the
-    # returned frame composes full_labels with the fixpoint labels only
-    _release_rdds(sc, edge_ids)
+        # the contracted edge list has no consumer past the loop — the
+        # returned frame composes full_labels with the fixpoint labels only
+        pin.release(edges)
 
     # compose node -> initial label -> contracted-graph fixpoint (a
     # super-node with no contracted edge keeps its own id via the
@@ -1287,7 +1262,6 @@ def minhash_probe_pairs(
     base_hash: str = "md5",
     corpus_sigs: DataFrame | None = None,
     corpus_bands: DataFrame | None = None,
-    cache_out: list | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup: probe a new batch against an indexed
     corpus — the daily-crawl-vs-corpus pass of ``dedup_incremental``,
@@ -1328,21 +1302,18 @@ def minhash_probe_pairs(
     The candidate-pair frame is materialised with a lazy
     ``localCheckpoint`` (three consumers would otherwise re-execute
     the corpus signature build). Checkpoint blocks are session-pinned
-    by Spark, so the SAFE default is a ROLLING release: each
-    default-mode probe call releases the PREVIOUS call's checkpoint
-    blocks before pinning its own — a long-lived driver running one
-    probe per batch holds at most one probe's blocks, with no
-    garbage-collector timing in the loop (a GC-finalizer variant was
-    tried and rejected: ``probe(...).filter(...)`` drops the
-    intermediate immediately, and localCheckpoint lineage is
-    truncated, so releasing at GC crashed ordinary method chains).
-    Contract: finish consuming one probe's result (and everything
-    derived from it) BEFORE issuing the next probe on the same
-    SparkContext. Pass ``cache_out=[]`` to take ownership instead
-    (the call then neither releases prior blocks nor registers its
-    own — the ``dedup_components`` rolling-release protocol applies).
-    The call-time before/after id snapshot shares the
-    single-threaded-session contract documented on
+    by Spark, so the checkpoint is a rolling pin owned by
+    ``minhash_probe_pairs`` (``store.rolling_checkpoint``): each probe
+    call releases the PREVIOUS call's blocks once its own are taken —
+    a long-lived driver running one probe per batch holds exactly one
+    probe's blocks, with no garbage-collector timing in the loop (a
+    GC-finalizer variant was tried and rejected:
+    ``probe(...).filter(...)`` drops the intermediate immediately, and
+    localCheckpoint lineage is truncated, so releasing at GC crashed
+    ordinary method chains). Contract: finish consuming one probe's
+    result (and everything derived from it) BEFORE issuing the next
+    probe on the same SparkContext. The call-time before/after id
+    snapshot shares the single-threaded-session contract documented on
     ``store._persistent_rdd_ids``.
     """
     if bands < 1 or k % bands:
@@ -1404,21 +1375,15 @@ def minhash_probe_pairs(
     # two semi-join fetch lists and the final verify join — and without
     # it each consumer re-executes the band join INCLUDING the corpus
     # signature build, the probe's dominant cost (measured 27.2 s ->
-    # 11.5 s at sf1). The materialised rows are candidate-pair-sized.
-    # Safe-by-default lifecycle: the NEXT default-mode probe on this
-    # context releases this probe's blocks, so one probe per batch in a
-    # long-lived driver never accumulates pinned candidate-pair blocks
-    # (r8 advice).
+    # 11.5 s at sf1). The materialised rows are candidate-pair-sized;
+    # the NEXT probe on this context releases them.
     cand = rolling_checkpoint(
         band_rows(sig_b, "new_id")
         .join(corpus_band_rows, ["band", "sig"])
         .select("new_id", "old_id")
         .distinct(),
         "minhash_probe_pairs",
-        rolling=cache_out is None,
     )
-    if cache_out is not None:
-        cache_out.append(cand)
 
     def tok_arrays(df: DataFrame, out_id: str, out_toks: str) -> DataFrame:
         toks = F.filter(
@@ -2251,16 +2216,12 @@ def cut_hot_spans(
     a boilerplate report) pays one extra pass over the slim index, not
     a second explode of the corpus.
 
-    Checkpoint lifecycle (round-12 advice): the gram-index checkpoint
-    blocks are session-pinned, so the default is the ROLLING release
-    protocol of ``minhash_probe_pairs`` — each default-mode call
-    releases the PREVIOUS call's blocks before pinning its own (finish
-    consuming one call's result before issuing the next on the same
-    SparkContext). Passing ``stats_out=[]`` transfers OWNERSHIP: the
-    stats frame aliases the pinned blocks, so the call neither
-    releases prior default-mode blocks nor registers its own — the
-    caller keeps them alive for as long as the stats frame is in use
-    (the ``cache_out`` contract, same as ``dedup_components``).
+    Checkpoint lifecycle: the gram index is a rolling pin owned by
+    ``cut_hot_spans`` (``store.rolling_checkpoint``, the
+    ``minhash_probe_pairs`` protocol) — each call releases the PREVIOUS
+    call's blocks once its own are taken. The result and the
+    ``stats_out`` frame both read this call's pin: finish consuming
+    them before the next call on the same SparkContext.
     """
     if k < 1:
         raise ValueError(f"cut_hot_spans: k must be >= 1, got {k}")
@@ -2280,13 +2241,10 @@ def cut_hot_spans(
             ),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
-    # one materialisation feeds the stats pass AND the occurrence join;
-    # rolling release (the minhash_probe_pairs protocol) unless
-    # stats_out=[] transfers ownership to the caller
+    # one materialisation feeds the stats pass AND the occurrence join
     g = rolling_checkpoint(
         base.select(F.col(id_col), F.posexplode(fps).alias("pos", "fp")),
         "cut_hot_spans",
-        rolling=stats_out is None,
     )
     freq = g.groupBy("fp").agg(F.count_distinct(id_col).alias("__d"))
     if stats_out is not None:

@@ -31,7 +31,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..store import _release_rdds, checkpoint, rolling_checkpoint
+from ..store import pins
 
 UNIT = 10**12  # one unit of rank mass, as a BIGINT fixed-point scale
 
@@ -87,6 +87,11 @@ def pagerank_fixed_point(
 
     Returns (node, rank_int, rank) where ``rank = rank_int / 1e12`` —
     one double division of identical operands, hence identical doubles.
+    The iteration runs in one ``store.pins`` scope owned by
+    ``pagerank_fixed_point``: the result reads that call's one pin
+    until the next call releases it (finish consuming one result
+    before the next call), and an error releases every pin the call
+    took.
     """
     if n_iter < 0:
         raise ValueError(f"n_iter must be >= 0, got {n_iter}")
@@ -173,77 +178,71 @@ def pagerank_fixed_point(
                 F.when(recipient, F.lit(seed_base)).otherwise(F.lit(0)).cast("long")
             )
             n_recipients = len(seeds)
-        # Rolling checkpoint release: each round's localCheckpoint is
-        # EAGER (one job per iteration — the standard iterative-Spark
-        # shape) and the PREVIOUS round's checkpoint blocks are
-        # unpersisted as soon as the new round has materialised, so the
+        # Each round's checkpoint is EAGER (one job per iteration — the
+        # standard iterative-Spark shape) and the PREVIOUS round's pin
+        # is released as soon as the new round has materialised, so the
         # pinned footprint is one rank table, not n_iter of them. Pre-r7
         # the lazy per-round checkpoints all materialised inside the
         # final job and stayed pinned until the session died — the
         # accumulation that OOM'd the r6 sf1 sweep driver.
-        sc = edges.sparkSession.sparkContext
-        prev_round_ids: set[int] = set()
-        for _ in range(n_iter):
-            contrib = e.join(ranks.filter(F.col("outdeg") > 0), "src").select(
-                "dst",
-                F.expr("rank_int div outdeg").alias("contrib"),
-            )
-            incoming = contrib.groupBy("dst").agg(
-                F.sum("contrib").alias("incoming")
-            )
-            joined = deg.join(incoming, F.col("src") == F.col("dst"), "left")
-            if n_dangling:
-                # 1-row dangling-mass scalar, crossJoin-broadcast (the
-                # same pattern as the q11 HAVING scalar) — each round's
-                # summed dangling rank splits equally (integer div)
-                # over every node (or every seed under teleport) and is
-                # damped together with the edge contributions:
-                #   rank' = base + (85 * (incoming + dm div n)) div 100
-                dang = ranks.filter(F.col("outdeg") == 0).agg(
-                    F.coalesce(F.sum("rank_int"), F.lit(0))
-                    .cast("long")
-                    .alias("__dm")
+        with pins("pagerank_fixed_point") as pin:
+            for _ in range(n_iter):
+                contrib = e.join(ranks.filter(F.col("outdeg") > 0), "src").select(
+                    "dst",
+                    F.expr("rank_int div outdeg").alias("contrib"),
                 )
-                joined = joined.crossJoin(F.broadcast(dang))
-                share = F.when(
-                    recipient, F.expr(f"__dm div {n_recipients}")
-                ).otherwise(F.lit(0).cast("long"))
-            else:
-                share = F.lit(0).cast("long")
-            # deg is partitioned by src, incoming by dst (its agg key):
-            # both sides arrive partitioned on their join key — no
-            # exchange beyond the 1-row broadcast
-            ranks, round_ids = checkpoint(
-                joined.withColumn(
-                    "__inc", F.expr("coalesce(incoming, 0L)") + share
+                incoming = contrib.groupBy("dst").agg(
+                    F.sum("contrib").alias("incoming")
                 )
-                .select(
-                    "src",
-                    "outdeg",
-                    (
-                        base_expr
-                        + F.expr(
-                            f"({damping_num} * __inc) div {damping_den}"
-                        )
-                    ).alias("rank_int"),
+                joined = deg.join(incoming, F.col("src") == F.col("dst"), "left")
+                if n_dangling:
+                    # 1-row dangling-mass scalar, crossJoin-broadcast (the
+                    # same pattern as the q11 HAVING scalar) — each round's
+                    # summed dangling rank splits equally (integer div)
+                    # over every node (or every seed under teleport) and
+                    # is damped together with the edge contributions:
+                    #   rank' = base + (85 * (incoming + dm div n)) div 100
+                    dang = ranks.filter(F.col("outdeg") == 0).agg(
+                        F.coalesce(F.sum("rank_int"), F.lit(0))
+                        .cast("long")
+                        .alias("__dm")
+                    )
+                    joined = joined.crossJoin(F.broadcast(dang))
+                    share = F.when(
+                        recipient, F.expr(f"__dm div {n_recipients}")
+                    ).otherwise(F.lit(0).cast("long"))
+                else:
+                    share = F.lit(0).cast("long")
+                # deg is partitioned by src, incoming by dst (its agg
+                # key): both sides arrive partitioned on their join key —
+                # no exchange beyond the 1-row broadcast
+                prev, ranks = ranks, pin(
+                    joined.withColumn(
+                        "__inc", F.expr("coalesce(incoming, 0L)") + share
+                    ).select(
+                        "src",
+                        "outdeg",
+                        (
+                            base_expr
+                            + F.expr(f"({damping_num} * __inc) div {damping_den}")
+                        ).alias("rank_int"),
+                    )
+                )
+                pin.release(prev)
+            # materialise the final ranks — the operator returns a
+            # self-contained frame and leaves no cache residue in a
+            # long-lived session beyond this pin, which the next call
+            # releases
+            out = pin(
+                ranks.select(
+                    F.col("src").alias("node"),
+                    "rank_int",
+                    (F.col("rank_int").cast("double") / F.lit(float(UNIT))).alias(
+                        "rank"
+                    ),
                 )
             )
-            _release_rdds(sc, prev_round_ids)
-            prev_round_ids = round_ids
-        # materialise the final ranks — the operator returns a
-        # self-contained frame and leaves no cache residue in a
-        # long-lived session beyond the returned checkpoint itself,
-        # which the next call releases (rolling)
-        out = rolling_checkpoint(
-            ranks.select(
-                F.col("src").alias("node"),
-                "rank_int",
-                (F.col("rank_int").cast("double") / F.lit(float(UNIT))).alias("rank"),
-            ),
-            "pagerank_fixed_point",
-            eager=True,
-        )
-        _release_rdds(sc, prev_round_ids)
+            pin.release(ranks)
     finally:
         # release the cached edge/degree frames even when the guard or
         # an iteration fails mid-loop (r6 advice: the success-path-only

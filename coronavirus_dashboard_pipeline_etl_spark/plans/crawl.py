@@ -52,7 +52,7 @@ from ..functions.dedup import (
     minhash_probe_pairs,
 )
 from ..functions.text import quality_stats
-from ..store import checkpoint, materialised
+from ..store import pins
 from ..streaming.ingest import index_upsert_batch
 
 #: MinHash identity of the band index (shingle size, bands)
@@ -127,30 +127,36 @@ def crawl_day(
     ``corpus_path`` (``doc_id, text``), advancing all three. Returns
     every wave's packed survivors — the batch columns plus ``fp``, the
     ``quality_stats`` columns, ``pack_id``, ``pack_offset`` and
-    ``wave`` — read from per-wave checkpoints that stay pinned while
-    the result is in use."""
+    ``wave`` — read from per-wave checkpoints. The day runs in one
+    ``store.pins`` scope owned by ``crawl_day``: a wave's exact-dedup
+    survivors are released once its packed wave is materialised, the
+    packed waves the result reads stay pinned until the next
+    ``crawl_day`` call releases them (finish consuming one day's result
+    before the next call), and an error releases every pin the call
+    took."""
     both = reduce(lambda a, b: a.unionByName(b), waves.values())
     seen_seed = fp_store_pruned(spark, fp_path, both)
     bands_seed = band_index_pruned(spark, index_path, both, k=K, bands=BANDS)
     corpus_seed = spark.read.parquet(corpus_path)
     state_fps = state_docs = state_bands = None
     out = None
-    for wave_no, batch in waves.items():
-        seen = seen_seed if state_fps is None else seen_seed.unionByName(state_fps)
-        corpus_docs = (
-            corpus_seed if state_docs is None else corpus_seed.unionByName(state_docs)
-        )
-        corpus_bands = (
-            bands_seed if state_bands is None else bands_seed.unionByName(state_bands)
-        )
-        # the exact-dedup survivors feed four subtrees of the wave plan
-        # (the probe's batch-band build, both verify token fetches and
-        # the survivors anti-join): materialise them once instead of
-        # re-running the store anti-join under each consumer; the
-        # blocks are dead once the packed wave is materialised
-        kept_e_lazy = dedup_incremental(batch, seen)
-        _audit_stage(f"wave{wave_no}_kept_e", kept_e_lazy)
-        with materialised(kept_e_lazy) as kept_e:
+    with pins("crawl_day") as pin:
+        for wave_no, batch in waves.items():
+            seen = seen_seed if state_fps is None else seen_seed.unionByName(state_fps)
+            corpus_docs = (
+                corpus_seed if state_docs is None else corpus_seed.unionByName(state_docs)
+            )
+            corpus_bands = (
+                bands_seed if state_bands is None else bands_seed.unionByName(state_bands)
+            )
+            # the exact-dedup survivors feed four subtrees of the wave plan
+            # (the probe's batch-band build, both verify token fetches and
+            # the survivors anti-join): materialise them once instead of
+            # re-running the store anti-join under each consumer; the
+            # blocks are dead once the packed wave is materialised
+            kept_e_lazy = dedup_incremental(batch, seen)
+            _audit_stage(f"wave{wave_no}_kept_e", kept_e_lazy)
+            kept_e = pin(kept_e_lazy)
             near_ids = (
                 minhash_probe_pairs(
                     kept_e,
@@ -180,12 +186,13 @@ def crawl_day(
             # the whole wave is one lazy plan here: hand it to the plan
             # auditor before the checkpoint hides it
             _audit_stage(f"wave{wave_no}", packed_lazy)
-            packed, _ = checkpoint(packed_lazy)
-        _advance_state(packed, fp_path, index_path, corpus_path)
-        # the next wave's state view: exactly the rows just appended
-        state_fps = packed.select("fp")
-        state_docs = packed.select("doc_id", "text")
-        state_bands = minhash_band_index(packed, k=K, bands=BANDS)
-        rows = packed.withColumn("wave", F.lit(wave_no))
-        out = rows if out is None else out.unionByName(rows)
+            packed = pin(packed_lazy)
+            pin.release(kept_e)
+            _advance_state(packed, fp_path, index_path, corpus_path)
+            # the next wave's state view: exactly the rows just appended
+            state_fps = packed.select("fp")
+            state_docs = packed.select("doc_id", "text")
+            state_bands = minhash_band_index(packed, k=K, bands=BANDS)
+            rows = packed.withColumn("wave", F.lit(wave_no))
+            out = rows if out is None else out.unionByName(rows)
     return out

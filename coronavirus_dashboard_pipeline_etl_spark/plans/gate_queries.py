@@ -5409,7 +5409,7 @@ def s15_dump_load(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_nationkey", "n_name", "n_regionkey"
         )
         # materialise before removing the dump dir (the JSON scan is lazy)
-        return out.localCheckpoint(eager=True)
+        return store.rolling_checkpoint(out, "s15_dump_load", eager=True)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -5465,7 +5465,7 @@ def s10b_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             columns=["key", "name", "release_id", "partition_id"],
         )
         # materialise before removing the store dir (the scan is lazy)
-        return out.localCheckpoint(eager=True)
+        return store.rolling_checkpoint(out, "s10b_store_roundtrip", eager=True)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -8754,15 +8754,15 @@ def pipe14_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("id_a").alias("doc_id"))
         .distinct()
-        # `kept` feeds FOUR downstream subtrees (doc-bigram counts, the
-        # corpus model, the id spine, and the lang join); without this
-        # checkpoint each one re-executes the whole containment-pairs
-        # plan — measured 98.6 MiB shuffled at sf0.01 vs 13 MiB for the
-        # containment alone. The drop list is doc-ids only (tiny), so
-        # materialising it once turns every `kept` use into a scan +
-        # broadcast anti-join.
-        .localCheckpoint(eager=True)
     )
+    # `kept` feeds FOUR downstream subtrees (doc-bigram counts, the
+    # corpus model, the id spine, and the lang join); without this
+    # checkpoint each one re-executes the whole containment-pairs
+    # plan — measured 98.6 MiB shuffled at sf0.01 vs 13 MiB for the
+    # containment alone. The drop list is doc-ids only (tiny), so
+    # materialising it once turns every `kept` use into a scan +
+    # broadcast anti-join.
+    drops = store.rolling_checkpoint(drops, "pipe14_quality_dedup", eager=True)
     # the shingle arrays have served their purpose once the drop list
     # is materialised — explicit handle, explicit release
     shingles.unpersist()
@@ -11161,7 +11161,7 @@ def s17_warc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             "content_length",
             F.decode(F.col("content"), "UTF-8").alias("text"),
         )
-        return out.localCheckpoint(eager=True)
+        return store.rolling_checkpoint(out, "s17_warc_source", eager=True)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -12881,32 +12881,33 @@ def pipe23_bloom_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom_bits(seed_fps, F.col("fp"), m_bits).write.parquet(sk_path)
 
     out = None
-    for wave_no, wave in _recrawl_waves(docs).items():
-        kept_lazy = dedup_incremental_bloom(
-            wave,
-            fp_store_pruned(spark, fp_path, wave),
-            m_bits=m_bits,
-            bits=spark.read.parquet(sk_path),
-        )
-        # hand the wave's real plan (sketch prefilter + pruned confirm
-        # scan) to the plan auditor before the checkpoint hides it
-        _audit_stage(f"wave{wave_no}", kept_lazy)
-        kept = kept_lazy.localCheckpoint(eager=True)
-        # advance BOTH pieces of state: fps append into their buckets,
-        # survivor bits OR-merged into the sketch (eager materialise
-        # before overwriting the path the plan reads — d14b pattern)
-        fp_store_write(kept.select("fp"), fp_path)
-        merged = (
-            spark.read.parquet(sk_path)
-            .unionByName(bloom_bits(kept, F.col("fp"), m_bits))
-            .distinct()
-        )
-        with store.materialised(merged) as bits:
-            bits.write.mode("overwrite").parquet(sk_path)
-        rows = kept.select(
-            "doc_id", "lang", "fp", F.lit(wave_no).alias("wave")
-        )
-        out = rows if out is None else out.unionByName(rows)
+    with store.pins("pipe23_bloom_loop") as pin:
+        for wave_no, wave in _recrawl_waves(docs).items():
+            kept_lazy = dedup_incremental_bloom(
+                wave,
+                fp_store_pruned(spark, fp_path, wave),
+                m_bits=m_bits,
+                bits=spark.read.parquet(sk_path),
+            )
+            # hand the wave's real plan (sketch prefilter + pruned confirm
+            # scan) to the plan auditor before the checkpoint hides it
+            _audit_stage(f"wave{wave_no}", kept_lazy)
+            kept = pin(kept_lazy)
+            # advance BOTH pieces of state: fps append into their buckets,
+            # survivor bits OR-merged into the sketch (eager materialise
+            # before overwriting the path the plan reads — d14b pattern)
+            fp_store_write(kept.select("fp"), fp_path)
+            merged = (
+                spark.read.parquet(sk_path)
+                .unionByName(bloom_bits(kept, F.col("fp"), m_bits))
+                .distinct()
+            )
+            with store.materialised(merged) as bits:
+                bits.write.mode("overwrite").parquet(sk_path)
+            rows = kept.select(
+                "doc_id", "lang", "fp", F.lit(wave_no).alias("wave")
+            )
+            out = rows if out is None else out.unionByName(rows)
     return out
 
 
@@ -13011,15 +13012,14 @@ def d14c_tombstone_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     _audit_stage("probe_merge_on_read", pairs_lazy)
     # materialise the probe and the merge-on-read stats BEFORE the fold
     # rewrites the files their plans reference
-    pairs = pairs_lazy.localCheckpoint(eager=True)
-    stats_pre = (
-        band_index_read(spark, path)
-        .agg(
-            F.count(F.lit(1)).alias("idx_rows"),
-            F.count_distinct("doc_id").alias("idx_docs"),
+    with store.pins("d14c_tombstone_upsert") as pin:
+        pairs = pin(pairs_lazy)
+        stats_pre = pin(
+            band_index_read(spark, path).agg(
+                F.count(F.lit(1)).alias("idx_rows"),
+                F.count_distinct("doc_id").alias("idx_docs"),
+            )
         )
-        .localCheckpoint(eager=True)
-    )
     rep = compact_dedup_store(spark, path)
     stats_post = (
         band_index_read(spark, path)
@@ -13090,15 +13090,16 @@ def pipe24_fp_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="overwrite",
     )
     out = None
-    for wave_no in (1, 2, 3):
-        wave = docs.filter(F.col("doc_id") % 4 == wave_no)
-        kept_lazy = dedup_incremental(
-            wave, fp_store_pruned(spark, path, wave)
-        ).select("doc_id", "lang", "fp", F.lit(wave_no).alias("wave"))
-        _audit_stage(f"wave{wave_no}", kept_lazy)
-        kept = kept_lazy.localCheckpoint(eager=True)
-        fp_store_write(kept.select("fp"), path)
-        out = kept if out is None else out.unionByName(kept)
+    with store.pins("pipe24_fp_compact") as pin:
+        for wave_no in (1, 2, 3):
+            wave = docs.filter(F.col("doc_id") % 4 == wave_no)
+            kept_lazy = dedup_incremental(
+                wave, fp_store_pruned(spark, path, wave)
+            ).select("doc_id", "lang", "fp", F.lit(wave_no).alias("wave"))
+            _audit_stage(f"wave{wave_no}", kept_lazy)
+            kept = pin(kept_lazy)
+            fp_store_write(kept.select("fp"), path)
+            out = kept if out is None else out.unionByName(kept)
     rep = compact_dedup_store(spark, path, max_files_per_bucket=1)
     per_bucket = [len(sizes) for sizes in store.bucket_files(path).values()]
     replay = docs.filter(F.col("doc_id") % 4 == 3)
@@ -13313,7 +13314,7 @@ def d14d_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _audit_stage("view_after_partial_fold", view_mid_lazy)
     # materialise the mid-fold view BEFORE run 2 rewrites its files
-    view_mid = view_mid_lazy.localCheckpoint(eager=True)
+    view_mid = store.rolling_checkpoint(view_mid_lazy, "d14d_incremental_fold", eager=True)
     rep2 = compact_dedup_store(spark, path, incremental=True)
     raw_rows = spark.read.parquet(path).count()
     final_rows = band_index_read(spark, path).count()

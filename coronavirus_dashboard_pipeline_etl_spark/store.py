@@ -29,11 +29,15 @@ once:
   between its append and its deletes leaves duplicate rows, never a
   lost one. A store names only its key columns and its identity
   fields;
-* the checkpoint lifecycle: ``localCheckpoint`` blocks are not cache
-  entries (``unpersist`` is a no-op for them), so whoever checkpoints
-  releases the blocks by RDD id once the last consumer has run —
-  pinned blocks accumulating for the session is what OOM'd the r6
-  sweep driver.
+* the checkpoint lifecycle, one rule for every pin: a checkpoint is
+  taken only inside a ``pins`` scope, and its blocks are released at
+  the end of that scope or, for an operator that returns a frame
+  reading them, at the scope owner's next call. ``localCheckpoint``
+  blocks are not cache entries (``unpersist`` is a no-op for them), so
+  only the scope can release them; pins nobody owned accumulating for
+  the session is what OOM'd the r6 sweep driver, and what
+  ``dedup_components`` (two pins a call) and ``crawl_day`` (one per
+  wave) leaked before they ran in an owned scope.
 """
 
 from __future__ import annotations
@@ -214,17 +218,18 @@ def _persistent_rdd_ids(sc) -> set[int] | None:
     skip the release and keep the blocks until the session ends rather
     than failing).
 
-    Concurrency contract: ``checkpoint`` attributes blocks to a call by
-    diffing this set around the ``localCheckpoint``, which assumes no
-    OTHER thread creates persistent RDDs on this SparkContext inside
-    that window — a concurrent job's checkpoint landing in the diff
-    would later be released by the wrong owner, and localCheckpoint
-    blocks are unrecoverable (lineage truncated), so that job would
-    fail with missing-block errors. Run the checkpointing operators
-    (``pagerank_fixed_point``, ``dedup_components``, the store
-    merges) from one driver thread at a time per SparkContext.
-    Independent store WRITES may run concurrently: writing consumes
-    blocks, it does not create them."""
+    Concurrency contract: a ``pins`` scope attributes blocks to a
+    checkpoint by diffing this set around the ``localCheckpoint``,
+    which assumes no OTHER thread creates persistent RDDs on this
+    SparkContext inside that window — a concurrent job's checkpoint
+    landing in the diff would later be released by the wrong owner, and
+    localCheckpoint blocks are unrecoverable (lineage truncated), so
+    that job would fail with missing-block errors. Run every pinning
+    call (the ``pins`` owners ``dedup_components``,
+    ``pagerank_fixed_point``, ``crawl_day`` and the rolling-pin
+    operators, and the ``materialised`` store merges) from one driver
+    thread at a time per SparkContext. Independent store WRITES may run
+    concurrently: writing consumes blocks, it does not create them."""
     try:
         return set(sc._jsc.getPersistentRDDs().keySet().toArray())
     except Exception:  # noqa: BLE001
@@ -243,17 +248,71 @@ def _release_rdds(sc, ids) -> None:
         pass
 
 
-def checkpoint(df: DataFrame, eager: bool = True) -> tuple[DataFrame, set[int]]:
-    """``df.localCheckpoint(eager)`` plus the RDD ids it pinned, for a
-    later ``_release_rdds``. localCheckpoint registers its RDD as
-    persistent at call time, so the ids are exact for a lazy checkpoint
-    too."""
-    sc = df.sparkSession.sparkContext
-    before = _persistent_rdd_ids(sc)
-    out = df.localCheckpoint(eager=eager)
-    if before is None:
-        return out, set()
-    return out, (_persistent_rdd_ids(sc) or set()) - before
+#: rolling slots of the ``pins`` owners: (owner, id(SparkContext)) ->
+#: (weakref to the context, RDD ids the owner's last call left pinned).
+#: The weakref guards against an id() collision after the original
+#: context is collected.
+_ROLLING: dict[tuple[str, int], tuple] = {}
+
+
+class _Pins:
+    """The checkpoints one ``pins`` scope holds."""
+
+    def __init__(self) -> None:
+        self._sc = None
+        self._held: list[tuple[DataFrame, set[int]]] = []
+
+    def __call__(self, df: DataFrame, eager: bool = True) -> DataFrame:
+        """``df.localCheckpoint(eager)``, pinned by this scope.
+        localCheckpoint registers its RDD as persistent at call time, so
+        the ids the scope records are exact for a lazy checkpoint too."""
+        self._sc = df.sparkSession.sparkContext
+        before = _persistent_rdd_ids(self._sc)
+        out = df.localCheckpoint(eager=eager)
+        if before is not None:
+            self._held.append((out, (_persistent_rdd_ids(self._sc) or set()) - before))
+        return out
+
+    def release(self, frame: DataFrame) -> None:
+        """Drop the pin behind ``frame`` (a frame this scope returned)
+        once its last consumer has run; any other frame is a no-op."""
+        for i, (out, _) in enumerate(self._held):
+            if out is frame:
+                _release_rdds(self._sc, self._held.pop(i)[1])
+                return
+
+
+@contextmanager
+def pins(owner: str | None = None) -> Iterator[_Pins]:
+    """The one owner of every checkpoint pin. ``localCheckpoint`` blocks
+    are not cache entries (``unpersist`` is a no-op on the frame), so
+    the blocks must be released by RDD id, and a lazily planned frame
+    cannot say when it has been consumed: the scope is that rule.
+    ``pin(df, eager=True)`` checkpoints ``df`` and returns the frame;
+    ``pin.release(frame)`` drops one pin early. An exception releases
+    every pin the scope still holds. A normal exit releases them too
+    when there is no ``owner``; with one, they move into the owner's
+    rolling slot (per SparkContext) and the pins the owner's previous
+    call left there are released — new checkpoints first, old release
+    after, so an operator that RETURNS a frame reading its pins keeps
+    exactly one call's pins. Contract: finish consuming one call's
+    result before the owner's next call."""
+    pin = _Pins()
+    done = False
+    try:
+        yield pin
+        done = True
+    finally:
+        ids = set().union(*(ids for _, ids in pin._held))
+        sc = pin._sc or SparkContext._active_spark_context
+        if done and owner is not None:
+            # this call's pins take the owner's slot; the release below
+            # then frees what the owner's previous call left there
+            prev = _ROLLING.pop((owner, id(sc)), None)
+            if ids:
+                _ROLLING[(owner, id(sc))] = (weakref.ref(sc), ids)
+            ids = prev[1] if prev is not None and prev[0]() is sc else set()
+        _release_rdds(sc, ids)
 
 
 @contextmanager
@@ -264,44 +323,18 @@ def materialised(df: DataFrame, eager: bool = True) -> Iterator[DataFrame]:
     from the files being replaced, and the blocks must not outlive the
     write. ``eager=False`` lets the body's first action fill the blocks
     (one job fewer where that action is needed anyway)."""
-    out, ids = checkpoint(df, eager)
-    try:
-        yield out
-    finally:
-        _release_rdds(df.sparkSession.sparkContext, ids)
+    with pins() as pin:
+        yield pin(df, eager)
 
 
-#: rolling-release registry of ``rolling_checkpoint``:
-#: (owner, id(SparkContext)) -> (weakref to the context, RDD ids the
-#: owner's last call pinned). The weakref guards against an id()
-#: collision after the original context is collected.
-_ROLLING: dict[tuple[str, int], tuple] = {}
-
-
-def rolling_checkpoint(
-    df: DataFrame, owner: str, rolling: bool = True, eager: bool = False
-) -> DataFrame:
+def rolling_checkpoint(df: DataFrame, owner: str, eager: bool = False) -> DataFrame:
     """Checkpoint (lazy unless ``eager``) for an operator that RETURNS a
-    frame reading the checkpoint, so it cannot release the blocks
-    itself. The blocks stay pinned until the same ``owner``'s next
-    rolling call on the same SparkContext, which releases them once its
-    own checkpoint is taken: a daily loop holds at most one call's
-    blocks, and nothing depends on garbage-collection timing. Contract:
-    finish consuming one call's result before the next call.
-    ``rolling=False`` hands the blocks to the caller (for an operator
-    whose caller takes ownership of the checkpoint), leaving the
-    owner's registered blocks alone."""
-    if not rolling:
-        return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    key = (owner, id(sc))
-    out, ids = checkpoint(df, eager)
-    prev = _ROLLING.pop(key, None)
-    if prev is not None and prev[0]() is sc:
-        _release_rdds(sc, prev[1])
-    if ids:
-        _ROLLING[key] = (weakref.ref(sc), ids)
-    return out
+    frame reading the checkpoint: the blocks stay pinned until the same
+    ``owner``'s next call on the same SparkContext releases them
+    (``pins``), so a daily loop holds at most one call's blocks and
+    nothing depends on garbage-collection timing."""
+    with pins(owner) as pin:
+        return pin(df, eager)
 
 
 # -- the store format -------------------------------------------------

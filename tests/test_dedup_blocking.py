@@ -599,12 +599,6 @@ def test_review_fix_guards(spark):
     with _pytest.raises(Exception, match="bad IMG"):
         resize_images(media, 2, 2).collect()
 
-    # cache_out returns the checkpointed candidate frame for release
-    handles: list = []
-    out = minhash_probe_pairs(df, df, k=16, bands=4, cache_out=handles)
-    out.count()
-    assert len(handles) == 1
-
     # default lifecycle: ROLLING release — each default-mode probe
     # releases the previous probe's checkpoint blocks, so a long-lived
     # one-probe-per-batch driver holds at most one probe's blocks and
@@ -631,12 +625,6 @@ def test_review_fix_guards(spark):
     # the first probe's blocks are gone; only the second's remain
     assert (during - before) & after2 == set(), "previous probe leaked"
     assert after2 - before, "current probe should hold its own blocks"
-    # a cache_out (ownership) call must NOT release the default-mode
-    # probe's still-registered blocks
-    own: list = []
-    out4 = minhash_probe_pairs(df, df, k=16, bands=4, cache_out=own)
-    out4.count()
-    assert (after2 - before) <= (_persistent_rdd_ids(sc) or set())
 
 
 def test_winnow_fingerprints_selection_and_pairs(spark):
@@ -854,11 +842,10 @@ def test_cut_hot_spans_semantics(spark):
     with _pytest.raises(ValueError, match="max_docs"):
         cut_hot_spans(df, max_docs=0)
 
-    # checkpoint lifecycle (round-12 advice): default-mode calls use
-    # the rolling-release protocol — the second call frees the first
-    # call's gram-index blocks; stats_out=[] takes ownership and must
-    # neither release the registered default-mode blocks nor register
-    # its own
+    # checkpoint lifecycle (round-12 advice): calls use the
+    # rolling-release protocol — the second call frees the first
+    # call's gram-index blocks; the stats_out frame reads the call's
+    # rolling pin
     from coronavirus_dashboard_pipeline_etl_spark.store import _persistent_rdd_ids
 
     sc = spark.sparkContext
@@ -874,9 +861,6 @@ def test_cut_hot_spans_semantics(spark):
     out = cut_hot_spans(df, k=8, max_docs=3, stats_out=stats)
     out.count()
     assert len(stats) == 1 and stats[0].count() > 0
-    assert (after2 - before) <= (_persistent_rdd_ids(sc) or set()), (
-        "ownership call must not release default-mode blocks"
-    )
 
 
 def test_minhash_index_upsert_replaces(spark):

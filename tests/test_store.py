@@ -9,6 +9,7 @@ one file-set rewrite (all-dead buckets, job count, a crash between its
 append and its deletes)."""
 
 import ast
+import inspect
 import os
 import re
 import uuid
@@ -26,6 +27,7 @@ from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
     compact_dedup_store,
     fp_store_write,
     minhash_band_index,
+    minhash_probe_pairs,
     store_meta_read,
 )
 from coronavirus_dashboard_pipeline_etl_spark.store import _persistent_rdd_ids
@@ -415,6 +417,13 @@ def _checkpoints_read(df) -> set[int]:
         "pipe21_incremental_loop",
         "pipe22_crawl_day",
         "pipe23_bloom_loop",
+        "s15_dump_load",
+        "s10b_store_roundtrip",
+        "pipe14_quality_dedup",
+        "s17_warc_source",
+        "pipe24_fp_compact",
+        "d14d_incremental_fold",
+        "d14c_tombstone_upsert",
     ],
 )
 def test_store_gates_release_write_then_drop_checkpoints(spark, monkeypatch, gate):
@@ -450,6 +459,54 @@ def test_store_gates_release_write_then_drop_checkpoints(spark, monkeypatch, gat
     }
     assert pinned <= _checkpoints_read(out) | rolling, pinned
     assert out.count() > 0
+
+
+@pytest.mark.skipif(not os.path.isdir(SF), reason="sf0.001 test tables absent")
+def test_repeated_calls_hold_one_calls_pins(spark):
+    """Every operator that returns a frame reading its checkpoints keeps
+    the pins of its LAST call only: after three calls, each result
+    consumed before the next, the pinned set is exactly what the third
+    call pinned — nothing from the first two calls outlives them."""
+    from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
+        cut_hot_spans,
+        dedup_components,
+    )
+    from coronavirus_dashboard_pipeline_etl_spark.functions.graph import (
+        pagerank_fixed_point,
+    )
+    from coronavirus_dashboard_pipeline_etl_spark.plans.gate_queries import QUERIES
+
+    sc = spark.sparkContext
+    docs = _docs(
+        spark,
+        [(i, f"w{i % 5}a w{i % 5}b shared boilerplate tail here {i}") for i in range(12)],
+    )
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 10, 2)], "id_a long, id_b long"
+    )
+    edges = spark.createDataFrame([(i, (i + 1) % 6) for i in range(6)], "src long, dst long")
+
+    def cut_with_stats():
+        stats: list = []
+        out = cut_hot_spans(docs, k=3, max_docs=2, stats_out=stats)
+        stats[0].count()
+        return out
+
+    calls = {
+        "dedup_components": lambda: dedup_components(pairs, docs.select("doc_id")),
+        "pagerank_fixed_point": lambda: pagerank_fixed_point(edges, n_iter=2),
+        "cut_hot_spans": cut_with_stats,
+        "minhash_probe_pairs": lambda: minhash_probe_pairs(docs, docs, k=16, bands=4),
+        "crawl_day": lambda: QUERIES["pipe22_crawl_day"](spark, SF),
+    }
+    for name, call in calls.items():
+        start = _persistent_rdd_ids(sc)
+        for _ in range(3):
+            before = _persistent_rdd_ids(sc)
+            assert call().count() > 0, name
+        after = _persistent_rdd_ids(sc)
+        assert after - before, f"{name}: its result should read pinned blocks"
+        assert after - start == after - before, (name, after - start, after - before)
 
 
 #: store mechanics that belong to ``store.py`` alone
@@ -499,10 +556,27 @@ _GATE_PLUMBING = re.compile(r'removeprefix\("file:"\)|os\.listdir|os\.path\.isdi
 _BARE_CHECKPOINT = re.compile(r"localCheckpoint\(")
 
 
-#: modules that may call ``localCheckpoint`` directly: the store layer
-#: itself, and the gate registry, whose checkpoints its gates' results
-#: read
-_CHECKPOINT_OWNERS = ("store.py", os.path.join("plans", "gate_queries.py"))
+#: the one module that may call ``localCheckpoint`` directly: the store
+#: layer, whose ``pins`` scope owns every checkpoint
+_CHECKPOINT_OWNERS = ("store.py",)
+
+
+def _pin_bypasses(source: str) -> list[str]:
+    """Lines of ``source`` that go round the ``pins`` scope: an import
+    or call of the store's raw ``checkpoint`` or ``_release_rdds``, or a
+    ``rolling=`` keyword (the ownership-transfer mode)."""
+    raw = {"checkpoint", "_release_rdds"}
+    found = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").endswith("store"):
+            found += [f"{node.lineno}: import {a.name}" for a in node.names if a.name in raw]
+        elif isinstance(node, ast.Call):
+            f = node.func
+            if (f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)) in raw:
+                found.append(f"{node.lineno}: call")
+            if any(k.arg == "rolling" for k in node.keywords):
+                found.append(f"{node.lineno}: rolling=")
+    return found
 
 
 def _package_sources(skip=()) -> list[str]:
@@ -517,8 +591,10 @@ def _package_sources(skip=()) -> list[str]:
 
 def test_store_gates_and_crawl_day_use_the_store_layer():
     """The gate registry reaches store files only through the store
-    layer, and every library module takes checkpoints only through it,
-    so each one is released or documented as pinned."""
+    layer, and every library module takes checkpoints only through it
+    — through its ``pins`` scope, never the raw checkpoint or release
+    calls or the ownership-transfer ``rolling=`` mode — so each one is
+    released at the end of its scope or at its owner's next call."""
     for planted in (
         '    warehouse = spark.conf.get(w).removeprefix("file:")',
         "    for d in os.listdir(path):",
@@ -536,6 +612,25 @@ def test_store_gates_and_crawl_day_use_the_store_layer():
         _BARE_CHECKPOINT,
         "    4. The merged affected partitions are localCheckpoint-materialised",
     )
+    for planted in (
+        "from ..store import checkpoint, materialised",
+        "from coronavirus_dashboard_pipeline_etl_spark.store import (\n    _release_rdds,\n)",
+        "out, ids = store.checkpoint(df)",
+        "packed, _ = checkpoint(packed_lazy)",
+        "_release_rdds(sc, kept_ids | edge_ids)",
+        "store._release_rdds(sc, ids)",
+        'g = rolling_checkpoint(g, "cut_hot_spans", rolling=stats_out is None)',
+    ):
+        assert _pin_bypasses(planted), planted
+    for clean in (
+        "from ..store import pins, rolling_checkpoint",
+        'g = rolling_checkpoint(g, "cut_hot_spans")',
+        "with pins(\"crawl_day\") as pin:\n    packed = pin(packed_lazy)",
+        "pin.release(kept)",
+        'rolling = df.groupBy("k").agg(F.sum("x"))',
+        '"""blocks released by checkpoint(...) ids, rolling=False"""',
+    ):
+        assert _pin_bypasses(clean) == [], clean
     with open(os.path.join(PKG, "plans/gate_queries.py")) as fh:
         assert _matches(_GATE_PLUMBING, fh.read()) == []
     sources = _package_sources(skip=_CHECKPOINT_OWNERS)
@@ -543,6 +638,12 @@ def test_store_gates_and_crawl_day_use_the_store_layer():
     for rel in sources:
         with open(os.path.join(PKG, rel)) as fh:
             assert _matches(_BARE_CHECKPOINT, fh.read()) == [], rel
+    for rel in sources:
+        with open(os.path.join(PKG, rel)) as fh:
+            assert _pin_bypasses(fh.read()) == [], rel
+    # and the ownership-transfer mode has no entry point left
+    assert "rolling" not in inspect.signature(store.rolling_checkpoint).parameters
+    assert "cache_out" not in inspect.signature(minhash_probe_pairs).parameters
 
 
 #: string literals that spell the store format in either layout: the

@@ -43,7 +43,30 @@ def _parse_count(s: str) -> int:
     return int(m.group(0).replace(",", "")) if m else 0
 
 
-def measure(spark, fn, sf_dir: str) -> dict[str, float]:
+#: SQL metric -> output field of ``measure`` (the headline queries'
+#: shuffle and spill volume) and of ``measure_scan`` (the parquet scan)
+_QUERY_METRICS = {
+    "shuffle bytes written": "shuffle_bytes",
+    "shuffle records written": "shuffle_records",
+    "spill size": "spill_bytes",
+    "number of output rows": "scan_rows",
+}
+_SCAN_METRICS = {
+    "number of files read": "files_read",
+    "size of files read": "bytes_read",
+    "number of output rows": "rows",
+}
+#: metrics whose values are formatted sizes; the others are counts
+_SIZE_METRICS = {"shuffle bytes written", "spill size", "size of files read"}
+
+
+def _noop_metrics(spark, frame, fields: dict[str, str]) -> dict[str, float]:
+    """Write ``frame()`` to the noop sink and total the SQL metrics
+    named in ``fields`` (metric name -> output field) over every
+    execution the call spawned — an action may spawn several (eager
+    collects inside a query builder, e.g. centroid fitting), so they
+    are all attributed. Sizes and counts sum; 'number of output rows'
+    keeps its largest value."""
     # cache hygiene: a cached relation left by an earlier query would
     # let this one skip the very shuffles being measured (plan-keyed
     # CacheManager matches across gate invocations)
@@ -53,39 +76,35 @@ def measure(spark, fn, sf_dir: str) -> dict[str, float]:
         pass
     store = spark._jsparkSession.sharedState().statusStore()
     before = store.executionsCount()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    frame().write.format("noop").mode("overwrite").save()
     # the SQL status listener updates the store ASYNCHRONOUSLY from the
     # listener bus — drain it before reading or metrics under-report
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    out = {
-        "shuffle_bytes": 0.0,
-        "shuffle_records": 0,
-        "spill_bytes": 0.0,
-        "scan_rows": 0,
-    }
+    out = {f: 0.0 if m in _SIZE_METRICS else 0 for m, f in fields.items()}
     execs = store.executionsList()
-    # an action may spawn several executions (eager collects inside the
-    # query builder, e.g. centroid fitting); attribute them all
     for i in range(before, execs.size()):
         e = execs.apply(i)
         vals = store.executionMetrics(e.executionId())
-        mets = e.metrics()
-        it = mets.iterator()
+        it = e.metrics().iterator()
         while it.hasNext():
             m = it.next()
-            if not vals.contains(m.accumulatorId()):
+            name = m.name()
+            if name not in fields or not vals.contains(m.accumulatorId()):
                 continue
             v = str(vals.apply(m.accumulatorId()))
-            name = m.name()
-            if name == "shuffle bytes written":
-                out["shuffle_bytes"] += _parse_bytes(v)
-            elif name == "shuffle records written":
-                out["shuffle_records"] += _parse_count(v)
-            elif name == "spill size":
-                out["spill_bytes"] += _parse_bytes(v)
-            elif name == "number of output rows":
-                out["scan_rows"] = max(out["scan_rows"], _parse_count(v))
+            if name == "number of output rows":
+                out[fields[name]] = max(out[fields[name]], _parse_count(v))
+            elif name in _SIZE_METRICS:
+                out[fields[name]] += _parse_bytes(v)
+            else:
+                out[fields[name]] += _parse_count(v)
     return out
+
+
+def measure(spark, fn, sf_dir: str) -> dict[str, float]:
+    """Run the gate ``fn`` (built inside the measurement, so its eager
+    helper jobs count) and report its shuffle, spill and scan rows."""
+    return _noop_metrics(spark, lambda: fn(spark, sf_dir), _QUERY_METRICS)
 
 
 def measure_scan(spark, df) -> dict[str, float]:
@@ -95,34 +114,7 @@ def measure_scan(spark, df) -> dict[str, float]:
     collector. The frame must be fully constructed BEFORE the call so
     helper jobs (e.g. the pruned reader's bounded touched-bucket
     collect) don't pollute the measurement."""
-    try:
-        spark.catalog.clearCache()
-    except Exception:  # noqa: BLE001
-        pass
-    store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsCount()
-    df.write.format("noop").mode("overwrite").save()
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    out = {"files_read": 0, "bytes_read": 0.0, "rows": 0}
-    execs = store.executionsList()
-    for i in range(before, execs.size()):
-        e = execs.apply(i)
-        vals = store.executionMetrics(e.executionId())
-        mets = e.metrics()
-        it = mets.iterator()
-        while it.hasNext():
-            m = it.next()
-            if not vals.contains(m.accumulatorId()):
-                continue
-            v = str(vals.apply(m.accumulatorId()))
-            name = m.name()
-            if name == "size of files read":
-                out["bytes_read"] += _parse_bytes(v)
-            elif name == "number of files read":
-                out["files_read"] += _parse_count(v)
-            elif name == "number of output rows":
-                out["rows"] = max(out["rows"], _parse_count(v))
-    return out
+    return _noop_metrics(spark, lambda: df, _SCAN_METRICS)
 
 
 def prune_report(spark, sf_dir: str) -> list[str]:
