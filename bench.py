@@ -249,19 +249,17 @@ def _spark_probe(spark) -> float:
 def _bucketed_store_setup(spark, sf_dir: str) -> None:
     """Build the bucketed serving store once (untimed): ~1.8M long rows
     melted from lineitem, bucketed+sorted by (area_code, metric)."""
-    import shutil
-
     from pyspark.sql import functions as F
+
+    from coronavirus_dashboard_pipeline_etl_spark import store
 
     # a fresh session has an empty in-memory catalog, but a previous
     # bench run's table directory may survive in spark-warehouse/ —
     # saveAsTable would then fail with LOCATION_ALREADY_EXISTS. The
     # table is a bench scratch artifact: clear the stale location.
     if not spark.catalog.tableExists(BUCKET_TABLE):
-        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-            "file:"
-        )
-        shutil.rmtree(f"{warehouse}/{BUCKET_TABLE}", ignore_errors=True)
+        warehouse = spark.conf.get("spark.sql.warehouse.dir")
+        store.delete(store.join(warehouse, BUCKET_TABLE))
 
     from coronavirus_dashboard_pipeline_etl_spark.operators import melt
     from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (

@@ -65,26 +65,6 @@ MIN_DISTINCT_RATIO = 0.5
 #: packing context, in tokens
 CONTEXT_LEN = 512
 
-#: When ``tools/plan_audit.py`` sets this to a list, pipelines that
-#: eagerly checkpoint intermediate stages record each stage's
-#: pre-checkpoint physical plan here as ``(stage label, plan string)``:
-#: their returned frame is a union of checkpoint reads, so its own plan
-#: shows none of the real execution shape. None (the default) makes
-#: ``_audit_stage`` a no-op, at no cost on the serving path.
-PLAN_STAGES: list[tuple[str, str]] | None = None
-
-
-def _audit_stage(stage: str, df: DataFrame) -> None:
-    """Record ``df``'s physical plan for the plan auditor. The plan
-    string is captured now (planning only, no job runs): the state
-    writes that follow replace the very files this plan references, so
-    a frame kept for later would no longer plan."""
-    if PLAN_STAGES is not None:
-        PLAN_STAGES.append(
-            (stage, df._jdf.queryExecution().executedPlan().toString())
-        )
-
-
 def _advance_state(
     packed: DataFrame, fp_path: str, index_path: str, corpus_path: str
 ) -> None:
@@ -154,9 +134,7 @@ def crawl_day(
             # the survivors anti-join): materialise them once instead of
             # re-running the store anti-join under each consumer; the
             # blocks are dead once the packed wave is materialised
-            kept_e_lazy = dedup_incremental(batch, seen)
-            _audit_stage(f"wave{wave_no}_kept_e", kept_e_lazy)
-            kept_e = pin(kept_e_lazy)
+            kept_e = pin(dedup_incremental(batch, seen))
             near_ids = (
                 minhash_probe_pairs(
                     kept_e,
@@ -177,16 +155,14 @@ def crawl_day(
                 & (F.col("distinct_ratio") >= MIN_DISTINCT_RATIO)
                 & (F.col("n_tokens") <= CONTEXT_LEN)
             )
-            packed_lazy = assign_packs(
-                kept,
-                tokens_col="n_tokens",
-                context_len=CONTEXT_LEN,
-                order_cols=("doc_id",),
+            packed = pin(
+                assign_packs(
+                    kept,
+                    tokens_col="n_tokens",
+                    context_len=CONTEXT_LEN,
+                    order_cols=("doc_id",),
+                )
             )
-            # the whole wave is one lazy plan here: hand it to the plan
-            # auditor before the checkpoint hides it
-            _audit_stage(f"wave{wave_no}", packed_lazy)
-            packed = pin(packed_lazy)
             pin.release(kept_e)
             _advance_state(packed, fp_path, index_path, corpus_path)
             # the next wave's state view: exactly the rows just appended

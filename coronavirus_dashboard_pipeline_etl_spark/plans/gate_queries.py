@@ -55,7 +55,7 @@ from ..operators import (
 from ..operators.nesting import wrap_payload
 from ..operators.util import ts_micros, with_scalar
 from ..sources import load_table
-from .crawl import _audit_stage, crawl_day
+from .crawl import crawl_day
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -12883,16 +12883,14 @@ def pipe23_bloom_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = None
     with store.pins("pipe23_bloom_loop") as pin:
         for wave_no, wave in _recrawl_waves(docs).items():
-            kept_lazy = dedup_incremental_bloom(
-                wave,
-                fp_store_pruned(spark, fp_path, wave),
-                m_bits=m_bits,
-                bits=spark.read.parquet(sk_path),
+            kept = pin(
+                dedup_incremental_bloom(
+                    wave,
+                    fp_store_pruned(spark, fp_path, wave),
+                    m_bits=m_bits,
+                    bits=spark.read.parquet(sk_path),
+                )
             )
-            # hand the wave's real plan (sketch prefilter + pruned confirm
-            # scan) to the plan auditor before the checkpoint hides it
-            _audit_stage(f"wave{wave_no}", kept_lazy)
-            kept = pin(kept_lazy)
             # advance BOTH pieces of state: fps append into their buckets,
             # survivor bits OR-merged into the sketch (eager materialise
             # before overwriting the path the plan reads — d14b pattern)
@@ -13001,19 +12999,19 @@ def d14c_tombstone_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wave-sized appends + tombstones, the store is never rewritten
     band_index_upsert_write(recrawl, path, k=16, bands=2)
     probe_batch = docs.filter(F.col("doc_id") % 5 == 0)
-    pairs_lazy = minhash_probe_pairs(
-        probe_batch,
-        docs.filter(F.col("doc_id") % 5 != 0),
-        k=16,
-        bands=2,
-        threshold=0.5,
-        corpus_bands=band_index_pruned(spark, path, probe_batch, k=16, bands=2),
-    )
-    _audit_stage("probe_merge_on_read", pairs_lazy)
     # materialise the probe and the merge-on-read stats BEFORE the fold
     # rewrites the files their plans reference
     with store.pins("d14c_tombstone_upsert") as pin:
-        pairs = pin(pairs_lazy)
+        pairs = pin(
+            minhash_probe_pairs(
+                probe_batch,
+                docs.filter(F.col("doc_id") % 5 != 0),
+                k=16,
+                bands=2,
+                threshold=0.5,
+                corpus_bands=band_index_pruned(spark, path, probe_batch, k=16, bands=2),
+            )
+        )
         stats_pre = pin(
             band_index_read(spark, path).agg(
                 F.count(F.lit(1)).alias("idx_rows"),
@@ -13093,11 +13091,11 @@ def pipe24_fp_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     with store.pins("pipe24_fp_compact") as pin:
         for wave_no in (1, 2, 3):
             wave = docs.filter(F.col("doc_id") % 4 == wave_no)
-            kept_lazy = dedup_incremental(
-                wave, fp_store_pruned(spark, path, wave)
-            ).select("doc_id", "lang", "fp", F.lit(wave_no).alias("wave"))
-            _audit_stage(f"wave{wave_no}", kept_lazy)
-            kept = pin(kept_lazy)
+            kept = pin(
+                dedup_incremental(wave, fp_store_pruned(spark, path, wave)).select(
+                    "doc_id", "lang", "fp", F.lit(wave_no).alias("wave")
+                )
+            )
             fp_store_write(kept.select("fp"), path)
             out = kept if out is None else out.unionByName(kept)
     rep = compact_dedup_store(spark, path, max_files_per_bucket=1)
@@ -13304,17 +13302,17 @@ def d14d_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     band_index_upsert_write(recrawl, path, k=16, bands=2, buckets=16)
     rep1 = compact_dedup_store(spark, path, incremental=True, bucket_budget=4)
     tombs_kept_mid = store.is_dir(tombstones)
-    view_mid_lazy = (
+    # materialise the mid-fold view BEFORE run 2 rewrites its files
+    view_mid = store.rolling_checkpoint(
         band_index_read(spark, path)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_band_rows"),
             F.min("sig").alias("min_sig"),
-        )
+        ),
+        "d14d_incremental_fold",
+        eager=True,
     )
-    _audit_stage("view_after_partial_fold", view_mid_lazy)
-    # materialise the mid-fold view BEFORE run 2 rewrites its files
-    view_mid = store.rolling_checkpoint(view_mid_lazy, "d14d_incremental_fold", eager=True)
     rep2 = compact_dedup_store(spark, path, incremental=True)
     raw_rows = spark.read.parquet(path).count()
     final_rows = band_index_read(spark, path).count()
