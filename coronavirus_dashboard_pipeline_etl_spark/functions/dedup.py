@@ -67,6 +67,25 @@ def exact_dedup(
     )
 
 
+def _shingles(text_col: str) -> Column:
+    """Distinct non-empty word shingles of ``text_col``: the set every
+    MinHash signature is hashed from and every exact-Jaccard verify
+    intersects."""
+    # drop empty-string tokens: split("", " ") yields [""], which would
+    # give empty/whitespace-only docs a real signature built from the
+    # '' token — they would then all collide as spurious 'near-dups'.
+    # With '' removed their hash set is empty and the signature is NULL
+    # (array_min([]) / size-guard), which the pair generators drop.
+    return F.filter(F.array_distinct(tokens(text_col)), lambda t: t != F.lit(""))
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard of the distinct-element array columns ``a`` and
+    ``b``: |a ∩ b| / (|a| + |b| - |a ∩ b|)."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter.cast("double") / (F.size(a) + F.size(b) - inter).cast("double")
+
+
 def _token_hashes(text_col: str, base_hash: str = "md5") -> Column:
     """Distinct word-shingle base hashes, reduced mod P.
 
@@ -77,14 +96,7 @@ def _token_hashes(text_col: str, base_hash: str = "md5") -> Column:
     Signatures differ between the two families, but any MinHash theory
     guarantee (collision prob = Jaccard) holds identically for either.
     """
-    # drop empty-string tokens: split("", " ") yields [""], which would
-    # give empty/whitespace-only docs a real signature built from the
-    # '' token — they would then all collide as spurious 'near-dups'.
-    # With '' removed their hash set is empty and the signature is NULL
-    # (array_min([]) / size-guard), which the pair generators drop.
-    toks = F.filter(
-        F.array_distinct(tokens(text_col)), lambda t: t != F.lit("")
-    )
+    toks = _shingles(text_col)
     if base_hash == "xxhash64":
         # xxhash64 is signed 64-bit: pmod keeps the residue non-negative
         return F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(MERSENNE_P)))
@@ -148,6 +160,25 @@ def lsh_candidate_pairs(
     degenerate '' bucket in every band, and minhash similarity is
     undefined for an empty set anyway.
     """
+    return _bucket_pairs(_band_rows(sigs, id_col, id_col, k, bands), id_col, max_bucket)
+
+
+def _band_rows(
+    sigs: DataFrame,
+    id_col: str,
+    out_id: str,
+    k: int,
+    bands: int,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """Explode a MinHash signature table into LSH band rows
+    ``(out_id, *keep, band, sig)``, band ``b``'s sig joining its
+    ``k // bands`` minhash columns with ``_`` — the one banding of the
+    pair generator, the band index and its pruned read, and the batch
+    and stream probes (``keep`` carries the stream probe's token array
+    through the explode). Empty-token docs (NULL ``mh0``) emit no rows.
+    Raises before any Spark job runs unless ``k`` is a positive
+    multiple of ``bands``."""
     if bands < 1 or k % bands:
         raise ValueError(
             f"k={k} must be a positive multiple of bands={bands} "
@@ -155,19 +186,20 @@ def lsh_candidate_pairs(
             "whole corpus in ONE bucket, an all-pairs join; k % bands "
             "would silently ignore the trailing minhash columns)"
         )
-    rows_per_band = k // bands
-    band_cols = []
-    for bidx in range(bands):
-        members = [F.col(f"mh{i}") for i in range(bidx * rows_per_band, (bidx + 1) * rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(bidx).alias("band"), F.concat_ws("_", *members).alias("sig"))
+    rows = k // bands
+    cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws("_", *[F.col(f"mh{i}") for i in range(b * rows, (b + 1) * rows)])
+            .alias("sig"),
         )
-    exploded = (
+        for b in range(bands)
+    ]
+    return (
         sigs.filter(F.col("mh0").isNotNull())
-        .select(F.col(id_col), F.explode(F.array(*band_cols)).alias("b"))
-        .select(id_col, F.col("b.band").alias("band"), F.col("b.sig").alias("sig"))
+        .select(F.col(id_col).alias(out_id), *keep, F.explode(F.array(*cols)).alias("b"))
+        .select(out_id, *keep, F.col("b.band").alias("band"), F.col("b.sig").alias("sig"))
     )
-    return _bucket_pairs(exploded, id_col, max_bucket)
 
 
 def _banded_pairs(
@@ -370,21 +402,57 @@ def simhash_candidate_pairs(
     )
 
 
-def _jaccard_pairs_prefix(
-    toks: DataFrame,
-    id_col: str,
-    block_cols: tuple[str, ...],
-    threshold: float,
-    max_block: int | None,
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    block_cols: tuple[str, ...] = ("lang",),
+    threshold: float = 0.5,
+    max_block: int | None = 100_000,
 ) -> DataFrame:
-    """PPJoin candidate generation + exact verification (see
-    ngram_jaccard_pairs docstring). ``toks`` carries (id, blocks,
-    toks-array-distinct)."""
-    from pyspark.sql import Window
+    """Blocked pairwise word-set Jaccard. Emits (id_a, id_b, jaccard).
+    EXACT — candidate generation never drops a qualifying pair; only
+    the verified-true pairs are returned.
 
-    sized = toks.select(
-        "*", F.size("toks").alias("__sz")
-    ).filter(F.col("__sz") > 0)
+    PPJoin-style prefix filtering (Bayardo WWW'07 / Vernica SIGMOD'10,
+    the standard distributed exact set-similarity join). Tokens get a
+    global rarity order (one corpus-wide frequency aggregate); each doc
+    keeps only its ``|d| - ceil(t*|d|) + 1`` RAREST tokens as its
+    prefix (if two sets share no prefix token, their overlap is
+    < t*|union|, so Jaccard < t — no false negatives); candidates form
+    by equi-join on (block, prefix-token) with the |b| in
+    [ceil(t*|a|), floor(|a|/t)] length filter, then exact Jaccard
+    verification on the full arrays. Every stage is linear in corpus
+    size except pair verification, which is linear in CANDIDATES —
+    bounded by prefix-token co-occurrence (rare tokens), not by block
+    cardinality. This is what survives a block with millions of docs,
+    where any length-band scheme is still quadratic per cell.
+
+    ``max_block`` is a loud guard, not a silent cap: if any prefix-token
+    posting list exceeds it the operator raises (one cheap aggregate
+    action — far cheaper than the quadratic join it prevents) and names
+    the offenders; route such corpora through the LSH path.
+    """
+    from ..operators.util import spread
+
+    # spread the RAW rows first so tokenise + array_distinct run on
+    # the wide layout (a spread placed after the projection would run
+    # the tokenise on the scan's map side); the token arrays also feed
+    # the exact-verify sides downstream. No-op at real file counts.
+    sized = (
+        spread(
+            df.select(
+                F.col(id_col), *[F.col(c) for c in block_cols], F.col(text_col)
+            )
+        )
+        .select(
+            F.col(id_col),
+            *[F.col(c) for c in block_cols],
+            F.array_distinct(tokens(text_col)).alias("toks"),
+        )
+        .select("*", F.size("toks").alias("__sz"))
+        .filter(F.col("__sz") > 0)
+    )
     # prefix length p = sz - ceil(t*sz) + 1: if two sets share no
     # prefix token under a TOTAL global order, every common token sits
     # in both suffixes, so overlap <= ceil(t*sz)-1 < t*sz <= t*|union|
@@ -418,7 +486,7 @@ def _jaccard_pairs_prefix(
         )
         if oversized:
             raise RuntimeError(
-                "ngram_jaccard_pairs[prefix]: posting list(s) over "
+                "ngram_jaccard_pairs: posting list(s) over "
                 f"max_block={max_block}: {[r.asDict() for r in oversized]}; "
                 "use lsh_candidate_pairs for corpora with shared-prefix "
                 "hubs this size"
@@ -447,135 +515,10 @@ def _jaccard_pairs_prefix(
     lb = arrays.select(
         F.col(id_col).alias("id_b"), F.col("toks").alias("__tb")
     )
-    inter = F.size(F.array_intersect("__ta", "__tb"))
-    union = F.size("__ta") + F.size("__tb") - inter
-    jac = inter.cast("double") / union.cast("double")
     return (
         cand.join(la, "id_a")
         .join(lb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_cols: tuple[str, ...] = ("lang",),
-    threshold: float = 0.5,
-    length_banding: bool = True,
-    max_block: int | None = 100_000,
-    strategy: str = "prefix",
-) -> DataFrame:
-    """Blocked pairwise word-set Jaccard. Emits (id_a, id_b, jaccard).
-    EXACT under both strategies — candidate generation never drops a
-    qualifying pair; only the verified-true pairs are returned.
-
-    ``strategy="prefix"`` (default — the scale path): PPJoin-style
-    prefix filtering (Bayardo WWW'07 / Vernica SIGMOD'10, the standard
-    distributed exact set-similarity join). Tokens get a global
-    rarity order (one corpus-wide frequency aggregate); each doc keeps
-    only its ``|d| - ceil(t*|d|) + 1`` RAREST tokens as its prefix
-    (if two sets share no prefix token, their overlap is < t*|union|,
-    so Jaccard < t — no false negatives); candidates form by
-    equi-join on (block, prefix-token) with the |b| in
-    [ceil(t*|a|), floor(|a|/t)] length filter, then exact Jaccard
-    verification on the full arrays. Every stage is linear in corpus
-    size except pair verification, which is linear in CANDIDATES —
-    bounded by prefix-token co-occurrence (rare tokens), not by block
-    cardinality. This is what survives a block with millions of docs,
-    where any length-band scheme is still quadratic per cell.
-
-    ``strategy="band"``: the small-corpus tool — caller blocks PLUS a
-    geometric token-count bucket (base ~1/t, widened 1% so float log
-    rounding can never push a qualifying pair two buckets apart; each
-    left row probes buckets {b-1, b, b+1} via a 3-element explode).
-    Quadratic per (block, length-bucket) cell; cheaper than prefix on
-    corpora small enough that cells fit (no freq aggregate, no
-    per-pair candidate dedup).
-
-    ``max_block`` is a loud guard, not a silent cap: if any candidate
-    cell (length-band cell, or prefix-token posting list) exceeds it
-    the operator raises (one cheap aggregate action — far cheaper than
-    the quadratic join it prevents) and names the offenders; route
-    such corpora through the LSH path.
-    """
-    import math
-
-    if strategy not in ("prefix", "band"):
-        raise ValueError(f"strategy must be prefix|band, got {strategy!r}")
-    from ..operators.util import spread
-
-    # spread the RAW rows first so tokenise + array_distinct run on
-    # the wide layout (a spread placed after the projection would run
-    # the tokenise on the scan's map side); the token arrays also feed
-    # the exact-verify sides downstream. No-op at real file counts.
-    toks = spread(
-        df.select(
-            F.col(id_col), *[F.col(c) for c in block_cols], F.col(text_col)
-        )
-    ).select(
-        F.col(id_col),
-        *[F.col(c) for c in block_cols],
-        F.array_distinct(tokens(text_col)).alias("toks"),
-    )
-    if strategy == "prefix":
-        return _jaccard_pairs_prefix(
-            toks, id_col, block_cols, threshold, max_block
-        )
-    if length_banding:
-        base = 1.01 / threshold
-        bucket = F.floor(
-            F.log(F.greatest(F.size("toks"), F.lit(1)).cast("double"))
-            / math.log(base)
-        ).alias("__len_bucket")
-        toks = toks.select("*", bucket)
-
-    if max_block is not None:
-        cell_cols = list(block_cols) + (
-            ["__len_bucket"] if length_banding else []
-        )
-        oversized = (
-            toks.groupBy(*cell_cols)
-            .count()
-            .filter(F.col("count") > max_block)
-            .limit(5)
-            .collect()
-        )
-        if oversized:
-            raise RuntimeError(
-                f"ngram_jaccard_pairs: block(s) over max_block={max_block}: "
-                f"{[r.asDict() for r in oversized]}; use lsh_candidate_pairs "
-                "for corpora with blocks this size"
-            )
-
-    left, right = toks.alias("l"), toks.alias("r")
-    cond = [F.col(f"l.{c}") == F.col(f"r.{c}") for c in block_cols]
-    cond.append(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-    if length_banding:
-        b = F.col("__len_bucket")
-        left = (
-            toks.withColumn(
-                "__probe", F.explode(F.array(b - 1, b, b + 1))
-            ).alias("l")
-        )
-        cond = [F.col(f"l.{c}") == F.col(f"r.{c}") for c in block_cols]
-        cond.append(F.col("l.__probe") == F.col("r.__len_bucket"))
-        cond.append(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-    inter = F.size(F.array_intersect(F.col("l.toks"), F.col("r.toks")))
-    union = (
-        F.size(F.col("l.toks")) + F.size(F.col("r.toks")) - inter
-    )
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        left.join(right, on=cond)
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            jac.alias("jaccard"),
-        )
+        .select("id_a", "id_b", _jaccard("__ta", "__tb").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -914,33 +857,6 @@ def dedup_incremental(
     )
 
 
-def _band_rows(
-    sigs: DataFrame, id_col: str, out_id: str, k: int, bands: int
-) -> DataFrame:
-    """Explode a MinHash signature table into LSH band rows
-    ``(out_id, band, sig)`` — the index/probe-side building block
-    shared by ``minhash_band_index`` and ``minhash_probe_pairs``.
-    Empty-token docs (NULL ``mh0``) emit no rows."""
-    rows_per_band = k // bands
-    cols = []
-    for bidx in range(bands):
-        members = [
-            F.col(f"mh{i}")
-            for i in range(bidx * rows_per_band, (bidx + 1) * rows_per_band)
-        ]
-        cols.append(
-            F.struct(
-                F.lit(bidx).alias("band"),
-                F.concat_ws("_", *members).alias("sig"),
-            )
-        )
-    return (
-        sigs.filter(F.col("mh0").isNotNull())
-        .select(F.col(id_col).alias(out_id), F.explode(F.array(*cols)).alias("b"))
-        .select(out_id, F.col("b.band").alias("band"), F.col("b.sig").alias("sig"))
-    )
-
-
 def minhash_band_index(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -962,10 +878,6 @@ def minhash_band_index(
     built with are part of its identity: probes and upserts must use
     the same values (the rows cannot express them — keep them with the
     table's metadata)."""
-    if bands < 1 or k % bands:
-        raise ValueError(
-            f"k={k} must be a positive multiple of bands={bands}"
-        )
     sigs = minhash_signatures(df, id_col, text_col, k, base_hash)
     return _band_rows(sigs, id_col, id_col, k, bands)
 
@@ -1260,7 +1172,6 @@ def minhash_probe_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     base_hash: str = "md5",
-    corpus_sigs: DataFrame | None = None,
     corpus_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup: probe a new batch against an indexed
@@ -1270,10 +1181,9 @@ def minhash_probe_pairs(
     token-set Jaccard with some corpus doc is >= ``threshold``.
 
     PROBE-shaped for 100 TB: the corpus side is INDEX STATE — its
-    signature table (and in production its exploded band-bucket table)
-    is computed once per release, persisted, and only ever equi-joined
-    on the band key; pass it via ``corpus_sigs`` to skip recompute, or
-    pass the exploded band-bucket table itself via ``corpus_bands``
+    exploded band-bucket table is computed once per release, persisted,
+    and only ever equi-joined on the band key; pass it via
+    ``corpus_bands`` to skip the corpus signature build
     (``(id_col, band, sig)`` rows — ``minhash_band_index`` builds it,
     ``minhash_index_upsert`` maintains it across crawl waves; the index
     MUST have been built with the same ``k``/``bands``/``base_hash``,
@@ -1316,13 +1226,8 @@ def minhash_probe_pairs(
     snapshot shares the single-threaded-session contract documented on
     ``store._persistent_rdd_ids``.
     """
-    if bands < 1 or k % bands:
-        raise ValueError(
-            f"k={k} must be a positive multiple of bands={bands} "
-            "(bands > k would make every band signature empty and the "
-            "candidate join a full cross product)"
-        )
     sig_b = minhash_signatures(batch, id_col, text_col, k, base_hash)
+    batch_band_rows = _band_rows(sig_b, id_col, "new_id", k, bands)
     if corpus_bands is not None:
         # structural sanity (round-12 advice): an index built with
         # different k/bands/base_hash silently yields false negatives
@@ -1360,15 +1265,8 @@ def minhash_probe_pairs(
             F.col(id_col).alias("old_id"), band_checked, "sig"
         )
     else:
-        sig_c = (
-            corpus_sigs
-            if corpus_sigs is not None
-            else minhash_signatures(corpus, id_col, text_col, k, base_hash)
-        )
+        sig_c = minhash_signatures(corpus, id_col, text_col, k, base_hash)
         corpus_band_rows = _band_rows(sig_c, id_col, "old_id", k, bands)
-
-    def band_rows(sigs: DataFrame, out_id: str) -> DataFrame:
-        return _band_rows(sigs, id_col, out_id, k, bands)
 
     # Materialise the candidate pairs ONCE (lazy localCheckpoint, the
     # simhash_candidate_pairs pattern): they feed three consumers — the
@@ -1378,38 +1276,25 @@ def minhash_probe_pairs(
     # 11.5 s at sf1). The materialised rows are candidate-pair-sized;
     # the NEXT probe on this context releases them.
     cand = rolling_checkpoint(
-        band_rows(sig_b, "new_id")
-        .join(corpus_band_rows, ["band", "sig"])
+        batch_band_rows.join(corpus_band_rows, ["band", "sig"])
         .select("new_id", "old_id")
         .distinct(),
         "minhash_probe_pairs",
     )
 
     def tok_arrays(df: DataFrame, out_id: str, out_toks: str) -> DataFrame:
-        toks = F.filter(
-            F.array_distinct(tokens(text_col)), lambda t: t != F.lit("")
-        )
-        return df.select(F.col(id_col).alias(out_id), toks.alias(out_toks))
+        # candidate-sized fetch: only docs that appear in a candidate
+        # pair are tokenised for verification
+        return df.select(
+            F.col(id_col).alias(out_id), _shingles(text_col).alias(out_toks)
+        ).join(cand.select(out_id).distinct(), out_id, "left_semi")
 
-    # candidate-sized fetch: only docs that appear in a candidate pair
-    # are tokenised for verification
-    tb = tok_arrays(batch, "new_id", "__ta").join(
-        cand.select("new_id").distinct(), "new_id", "left_semi"
-    )
-    tc = tok_arrays(corpus, "old_id", "__tb").join(
-        cand.select("old_id").distinct(), "old_id", "left_semi"
-    )
-    inter = F.size(F.array_intersect("__ta", "__tb")).cast("double")
-    union = (
-        F.size("__ta") + F.size("__tb") - F.size(F.array_intersect("__ta", "__tb"))
-    ).cast("double")
-    result = (
-        cand.join(tb, "new_id")
-        .join(tc, "old_id")
-        .select("new_id", "old_id", (inter / union).alias("jaccard"))
+    return (
+        cand.join(tok_arrays(batch, "new_id", "__ta"), "new_id")
+        .join(tok_arrays(corpus, "old_id", "__tb"), "old_id")
+        .select("new_id", "old_id", _jaccard("__ta", "__tb").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    return result
 
 
 def editdist_pairs(

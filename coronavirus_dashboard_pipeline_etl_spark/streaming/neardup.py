@@ -1,9 +1,12 @@
 """Streaming near-duplicate probe: a new-document stream checks itself
 against a STATIC indexed corpus with stream-static MinHash band joins.
 
-The Structured-Streaming twin of ``functions.dedup.minhash_probe_pairs``
-(the daily-crawl-vs-corpus pass): the corpus band index and candidate
-token table are computed ONCE per release on the static side; each
+The Structured-Streaming form of ``functions.dedup.minhash_probe_pairs``
+(the daily-crawl-vs-corpus pass), built from the same MinHash toolkit
+in ``functions/dedup.py``: ``minhash_signatures``, the ``_band_rows``
+banding (and its ``k``/``bands`` guard), the ``_shingles`` token array
+and the ``_jaccard`` verify. The corpus band index and candidate token
+table are computed ONCE per release on the static side; each
 micro-batch then pays only
 
 * map-side signature + band-row expressions over the batch;
@@ -27,42 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.dedup import hash_params, minhash_signatures
-from ..functions.text import tokens
-
-
-def _band_rows(
-    sigs: DataFrame, out_id: str, id_col: str, k: int, bands: int
-) -> DataFrame:
-    """Explode mh0..mh{k-1} into (id, band, sig) rows — the shared LSH
-    banding; ``minhash_probe_pairs`` builds the same rows on the batch
-    path (functions/dedup.py)."""
-    rows_per_band = k // bands
-    cols = []
-    for bidx in range(bands):
-        members = [
-            F.col(f"mh{i}")
-            for i in range(bidx * rows_per_band, (bidx + 1) * rows_per_band)
-        ]
-        cols.append(
-            F.struct(
-                F.lit(bidx).alias("band"),
-                F.concat_ws("_", *members).alias("sig"),
-            )
-        )
-    keep = [F.col(c) for c in sigs.columns if c not in (id_col,)]
-    return (
-        sigs.filter(F.col("mh0").isNotNull())
-        .select(
-            F.col(id_col).alias(out_id),
-            *keep,
-            F.explode(F.array(*cols)).alias("b"),
-        )
-        .select(
-            out_id, *[c for c in sigs.columns if c != id_col],
-            F.col("b.band").alias("band"), F.col("b.sig").alias("sig"),
-        )
-    )
+from ..functions.dedup import _band_rows, _jaccard, _shingles, minhash_signatures
 
 
 def probe_neardup_stream(
@@ -79,45 +47,30 @@ def probe_neardup_stream(
     ``corpus``; emits ``(new_id, old_id, jaccard)`` for verified pairs
     >= ``threshold``. Works identically on a batch frame (the gate /
     oracle path)."""
-    if k % bands:
-        raise ValueError(f"k={k} not divisible by bands={bands}")
-    tok_arr = F.filter(
-        F.array_distinct(tokens(text_col)), lambda t: t != F.lit("")
-    )
-
     # static index: corpus band rows + token arrays (computed once per
     # release in production; re-used across every micro-batch)
     sig_c = minhash_signatures(
         corpus.select(id_col, text_col), id_col, text_col, k, base_hash
-    ).select(id_col, *[f"mh{i}" for i in range(k)])
-    corpus_bands = _band_rows(sig_c, "old_id", id_col, k, bands).select(
-        "old_id", "band", "sig"
     )
+    corpus_bands = _band_rows(sig_c, id_col, "old_id", k, bands)
     corpus_toks = corpus.select(
-        F.col(id_col).alias("old_id"), tok_arr.alias("__tb")
+        F.col(id_col).alias("old_id"), _shingles(text_col).alias("__tb")
     )
 
     # stream side: map-side signatures; token array rides through the
     # band explode so the verify needs no second pass over the stream
     sig_s = minhash_signatures(
         stream.select(id_col, text_col), id_col, text_col, k, base_hash
-    ).select(id_col, tok_arr.alias("__ta"), *[f"mh{i}" for i in range(k)])
-    stream_bands = _band_rows(sig_s, "new_id", id_col, k, bands).select(
-        "new_id", "__ta", "band", "sig"
-    )
+    ).select(id_col, _shingles(text_col).alias("__ta"), *[f"mh{i}" for i in range(k)])
+    stream_bands = _band_rows(sig_s, id_col, "new_id", k, bands, keep=("__ta",))
 
     cand = (
         stream_bands.join(corpus_bands, ["band", "sig"])
         .select("new_id", "old_id", "__ta")
         .dropDuplicates(["new_id", "old_id"])
     )
-    inter = F.size(F.array_intersect("__ta", "__tb")).cast("double")
-    union = (
-        F.size("__ta") + F.size("__tb")
-        - F.size(F.array_intersect("__ta", "__tb"))
-    ).cast("double")
     return (
         cand.join(corpus_toks, "old_id")
-        .select("new_id", "old_id", (inter / union).alias("jaccard"))
+        .select("new_id", "old_id", _jaccard("__ta", "__tb").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )

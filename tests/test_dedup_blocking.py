@@ -1,5 +1,8 @@
 """Scale guards on the exact Jaccard pair tool (functions/dedup.py)."""
 
+import ast
+import os
+
 import pytest
 from pyspark.sql import Row
 
@@ -27,36 +30,25 @@ def _docs(spark, n=60):
     return spark.createDataFrame(rows)
 
 
-def test_all_strategies_agree(spark):
+def test_prefix_matches_brute_force_jaccard(spark):
+    """The prefix-filtered join returns exactly the pairs a brute-force
+    set-Jaccard over every same-block pair finds, with equal values."""
     docs = _docs(spark)
-    prefix = ngram_jaccard_pairs(docs, block_cols=("lang",), max_block=None)
-    banded = ngram_jaccard_pairs(
-        docs, block_cols=("lang",), max_block=None, strategy="band"
+    got = ngram_jaccard_pairs(docs, block_cols=("lang",), max_block=None)
+    rows = [(r.doc_id, r.lang, set(r.text.split(" "))) for r in docs.collect()]
+    expect = sorted(
+        (ia, ib, len(ta & tb) / len(ta | tb))
+        for ia, la, ta in rows
+        for ib, lb, tb in rows
+        if la == lb and ia < ib and len(ta & tb) / len(ta | tb) >= 0.5
     )
-    unbanded = ngram_jaccard_pairs(
-        docs, block_cols=("lang",), length_banding=False, max_block=None,
-        strategy="band",
-    )
-    expect = sorted(map(tuple, unbanded.collect()))
-    assert sorted(map(tuple, banded.collect())) == expect
-    assert sorted(map(tuple, prefix.collect())) == expect
-    assert len(expect) >= 1  # the planted near-dup pair survives
-
-
-def test_single_lang_corpus_joins_on_length_bucket(spark):
-    """band strategy: lang-only blocking must NOT plan an unrestricted
-    self-join — the equi-join keys must include the length bucket."""
-    docs = _docs(spark)
-    out = ngram_jaccard_pairs(
-        docs, block_cols=("lang",), max_block=None, strategy="band"
-    )
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "__len_bucket" in plan and "__probe" in plan
+    assert sorted(map(tuple, got.collect())) == expect
+    assert (60, 61, 7 / 9) in expect  # the planted near-dup pair survives
 
 
 def test_prefix_strategy_joins_on_posting_token(spark):
-    """prefix strategy (default): candidates must equi-join on the
-    prefix token, and verification must run on a deduped pair set."""
+    """Candidates must equi-join on the prefix token, and verification
+    must run on a deduped pair set."""
     docs = _docs(spark)
     out = ngram_jaccard_pairs(docs, block_cols=("lang",), max_block=None)
     plan = out._jdf.queryExecution().analyzed().toString()
@@ -66,10 +58,6 @@ def test_prefix_strategy_joins_on_posting_token(spark):
 
 def test_max_block_guard_raises_loudly(spark):
     docs = _docs(spark, n=30)
-    with pytest.raises(RuntimeError, match="lsh_candidate_pairs"):
-        ngram_jaccard_pairs(
-            docs, block_cols=("lang",), max_block=3, strategy="band"
-        )
     with pytest.raises(RuntimeError, match="lsh_candidate_pairs"):
         # a token shared by every doc's prefix overflows a posting list
         ngram_jaccard_pairs(docs, block_cols=("lang",), max_block=1)
@@ -424,12 +412,10 @@ def test_dedup_components_nonconvergence_releases_checkpoints(spark):
 
 def test_minhash_probe_pairs_batch_vs_corpus(spark):
     """Probe-shaped incremental near-dup: batch docs match corpus docs
-    only (never batch-batch or corpus-corpus), verified Jaccard is
-    exact, and a precomputed corpus signature table (the persisted
-    index state) gives identical results."""
+    only (never batch-batch or corpus-corpus) and verified Jaccard is
+    exact."""
     from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
         minhash_probe_pairs,
-        minhash_signatures,
     )
 
     corpus = spark.createDataFrame(
@@ -451,15 +437,6 @@ def test_minhash_probe_pairs_batch_vs_corpus(spark):
     assert (10, 1) in rows and rows[(10, 1)] == 1.0   # exact duplicate
     assert all(nid in (10,) for nid, _ in rows)       # 11/12 match nothing
     assert all(oid in (1, 3) for _, oid in rows)      # doc 2 never matches
-
-    # the persisted-index path: precomputed corpus signatures, same result
-    sig_c = minhash_signatures(corpus, k=16)
-    got2 = minhash_probe_pairs(
-        batch, corpus, k=16, bands=4, threshold=0.5, corpus_sigs=sig_c
-    )
-    assert {(r.new_id, r.old_id, r.jaccard) for r in got2.collect()} == {
-        (n, o, j) for (n, o), j in rows.items()
-    }
 
 
 def test_pq_train_encode_adc_vs_pure_python(spark):
@@ -1735,3 +1712,103 @@ def test_store_overwrite_refuses_dynamic_partition_mode(spark, tmp_path):
     band_index_write(
         minhash_band_index(d, k=8, bands=2), str(tmp_path / "bi2"), mode="append"
     )
+
+
+@pytest.mark.parametrize("bands", [0, -4, 3, 32])
+@pytest.mark.parametrize(
+    "op",
+    ["lsh_candidate_pairs", "minhash_band_index", "minhash_probe_pairs", "probe_neardup_stream"],
+)
+def test_band_guard_raises_before_any_job(spark, op, bands):
+    """Every banded-MinHash entry point refuses a ``bands`` that does
+    not split ``k=16`` into whole positive bands, before a Spark job
+    runs."""
+    from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
+        lsh_candidate_pairs,
+        minhash_band_index,
+        minhash_probe_pairs,
+        minhash_signatures,
+    )
+    from coronavirus_dashboard_pipeline_etl_spark.streaming.neardup import (
+        probe_neardup_stream,
+    )
+    from tests.test_store import _jobs
+
+    df = spark.createDataFrame([Row(doc_id=1, text="a b c")])
+    call = {
+        "lsh_candidate_pairs": lambda: lsh_candidate_pairs(
+            minhash_signatures(df), k=16, bands=bands
+        ),
+        "minhash_band_index": lambda: minhash_band_index(df, k=16, bands=bands),
+        "minhash_probe_pairs": lambda: minhash_probe_pairs(df, df, k=16, bands=bands),
+        "probe_neardup_stream": lambda: probe_neardup_stream(df, df, k=16, bands=bands),
+    }[op]
+
+    def refused():
+        with pytest.raises(ValueError, match="positive multiple"):
+            call()
+
+    assert _jobs(spark, refused)[1] == []
+
+
+#: the modules that may build MinHash band signatures and exact-Jaccard
+#: verifies: the toolkit, and the gate registry, whose SQL oracles and
+#: pipe7 verify are references of their own
+_MINHASH_TOOLKIT = ("functions/dedup.py", "plans/gate_queries.py")
+
+
+def _call_name(call: ast.Call):
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def _minhash_copies(source: str) -> list[int]:
+    """Lines of ``source`` that build a band signature (a ``_``-joined
+    ``concat_ws`` in a function naming ``mh`` columns) or an exact
+    Jaccard (the size of an ``array_intersect``)."""
+    found = set()
+    for fn in ast.walk(ast.parse(source)):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        nodes = list(ast.walk(fn))
+        names_mh = any(
+            isinstance(n, ast.Constant) and str(n.value).startswith("mh") for n in nodes
+        )
+        for n in nodes:
+            if not (isinstance(n, ast.Call) and n.args):
+                continue
+            arg = n.args[0]
+            if names_mh and _call_name(n) == "concat_ws" and getattr(arg, "value", None) == "_":
+                found.add(n.lineno)
+            if _call_name(n) == "size" and isinstance(arg, ast.Call):
+                if _call_name(arg) == "array_intersect":
+                    found.add(n.lineno)
+    return sorted(found)
+
+
+def test_minhash_building_blocks_are_written_once():
+    """Band rows and the Jaccard verify live in ``functions/dedup.py``;
+    no other library module may grow its own copy again."""
+    from tests.test_store import PKG, _package_sources
+
+    planted = '''
+def band_rows(sigs, bands, width):
+    cols = [
+        F.concat_ws("_", *[F.col(f"mh{i}") for i in range(b * width, (b + 1) * width)])
+        for b in range(bands)
+    ]
+    inter = F.size(F.array_intersect("__ta", "__tb"))
+    return sigs.select(*cols), inter
+'''
+    assert _minhash_copies(planted) == [4, 7]
+    # a shared-bucket test and a non-band key join are not copies
+    assert _minhash_copies('''
+def bucket_pairs(df):
+    key = F.concat_ws("|", F.col("area_type"), F.col("mh_code"))
+    return df.filter(F.col("b") == F.array_min(F.array_intersect("__bl", "__br")))
+''') == []
+    with open(os.path.join(PKG, "functions/dedup.py")) as fh:
+        assert _minhash_copies(fh.read())
+    for rel in _package_sources(skip=_MINHASH_TOOLKIT):
+        with open(os.path.join(PKG, rel)) as fh:
+            assert _minhash_copies(fh.read()) == [], rel

@@ -760,22 +760,51 @@ def _serving(spark, rows):
     return spark.createDataFrame(rows, _SERVING)
 
 
+#: the thread-local properties ``setJobGroup`` sets
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
 def _jobs(spark, fn):
-    """``(fn(), names of the Spark jobs it ran)``: each job's first
-    stage name, which is its call site."""
+    """``(fn(), names of the Spark jobs it ran)``: each job's result
+    stage name, which is its call site. The result stage is the job's
+    highest stage id and always runs; its lower ids may be reused map
+    stages that were skipped, and the status store drops skipped stages
+    first (they carry no completion time). The thread's job-group
+    properties are restored afterwards."""
     sc = spark.sparkContext
     group = f"test-store-{uuid.uuid4().hex}"
+    saved = {p: sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS}
     sc.setJobGroup(group, group)
     try:
         out = fn()
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        for prop, value in saved.items():
+            sc.setLocalProperty(prop, value)
     tracker = sc.statusTracker()
     names = [
-        tracker.getStageInfo(tracker.getJobInfo(j).stageIds[0]).name
+        tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds)).name
         for j in sorted(tracker.getJobIdsForGroup(group))
     ]
     return out, names
+
+
+def test_jobs_restores_the_threads_job_group(spark):
+    """``_jobs`` leaves the thread's job group and description as it
+    found them, set or unset, and names a job that reuses a shuffle by
+    its result stage's call site."""
+    sc = spark.sparkContext
+    for outer in (None, "outer"):
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+        sc.setLocalProperty("spark.job.description", outer)
+        try:
+            counts = sc.parallelize(range(40), 2).map(lambda x: (x % 3, 1)).reduceByKey(max)
+            counts.count()  # the next job reuses this shuffle: its map stage is skipped
+            _, jobs = _jobs(spark, counts.collect)
+            assert [sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS[:2]] == [outer, outer]
+        finally:
+            for prop in _JOB_GROUP_PROPS:
+                sc.setLocalProperty(prop, None)
+        assert jobs and all(j.startswith("collect at") for j in jobs), jobs
 
 
 def _store_rows(df) -> set:

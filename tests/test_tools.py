@@ -35,9 +35,6 @@ def test_walk_yields_every_execution_of_a_composed_gate(spark):
     """d14c pins its probe and its merge-on-read stats, writes, collects
     and counts: the walker returns every one of those executions, in id
     order, checkpoints included, ending with the sink write."""
-    # a job description left on this thread would replace the call-site
-    # descriptions the checkpoint count reads
-    spark.sparkContext.setJobDescription(None)
     before = _store_executions(spark)
     _, execs = walk(
         spark, lambda: noop(QUERIES["d14c_tombstone_upsert"](spark, SF))
