@@ -67,6 +67,7 @@ from ..sources.nested_json import (
     read_nested_release,
 )
 from ..store import (
+    _writer,
     compact,
     materialised,
     overwrite_partitions,
@@ -114,12 +115,16 @@ def process_panel(
 
     Frame scope: the reference fans the main chain out as ONE
     (areaType, areaCode) chunk per call (retrieve.py:147-163 writes one
-    blob per area; run_direct processes it alone), so every
-    frame-scoped scalar in the chain — the homogenise span, the rates
-    event cutoff and last-valid dates, the trim_end cutoff — is that
-    AREA's own, not the release's. The per-area composed reference-exec
-    parity test (round 10) caught the global scoping this plan
-    originally used.
+    blob per area; run_direct processes it alone), so the frame-scoped
+    scalars of the chain — the homogenise span, the rates event cutoff
+    and last-valid dates, the trim_end cutoff — are that AREA's own,
+    not the release's. The per-area composed reference-exec parity
+    test (round 10) caught the global scoping this plan originally
+    used. One exception remains: ``calculate_by_adjacent_column``
+    fills at the release-wide latest date (``with_scalar``), not the
+    area's, and that scalar plans a second pass over the whole
+    upstream chain (a broadcast nested-loop join branch that re-runs
+    the parse, the aggregates and the scaffold join).
 
     The panel comes back unordered: the store write partitions its
     rows itself, so a global sort here would be a range-partition
@@ -283,7 +288,9 @@ def write_store_bucketed(
     replacing ONLY the partitions present in ``long`` (a plain
     ``saveAsTable(overwrite)`` would drop every other release's
     partitions). Spark enforces the table's bucket spec on insertInto, so
-    inserted partitions stay bucket-readable.
+    inserted partitions stay bucket-readable. The table is created
+    through the store's writer, so its options record the store codec
+    and every insertInto writes the store's file format too.
     """
     spark = long.sparkSession
     if spark.catalog.tableExists(table_name):
@@ -293,7 +300,8 @@ def write_store_bucketed(
         overwrite_partitions(long.select(*cols), table=table_name)
     else:
         (
-            long.write.mode("overwrite")
+            _writer(long)
+            .mode("overwrite")
             .partitionBy("partition_id")
             .bucketBy(buckets, "area_code", "metric")
             .sortBy("area_code", "metric", "date")

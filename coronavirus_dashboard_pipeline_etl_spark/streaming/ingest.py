@@ -25,7 +25,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.dedup import band_index_upsert_write
 from ..plans.main_pipeline import merge_upsert_store
-from ..store import materialised, read_existing
+from ..store import _writer, materialised, read_existing
 
 
 #: the serving store's foreachBatch sink: the store's one upsert
@@ -229,7 +229,7 @@ def cdc_apply_batch(
         tiebreak_cols=list(tiebreak_cols),
     )
     with materialised(merged) as rows:
-        rows.write.mode("overwrite").parquet(store_path)
+        _writer(rows).mode("overwrite").parquet(store_path)
 
 
 #: the band index's foreachBatch sink: the batch-sized upsert

@@ -4,9 +4,11 @@ format in its two layouts (bucketed: sidecar rule, fold stats and
 replay debt, one sidecar read per call; partitioned: the serving
 store's epochs, batch-sized upserts, crash window and fold), the
 sidecar-recorded schema, guards that keep the store mechanics and
-format in one module and every library collect bounded, and the fold's
-one file-set rewrite (all-dead buckets, job count, a crash between its
-append and its deletes)."""
+format in one module, every store write in the one writer and every
+library collect bounded, the fold's one file-set rewrite (all-dead
+buckets, job count, bytes in its report, a crash between its append
+and its deletes) and the file format (ZSTD parquet from every write
+site, legacy snappy files still read, merged and folded)."""
 
 import ast
 import inspect
@@ -15,6 +17,7 @@ import re
 import uuid
 from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -695,6 +698,51 @@ def test_store_format_is_spelled_only_in_store_module():
             assert _matches(_FORMAT_LITERAL, fh.read()) == [], path
 
 
+def _raw_writes(source: str, helper: str = "_writer") -> list[str]:
+    """``.write`` property reads in ``source`` (``df.write``; a
+    ``stream.write(...)`` call is not one) outside the function
+    ``helper``."""
+    tree = ast.parse(source)
+    inside = {
+        id(n)
+        for f in ast.walk(tree)
+        if isinstance(f, ast.FunctionDef) and f.name == helper
+        for n in ast.walk(f)
+    }
+    called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+    return [
+        f"{n.lineno}: .write"
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr == "write" and id(n) not in inside | called
+    ]
+
+
+def test_store_writes_go_through_one_writer():
+    """Every ``.write`` in ``store.py`` sits inside ``_writer``, the one
+    place the store's file format is set, and the store families open
+    no writer of their own: a new write site cannot skip the codec."""
+    with open(os.path.join(PKG, "store.py")) as fh:
+        source = fh.read()
+    planted = source + '\n\ndef _copy(df, path):\n    df.write.mode("append").parquet(path)\n'
+    assert len(_raw_writes(planted)) == 1
+    for planted in (
+        "ids.coalesce(1).write.mode('append').parquet(p)",
+        "writer = df.repartition(8).write.partitionBy('bucket')",
+        "def _writer2(df):\n    return df.write.option('compression', 'snappy')",
+    ):
+        assert _raw_writes(planted), planted
+    for fine in (
+        "out.write(bytearray(content.encode('utf-8')))",
+        "def _writer(df):\n    return df.write.option('compression', _CODEC)",
+        "_writer(df).mode('append').parquet(path)",
+    ):
+        assert _raw_writes(fine) == [], fine
+    assert _raw_writes(source) == []
+    for rel in _STORE_FAMILIES:
+        with open(os.path.join(PKG, rel)) as fh:
+            assert _raw_writes(fh.read()) == [], rel
+
+
 #: the comment a driver collect without a ``limit`` in its chain carries,
 #: with its reason, on the statement or the line above it
 _SMALL_MARKER = "# small by construction:"
@@ -988,7 +1036,165 @@ def test_store_reads_use_the_recorded_schema(spark, tmp_path):
     assert (_files(fps), _files(serving), store.meta_read(serving)) == before
 
 
+# -- the file format: ZSTD parquet ----------------------------------------
+
+
+def _codecs(root) -> dict[str, set[str]]:
+    """{relative path: codecs of its column chunks} of every parquet file
+    under root, read from the file footers."""
+    out = {}
+    for rel in _files(root):
+        meta = pq.ParquetFile(os.path.join(root, rel)).metadata
+        out[rel] = {
+            meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        }
+    return out
+
+
+def test_store_files_are_zstd(spark, tmp_path):
+    """Every file a store call writes is ZSTD parquet, down to each
+    column chunk: the serving store's publish, upsert (delta files and
+    tombstones) and fold, the dedup stores' writes, upserts and both
+    fold shapes, the CDC snapshot and the bucketed catalog table, first
+    write and re-run."""
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        compact_store,
+        merge_upsert_store,
+        write_store,
+        write_store_bucketed,
+    )
+    from coronavirus_dashboard_pipeline_etl_spark.streaming.ingest import cdc_apply_batch
+
+    written = {}
+
+    def new_files(name, root, call):
+        before = _files(root)
+        out = call()
+        written[name] = {p: c for p, c in _codecs(root).items() if p not in before}
+        assert written[name], name
+        return out
+
+    serving, bidx, fps, cdc = (str(tmp_path / n) for n in ("store", "bidx", "fp", "cdc"))
+    new_files("write_store", serving, lambda: write_store(
+        _serving(spark, [(f"h{i}", f"p{i % 3}", "x", 1) for i in range(12)]), serving
+    ))
+    new_files("merge_upsert_store", serving, lambda: merge_upsert_store(
+        _serving(spark, [("h1", "p1", "y", 2), ("h50", "p0", "z", 2)]), serving
+    ))
+    new_files("compact_store", serving, lambda: compact_store(spark, serving))
+
+    corpus = _docs(spark, [(i, f"w{i}a w{i}b w{i}c tail {i % 3}") for i in range(16)])
+    new_files("band_index_write", bidx, lambda: band_index_write(
+        minhash_band_index(corpus, k=8, bands=2), bidx, buckets=4, k=8, bands=2
+    ))
+
+    def recrawl(w):
+        return lambda: band_index_upsert_write(
+            _docs(spark, [(i, f"wave {w} doc {i} text") for i in range(6)]), bidx, k=8, bands=2
+        )
+
+    new_files("band_index_upsert_write", bidx, recrawl(0))
+    scoped = new_files("file-scoped fold", bidx, lambda: compact_dedup_store(
+        spark, bidx, incremental=True
+    ))
+    assert scoped[store.REPLAY_DEBT], scoped
+    new_files("band_index_upsert_write again", bidx, recrawl(1))
+    whole = new_files("whole-bucket fold", bidx, lambda: compact_dedup_store(
+        spark, bidx, incremental=True, max_files_per_bucket=0
+    ))
+    assert whole["buckets_rewritten"] and not whole[store.REPLAY_DEBT], whole
+    new_files("fp_store_write", fps, lambda: fp_store_write(
+        corpus.select(F.md5("text").alias("fp")), fps, buckets=4, mode="overwrite"
+    ))
+
+    changes = "id long, val double, seq long, op string"
+    for w in range(2):
+        new_files(f"cdc_apply_batch {w}", cdc, lambda: cdc_apply_batch(
+            spark.createDataFrame([(1, float(w), w, "U"), (2 + w, 1.0, w, "I")], changes),
+            cdc,
+            keys=("id",),
+        ))
+
+    table = f"zstd_probe_{uuid.uuid4().hex[:8]}"
+    rows = [(f"A{i % 3}", "m", f"2024-01-0{1 + i}", "x", f"p{i % 2}") for i in range(6)]
+    long = spark.createDataFrame(
+        rows, "area_code string, metric string, date string, payload string, partition_id string"
+    )
+    try:
+        write_store_bucketed(long, table, buckets=2)
+        location = [
+            r.data_type for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+            if r.col_name == "Location"
+        ]
+        table_root = unquote(urlparse(location[0]).path)
+        written["write_store_bucketed"] = _codecs(table_root)
+        assert written["write_store_bucketed"], table_root
+        new_files("write_store_bucketed re-run", table_root, lambda: write_store_bucketed(
+            long.filter("partition_id = 'p1'"), table, buckets=2
+        ))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+    tombstones = [p for n in written.values() for p in n if p.startswith("_tombstones/")]
+    assert len(tombstones) >= 3, written
+    assert {
+        name: {p: c for p, c in files.items() if c != {"ZSTD"}}
+        for name, files in written.items()
+    } == {name: {} for name in written}
+
+
+def test_legacy_snappy_store_reads_merges_and_folds(spark, tmp_path, monkeypatch):
+    """A serving store whose files were written with snappy, before the
+    store took ZSTD, needs no migration: ``read_store`` gives the right
+    rows before and after an upsert merges into it, and
+    ``compact_store`` rewrites the partition it folds as ZSTD while the
+    clean partitions keep their snappy files."""
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        compact_store,
+        merge_upsert_store,
+        read_store,
+        write_store,
+    )
+
+    path = str(tmp_path / "store")
+    base = [(f"h{i}", f"p{i % 3}", f"old{i}", 1) for i in range(12)]
+    monkeypatch.setattr(store, "_CODEC", "snappy")
+    write_store(_serving(spark, base).coalesce(1), path)
+    monkeypatch.undo()
+    legacy = _codecs(path)
+    assert len(legacy) == 3 and all(c == {"SNAPPY"} for c in legacy.values()), legacy
+    assert _store_rows(read_store(spark, path)) == set(base)
+
+    batch = [("h1", "p1", "new1", 2), ("h4", "p1", "new4", 2), ("h50", "p1", "ins", 2)]
+    merge_upsert_store(_serving(spark, batch), path)
+    want = {r for r in base if r[0] not in ("h1", "h4")} | set(batch)
+    assert _store_rows(read_store(spark, path)) == want
+
+    rep = compact_store(spark, path)
+    assert rep["buckets_rewritten"] == 1 and rep["tombstones_cleared"] is True
+    after = _codecs(path)
+
+    def folded(p):
+        return p.startswith("partition_id=p1/")
+
+    assert {p for p in after if folded(p)} and all(
+        c == {"ZSTD"} for p, c in after.items() if folded(p)
+    ), after
+    assert {p: c for p, c in after.items() if not folded(p)} == {
+        p: c for p, c in legacy.items() if not folded(p)
+    }
+    assert _store_rows(read_store(spark, path)) == want
+    assert _store_rows(spark.read.parquet(path)) == want
+
+
 # -- the fold: one file-set rewrite for both layouts ----------------------
+
+
+def _data_bytes(root) -> int:
+    """Bytes of the data files under root: its tombstones left out."""
+    return sum(n for p, n in _files(root).items() if not p.startswith("_tombstones/"))
 
 
 def _three_doc_index(spark, path):
@@ -1018,7 +1224,9 @@ def test_fold_deletes_buckets_whose_rows_all_died(spark, tmp_path, fold):
     live = band_index_read(spark, path).collect()
     assert live and all(r.doc_id != 0 for r in live)
     want = sorted(tuple(r) for r in live)
+    data_bytes = _data_bytes(path)
     rep = compact_dedup_store(spark, path, **fold)
+    assert (rep["bytes_before"], rep["bytes_after"]) == (data_bytes, _data_bytes(path))
     assert rep["tombstones_cleared"] is True and rep["dead_rows_remaining"] == 0
     assert sorted(tuple(r) for r in band_index_read(spark, path).collect()) == want
     assert spark.read.parquet(path).count() == len(want)
@@ -1054,10 +1262,12 @@ def test_compact_store_takes_no_checkpoint_nor_overwrite(spark, tmp_path, monkey
         assert save_mode != "overwrite", "the fold overwrote"
         return orig_mode(self, save_mode)
 
+    data_bytes = _data_bytes(path)
     monkeypatch.setattr(DataFrame, "localCheckpoint", refuse)
     monkeypatch.setattr(DataFrameWriter, "mode", mode)
     rep, jobs = _jobs(spark, lambda: compact_store(spark, path))
     monkeypatch.undo()
+    assert (rep["bytes_before"], rep["bytes_after"]) == (data_bytes, _data_bytes(path))
     assert rep["buckets_rewritten"] == 2 and rep["tombstones_cleared"] is True
     assert len(jobs) <= 7, jobs
     assert _store_rows(spark.read.parquet(path)) == want
