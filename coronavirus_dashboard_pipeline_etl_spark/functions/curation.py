@@ -623,7 +623,7 @@ def histogram_fixed(
     drift monitors): bucket = clamp(floor((x - lo) / width)), counted
     per (partition, bucket). Fixed bounds keep the operator one pass
     and engine-exact — data-driven bounds would need a pre-scan (see
-    ``with_scalar``) and IEEE-identical width derivation.
+    ``with_scalars``) and IEEE-identical width derivation.
 
     Out-of-range rows clamp to the edge buckets, so mass is conserved.
     One groupBy shuffle on (partitions, bucket) — tiny output.

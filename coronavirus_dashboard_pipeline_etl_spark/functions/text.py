@@ -237,7 +237,7 @@ def tfidf_topk(
     on term -> per-doc top-k window. Three shuffles, all on
     well-distributed keys (term df join is vocabulary-sized; Spark picks
     broadcast when stats allow). Doc count N rides a 1-row broadcast
-    (with_scalar pattern), never a driver collect.
+    (with_scalars pattern), never a driver collect.
     """
     from pyspark.sql import Window
 
@@ -253,7 +253,7 @@ def tfidf_topk(
         F.countDistinct(id_col).alias("term_df")
     )
     # N = corpus size (all input docs, token-less ones included) as a
-    # 1-row broadcast — the with_scalar pattern, aggregated over the
+    # 1-row broadcast — the with_scalars pattern, aggregated over the
     # INPUT frame rather than the token frame
     n_docs = df.agg(F.countDistinct(id_col).alias("__n_docs"))
     scored = tf.join(dfreq, "term").crossJoin(F.broadcast(n_docs))

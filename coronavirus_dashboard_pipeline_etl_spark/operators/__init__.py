@@ -49,7 +49,7 @@ from .sessions import session_stats, sessionize
 from .suppress import suppress_by_rolling_sum, weekly_thin
 from .topk import latest_date_only, latest_per_group
 from .trim import trim_end, trim_sides
-from .util import with_scalar
+from .util import with_scalars
 
 __all__ = [
     "asof_join",
@@ -96,7 +96,7 @@ __all__ = [
     "trim_end",
     "trim_sides",
     "weekly_thin",
-    "with_scalar",
+    "with_scalars",
     "wrap_payload",
     "wrap_payload_column",
 ]

@@ -20,7 +20,7 @@ from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .util import with_scalar
+from .util import with_scalars
 
 
 def negative_to_zero(df: DataFrame, metrics: Iterable[str]) -> DataFrame:
@@ -62,7 +62,7 @@ def calculate_by_adjacent_column(
     if not columns:
         return df
     w_group = Window.partitionBy(*group_keys)
-    df = with_scalar(df, "__max_date", F.max(date_col))
+    df = with_scalars(df, {"__max_date": F.max(date_col)})
     for target, source in columns:
         if target not in df.columns:
             df = df.withColumn(target, F.lit(None).cast("double"))

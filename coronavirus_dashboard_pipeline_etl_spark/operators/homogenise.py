@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
 from ..store import rolling_checkpoint
+from .util import with_scalars
 
 
 def _date_seq(lo: F.Column, hi: F.Column, frequency: str) -> F.Column:
@@ -116,8 +117,7 @@ def homogenise_dates(
     else:
         per_group = stats
         if span == "group_min":
-            ghi = stats.agg(F.max("__hi").alias("__ghi"))
-            per_group = per_group.crossJoin(broadcast(ghi))
+            per_group = with_scalars(stats, {"__ghi": F.max("__hi")})
             hi = F.col("__ghi")
         else:
             hi = F.col("__hi")

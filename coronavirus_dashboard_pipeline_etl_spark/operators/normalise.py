@@ -27,8 +27,6 @@ from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .util import with_scalar
-
 
 def _valid_bounds(col: str, w_group):
     """min/max date over the rows where `col` is non-null, per group."""

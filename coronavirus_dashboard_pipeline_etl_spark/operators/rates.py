@@ -6,8 +6,8 @@ Re-expresses ``db_etl/processors/generic_rate.py:30-135``
 * RollingSum = pandas rolling(7).sum() parity (see operators.rolling),
 * RollingRate = round(RollingSum / population * 100_000, 1),
 * tail rule: metrics named *SpecimenDate*/*DeathDate* are masked where
-  date > global_max_date - 5d; all others where date > the metric's
-  global last valid raw date,
+  date > the frame's max date - 5d; all others where date > the metric's
+  last valid raw date in the frame,
 * incidence rate = round(value / population * 100_000, 1) — no window.
 
 The population frame is a few-thousand-row dimension: always broadcast
@@ -17,7 +17,7 @@ the fact side.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Mapping, Sequence
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
@@ -31,6 +31,7 @@ from ..config import (
     TAIL_TRIM_DAYS,
 )
 from .rolling import rolling_sum_col
+from .util import with_scalars
 
 
 def calculate_rates(
@@ -43,7 +44,6 @@ def calculate_rates(
     date_col: str = "date",
     rate_per_n: int = RATE_PER,
     precision: int | None = RATE_PRECISION,
-    last_valid: Mapping[str, str] | None = None,
     tail_rules: bool = True,
     frame_keys: Sequence[str] | None = None,
 ) -> DataFrame:
@@ -66,21 +66,20 @@ def calculate_rates(
     ``min_count=0`` coerces every NaN rolling sum to 0.0
     (generic_rate.py:88-96) — so it PUBLISHES 0 for each area's first 6
     days (and any sub-7-observation window). We coalesce the guarded
-    sum to a typed zero to match. Tail parity: non-event metrics are
-    masked after the metric's GLOBAL last valid date — one scalar over
-    the whole frame (generic_rate.py:113-117), not a per-area max — so
-    areas that stop reporting early keep their trailing rolling values
-    exactly like the reference.
+    sum to a typed zero to match.
 
-    ``frame_keys`` scopes the tail-rule scalars (event cutoff and
-    per-metric last-valid dates) PER GROUP instead of over the whole
-    frame: the reference's main chain runs on one (areaType, areaCode)
-    chunk per call (retrieve.py:147-163), so its ``d.date.max()`` /
-    ``dropna().date.max()`` are that AREA's own dates. The default
-    (None, whole-frame scalars) is the FUNCTION's verbatim behavior on
-    a multi-area frame — composition layers that reproduce the
-    per-chunk fan-out pass the chunk keys (found by the per-area
-    composed reference-exec parity test, round 10).
+    Tail parity (generic_rate.py:107-117): event-dated metrics are
+    masked after the frame's max date - 5 days, and every other metric
+    after its own last valid date in the frame (``dropna().date.max()``).
+    The frame is one group of ``frame_keys``, or the whole of ``df``
+    without them (``with_scalars`` decides how the scalars are taken).
+    The reference's main chain runs on one (areaType, areaCode) chunk
+    per call (retrieve.py:147-163), so ``process_panel`` passes those
+    chunk keys and the dates are that AREA's own (found by the per-area
+    composed reference-exec parity test, round 10). Without
+    ``frame_keys`` — the FUNCTION's verbatim behavior on a multi-area
+    frame — areas that stop reporting early keep their trailing rolling
+    values.
 
     ``tail_rules=False`` reproduces the AGE path (calculate_age_rates,
     generic_rate.py:139-214), which has NO live freshness mask: its
@@ -88,13 +87,6 @@ def calculate_rates(
     it has no last-valid rule — both masks above belong to the FLAT
     path only (established by the composed demographics reference-exec
     parity test, round 10).
-
-    The whole-frame scalars (event cutoff, per-metric last valid dates)
-    are an aggregate branch over the upstream subtree — a second pass.
-    At scale, pass ``last_valid`` (metric -> ISO date, and the key
-    ``"__max_date"`` for the event cutoff when event-dated metrics are
-    configured) to skip that pass entirely — the same explicit-cutoff
-    fast path ``trim_end`` has.
     """
     rolling_rate = sorted(set(rolling_rate) & set(df.columns))
     incidence_rate = sorted(set(incidence_rate) & set(df.columns))
@@ -107,9 +99,8 @@ def calculate_rates(
         how="left",
     )
 
-    keys = list(group_keys)
     w_roll = (
-        Window.partitionBy(*keys)
+        Window.partitionBy(*group_keys)
         .orderBy(date_col)
         .rowsBetween(-(ROLLING_WINDOW - 1), 0)
     )
@@ -122,102 +113,37 @@ def calculate_rates(
     def is_event(m: str) -> bool:
         return "SpecimenDate" in m or "DeathDate" in m
 
-    # All whole-frame scalars in ONE aggregate + ONE broadcast cross join
-    # (a per-metric with_scalar would cross-join once per metric): the
-    # event-dated cutoff, plus each non-event metric's global last valid
-    # raw date (generic_rate.py:113-117 — dropna().date.max() over the
-    # whole frame, NOT per area).
-    known = last_valid or {}
-    if frame_keys is not None and tail_rules:
-        # per-chunk scalars as window maxes — no aggregate branch, no
-        # cross join; the window rides the existing key partitioning
-        w_frame = Window.partitionBy(*frame_keys)
-        scalar_cols: list = []
-        max_date = (
-            F.lit(known["__max_date"])
-            if "__max_date" in known
-            else F.max(date_col).over(w_frame)
-        )
-        event_cutoff = F.date_format(
-            F.date_sub(F.to_date(max_date), TAIL_TRIM_DAYS), "yyyy-MM-dd"
-        )
-
-        def last_valid_col(m: str) -> F.Column:
-            if m in known:
-                return F.lit(known[m])
-            return F.max(
-                F.when(raw(m).isNotNull(), F.col(date_col))
-            ).over(w_frame)
-
-        return _rates_stages(
-            df, rolling_rate, incidence_rate, dtypes, raw, is_event,
-            w_roll, rate_per_n, precision, tail_rules, event_cutoff,
-            last_valid_col, date_col, scalar_cols,
-        )
-    scalar_aggs = []
-    # ``tail_rules=False`` reproduces the AGE path (calculate_age_rates,
-    # generic_rate.py:139-214): its only mask is ``date > max_date``
-    # with max_date = the frame max — inert — and it has no last-valid
-    # rule either; both freshness masks belong to the FLAT path only
-    # (found by the composed demographics reference-exec test, round 10)
-    if tail_rules and any(is_event(m) for m in rolling_rate) and "__max_date" not in known:
-        scalar_aggs.append(F.max(date_col).alias("__max_date"))
-    for m in rolling_rate:
-        if tail_rules and not is_event(m) and m not in known:
-            scalar_aggs.append(
-                F.max(F.when(raw(m).isNotNull(), F.col(date_col))).alias(
-                    f"__last_{m}"
-                )
-            )
-    scalar_cols = []
-    if scalar_aggs:
-        scalars = df.agg(*scalar_aggs)
-        scalar_cols = scalars.columns
-        df = df.crossJoin(broadcast(scalars))
-    if tail_rules:
-        max_date = (
-            F.lit(known["__max_date"])
-            if "__max_date" in known
-            else F.col("__max_date")
-        )
-        event_cutoff = F.date_format(
-            F.date_sub(F.to_date(max_date), TAIL_TRIM_DAYS), "yyyy-MM-dd"
-        )
-
-    def last_valid_col(m: str) -> F.Column:
-        return F.lit(known[m]) if m in known else F.col(f"__last_{m}")
-
-    return _rates_stages(
-        df, rolling_rate, incidence_rate, dtypes, raw, is_event,
-        w_roll, rate_per_n, precision, tail_rules,
-        event_cutoff if tail_rules else None,
-        last_valid_col, date_col, scalar_cols,
-    )
-
-
-def _rates_stages(
-    df, rolling_rate, incidence_rate, dtypes, raw, is_event, w_roll,
-    rate_per_n, precision, tail_rules, event_cutoff, last_valid_col,
-    date_col, scalar_cols,
-):
-    """Shared tail of ``calculate_rates``: one projection for all
-    sums+rates, one for all tail masks (the mask must observe the
-    computed columns). The caller decides HOW the tail-rule scalars are
-    derived (whole-frame aggregate + cross join, per-chunk window
-    maxes, or caller-supplied literals) — the stage arithmetic is
-    identical for every scoping."""
+    # one projection for all sums + rates, one for all tail masks (the
+    # mask must observe the computed columns)
     stage1: dict[str, F.Column] = {}
     for m in rolling_rate:
-        rsum = f"{m}{SUFFIX_ROLLING_SUM}"
         guarded = rolling_sum_col(raw(m), w_roll)
         # min_count=0 coercion: NaN windows publish as typed zero
         keep_exact = dtypes.get(m, "").startswith("decimal")
         zero = F.lit(0).cast(dtypes[m]) if keep_exact else F.lit(0.0)
-        stage1[rsum] = F.coalesce(guarded, zero)
+        stage1[f"{m}{SUFFIX_ROLLING_SUM}"] = F.coalesce(guarded, zero)
     for m in incidence_rate:
         inc = F.col(m).cast("double") / F.col("population") * rate_per_n
         stage1[f"{m}Rate"] = inc if precision is None else F.round(inc, precision)
     df = df.withColumns(stage1)
+
+    # the tail-rule scalars, all taken in ONE with_scalars call: the
+    # event cutoff's max date and each non-event metric's last valid
+    # raw date
+    scalars: dict[str, F.Column] = {}
+    if tail_rules:
+        if any(is_event(m) for m in rolling_rate):
+            scalars["__max_date"] = F.max(date_col)
+        for m in rolling_rate:
+            if not is_event(m):
+                scalars[f"__last_{m}"] = F.max(
+                    F.when(raw(m).isNotNull(), F.col(date_col))
+                )
+    if scalars:
+        df = with_scalars(df, scalars, frame_keys)
+    event_cutoff = F.date_format(
+        F.date_sub(F.to_date("__max_date"), TAIL_TRIM_DAYS), "yyyy-MM-dd"
+    )
 
     stage2: dict[str, F.Column] = {}
     for m in rolling_rate:
@@ -228,16 +154,13 @@ def _rates_stages(
         if not tail_rules:
             stage2[rrate] = rate
             continue
-        # tail freshness rule (generic_rate.py:107-117)
-        if is_event(m):
-            stale = F.col(date_col) > event_cutoff
-        else:
-            stale = F.col(date_col) > last_valid_col(m)
+        cutoff = event_cutoff if is_event(m) else F.col(f"__last_{m}")
+        stale = F.col(date_col) > cutoff
         stage2[rsum] = F.when(stale, F.lit(None)).otherwise(F.col(rsum))
         stage2[rrate] = F.when(stale, F.lit(None)).otherwise(rate)
     df = df.withColumns(stage2)
 
-    return df.drop("population", *scalar_cols)
+    return df.drop("population", *scalars)
 
 
 def age_standardised_rate(

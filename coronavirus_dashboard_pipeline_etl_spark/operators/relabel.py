@@ -45,21 +45,16 @@ WEEKLY_EXTRA_METRICS = (
 )
 
 
-def drop_weekly_metric_nulls(
-    df: DataFrame,
-    extras: Iterable[str] = WEEKLY_EXTRA_METRICS,
-    metric_col: str = "metric",
-    payload_col: str = "payload",
-) -> DataFrame:
+def drop_weekly_metric_nulls(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Upload-side weekly dropna (``format_weekly_metrics``,
     ``uploader.py:444-475``): rows belonging to weekly-cadence metrics —
-    name contains "weekly" case-insensitively, or one of the known
-    ``extras`` — are dropped when their payload is null (daily metrics
-    keep their null rows for the store's dense series). Pure row filter,
-    no shuffle."""
-    is_weekly = F.lower(F.col(metric_col)).contains("weekly") | F.col(
-        metric_col
-    ).isin(*extras)
+    ``metric`` contains "weekly" case-insensitively, or is one of
+    ``WEEKLY_EXTRA_METRICS`` — are dropped when their payload is null
+    (daily metrics keep their null rows for the store's dense series).
+    Pure row filter, no shuffle."""
+    is_weekly = F.lower(F.col("metric")).contains("weekly") | F.col(
+        "metric"
+    ).isin(*WEEKLY_EXTRA_METRICS)
     return df.filter(~(is_weekly & F.col(payload_col).isNull()))
 
 

@@ -18,7 +18,7 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import MSOA_SUPPRESS_AT_OR_BELOW
-from .util import with_scalar
+from .util import with_scalars
 
 
 def suppress_by_rolling_sum(
@@ -52,7 +52,7 @@ def weekly_thin(
     (msoa_etl_orchestrator/orchestrator.py:249-254 → processor.py:73-78);
     with file data the anchor is the newest date after tail handling.
     """
-    df = with_scalar(df, "__anchor", F.max(date_col))
+    df = with_scalars(df, {"__anchor": F.max(date_col)})
     anchor = F.date_sub(F.to_date("__anchor"), anchor_offset_days)
     on_grid = (
         F.datediff(anchor, F.to_date(date_col)) % 7 == 0

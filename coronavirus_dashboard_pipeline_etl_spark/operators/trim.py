@@ -1,7 +1,7 @@
 """Trims: tail masking by freshness rule, and long-format side trimming.
 
 * ``trim_end`` — event-date metrics are masked for the trailing N days
-  relative to the *global* max date (``db_etl/processors/trimmer.py:40-50``;
+  relative to the frame's max date (``db_etl/processors/trimmer.py:40-50``;
   N=5 per ``db_etl/etl.py:466-472``).
 * ``trim_sides`` — on the melted long frame, per (area, metric) series:
   null out the leading rows through one row past the first non-zero
@@ -19,7 +19,7 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import TAIL_TRIM_DAYS
-from .util import with_scalar
+from .util import with_scalars
 
 
 def trim_end(
@@ -27,60 +27,30 @@ def trim_end(
     metrics: Iterable[str],
     days_to_trim: int = TAIL_TRIM_DAYS,
     date_col: str = "date",
-    max_date: str | None = None,
-    group_keys: Sequence[str] | None = None,
+    frame_keys: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Mask `metrics` where date > (max date - days_to_trim).
+    """Mask `metrics` where date > (the frame's max date - days_to_trim).
 
-    ``max_date`` defaults to the frame's global max (the reference's
-    ``d.date.max()``, trimmer.py:43-45), which costs a second pass over
-    the upstream plan for the 1-row aggregate. Release pipelines that
-    already know the release date (the reference's generic_rate.py:59-60
-    derives the cutoff from the run timestamp) should pass it explicitly
-    — the mask then folds into the main stage with no extra scan.
-
-    ``group_keys`` scopes the cutoff PER GROUP (one window max instead
-    of the global scalar): the reference's main chain runs on one
-    (areaType, areaCode) chunk per call (retrieve.py:147-163), so its
-    ``d.date.max()`` is that AREA's own max — an early-stopping area is
-    masked relative to its own last date, not the release's (found by
-    the per-area composed reference-exec parity test, round 10).
+    The frame is one group of ``frame_keys``, or the whole of ``df``
+    without them (``with_scalars`` decides how the max is taken). The
+    reference's ``d.date.max()`` (trimmer.py:43-45) is the max of the
+    frame it is called on; its main chain runs on one (areaType,
+    areaCode) chunk per call (retrieve.py:147-163), so ``process_panel``
+    passes those chunk keys and an early-stopping area is masked
+    relative to its own last date, not the release's (found by the
+    per-area composed reference-exec parity test, round 10).
     """
-    from pyspark.sql import Window
-
     metrics = sorted(set(metrics) & set(df.columns))
     if not metrics:
         return df
-    if max_date is not None:
-        keep = F.to_date(date_col) <= F.date_sub(
-            F.to_date(F.lit(max_date)), days_to_trim
-        )
-        for m in metrics:
-            df = df.withColumn(m, F.when(keep, F.col(m)))
-        return df
-    if group_keys is not None:
-        w = Window.partitionBy(*group_keys)
-        cutoff = F.date_sub(F.to_date(F.max(date_col).over(w)), days_to_trim)
-        keep = F.to_date(date_col) <= cutoff
-        for m in metrics:
-            df = df.withColumn(m, F.when(keep, F.col(m)))
-        return df
-    df = with_scalar(df, "__max_date", F.max(date_col))
-    cutoff = F.date_sub(F.to_date("__max_date"), days_to_trim)
-    keep = F.to_date(date_col) <= cutoff
-    for m in metrics:
-        df = df.withColumn(m, F.when(keep, F.col(m)))
-    return df.drop("__max_date")
+    df = with_scalars(df, {"__max_date": F.max(date_col)}, frame_keys)
+    keep = F.to_date(date_col) <= F.date_sub(F.to_date("__max_date"), days_to_trim)
+    return df.withColumns({m: F.when(keep, F.col(m)) for m in metrics}).drop("__max_date")
 
 
-def trim_sides(
-    df: DataFrame,
-    series_keys: Sequence[str] = ("area_type", "area_code", "metric"),
-    date_col: str = "date",
-    payload_col: str = "payload",
-    exempt_metrics: Iterable[str] = ("variants",),
-) -> DataFrame:
-    """Strip unstable leading/trailing points of each long series.
+def trim_sides(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """Strip unstable leading/trailing points of each long series
+    (``area_type``, ``area_code``, ``metric``), ordered by ``date``.
 
     Semantics (uploader.py:55-90), per series ordered by date:
       1. leading strip: rows up to and including (first row where the
@@ -104,9 +74,9 @@ def trim_sides(
          through untouched (the reference ``continue``s before writing
          the masked copy back, uploader.py:63-78).
 
-    ``exempt_metrics`` (``variants``) skip BOTH strips: the reference
-    computes the masks on a per-metric COPY and only writes it back
-    inside the ``metric != "variants"`` branch (uploader.py:82-88), so
+    The ``variants`` metric skips BOTH strips: the reference computes
+    the masks on a per-metric COPY and only writes it back inside the
+    ``metric != "variants"`` branch (uploader.py:82-88), so
     variants rows reach the store untouched — verified against the
     reference's own golden fixture
     (db_etl_upload/tests/test_uploader.py:21-27).
@@ -114,8 +84,8 @@ def trim_sides(
     Expressed as two passes over one window exchange; no Python loop over
     metrics (the reference iterates per metric in the driver).
     """
-    keys = list(series_keys)
-    w = Window.partitionBy(*keys).orderBy(date_col)
+    keys = ("area_type", "area_code", "metric")
+    w = Window.partitionBy(*keys).orderBy("date")
     w_all = Window.partitionBy(*keys)
 
     # try_cast: nested/string payloads (direction cells, variants arrays)
@@ -130,17 +100,7 @@ def trim_sides(
     first_valid = F.min(
         F.when(F.col(payload_col).isNotNull(), F.col("__rn"))
     ).over(w_all)
-    # the exemption keys off the LAST series key (the metric-like one
-    # by the reference's layout), not a hardcoded "metric" column — a
-    # caller with series_keys=("areaType", "areaCode", "metric_name")
-    # would otherwise hit UNRESOLVED_COLUMN, or silently exempt via an
-    # unrelated column that happens to be named "metric"
-    metric_key = keys[-1]
-    exempt = (
-        F.col(metric_key).isin(*exempt_metrics)
-        if exempt_metrics
-        else F.lit(False)
-    )
+    exempt = F.col("metric") == "variants"
     lead_cut = F.coalesce(first_nonzero, first_valid) + 1
     lead_masked = F.col("__rn") <= lead_cut
 

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from collections.abc import Mapping, Sequence
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
 
 
@@ -32,19 +34,28 @@ def as_ltz(col: Column | str) -> Column:
     return c.cast("timestamp")
 
 
-def with_scalar(df: DataFrame, name: str, agg: Column) -> DataFrame:
-    """Attach a whole-frame aggregate as a column WITHOUT a single-partition
-    window.
+def with_scalars(
+    df: DataFrame,
+    aggs: Mapping[str, Column],
+    frame_keys: Sequence[str] | None = None,
+) -> DataFrame:
+    """Attach frame-scoped aggregates as columns named by ``aggs``' keys.
 
-    ``F.max(x).over(Window.partitionBy())`` funnels the entire dataset
-    through one partition — fatal at 100 TB. Instead we compute the
-    aggregate as a 1-row DataFrame (a normal distributed partial+final agg)
-    and broadcast-cross-join it back, which Catalyst plans as
-    BroadcastNestedLoopJoin over a 1-row build side: zero extra shuffles
-    of the fact table and stays lazy.
+    The frame is one group of ``frame_keys``, or the whole of ``df``
+    when there are none. Per group, each aggregate is a window over
+    ``Window.partitionBy(*frame_keys)``, which rides the key exchange
+    the chain already has. Over the whole frame, the aggregates run as
+    one 1-row ``df.agg`` (a normal distributed partial+final agg) that
+    is broadcast-cross-joined back, which Catalyst plans as
+    BroadcastNestedLoopJoin over a 1-row build side: zero extra
+    shuffles of the fact table, and never the single-partition funnel
+    ``F.max(x).over(Window.partitionBy())`` would be at 100 TB.
     """
-    scalar = df.agg(agg.alias(name))
-    return df.crossJoin(broadcast(scalar))
+    if frame_keys is not None:
+        w = Window.partitionBy(*frame_keys)
+        return df.withColumns({name: agg.over(w) for name, agg in aggs.items()})
+    scalars = df.agg(*[agg.alias(name) for name, agg in aggs.items()])
+    return df.crossJoin(broadcast(scalars))
 
 
 def drop_helper(df: DataFrame, *cols: str) -> DataFrame:

@@ -53,7 +53,7 @@ from ..operators import (
     weekly_thin,
 )
 from ..operators.nesting import wrap_payload
-from ..operators.util import ts_micros, with_scalar
+from ..operators.util import ts_micros, with_scalars
 from ..sources import load_table
 from .crawl import crawl_day
 
@@ -8246,7 +8246,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: per-part traded value for suppliers in a nation
     subset, keeping parts above a fraction of the GLOBAL total — a
     HAVING against an uncorrelated scalar subquery. The scalar rides a
-    1-row broadcast (operators.util.with_scalar), never a
+    1-row broadcast (operators.util.with_scalars), never a
     single-partition window; the threshold compare is exact decimal,
     no float division at the boundary.
 
@@ -8275,10 +8275,9 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey")
         .agg(F.sum("val").alias("value"))
     )
-    scalars = per_part.agg(
-        F.sum("value").alias("total"), F.count(F.lit(1)).alias("n_parts")
+    thresholded = with_scalars(
+        per_part, {"total": F.sum("value"), "n_parts": F.count(F.lit(1))}
     )
-    thresholded = per_part.crossJoin(broadcast(scalars))
     return thresholded.filter(
         F.col("value") * F.col("n_parts") > F.col("total") * 2
     ).select(
@@ -8428,7 +8427,7 @@ ORACLE["q14_promo_revenue_share"] = Q14_SQL
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: supplier(s) whose quarterly revenue equals the
     global maximum — an aggregate view compared against its own scalar
-    MAX. The scalar rides a 1-row broadcast (with_scalar), ties are
+    MAX. The scalar rides a 1-row broadcast (with_scalars), ties are
     kept (no LIMIT), and the compare is decimal-exact.
     """
     li = load_table(spark, sf_dir, "lineitem").filter(
@@ -8439,7 +8438,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_extendedprice").cast(DEC) * (F.lit(1).cast(DEC) - F.col("l_discount").cast(DEC))).alias("rev"),
     )
     revenue = li.groupBy("l_suppkey").agg(F.sum("rev").alias("total_revenue"))
-    best = with_scalar(revenue, "max_revenue", F.max("total_revenue")).filter(
+    best = with_scalars(revenue, {"max_revenue": F.max("total_revenue")}).filter(
         F.col("total_revenue") == F.col("max_revenue")
     )
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")

@@ -120,11 +120,14 @@ def process_panel(
     and last-valid dates, the trim_end cutoff — are that AREA's own,
     not the release's. The per-area composed reference-exec parity
     test (round 10) caught the global scoping this plan originally
-    used. One exception remains: ``calculate_by_adjacent_column``
-    fills at the release-wide latest date (``with_scalar``), not the
-    area's, and that scalar plans a second pass over the whole
-    upstream chain (a broadcast nested-loop join branch that re-runs
-    the parse, the aggregates and the scaffold join).
+    used. ``calculate_rates`` and ``trim_end`` take the chunk keys as
+    ``frame_keys``, and ``with_scalars`` turns them into windows over
+    the existing key exchange. One exception remains:
+    ``calculate_by_adjacent_column`` fills at the release-wide latest
+    date (``with_scalars`` without frame keys), not the area's, and
+    that scalar plans a second pass over the whole upstream chain (a
+    broadcast nested-loop join branch that re-runs the parse, the
+    aggregates and the scaffold join).
 
     The panel comes back unordered: the store write partitions its
     rows itself, so a global sort here would be a range-partition
@@ -157,7 +160,7 @@ def process_panel(
         out, config.sum_change_direction, pct_precision=pct_precision
     )
     out = ratio_to_percentage(out, config.ratio_to_percentage)
-    out = trim_end(out, config.trim_end, TAIL_TRIM_DAYS, group_keys=chunk_keys)
+    out = trim_end(out, config.trim_end, TAIL_TRIM_DAYS, frame_keys=chunk_keys)
     if release_timestamp is not None:
         out = out.withColumn("releaseTimestamp", F.lit(release_timestamp))
     return out
@@ -289,8 +292,10 @@ def write_store_bucketed(
     ``saveAsTable(overwrite)`` would drop every other release's
     partitions). Spark enforces the table's bucket spec on insertInto, so
     inserted partitions stay bucket-readable. The table is created
-    through the store's writer, so its options record the store codec
-    and every insertInto writes the store's file format too.
+    through the store's writer, so its options record the store codec;
+    ``overwrite_partitions`` also sets the codec conf for the insert, so
+    a table created before the store codec gets the store's file format
+    in every partition it replaces.
     """
     spark = long.sparkSession
     if spark.catalog.tableExists(table_name):

@@ -345,18 +345,18 @@ def map_layer_features(
     restricted to non-null values within ``days_back`` days of the
     frame's latest date. The reference anchors its 6-month window at
     NOW(); here the anchor is the global max date (deterministic replay,
-    no wall-clock in the plan) via ``with_scalar`` — a 1-row broadcast
+    no wall-clock in the plan) via ``with_scalars`` — a 1-row broadcast
     cross-join, never a single-partition window. Dimension and geo joins
     broadcast; the fact table is never shuffled at all.
     """
-    from ..operators.util import with_scalar
+    from ..operators.util import with_scalars
 
     df = (
         _joined(time_series, areas, metrics)
         .filter((F.col("metric") == metric) & (F.col("area_type") == area_type))
         .filter(_value().isNotNull())
     )
-    df = with_scalar(df, "__mx", F.max(F.to_date("date")))
+    df = with_scalars(df, {"__mx": F.max(F.to_date("date"))})
     df = df.filter(
         F.datediff(F.col("__mx"), F.to_date("date")) < days_back
     )
@@ -402,12 +402,12 @@ def map_vax_features(
     The reference aligns the three dose series with UNIONed per-metric
     subqueries; here it is ONE pivot pass over the latest-date slice
     (same no-self-join shape as ``dose_alignment``). The latest date is
-    a 1-row broadcast (``with_scalar``); geo broadcasts; doses coalesce
+    a 1-row broadcast (``with_scalars``); geo broadcasts; doses coalesce
     to 0.0 (absent-at-latest-date metrics) so JSON rendering is
     engine-independent. ``precision=None`` skips the reference's
     ROUND(x, 2) for oracle-exact replay.
     """
-    from ..operators.util import with_scalar
+    from ..operators.util import with_scalars
 
     if len(dose_metrics) != 3:
         raise ValueError(
@@ -419,7 +419,7 @@ def map_vax_features(
         .filter(F.col("metric").isin(*dose_metrics))
         .filter(_value().isNotNull())
     )
-    df = with_scalar(df, "__mx", F.max("date")).filter(
+    df = with_scalars(df, {"__mx": F.max("date")}).filter(
         F.col("date") == F.col("__mx")
     )
     aligned = (

@@ -36,11 +36,7 @@ ENTRY_SCHEMA = (
 )
 
 
-def read_nested_release(
-    spark: SparkSession,
-    path: str,
-    metric_renames: dict[str, str] | None = None,
-) -> DataFrame:
+def read_nested_release(spark: SparkSession, path: str) -> DataFrame:
     """Parse a release into long metric rows.
 
     Returns ``(areaType, areaCode, metric, payload_json)`` — one row per
@@ -49,7 +45,7 @@ def read_nested_release(
     """
     raw = spark.read.text(path, wholetext=True)
     raw.createOrReplaceTempView("__raw_release")
-    long = spark.sql(
+    return spark.sql(
         f"""
         SELECT map({_RENAME_ENTRIES})[l1.key] AS areaType,
                l2.key AS area_code,
@@ -61,14 +57,6 @@ def read_nested_release(
         LATERAL variant_explode(l2.value) AS l3
         """
     ).withColumnRenamed("area_code", "areaCode")
-    if metric_renames:
-        mapping = F.create_map(
-            *[F.lit(x) for kv in metric_renames.items() for x in kv]
-        )
-        long = long.withColumn(
-            "metric", F.coalesce(mapping[F.col("metric")], F.col("metric"))
-        )
-    return long
 
 
 def explode_timeseries(long: DataFrame) -> DataFrame:

@@ -66,6 +66,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 _OVERWRITE_MODE_CONF = "spark.sql.sources.partitionOverwriteMode"
+_CODEC_CONF = "spark.sql.parquet.compression.codec"
 
 
 # -- filesystem -------------------------------------------------------
@@ -198,21 +199,24 @@ def overwrite_partitions(
     present in ``df`` at ``path`` (partitioned by ``partition_col``),
     leaving every other partition's files untouched. With ``table``,
     insert into that catalog table instead; ``insertInto`` ignores
-    writer options. It takes the overwrite mode from the session conf,
-    so the conf is set for the write and restored after it, and the
-    codec from the table's options, which a table created through
-    ``_writer`` records."""
+    writer options and takes the overwrite mode and the codec from the
+    session conf, so both confs are set for the write and restored
+    after it. A table created through ``_writer`` records the codec in
+    its options, which win over the conf; a table created without it
+    (before the store codec) gets store-codec files from here on."""
     writer = _writer(df).mode("overwrite")
     if table is None:
         writer.option("partitionOverwriteMode", "dynamic").partitionBy(partition_col).parquet(path)
         return
-    spark = df.sparkSession
-    prev = spark.conf.get(_OVERWRITE_MODE_CONF, "static")
-    spark.conf.set(_OVERWRITE_MODE_CONF, "dynamic")
+    conf = df.sparkSession.conf
+    prev = {k: conf.get(k) for k in (_OVERWRITE_MODE_CONF, _CODEC_CONF)}
+    conf.set(_OVERWRITE_MODE_CONF, "dynamic")
+    conf.set(_CODEC_CONF, _CODEC)
     try:
         writer.insertInto(table)
     finally:
-        spark.conf.set(_OVERWRITE_MODE_CONF, prev)
+        for k, v in prev.items():
+            conf.set(k, v)
 
 
 def require_static_overwrite(spark: SparkSession, caller: str) -> None:

@@ -115,23 +115,25 @@ def test_trim_end_masks_last_5_days(processed):
     assert processed["E92000001|2021-01-15"]["newCasesBySpecimenDate"] is not None
 
 
-def test_trim_end_explicit_cutoff_matches_scan_and_skips_aggregate(spark):
+@pytest.mark.parametrize("frame_keys", [("k",), None])
+def test_trim_end_masks_against_the_frame_max_date(spark, frame_keys):
+    """Area a reports through day 20 and area b stops at day 12: with
+    ``frame_keys`` each area is masked after its own max date - 5, and
+    without them both are masked after the whole frame's."""
     from coronavirus_dashboard_pipeline_etl_spark.operators.trim import trim_end
 
+    rows = [("a", d) for d in range(1, 21)] + [("b", d) for d in range(1, 13)]
     df = spark.createDataFrame(
-        [("a", f"2021-01-{d:02d}", float(d)) for d in range(1, 21)],
-        ["k", "date", "v"],
+        [(k, f"2021-01-{d:02d}", float(d), float(d)) for k, d in rows],
+        ["k", "date", "v", "untouched"],
     )
-    scanned = trim_end(df, ["v"], days_to_trim=5)
-    explicit = trim_end(df, ["v"], days_to_trim=5, max_date="2021-01-20")
-    assert sorted(map(tuple, scanned.collect())) == sorted(
-        map(tuple, explicit.collect())
-    )
-    # the explicit path must fold into the main stage: no aggregate, no
-    # join, no exchange anywhere in the plan
-    plan = explicit._jdf.queryExecution().executedPlan().toString()
-    for node in ("Aggregate", "Join", "Exchange"):
-        assert node not in plan, f"unexpected {node} in explicit-cutoff plan"
+    out = trim_end(df, ["v", "absent"], days_to_trim=5, frame_keys=frame_keys)
+    assert out.columns == df.columns
+    cutoff = {"a": 15, "b": 7} if frame_keys else {"a": 15, "b": 15}
+    got = {(r.k, int(r.date[-2:])): (r.v, r.untouched) for r in out.collect()}
+    assert got == {
+        (k, d): (float(d) if d <= cutoff[k] else None, float(d)) for k, d in rows
+    }
 
 
 def test_short_series_all_null_rolling(processed):

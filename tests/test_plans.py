@@ -81,10 +81,10 @@ def test_rolling_rate_broadcasts_population(spark):
     assert plan.count("orders.parquet") == 2  # main + scalar branch
 
 
-def test_rolling_rate_explicit_last_valid_single_fact_scan(spark):
-    """With the last_valid fast path the fact table is scanned exactly
-    once — the scale configuration (same pattern as trim_end's explicit
-    cutoff)."""
+def test_rolling_rate_frame_keys_single_fact_scan(spark):
+    """With ``frame_keys`` the tail-rule scalars are windows over the
+    key exchange: the fact table is scanned exactly once and no 1-row
+    broadcast branch is planned."""
     from pyspark.sql import functions as F
 
     from coronavirus_dashboard_pipeline_etl_spark.operators import calculate_rates
@@ -103,12 +103,13 @@ def test_rolling_rate_explicit_last_valid_single_fact_scan(spark):
         pop,
         rolling_rate=["spend"],
         group_keys=("areaCode",),
-        last_valid={"spend": "2099-01-01"},
+        frame_keys=("areaCode",),
     )
     plan = executed_plan(out)
     assert plan.count("orders.parquet") == 1, (
-        "fact side scanned more than once despite explicit last_valid"
+        "fact side scanned more than once despite per-frame scalars"
     )
+    assert "BroadcastNestedLoopJoin" not in plan
     assert "BroadcastHashJoin" in plan
 
 

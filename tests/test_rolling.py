@@ -168,30 +168,54 @@ def test_rates_tail_mask_uses_global_last_date(spark):
     assert all(v is not None for v in got.values())
 
 
-def test_rates_explicit_last_valid_masks_tail(spark):
-    """The last_valid fast path must produce the same mask the scanned
-    scalar would."""
+@pytest.mark.parametrize("frame_keys", [("areaType", "areaCode"), None])
+def test_rates_tail_rules_follow_the_frame(spark, frame_keys):
+    """The event cutoff (frame max date - 5) and the non-event last
+    valid date are taken per area with ``frame_keys`` and over the
+    whole frame without them (generic_rate.py:107-117). Area A reports
+    days 1-14; area B has rows for days 1-12 but its last valid value
+    is day 10 (it stops reporting early)."""
     from pyspark.sql import Row
 
     from coronavirus_dashboard_pipeline_etl_spark.operators import calculate_rates
 
-    rows = [
-        Row(areaType="n", areaCode="A", date=f"2024-01-{d:02d}", cases=1.0)
-        for d in range(1, 11)
-    ]
-    pop = spark.createDataFrame([Row(areaCode="A", population=1000)])
-    df = spark.createDataFrame(rows)
-    scanned = calculate_rates(df, pop, rolling_rate=["cases"], precision=None)
-    explicit = calculate_rates(
-        df,
-        pop,
-        rolling_rate=["cases"],
-        precision=None,
-        last_valid={"cases": "2024-01-10"},
+    rows = []
+    for code, last_row, last_valid in (("A", 14, 14), ("B", 12, 10)):
+        for d in range(1, last_row + 1):
+            v = 1.0 if d <= last_valid else None
+            rows.append(Row(
+                areaType="n", areaCode=code, date=f"2024-01-{d:02d}",
+                cases=v, newCasesBySpecimenDate=v,
+            ))
+    pop = spark.createDataFrame(
+        [Row(areaCode="A", population=1000), Row(areaCode="B", population=1000)]
     )
-    assert sorted(map(tuple, scanned.collect())) == sorted(
-        map(tuple, explicit.collect())
+    out = calculate_rates(
+        spark.createDataFrame(rows), pop, rolling_rate=["cases", "newCasesBySpecimenDate"],
+        precision=None, frame_keys=frame_keys,
     )
+    assert "__max_date" not in out.columns and "__last_cases" not in out.columns
+    got = {(r.areaCode, int(r.date[-2:])): r for r in out.collect()}
+
+    def rolling(code, d):
+        # 7-row windows of 1.0; a short or null-holding window publishes 0
+        last_valid = 14 if code == "A" else 10
+        return 7.0 if 7 <= d <= last_valid else 0.0
+
+    if frame_keys:
+        event_cutoff = {"A": 14 - 5, "B": 12 - 5}
+        last_valid = {"A": 14, "B": 10}
+    else:
+        event_cutoff = {"A": 9, "B": 9}
+        last_valid = {"A": 14, "B": 14}
+    for (code, d), r in got.items():
+        event = rolling(code, d) if d <= event_cutoff[code] else None
+        plain = rolling(code, d) if d <= last_valid[code] else None
+        assert r.newCasesBySpecimenDateRollingSum == event, (code, d)
+        assert r.casesRollingSum == plain, (code, d)
+        assert (r.newCasesBySpecimenDateRollingRate is None) == (event is None)
+        assert (r.casesRollingRate is None) == (plain is None)
+    assert len(got) == 14 + 12
 
 
 def test_rolling_percentile_median_and_min_periods(spark):

@@ -1189,6 +1189,53 @@ def test_legacy_snappy_store_reads_merges_and_folds(spark, tmp_path, monkeypatch
     assert _store_rows(spark.read.parquet(path)) == want
 
 
+def test_bucketed_table_made_before_the_store_codec_converges_to_zstd(spark):
+    """A bucketed serving table created by a plain ``saveAsTable`` (its
+    options record no codec) gets ZSTD files in the partition a
+    ``write_store_bucketed`` re-run replaces, keeps its snappy files in
+    the untouched partition, and the session's overwrite-mode and codec
+    confs are back at their previous values after the insert."""
+    from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
+        write_store_bucketed,
+    )
+
+    table = f"legacy_codec_{uuid.uuid4().hex[:8]}"
+    rows = [(f"A{i % 3}", "m", f"2024-01-0{1 + i}", "x", f"p{i % 2}") for i in range(6)]
+    long = spark.createDataFrame(
+        rows, "area_code string, metric string, date string, payload string, partition_id string"
+    )
+    confs = ("spark.sql.sources.partitionOverwriteMode", "spark.sql.parquet.compression.codec")
+    try:
+        (
+            long.write.mode("overwrite")
+            .partitionBy("partition_id")
+            .bucketBy(2, "area_code", "metric")
+            .sortBy("area_code", "metric", "date")
+            .format("parquet")
+            .saveAsTable(table)
+        )
+        location = [
+            r.data_type for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+            if r.col_name == "Location"
+        ]
+        root = unquote(urlparse(location[0]).path)
+        legacy = _codecs(root)
+        assert legacy and all(c == {"SNAPPY"} for c in legacy.values()), legacy
+        before = {k: spark.conf.get(k) for k in confs}
+
+        write_store_bucketed(long.filter("partition_id = 'p1'"), table, buckets=2)
+
+        after = _codecs(root)
+        replaced = {p: c for p, c in after.items() if p.startswith("partition_id=p1/")}
+        kept = {p: c for p, c in after.items() if not p.startswith("partition_id=p1/")}
+        assert replaced and all(c == {"ZSTD"} for c in replaced.values()), after
+        assert kept == {p: c for p, c in legacy.items() if p.startswith("partition_id=p0/")}
+        assert {k: spark.conf.get(k) for k in confs} == before
+        assert sorted(map(tuple, spark.table(table).collect())) == sorted(rows)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 # -- the fold: one file-set rewrite for both layouts ----------------------
 
 

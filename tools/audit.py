@@ -281,7 +281,7 @@ def plans_mode(args: list[str]) -> None:
         "",
         "Reading the flags: in this engine every `single_part_exchanges` and",
         "`nested_loop_joins` occurrence is the 1-ROW SCALAR pattern — a grand",
-        "aggregate (scaffold date bounds, corpus stats, with_scalar, a store's",
+        "aggregate (scaffold date bounds, corpus stats, with_scalars, a store's",
         "stats pass, an iterative loop's convergence `count()`) whose partial-agg",
         "rows (one per task, not data) converge to one partition and broadcast",
         "back. Verified by reading the plans: the SinglePartition exchange input",
