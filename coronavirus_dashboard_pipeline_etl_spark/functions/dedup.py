@@ -925,19 +925,16 @@ def minhash_index_upsert(
 
 #: the persisted dedup stores are ``store.py`` bucketed stores: the
 #: band index hashes on (band, sig), the fingerprint table on its fp column
-STORE_BUCKET = store.STORE_BUCKET
 _BAND_KEYS = ["band", "sig"]
-store_meta_read = store.meta_read
 
 
-def _band_identity(index: DataFrame, epoch: int, **family) -> dict:
+def _band_identity(index: DataFrame, **family) -> dict:
     """Sidecar identity of a band-index store: the signature family
     (``k``/``bands``/``base_hash``) the caller names and the id column
     its rows carry."""
     extra = [c for c in index.columns if c not in _BAND_KEYS]
     return {
         "kind": "band_index",
-        "epoch": epoch,
         **({"id_col": extra[0]} if len(extra) == 1 else {}),
         **{key: val for key, val in family.items() if val is not None},
     }
@@ -951,7 +948,6 @@ def band_index_write(
     k: int | None = None,
     bands: int | None = None,
     base_hash: str | None = None,
-    epoch: int = 0,
 ) -> None:
     """Persist a band index PARTITIONED by the (band, sig)-hash bucket —
     the production layout for ``minhash_band_index``'s output. At
@@ -959,19 +955,18 @@ def band_index_write(
     is delta-sized: with this layout ``band_index_pruned`` turns the
     probe's corpus scan into a partition-pruned one. ``k``/``bands``/
     ``base_hash``, when passed, join the sidecar's store identity
-    (``store.write_bucketed``). Rows carry a write-``epoch``
-    column (0 for a full build) so ``band_index_upsert_write`` can
-    advance the store with appends + tombstones instead of rewriting
-    it."""
+    (``store.write_bucketed``). Rows carry the store's write epoch so
+    ``band_index_upsert_write`` can advance the store with appends +
+    tombstones instead of rewriting it."""
     store.write_bucketed(
         index,
         path,
         _BAND_KEYS,
-        _band_identity(index, epoch, k=k, bands=bands, base_hash=base_hash),
+        _band_identity(index, k=k, bands=bands, base_hash=base_hash),
         buckets,
         mode,
         "band_index_write",
-        epoch=epoch,
+        epochs=True,
     )
 
 
@@ -1042,15 +1037,16 @@ def band_index_upsert_write(
     idempotent re-release semantics), re-expressed as parquet
     merge-on-read; on Delta/Iceberg this whole function is MERGE INTO.
 
-    Ordering/crash contract (plain parquet has no transaction): data
-    rows append BEFORE tombstones, so a crash between the two leaves
-    the store with BOTH crawls of a re-crawled doc visible — the probe
-    over-generates candidates (all exact-verified downstream, recall
-    never lost) until the wave is repaired. Repair = run
-    ``compact_dedup_store`` (drops replayed duplicate rows, folds
-    tombstones) and re-run the wave. First write bootstraps the store;
-    a legacy store without the epoch/meta sidecar raises — rewrite it
-    with ``band_index_write`` once.
+    Ordering/crash contract (plain parquet has no transaction): the
+    store's one write protocol (``store.write_bucketed``) records the
+    wave's epoch in the sidecar, then appends the data rows, then the
+    tombstones, so a crash between the last two leaves the store with
+    BOTH crawls of a re-crawled doc visible — the probe over-generates
+    candidates (all exact-verified downstream, recall never lost) until
+    the wave is re-run: the re-run takes a later epoch, so its
+    tombstones kill the crashed attempt's rows too. First write
+    bootstraps the store; a legacy store without the epoch/meta sidecar
+    raises — rewrite it with ``band_index_write`` once.
 
     ``streaming.ingest.index_upsert_batch`` is this function under its
     foreachBatch-sink name: pass a closure over it to
@@ -1058,31 +1054,17 @@ def band_index_upsert_write(
     last wave the store equals ``minhash_band_index`` rebuilt over each
     document's latest crawl, however the waves were sliced (gated by
     st8)."""
-    meta = store.meta_read(path)
-    store.resolve_params(
-        path,
-        meta,
-        {"k": k, "bands": bands, "base_hash": base_hash, "id_col": id_col},
-    )
-    if meta is None and store.is_dir(path):
-        raise ValueError(
-            f"band_index_upsert_write: store at {path} predates the "
-            "sidecar — rewrite it once with band_index_write before "
-            "upserting"
-        )
-    epoch = 0 if meta is None else int(meta.get("epoch", 0)) + 1
     fresh = minhash_band_index(batch, id_col, text_col, k, bands, base_hash)
     store.write_bucketed(
         fresh,
         path,
         _BAND_KEYS,
-        _band_identity(fresh, epoch, k=k, bands=bands, base_hash=base_hash),
+        _band_identity(fresh, k=k, bands=bands, base_hash=base_hash),
         buckets,
         "append",
         "band_index_upsert_write",
-        epoch=epoch,
-        meta=None if meta is None else {**meta, "epoch": epoch},
-        tombstones=None if meta is None else batch.select(id_col).distinct(),
+        batch.select(id_col).distinct(),
+        epochs=True,
     )
 
 

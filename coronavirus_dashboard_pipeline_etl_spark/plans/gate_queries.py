@@ -12992,7 +12992,7 @@ def d14c_tombstone_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base, stale, recrawl = _index_slices(docs)
     path = _scratch_store(spark, "gate_d14c_index")
-    # wave 1 bootstraps the store (full build, epoch 0, no tombstones)
+    # wave 1 bootstraps the store (full build, epoch 1, no tombstones)
     band_index_upsert_write(base.unionByName(stale), path, k=16, bands=2)
     # wave 2: re-crawl of the %5==4 docs with their CURRENT text —
     # wave-sized appends + tombstones, the store is never rewritten
@@ -13297,7 +13297,7 @@ def d14d_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     band_index_upsert_write(
         base.unionByName(stale), path, k=16, bands=2, buckets=16
     )
-    # the re-crawl wave: wave-sized appends + tombstones (epoch 1)
+    # the re-crawl wave: wave-sized appends + tombstones (epoch 2)
     band_index_upsert_write(recrawl, path, k=16, bands=2, buckets=16)
     rep1 = compact_dedup_store(spark, path, incremental=True, bucket_budget=4)
     tombs_kept_mid = store.is_dir(tombstones)

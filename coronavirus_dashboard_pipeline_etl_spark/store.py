@@ -30,7 +30,16 @@ once:
   so a probe prunes its scan to the buckets it can match; the
   PARTITIONED layout (the serving store: ``write_partitioned``)
   partitions on a column the rows carry (``partition_id``), and an
-  upsert is a batch-sized append plus tombstones. Both read through
+  upsert is a batch-sized append plus tombstones. Both write through
+  ``_write``, the one write protocol: read the sidecar once, check the
+  caller's identity and the schema against it, take the next epoch
+  (the recorded one plus one), then write the sidecar, the data and
+  the tombstones, in that order. A write that crashes has already
+  recorded its epoch, so its re-run takes a later one, and the re-run's
+  tombstones kill the rows the crashed attempt left. A write that
+  truncates the path (a static overwrite) writes its sidecar after the
+  data instead: the truncation deletes the sidecar and the tombstones
+  together with the old files. Both layouts read through
   ``read_bucketed`` and fold through ``compact``, one file-set rewrite
   for every layout and fold shape: append the live rows of the chosen
   files, then delete the files read. New files never replace the ones
@@ -54,7 +63,7 @@ from __future__ import annotations
 import json
 import warnings
 import weakref
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager
 from urllib.parse import unquote
 
@@ -391,9 +400,11 @@ _META_FILE = "_store_meta.json"
 _TOMBSTONE_DIR = "_tombstones"
 
 #: sidecar key and fold-report field: the buckets file-folded since
-#: their last whole-bucket merge. A file-scoped fold cannot see
-#: duplicate rows a replayed wave left in two different files; only a
-#: whole-bucket merge (or a full fold) drops them.
+#: their last whole-bucket merge. Cross-file duplicate rows come only
+#: from a fold that crashed between its append and its deletes (a
+#: replayed write takes a new epoch, and its tombstones kill the
+#: crashed attempt's rows). A file-scoped fold cannot see such
+#: duplicates; only a whole-bucket merge (or a full fold) drops them.
 REPLAY_DEBT = "replay_duplicates_possible"
 
 
@@ -411,24 +422,16 @@ def meta_read(path: str) -> dict | None:
     return json.loads(_fs_read_text(None, meta_path))
 
 
-def _meta_write(
-    path: str, meta: dict, listing: list[tuple[str, int]] | None = None
-) -> None:
+def _meta_write(path: str, meta: dict) -> None:
     """Persist a store's sidecar — what the directory layout cannot
     express: the layout (``buckets``, the hash→partition mapping, or
     the ``partition_col`` of the partitioned layout), the identity
     fields (a band index's ``k``/``bands``/``base_hash``, the id/fp
     column, a partitioned store's tombstone ``id_cols``), the write
-    ``epoch``, the store ``schema``, the ``REPLAY_DEBT`` buckets and,
-    for the bucketed layout, the observed ``data_bytes`` summed from
-    ``listing`` (a ``list_files`` taken after the write), which
-    ``_auto_buckets`` trusts over the optimizer's estimate on a reseed
-    (round-14 verdict). It lives next to the data files on the same
-    Hadoop FileSystem and is renamed over the old one, so a crash never
-    leaves a truncated sidecar. On Delta/Iceberg the table's own
-    properties replace it."""
-    if listing is not None:
-        meta = {**meta, "data_bytes": sum(map(sum, bucket_files(path, listing).values()))}
+    ``epoch``, the store ``schema`` and the ``REPLAY_DEBT`` buckets. It
+    lives next to the data files on the same Hadoop FileSystem and is
+    renamed over the old one, so a crash never leaves a truncated
+    sidecar. On Delta/Iceberg the table's own properties replace it."""
     _fs_write_text(None, join(path, _META_FILE), json.dumps(meta, sort_keys=True))
 
 
@@ -502,9 +505,10 @@ def resolve_params(path: str, meta: dict | None, caller: dict) -> dict:
       recorded value silently governs (a caller value that differed
       used to make pruned reads LOSSY with no detection; now the reader
       simply prunes with the writer's true mapping).
-    * every other field (a signature family, an id/fp column name) must
-      MATCH: a probe built differently from the store's rows is wrong
-      in a way no fallback repairs, so a mismatch raises.
+    * every other field (a signature family, an id/fp column name, a
+      partition or tombstone column) must MATCH: a probe built
+      differently from the store's rows is wrong in a way no fallback
+      repairs, so a mismatch raises.
     * a legacy store with no sidecar keeps the caller's values (the
       pre-sidecar documented contract)."""
     recorded = meta or {}
@@ -516,7 +520,7 @@ def resolve_params(path: str, meta: dict | None, caller: dict) -> dict:
     }
     if bad:
         raise ValueError(
-            f"dedup store at {path}: caller params disagree with the "
+            f"store at {path}: caller params disagree with the "
             f"store's recorded identity ({_META_FILE}): {bad} — "
             "rebuild the store or call with the recorded values"
         )
@@ -543,18 +547,18 @@ def _bucket_col(key_cols: list[str], buckets: int) -> Column:
 #: count (equal keys share a bucket) — so deriving it from data size is
 #: safe by construction.
 _AUTO_BUCKET_TARGET_BYTES = 512 * 1024 * 1024
-#: per-bucket target for OBSERVED parquet bytes (the sidecar's
-#: ``data_bytes``, recorded after every store write): parquet on disk
-#: runs ~2-4x smaller than the optimizer's uncompressed row-size
+#: per-bucket target for OBSERVED parquet bytes (the data files of the
+#: store a truncating write replaces, listed at that write): parquet on
+#: disk runs ~2-4x smaller than the optimizer's uncompressed row-size
 #: estimate, so 256 MB on disk lands in the same 128 MB-1 GB file band
 #: as the 512 MB estimate target. The store's ZSTD files are about 40%
 #: smaller than snappy files of the same rows, so a reseed sized from
 #: them gets fewer buckets than one sized from snappy files; the target
 #: stays, because it is a band of file sizes on disk, whatever the
-#: codec. Observed bytes GOVERN a reseed when
-#: present — the plan estimate compounds selectivity guesses and can
-#: overshoot 10x on a complex writer frame (round-14 verdict), while
-#: the disk does not lie about the store being replaced. A reseed that
+#: codec. Observed bytes GOVERN a reseed of a store with a sidecar —
+#: the plan estimate compounds selectivity guesses and can overshoot
+#: 10x on a complex writer frame (round-14 verdict), while the disk
+#: does not lie about the store being replaced. A reseed that
 #: materially changes the store's content size should pass ``buckets``
 #: explicitly (or remove the sidecar) — the observed figure describes
 #: the PREVIOUS contents.
@@ -571,19 +575,20 @@ _LEGACY_BUCKETS = 64
 _STATS_UNKNOWN_BYTES = 1 << 60
 
 
-def _auto_buckets(df: DataFrame, meta: dict | None = None) -> int:
+def _auto_buckets(df: DataFrame, meta: dict | None = None, path: str | None = None) -> int:
     """Scale-adaptive bucket count for a fresh store write: ceil of the
     store's size over the per-bucket target, clamped to
     [``_AUTO_BUCKET_MIN``, ``_AUTO_BUCKET_MAX``] and rounded up to a
     power of two (stores reseeded at slightly different sizes tend to
     keep their layout). No job runs. The size figure, best first:
 
-    * the sidecar's OBSERVED ``data_bytes`` (recorded after every
-      store write) when the path already holds a sidecar'd store —
-      ground truth for a reseed, immune to the optimizer's
+    * the OBSERVED bytes of the data files at ``path``, from one
+      ``list_files`` of the store being replaced, when it has a sidecar
+      (``meta``) — ground truth for a reseed, immune to the optimizer's
       selectivity-compounding overshoot (see
       ``_AUTO_BUCKET_TARGET_DISK_BYTES``); it overrides the ESTIMATE
-      only, never the no-size-signal fallback below;
+      only, never the no-size-signal fallback below, and a legacy
+      store without a sidecar sizes from the estimate;
     * else the logical plan's ``sizeInBytes`` estimate (column-width
       scaling over the scan size) — an order-of-magnitude figure,
       which is all a layout choice needs;
@@ -605,9 +610,9 @@ def _auto_buckets(df: DataFrame, meta: dict | None = None) -> int:
         if meta and isinstance(meta.get("buckets"), int):
             return meta["buckets"]
         return _LEGACY_BUCKETS
-    observed = (meta or {}).get("data_bytes")
-    if isinstance(observed, int) and observed > 0:
-        return clamp(max(1, -(-observed // _AUTO_BUCKET_TARGET_DISK_BYTES)))
+    observed = sum(size for _, size in list_files(path)) if meta and path else 0
+    if observed > 0:
+        return clamp(-(-observed // _AUTO_BUCKET_TARGET_DISK_BYTES))
     return clamp(max(1, -(-est // _AUTO_BUCKET_TARGET_BYTES)))
 
 
@@ -632,8 +637,65 @@ def _write_buckets(
     writer.mode(mode).parquet(path)
 
 
-#: ``write_bucketed``'s "the caller has not read the sidecar" marker
-_UNREAD = object()
+def _write(
+    df: DataFrame,
+    path: str,
+    caller: str,
+    meta: dict | None,
+    record: dict | None,
+    in_place: bool,
+    write: Callable[[DataFrame], None],
+    tombstones: DataFrame | None = None,
+    epochs: bool = True,
+) -> None:
+    """The one write protocol of the store format, for both layouts.
+    ``meta`` is the sidecar the layout's entry point read (once) and
+    checked the caller's identity against; ``record`` is what the
+    sidecar records after the write (None: a legacy store that keeps no
+    sidecar), whose ``partition_col`` the rows carry (the bucket when it
+    names none); ``write`` writes the rows.
+
+    1. The write's epoch is the recorded one plus one (a store without
+       a sidecar is epoch 0); ``epochs`` stamps it on every row.
+    2. A write ``in_place`` (an append or a dynamic overwrite: it adds
+       files and keeps the rest of the path) checks the schema against
+       the recorded one and writes the sidecar BEFORE the data, so a
+       write that crashes keeps an epoch no later write reuses, and the
+       re-run's tombstones kill the rows the crashed attempt left. The
+       sidecar is rewritten only when its record changes.
+    3. The rows, then the ``tombstones`` (a frame of ids) at the epoch,
+       which kill every older row of those ids. A crash between the two
+       leaves an id's old and new rows visible until the write is
+       re-run or the store is folded (over-generation, never loss). A
+       path with no store yet takes no tombstones: no row is older; a
+       legacy store keeps no sidecar, so it refuses them.
+    4. A write that is not in place writes its sidecar AFTER the data.
+       A static overwrite truncates the path, which deletes the old
+       sidecar and tombstones together with the old files, so a sidecar
+       written first would go with them; an ``ignore`` or ``error``
+       write must find no path there."""
+    if tombstones is not None and record is None:
+        raise ValueError(
+            f"{caller}: store at {path} predates the sidecar — rewrite it "
+            "once with an overwrite before upserting"
+        )
+    if tombstones is not None and meta is None and read_existing(df.sparkSession, path) is None:
+        tombstones = None
+    epoch = int((meta or {}).get("epoch", 0)) + 1
+    if epochs:
+        df = df.withColumn(EPOCH_COL, F.lit(epoch).cast("int"))
+    schema = _store_schema(df, (record or {}).get("partition_col", STORE_BUCKET))
+    if in_place:
+        _check_schema(path, meta, schema, caller)
+    if record is not None:
+        record = {**record, "schema": schema, **({"epoch": epoch} if epochs else {})}
+    if in_place and record != meta:
+        _meta_write(path, record)
+    write(df)
+    if tombstones is not None:
+        _append_tombstones(tombstones, path, epoch)
+    if not in_place and record is not None:
+        _meta_write(path, record)
 
 
 def write_bucketed(
@@ -644,54 +706,45 @@ def write_bucketed(
     buckets: int | None,
     mode: str,
     caller: str,
-    epoch: int | None = None,
-    meta: dict | None | object = _UNREAD,
     tombstones: DataFrame | None = None,
+    epochs: bool = False,
 ) -> None:
     """Write ``df`` into the bucketed store at ``path``, hashed on
-    ``key_cols``, and record the sidecar (``meta``: the sidecar if the
-    caller has read it already, None for none).
+    ``key_cols``, through the store's one write protocol (``_write``).
 
-    A write that does not truncate an existing store (``append``, or
-    ``ignore``, which Spark skips) keeps the recorded ``buckets`` and
-    sidecar: an append hashed with another count would scatter equal
-    keys across buckets and make pruning silently lossy; a legacy
+    An ``append`` into an existing store checks ``identity`` against
+    the sidecar (``resolve_params``) and keeps the recorded
+    ``buckets``: an append hashed with another count would scatter
+    equal keys across buckets and make pruning silently lossy. A legacy
     no-sidecar store keeps the fixed count its files were hashed with
-    unless the caller fixes one; an append whose columns or types
-    differ from the recorded schema raises before writing. Any other
-    write takes the caller's ``buckets`` or ``_auto_buckets`` and
-    records ``identity`` and the store schema with it; an overwrite
-    must truncate the whole path
-    (``require_static_overwrite``). ``epoch`` stamps every row;
-    ``tombstones`` (a frame of ids) is appended to the tombstone table
-    with that epoch AFTER the data rows, so a crash between the two
-    leaves both crawls of an id visible (over-generation, never loss)."""
+    unless the caller fixes one, records no sidecar and takes no
+    tombstones. An ``ignore`` write into an existing store changes
+    nothing, as Spark skips it. Any other write takes the caller's
+    ``buckets`` or ``_auto_buckets`` and records ``identity`` with it;
+    an overwrite must truncate the whole path
+    (``require_static_overwrite``). Only an ``append`` is in place: an
+    overwrite truncates the path, and Spark would skip an ``ignore``
+    write, or refuse an ``error`` one, to a new path that a sidecar
+    written first had created. ``epochs`` stamps the rows with the
+    write's epoch; a store that takes ``tombstones`` needs them."""
     reserved = [c for c in (STORE_BUCKET, EPOCH_COL) if c in df.columns]
     if reserved:
         raise ValueError(
             f"{caller}: frame already carries a reserved column {reserved}"
         )
-    if meta is _UNREAD:
-        meta = meta_read(path)
-    keep = mode in ("append", "ignore") and (meta is not None or is_dir(path))
-    if keep and meta is not None:
-        buckets = meta["buckets"]
-    elif buckets is None:
-        buckets = _LEGACY_BUCKETS if keep else _auto_buckets(df, meta)
     if mode == "overwrite":
         require_static_overwrite(df.sparkSession, caller)
-    if epoch is not None:
-        df = df.withColumn(EPOCH_COL, F.lit(epoch).cast("int"))
-    df = df.withColumn(STORE_BUCKET, _bucket_col(key_cols, buckets))
-    schema = _store_schema(df, STORE_BUCKET)
-    if mode == "append":
-        _check_schema(path, meta, schema, caller)
-    _write_buckets(df, path, buckets, mode)
-    if tombstones is not None:
-        _append_tombstones(tombstones, path, epoch)
-    record = meta if keep else {**identity, "buckets": buckets, "schema": schema}
-    if record is not None:
-        _meta_write(path, record, list_files(path))
+    meta = meta_read(path)
+    keep = mode in ("append", "ignore") and (meta is not None or is_dir(path))
+    if keep and mode == "ignore":
+        return
+    if keep:
+        buckets = resolve_params(path, meta, {**identity, "buckets": buckets})["buckets"]
+    buckets = buckets or (_LEGACY_BUCKETS if keep else _auto_buckets(df, meta, path))
+    rows = df.withColumn(STORE_BUCKET, _bucket_col(key_cols, buckets))
+    record = meta if keep else {**identity, "buckets": buckets}
+    write = lambda out: _write_buckets(out, path, buckets, mode)  # noqa: E731
+    _write(rows, path, caller, meta, record, mode == "append", write, tombstones, epochs)
 
 
 def _append_tombstones(ids: DataFrame, path: str, epoch: int) -> None:
@@ -709,39 +762,33 @@ def write_partitioned(
     id_cols: list[str] | None = None,
 ) -> None:
     """Write ``df`` into the PARTITIONED-layout store at ``path``,
-    partitioned on its own ``partition_col`` and stamped with the
-    store's next epoch. Without ``id_cols`` the write replaces the
-    partitions present in ``df`` (dynamic overwrite, a publish); with
-    them it is an UPSERT: ``df`` appends under its partitions and one
-    tombstone per row at the same epoch kills every older row with the
-    same ``id_cols`` (merge-on-read, so only ``read_bucketed`` sees the
-    merged view until ``compact`` folds it). ``df`` must carry each
-    ``id_cols`` value once. A store without a sidecar reads as epoch 0;
-    a missing path or a directory with no data files takes the upsert
-    without tombstones, and any other read failure of such a store
-    propagates before anything is written.
-
-    The sidecar (epoch, schema, layout) is written BEFORE the data, with
-    no listing: a write that crashes keeps an epoch no later write
-    reuses, so the re-run's tombstones kill the crashed rows. Data rows
-    land before tombstones, so a crash between the two leaves a key's
-    old and new rows visible until the write is re-run or the store is
-    folded; a dynamic overwrite that crashes between staging and rename
-    can instead lose a partition."""
+    partitioned on its own ``partition_col``, through the store's one
+    write protocol (``_write``): every row carries the write's epoch.
+    Without ``id_cols`` the write replaces the partitions present in
+    ``df`` (dynamic overwrite, a publish); with them it is an UPSERT:
+    ``df`` appends under its partitions and one tombstone per row kills
+    every older row with the same ``id_cols`` (merge-on-read, so only
+    ``read_bucketed`` sees the merged view until ``compact`` folds it).
+    ``df`` must carry each ``id_cols`` value once. Both keep the rest of
+    the path, so both are in place, and both check the layout and
+    ``id_cols`` against the sidecar (``resolve_params``). A store
+    without a sidecar reads as epoch 0 and gets one; a missing path or a
+    directory with no data files takes the upsert without tombstones,
+    and any other read failure of such a store propagates before
+    anything is written. A dynamic overwrite that crashes between
+    staging and rename can lose a partition."""
     meta = meta_read(path)
-    first = meta is None and read_existing(df.sparkSession, path) is None
-    epoch = int((meta or {}).get("epoch", 0)) + 1
-    df = df.withColumn(EPOCH_COL, F.lit(epoch).cast("int"))
-    schema = _store_schema(df, partition_col)
-    _check_schema(path, meta, schema, caller)
-    record = {"partition_col": partition_col, "epoch": epoch, "schema": schema}
-    _meta_write(path, {**(meta or {}), **({"id_cols": id_cols} if id_cols else {}), **record})
-    if id_cols is None:
-        overwrite_partitions(df, path, partition_col)
-        return
-    _writer(df).mode("append").partitionBy(partition_col).parquet(path)
-    if not first:
-        _append_tombstones(df.select(*id_cols), path, epoch)
+    identity = {"partition_col": partition_col, **({"id_cols": id_cols} if id_cols else {})}
+    resolve_params(path, meta, identity)
+
+    def write(rows: DataFrame) -> None:
+        if id_cols is None:
+            overwrite_partitions(rows, path, partition_col)
+        else:
+            _writer(rows).mode("append").partitionBy(partition_col).parquet(path)
+
+    tombstones = None if id_cols is None else df.select(*id_cols)
+    _write(df, path, caller, meta, {**(meta or {}), **identity}, True, write, tombstones)
 
 
 #: driver-side size guard for the tombstone broadcast: the latest-
@@ -882,8 +929,9 @@ def compact(
        listing; or, in a FILE-SCOPED fold, only the files that hold a
        dead row, from one collect scoped to the budgeted buckets.
     4. Read exactly those files and keep the live rows. An epoch-stamped
-       store also drops exact duplicates, which only a replayed write or
-       a crashed fold can make there; an append-only store without
+       store also drops exact duplicates, which only a crashed fold can
+       make there (a re-run write takes a new epoch, and its tombstones
+       kill the crashed attempt's rows); an append-only store without
        epochs keeps its rows as they are.
     5. Append them back, one file per partition, each file at most
        ``target_rows_per_file`` rows.
@@ -905,7 +953,7 @@ def compact(
       ``incremental``, only the first ``bucket_budget`` of them. A
       bucket over the file limit folds whole: its debt is the file
       count, and the whole-bucket fold also drops the duplicate rows a
-      replayed wave left in two files. Any other bucket folds
+      crashed fold left in two files. Any other bucket folds
       file-scoped, so its clean files keep their bytes and the run
       writes dead-file bytes only, the cadence knob for a store too
       large to fold in one window. A file-scoped fold cannot see
@@ -930,9 +978,8 @@ def compact(
     (``buckets_*``) before and after, partitions and files rewritten,
     dead rows before, folded and remaining, tombstones folded and
     whether they cleared, and ``REPLAY_DEBT``. The call reads the
-    sidecar once; it writes it once in the bucketed layout (observed
-    ``data_bytes`` and the debt), and not at all in the partitioned
-    one."""
+    sidecar once; it writes it only in the bucketed layout, once, when
+    the debt it records changes."""
     meta = meta_read(path)
     part = (meta or {}).get("partition_col", partition_col)
     bucketed = part == STORE_BUCKET
@@ -1002,15 +1049,14 @@ def compact(
     tombstones_folded = _tombstones(spark, path, raw, ids).coalesce(1).count() if cleared else 0
     if cleared:
         delete(tombstone_path(path))
-    listing = list_files(path)
-    after = _partition_listing(listing, part)
+    after = _partition_listing(list_files(path), part)
     for p in set(fold) - set(after):  # every row was dead: drop the empty directory
         delete(join(path, files[p][0][0].rpartition("/")[0]))
     whole = set(fold) - set(scoped)
     debt = ((set((meta or {}).get(REPLAY_DEBT, [])) | set(scoped)) - whole) & set(after)
-    if meta is not None and bucketed:
+    if meta is not None and bucketed and set(meta.get(REPLAY_DEBT, [])) != debt:
         meta = {k: v for k, v in meta.items() if k != REPLAY_DEBT}
-        _meta_write(path, {**meta, **({REPLAY_DEBT: sorted(debt)} if debt else {})}, listing)
+        _meta_write(path, {**meta, **({REPLAY_DEBT: sorted(debt)} if debt else {})})
     return {
         "files_before": sum(map(len, files.values())),
         "bytes_before": sum(size for fs in files.values() for _, size in fs),

@@ -951,7 +951,6 @@ def test_partitioned_store_pruning(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
-        STORE_BUCKET,
         band_index_pruned,
         band_index_read,
         band_index_write,
@@ -961,6 +960,7 @@ def test_partitioned_store_pruning(spark, tmp_path):
         minhash_band_index,
         minhash_probe_pairs,
     )
+    from coronavirus_dashboard_pipeline_etl_spark.store import STORE_BUCKET
 
     def docs(rows):
         return spark.createDataFrame(rows, "doc_id long, text string")
@@ -1145,8 +1145,8 @@ def test_band_index_upsert_write_is_batch_sized(spark, tmp_path):
         band_index_upsert_write,
         minhash_band_index,
         minhash_probe_pairs,
-        store_meta_read,
     )
+    from coronavirus_dashboard_pipeline_etl_spark.store import meta_read
 
     def docs(rows):
         return spark.createDataFrame(rows, "doc_id long, text string")
@@ -1158,15 +1158,15 @@ def test_band_index_upsert_write_is_batch_sized(spark, tmp_path):
     path = str(tmp_path / "bidx")
     # bootstrap (absent store) writes meta with the full identity
     band_index_upsert_write(corpus, path, k=8, bands=2, buckets=16)
-    meta = store_meta_read(path)
-    # observed on-disk bytes and the store schema are recorded
-    # alongside the identity (r15)
-    assert meta.pop("data_bytes") > 0
+    meta = meta_read(path)
+    # the store schema is recorded alongside the identity (r15); the
+    # data bytes a reseed is sized from are on disk, not in the sidecar
+    assert sum(os.path.getsize(p) for p in glob.glob(path + "/bucket=*/*.parquet")) > 0
     assert [f["name"] for f in meta.pop("schema")["fields"]] == [
         "doc_id", "band", "sig", "__epoch", "bucket"
     ]
     assert meta == {
-        "bands": 2, "base_hash": "md5", "buckets": 16, "epoch": 0,
+        "bands": 2, "base_hash": "md5", "buckets": 16, "epoch": 1,
         "id_col": "doc_id", "k": 8, "kind": "band_index",
     }
 
@@ -1249,8 +1249,8 @@ def test_compact_dedup_store_folds_and_merges(spark, tmp_path):
         compact_dedup_store,
         fp_store_write,
         minhash_band_index,
-        store_meta_read,
     )
+    from coronavirus_dashboard_pipeline_etl_spark.store import meta_read
 
     def docs(rows):
         return spark.createDataFrame(rows, "doc_id long, text string")
@@ -1268,14 +1268,14 @@ def test_compact_dedup_store_folds_and_merges(spark, tmp_path):
     rep = compact_dedup_store(spark, path)
     assert rep["tombstones_folded"] == 1 and rep["buckets_rewritten"] > 0
     assert not os.path.isdir(path + "/_tombstones")
-    assert store_meta_read(path)["epoch"] == 1
+    assert meta_read(path)["epoch"] == 2  # bootstrap 1, upsert 2; the fold keeps it
     assert {tuple(r) for r in band_index_read(spark, path).collect()} == logical
     # the store stays upsertable after the fold
     band_index_upsert_write(
         docs([(4, "another refresh of document four")]),
         path, k=8, bands=2, buckets=16,
     )
-    assert store_meta_read(path)["epoch"] == 2
+    assert meta_read(path)["epoch"] == 3
     want = {
         tuple(r)
         for r in minhash_band_index(
@@ -1338,8 +1338,8 @@ def test_compact_dedup_store_incremental_fold(spark, tmp_path, monkeypatch):
         band_index_read,
         band_index_upsert_write,
         compact_dedup_store,
-        store_meta_read,
     )
+    from coronavirus_dashboard_pipeline_etl_spark.store import meta_read
 
     def docs(rows):
         return spark.createDataFrame(rows, "doc_id long, text string")
@@ -1391,11 +1391,11 @@ def test_compact_dedup_store_incremental_fold(spark, tmp_path, monkeypatch):
     # physically clean: the raw store IS the logical view now
     assert spark.read.parquet(path).count() == len(logical)
     # meta survives dynamic overwrites; the store stays upsertable
-    assert store_meta_read(path)["epoch"] == 1
+    assert meta_read(path)["epoch"] == 2  # bootstrap 1, upsert 2; folds keep it
     band_index_upsert_write(
         docs([(9, "another refresh nine")]), path, k=8, bands=2, buckets=16
     )
-    assert store_meta_read(path)["epoch"] == 2
+    assert meta_read(path)["epoch"] == 3
 
     # budget-less incremental == complete fold: one more run drains the
     # doc-9 wave's debt in a single pass and clears its tombstones too
@@ -1530,13 +1530,14 @@ def test_compact_incremental_folds_files_not_buckets(spark, tmp_path):
     assert spark.read.parquet(path).count() == len(logical)
 
 
-def test_store_buckets_auto_derive_from_size(spark, tmp_path):
+def test_store_buckets_auto_derive_from_size(spark, tmp_path, monkeypatch):
     """``buckets=None`` (the default) derives the store layout from the
     writer frame's size estimate: a KB-scale frame lands at the
     8-bucket floor (not 64 near-empty files), the count is recorded in
     the sidecar and governs appends/upserts, an overwrite whose size
-    cannot be estimated keeps the recorded layout, and an explicit
-    caller count still wins."""
+    cannot be estimated keeps the recorded layout, an explicit caller
+    count still wins, and a reseed of a sidecar'd store is sized from
+    the bytes of the store it replaces."""
     import os
 
     from pyspark.sql import functions as F
@@ -1547,8 +1548,9 @@ def test_store_buckets_auto_derive_from_size(spark, tmp_path):
         band_index_write,
         fp_store_write,
         minhash_band_index,
-        store_meta_read,
     )
+    from coronavirus_dashboard_pipeline_etl_spark.store import meta_read
+    from coronavirus_dashboard_pipeline_etl_spark import store
     from coronavirus_dashboard_pipeline_etl_spark.store import (
         _AUTO_BUCKET_MAX,
         _AUTO_BUCKET_MIN,
@@ -1569,7 +1571,7 @@ def test_store_buckets_auto_derive_from_size(spark, tmp_path):
 
     path = str(tmp_path / "auto_store")
     band_index_write(idx, path, k=8, bands=2)
-    meta = store_meta_read(path)
+    meta = meta_read(path)
     assert meta["buckets"] == _AUTO_BUCKET_MIN
     dirs = [d for d in os.listdir(path) if d.startswith("bucket=")]
     assert 0 < len(dirs) <= _AUTO_BUCKET_MIN
@@ -1589,7 +1591,7 @@ def test_store_buckets_auto_derive_from_size(spark, tmp_path):
     # explicit caller count still wins over auto
     path2 = str(tmp_path / "fixed_store")
     band_index_write(idx, path2, k=8, bands=2, buckets=16)
-    assert store_meta_read(path2)["buckets"] == 16
+    assert meta_read(path2)["buckets"] == 16
 
     # when no size estimate is available the overwrite keeps the
     # store's recorded layout instead of guessing (Spark 4 propagates
@@ -1601,7 +1603,7 @@ def test_store_buckets_auto_derive_from_size(spark, tmp_path):
         _LEGACY_BUCKETS,
     )
 
-    assert _auto_buckets(_NoStats(), store_meta_read(path2)) == 16
+    assert _auto_buckets(_NoStats(), meta_read(path2)) == 16
     assert _auto_buckets(_NoStats(), None) == _LEGACY_BUCKETS
 
     # fp store: same auto floor + sidecar record
@@ -1609,26 +1611,32 @@ def test_store_buckets_auto_derive_from_size(spark, tmp_path):
     fp_store_write(
         corpus.select(F.md5("text").alias("fp")), fpp, mode="overwrite"
     )
-    assert store_meta_read(fpp)["buckets"] == _AUTO_BUCKET_MIN
+    assert meta_read(fpp)["buckets"] == _AUTO_BUCKET_MIN
 
-    # every write records the store's OBSERVED on-disk bytes (r15:
-    # the estimate-overshoot hardening's ground-truth figure)
-    assert store_meta_read(fpp)["data_bytes"] > 0
-    assert store_meta_read(path)["data_bytes"] > 0
+    # a reseed is sized from the store's OBSERVED on-disk bytes (r15:
+    # the estimate-overshoot hardening's ground-truth figure), listed
+    # when it replaces the store; no write records a byte count
+    assert "data_bytes" not in meta_read(fpp)
+    disk = sum(map(sum, store.bucket_files(path).values()))
+    assert disk > 0
 
     # observed bytes GOVERN a reseed when the writer frame has stats:
     # a 10x-overshooting plan estimate cannot re-fragment the store
     # (r14 verdict item: sizeInBytes compounds selectivity guesses).
     # spark.range(2^31) estimates ~16 GiB — est-derived would be 32
-    # buckets; 1 MiB observed pins the floor instead.
+    # buckets; the KB-scale fp store on disk pins the floor instead,
+    # and a path without a sidecar sizes from the estimate.
     big_est = spark.range(1 << 31).selectExpr("cast(id as string) fp")
     assert _auto_buckets(big_est, None) > _AUTO_BUCKET_MIN
-    assert (
-        _auto_buckets(big_est, {"data_bytes": 1 << 20}) == _AUTO_BUCKET_MIN
-    )
+    assert _auto_buckets(big_est, meta_read(fpp), fpp) == _AUTO_BUCKET_MIN
+    assert _auto_buckets(big_est, None, fpp) == _auto_buckets(big_est, None)
     # and a genuinely grown store derives MORE buckets from disk truth
-    # than its tiny writer-frame estimate would suggest
-    assert _auto_buckets(idx, {"data_bytes": 4 << 30}) == 16
+    # than its tiny writer-frame estimate would suggest: at a disk
+    # target of 1/12 of the store's bytes, its reseed takes 16 buckets
+    monkeypatch.setattr(store, "_AUTO_BUCKET_TARGET_DISK_BYTES", disk // 12)
+    assert _auto_buckets(idx) == _AUTO_BUCKET_MIN
+    band_index_write(idx, path, k=8, bands=2)
+    assert meta_read(path)["buckets"] == 16
 
     # clamp sanity on the pure helper bounds
     assert _AUTO_BUCKET_MIN >= 1 and _AUTO_BUCKET_MAX >= _AUTO_BUCKET_MIN
@@ -1644,8 +1652,8 @@ def test_band_index_append_bootstrap_records_sidecar(spark, tmp_path):
         band_index_read,
         band_index_write,
         minhash_band_index,
-        store_meta_read,
     )
+    from coronavirus_dashboard_pipeline_etl_spark.store import meta_read
 
     def docs(rows):
         return spark.createDataFrame(rows, "doc_id long, text string")
@@ -1654,13 +1662,13 @@ def test_band_index_append_bootstrap_records_sidecar(spark, tmp_path):
     b = docs([(100 + i, f"gamma{i} delta{i} other words") for i in range(20)])
     path = str(tmp_path / "append_bootstrap")
     band_index_write(minhash_band_index(a, k=8, bands=2), path, mode="append")
-    meta = store_meta_read(path)
+    meta = meta_read(path)
     assert meta is not None and isinstance(meta["buckets"], int)
     first = meta["buckets"]
     band_index_write(minhash_band_index(b, k=8, bands=2), path, mode="append")
     # second append must have used the recorded mapping: every probe
     # over the pruned read equals the probe over the full read
-    assert store_meta_read(path)["buckets"] == first
+    assert meta_read(path)["buckets"] == first
     both = a.unionByName(b)
     full = {tuple(r) for r in band_index_read(spark, path).collect()}
     want = {

@@ -31,7 +31,6 @@ from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
     fp_store_write,
     minhash_band_index,
     minhash_probe_pairs,
-    store_meta_read,
 )
 from coronavirus_dashboard_pipeline_etl_spark.store import _persistent_rdd_ids
 from tests.test_plans import SF
@@ -83,7 +82,7 @@ def test_dedup_store_on_uri_path_matches_plain_path(spark, tmp_path, monkeypatch
         read = {tuple(r) for r in band_index_read(spark, path).collect()}
         rep = compact_dedup_store(spark, path, incremental=True, bucket_budget=1)
         after = {tuple(r) for r in band_index_read(spark, path).collect()}
-        results[label] = (read, rep, after, store_meta_read(path))
+        results[label] = (read, rep, after, store.meta_read(path))
 
     plain, uri = results["plain"], results["uri"]
     assert plain[0] == want and uri[0] == want
@@ -229,7 +228,7 @@ def test_ignore_mode_write_keeps_an_existing_stores_layout(spark, tmp_path):
     before = _files(path)
     band_index_write(index, path, mode="ignore", k=8, bands=2)
     assert _files(path) == before
-    assert store_meta_read(path)["buckets"] == 16
+    assert store.meta_read(path)["buckets"] == 16
 
     batch = corpus.filter("doc_id < 10")
     keys = {
@@ -270,7 +269,7 @@ def test_fold_reports_buckets_with_possible_replay_duplicates(spark, tmp_path):
         )
 
     def debt():
-        return store_meta_read(path).get(store.REPLAY_DEBT, [])
+        return store.meta_read(path).get(store.REPLAY_DEBT, [])
 
     recrawl(0)
     assert debt() == []
@@ -299,11 +298,10 @@ def test_fold_reports_buckets_with_possible_replay_duplicates(spark, tmp_path):
 def test_each_store_call_reads_and_writes_its_sidecar_once(
     spark, tmp_path, monkeypatch
 ):
-    """A dedup-store call reads its sidecar at most once and writes it at
-    most once; the upsert also walks the store listing once, serving
-    both the tombstone check and the sidecar's ``data_bytes``. A serving
-    store's publish and upsert read and write the sidecar once each and
-    list nothing: the partitioned layout records no ``data_bytes``."""
+    """A store call reads its sidecar at most once and writes it at
+    most once. An upsert of either layout, and a serving store's
+    publish, read and write the sidecar once each and list nothing: the
+    sidecar records no file listing."""
     from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
         merge_upsert_store,
         write_store,
@@ -344,7 +342,7 @@ def test_each_store_call_reads_and_writes_its_sidecar_once(
     reads, writes, listings = counts(
         lambda: band_index_upsert_write(wave, bidx, k=8, bands=2)
     )
-    assert (reads, writes, listings) == (1, 1, 1)
+    assert (reads, writes, listings) == (1, 1, 0)
     reads, writes, _ = counts(
         lambda: band_index_pruned(spark, bidx, wave, k=8, bands=2)
     )
@@ -550,6 +548,54 @@ def test_store_mechanics_live_only_in_store_module():
     for rel in _STORE_FAMILIES:
         with open(os.path.join(PKG, rel)) as fh:
             assert _matches(_FORBIDDEN, fh.read()) == [], rel
+
+
+#: the sidecar calls only the store's one write protocol makes
+_SIDECAR_CALLS = {"meta_read", "resolve_params"}
+
+
+def _sidecar_uses(source: str) -> list[str]:
+    """Lines of ``source`` that read or check a store sidecar on their
+    own — a name, attribute or import of ``meta_read`` or
+    ``resolve_params`` — or do arithmetic on its ``"epoch"``."""
+    found = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.ImportFrom):
+            names = [a.name for a in node.names]
+        else:
+            names = [node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)]
+        found += [f"{node.lineno}: {n}" for n in names if n in _SIDECAR_CALLS]
+        if isinstance(node, (ast.BinOp, ast.AugAssign)) and any(
+            isinstance(c, ast.Constant) and c.value == "epoch" for c in ast.walk(node)
+        ):
+            found.append(f"{node.lineno}: epoch arithmetic")
+    return found
+
+
+def test_store_families_leave_the_sidecar_to_the_store_write():
+    """The store families neither read nor check a sidecar for a write,
+    nor work out an epoch: the store's one write protocol does all of
+    it, once for both layouts."""
+    # the scanner itself catches a planted copy of each kind
+    for planted in (
+        "meta = store.meta_read(path)",
+        "from ..store import meta_read",
+        "store_meta_read = store.meta_read",
+        'store.resolve_params(path, meta, {"k": k})',
+        'epoch = 0 if meta is None else int(meta.get("epoch", 0)) + 1',
+        'epoch = meta["epoch"] + 1',
+        'meta["epoch"] += 1',
+    ):
+        assert _sidecar_uses(planted), planted
+    for clean in (
+        'store.write_bucketed(df, path, keys, {"kind": "x"}, None, "append", "w", epochs=True)',
+        "n = len(rows) + 1",
+        "read = store.read_bucketed(spark, path)",
+    ):
+        assert _sidecar_uses(clean) == [], clean
+    for rel in _STORE_FAMILIES:
+        with open(os.path.join(PKG, rel)) as fh:
+            assert _sidecar_uses(fh.read()) == [], rel
 
 
 #: private store plumbing the store gates may not grow back: scratch
@@ -920,12 +966,12 @@ def test_publish_after_upsert_survives_older_tombstones(spark, tmp_path):
     }
 
 
-def test_serving_crash_between_appends_then_rerun_and_fold(spark, tmp_path, monkeypatch):
-    """A crash after the data append and before the tombstones leaves the
-    key's old and new rows visible; re-running the batch gives the merged
-    view, and the fold leaves what a raw parquet reader needs: one file
-    set per partition, no tombstones, no superseded rows, and the same
-    rows ``read_store`` returned before the fold."""
+def _rerun_case(spark, path, layout):
+    """A seeded store of ``layout`` and one batch that replaces a key and
+    inserts one: ``(upsert, read, fold, rebuilt, report)`` — the
+    batch's upsert, the store's merged read, its fold, the store's rows
+    rebuilt from scratch with the batch applied, and fields the fold's
+    report must show."""
     from coronavirus_dashboard_pipeline_etl_spark.plans.main_pipeline import (
         compact_store,
         merge_upsert_store,
@@ -933,34 +979,74 @@ def test_serving_crash_between_appends_then_rerun_and_fold(spark, tmp_path, monk
         write_store,
     )
 
-    path = str(tmp_path / "store")
+    if layout == "bucket":
+        corpus = {i: f"w{i}a w{i}b w{i}c shared tail {i % 4}" for i in range(12)}
+        batch = {1: "a fresh crawl of document one", 50: "a brand new document here"}
+        band_index_write(
+            minhash_band_index(_docs(spark, list(corpus.items())), k=8, bands=2),
+            path, buckets=4, k=8, bands=2,
+        )
+        rebuilt = minhash_band_index(_docs(spark, list({**corpus, **batch}.items())), k=8, bands=2)
+        return (
+            lambda: band_index_upsert_write(_docs(spark, list(batch.items())), path, k=8, bands=2),
+            lambda: band_index_read(spark, path),
+            lambda: compact_dedup_store(spark, path),
+            rebuilt,
+            {"tombstones_folded": 2},
+        )
     base = [(f"h{i}", f"p{i % 3}", f"old{i}", 1) for i in range(12)]
-    write_store(_serving(spark, base).coalesce(1), path)  # one file per partition
     batch = [("h1", "p1", "new1", 2), ("h2", "p2", "new2", 2), ("h50", "p1", "ins", 2)]
+    write_store(_serving(spark, base).coalesce(1), path)  # one file per partition
+    return (
+        lambda: merge_upsert_store(_serving(spark, batch), path),
+        lambda: read_store(spark, path),
+        lambda: compact_store(spark, path),
+        _serving(spark, [r for r in base if r[0] not in ("h1", "h2")] + batch),
+        {"buckets_rewritten": 2, "tombstones_folded": 3, "files_after": 3},
+    )
+
+
+@pytest.mark.parametrize("layout", ["partition_id", "bucket"])
+def test_serving_crash_between_appends_then_rerun_and_fold(
+    spark, tmp_path, monkeypatch, layout
+):
+    """A crash after the data append and before the tombstones leaves the
+    replaced rows and the batch's visible together; the crashed write
+    has recorded its epoch, so the re-run takes a later one and its
+    tombstones kill the crashed attempt's rows too: the merged view is
+    exactly the rebuilt store, count included, in the serving store and
+    the band index alike. The fold leaves what a raw parquet reader
+    needs: one file set per partition, no tombstones, no superseded
+    rows, and the same rows the merged read returned before it."""
+    path = str(tmp_path / "store")
+    upsert, read, fold, rebuilt, report = _rerun_case(spark, path, layout)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*read().columns).collect())
+
+    seeded, want = rows(read()), rows(rebuilt)
 
     def crash(*args):
         raise RuntimeError("simulated crash before the tombstone append")
 
     monkeypatch.setattr(store, "_append_tombstones", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        merge_upsert_store(_serving(spark, batch), path)
+        upsert()
     monkeypatch.undo()
-    both = _store_rows(read_store(spark, path))
-    assert ("h1", "p1", "old1", 1) in both and ("h1", "p1", "new1", 2) in both
+    stale, fresh = set(seeded) - set(want), set(want) - set(seeded)
+    assert stale and fresh and stale | fresh <= set(rows(read()))
 
-    merge_upsert_store(_serving(spark, batch), path)
-    want = {r for r in base if r[0] not in ("h1", "h2")} | set(batch)
-    merged = read_store(spark, path).collect()
-    assert len(merged) == len(want) and _store_rows(read_store(spark, path)) == want
+    upsert()
+    assert rows(read()) == want
+    assert store.meta_read(path)["epoch"] == 3  # seed, crashed attempt, re-run
 
-    rep = compact_store(spark, path)
-    assert rep["buckets_rewritten"] == 2 and rep["tombstones_folded"] == 3
-    assert rep["files_after"] == rep["buckets_after"] == 3
+    rep = fold()
+    assert {k: rep[k] for k in report} == report
+    assert rep["files_after"] == rep["buckets_after"]
     assert not os.path.isdir(os.path.join(path, "_tombstones"))
-    raw = spark.read.parquet(path)
-    assert raw.count() == len(want) and _store_rows(raw) == want
+    assert rows(spark.read.parquet(path)) == want
     # clean partitions are skipped
-    assert compact_store(spark, path)["buckets_rewritten"] == 0
+    assert fold()["buckets_rewritten"] == 0
 
 
 def test_upserts_append_one_tombstone_file_without_a_shuffle(spark, tmp_path, monkeypatch):

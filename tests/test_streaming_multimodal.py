@@ -1710,10 +1710,10 @@ def test_streaming_index_upsert_matches_rebuild(spark, tmp_path):
     import json as _json
 
     from coronavirus_dashboard_pipeline_etl_spark.functions.dedup import (
-        STORE_BUCKET,
         band_index_read,
         minhash_band_index,
     )
+    from coronavirus_dashboard_pipeline_etl_spark.store import STORE_BUCKET
     from coronavirus_dashboard_pipeline_etl_spark.streaming.ingest import (
         index_upsert_batch,
         stream_release_files,
