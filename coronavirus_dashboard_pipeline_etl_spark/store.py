@@ -30,11 +30,12 @@ once:
   so a probe prunes its scan to the buckets it can match; the
   PARTITIONED layout (the serving store: ``write_partitioned``)
   partitions on a column the rows carry (``partition_id``), and an
-  upsert is a batch-sized append plus tombstones. Both write through
-  ``_write``, the one write protocol: read the sidecar once, check the
-  caller's identity and the schema against it, take the next epoch
-  (the recorded one plus one), then write the sidecar, the data and
-  the tombstones, in that order. A write that crashes has already
+  upsert is a batch-sized append plus tombstones. Each entry point
+  reads the sidecar once and checks the caller's identity against it
+  (``resolve_params``); both then write through ``_write``, the one
+  write protocol: take the next epoch (the recorded one plus one),
+  check the schema, then write the sidecar, the data and the
+  tombstones, in that order. A write that crashes has already
   recorded its epoch, so its re-run takes a later one, and the re-run's
   tombstones kill the rows the crashed attempt left. A write that
   truncates the path (a static overwrite) writes its sidecar after the
@@ -63,7 +64,7 @@ from __future__ import annotations
 import json
 import warnings
 import weakref
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
 from urllib.parse import unquote
 
@@ -189,7 +190,11 @@ def read_existing(spark: SparkSession, path: str) -> DataFrame | None:
     yet: the path is missing, or it holds no data file. Any other read
     failure propagates — treating, say, a schema conflict as "no store"
     would send the caller down its first-write path, which overwrites
-    the store's partitions with just the batch's rows."""
+    the store's partitions with just the batch's rows. A missing path
+    is checked first: the read would fail on it too, but Spark logs
+    that failure with a full stack trace."""
+    if not exists(path):
+        return None
     try:
         return spark.read.parquet(path)
     except AnalysisException:
@@ -637,6 +642,7 @@ def _write_buckets(
     writer.mode(mode).parquet(path)
 
 
+@contextmanager
 def _write(
     df: DataFrame,
     path: str,
@@ -644,16 +650,15 @@ def _write(
     meta: dict | None,
     record: dict | None,
     in_place: bool,
-    write: Callable[[DataFrame], None],
     tombstones: DataFrame | None = None,
     epochs: bool = True,
-) -> None:
-    """The one write protocol of the store format, for both layouts.
-    ``meta`` is the sidecar the layout's entry point read (once) and
-    checked the caller's identity against; ``record`` is what the
-    sidecar records after the write (None: a legacy store that keeps no
-    sidecar), whose ``partition_col`` the rows carry (the bucket when it
-    names none); ``write`` writes the rows.
+) -> Iterator[DataFrame]:
+    """The one write protocol of the store format, for both layouts:
+    the body of the ``with`` writes the rows it is given. ``meta`` is
+    the sidecar the layout's entry point read (once), ``record`` what
+    the sidecar records after the write (None: a legacy store that
+    keeps no sidecar), whose ``partition_col`` the rows carry (the
+    bucket when it names none).
 
     1. The write's epoch is the recorded one plus one (a store without
        a sidecar is epoch 0); ``epochs`` stamps it on every row.
@@ -666,21 +671,12 @@ def _write(
     3. The rows, then the ``tombstones`` (a frame of ids) at the epoch,
        which kill every older row of those ids. A crash between the two
        leaves an id's old and new rows visible until the write is
-       re-run or the store is folded (over-generation, never loss). A
-       path with no store yet takes no tombstones: no row is older; a
-       legacy store keeps no sidecar, so it refuses them.
+       re-run or the store is folded (over-generation, never loss).
     4. A write that is not in place writes its sidecar AFTER the data.
        A static overwrite truncates the path, which deletes the old
        sidecar and tombstones together with the old files, so a sidecar
        written first would go with them; an ``ignore`` or ``error``
        write must find no path there."""
-    if tombstones is not None and record is None:
-        raise ValueError(
-            f"{caller}: store at {path} predates the sidecar — rewrite it "
-            "once with an overwrite before upserting"
-        )
-    if tombstones is not None and meta is None and read_existing(df.sparkSession, path) is None:
-        tombstones = None
     epoch = int((meta or {}).get("epoch", 0)) + 1
     if epochs:
         df = df.withColumn(EPOCH_COL, F.lit(epoch).cast("int"))
@@ -691,7 +687,7 @@ def _write(
         record = {**record, "schema": schema, **({"epoch": epoch} if epochs else {})}
     if in_place and record != meta:
         _meta_write(path, record)
-    write(df)
+    yield df
     if tombstones is not None:
         _append_tombstones(tombstones, path, epoch)
     if not in_place and record is not None:
@@ -717,8 +713,9 @@ def write_bucketed(
     ``buckets``: an append hashed with another count would scatter
     equal keys across buckets and make pruning silently lossy. A legacy
     no-sidecar store keeps the fixed count its files were hashed with
-    unless the caller fixes one, records no sidecar and takes no
-    tombstones. An ``ignore`` write into an existing store changes
+    unless the caller fixes one, records no sidecar and refuses
+    ``tombstones``; a path with no store yet takes none, as no row is
+    older. An ``ignore`` write into an existing store changes
     nothing, as Spark skips it. Any other write takes the caller's
     ``buckets`` or ``_auto_buckets`` and records ``identity`` with it;
     an overwrite must truncate the whole path
@@ -738,13 +735,19 @@ def write_bucketed(
     keep = mode in ("append", "ignore") and (meta is not None or is_dir(path))
     if keep and mode == "ignore":
         return
+    if keep and meta is None and tombstones is not None:
+        raise ValueError(
+            f"{caller}: store at {path} predates the sidecar — rewrite it "
+            "once with an overwrite before upserting"
+        )
     if keep:
         buckets = resolve_params(path, meta, {**identity, "buckets": buckets})["buckets"]
     buckets = buckets or (_LEGACY_BUCKETS if keep else _auto_buckets(df, meta, path))
     rows = df.withColumn(STORE_BUCKET, _bucket_col(key_cols, buckets))
     record = meta if keep else {**identity, "buckets": buckets}
-    write = lambda out: _write_buckets(out, path, buckets, mode)  # noqa: E731
-    _write(rows, path, caller, meta, record, mode == "append", write, tombstones, epochs)
+    tombstones = tombstones if keep else None
+    with _write(rows, path, caller, meta, record, mode == "append", tombstones, epochs) as rows:
+        _write_buckets(rows, path, buckets, mode)
 
 
 def _append_tombstones(ids: DataFrame, path: str, epoch: int) -> None:
@@ -780,15 +783,15 @@ def write_partitioned(
     meta = meta_read(path)
     identity = {"partition_col": partition_col, **({"id_cols": id_cols} if id_cols else {})}
     resolve_params(path, meta, identity)
-
-    def write(rows: DataFrame) -> None:
+    tombstoned = id_cols is not None and (
+        meta is not None or read_existing(df.sparkSession, path) is not None
+    )
+    tombstones = df.select(*id_cols) if tombstoned else None
+    with _write(df, path, caller, meta, {**(meta or {}), **identity}, True, tombstones) as rows:
         if id_cols is None:
             overwrite_partitions(rows, path, partition_col)
         else:
             _writer(rows).mode("append").partitionBy(partition_col).parquet(path)
-
-    tombstones = None if id_cols is None else df.select(*id_cols)
-    _write(df, path, caller, meta, {**(meta or {}), **identity}, True, write, tombstones)
 
 
 #: driver-side size guard for the tombstone broadcast: the latest-
